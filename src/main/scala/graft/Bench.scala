@@ -10,8 +10,8 @@ import org.apache.spark.sql.SparkSession
   *
   * Contamination-proofing (round 17): the whole suite runs TWICE and
   * the published per-query number is the MIN of the two samples — the
-  * two-sample pair-min protocol (tools/bench_pair.py) moved inside
-  * the artifact itself. Three of the four round-13..16 driver benches
+  * two-sample pair-min protocol (BASELINE.md) computed inside the
+  * artifact itself. Three of the four round-13..16 driver benches
   * were distorted by ambient sandbox load invisible in the JSON; a
   * transient load spike rarely hits the same query in both passes, so
   * min-of-pair self-immunizes the artifact. Both raw samples are kept
@@ -38,7 +38,8 @@ import org.apache.spark.sql.SparkSession
   *  2. Output is TWO stdout lines plus a file (round-22 shape): a
   *     short summary-first line (band_median, over_2x, env_suspect,
   *     canary, load, totals) first, then the FULL artifact written to
-  *     BENCH_ARTIFACT.json ($SPARK_GRAFT_ARTIFACT to override), then
+  *     BENCH_ARTIFACT_<sf>_<run id>.json ($SPARK_GRAFT_ARTIFACT to
+  *     override; "artifact":null when the write fails), then
   *     a compact final line carrying the driver contract
   *     (metric/value/unit/queries/sf, 3-decimal seconds, ~10 KB).
   *     Round-21 lesson: the full artifact as a stdout line was
@@ -243,6 +244,7 @@ object Bench {
     // measurement). Absent/unreadable band file -> band_sf null.
     val bandsPath = sys.env.getOrElse("SPARK_GRAFT_BANDS", "BASELINE_BANDS.json")
     val sfName = new java.io.File(sfDir).getName
+    val runId = s"${System.currentTimeMillis()}-${ProcessHandle.current().pid()}"
     val failedBoth = s1.collect {
       case (k, (_, false)) if !m2(k)._2 => k
     }.toSet
@@ -366,21 +368,25 @@ object Bench {
     // per-query numbers were ever machine-readable. Nothing is
     // dropped: the file carries strictly more than the old line 2.
     val fullArtifact =
-      s"""{"metric":"pair_min_total","value":$total,"unit":"sec","sf":"$sfDir","subset":$subset,"only":$onlyJson,"queries":$qs,"queries_s1":${fmt(s1)},"queries_s2":${fmt(s2)},"samples":[$t1,$t2],"failed":$failed,"load_avg_1m":$load,"nproc":$nproc,"canary":$canaryJson,"canary_windows":{"s1":${cwJson(cw1)},"s2":${cwJson(cw2)}}$bandReport,"env_suspect":$envSuspect,"env_loaded":$envLoaded,"summary_tail":{$summaryFields}}"""
+      s"""{"metric":"pair_min_total","value":$total,"unit":"sec","sf":"$sfDir","run_id":"$runId","subset":$subset,"only":$onlyJson,"queries":$qs,"queries_s1":${fmt(s1)},"queries_s2":${fmt(s2)},"samples":[$t1,$t2],"failed":$failed,"load_avg_1m":$load,"nproc":$nproc,"canary":$canaryJson,"canary_windows":{"s1":${cwJson(cw1)},"s2":${cwJson(cw2)}}$bandReport,"env_suspect":$envSuspect,"env_loaded":$envLoaded,"summary_tail":{$summaryFields}}"""
+    // sf + run id in the default name: concurrent runs (an sf0.1 and
+    // an sf1.0 pair) no longer overwrite each other's artifact
     val artifactPath = sys.env.getOrElse("SPARK_GRAFT_ARTIFACT",
-      "BENCH_ARTIFACT.json")
-    try {
+      s"BENCH_ARTIFACT_${sfName}_$runId.json")
+    val artifactJson = try {
       val w = new java.io.PrintWriter(
         new java.io.File(artifactPath), "UTF-8")
       try w.println(fullArtifact) finally w.close()
+      "\"" + artifactPath + "\""
     } catch { case e: Throwable =>
       System.err.println(s"[bench] artifact write failed: ${e.getMessage}")
+      "null" // never advertise a file that was not written
     }
     // LAST stdout line = the compact driver contract: ONE short JSON
     // line (~10 KB at 298 gates) with metric/value/unit/queries/sf,
     // immune to capture truncation. Per-query values are the same
     // pair-min seconds as the file artifact, 3-decimal.
-    println(s"""{"metric":"pair_min_total","value":${r3(total)},"unit":"sec","queries":${r3k(pairMin)},"sf":"$sfDir","samples":[${r3(t1)},${r3(t2)}],"failed":$failed,"subset":$subset,"artifact":"$artifactPath"}""")
+    println(s"""{"metric":"pair_min_total","value":${r3(total)},"unit":"sec","queries":${r3k(pairMin)},"sf":"$sfDir","samples":[${r3(t1)},${r3(t2)}],"failed":$failed,"subset":$subset,"run_id":"$runId","artifact":$artifactJson}""")
     spark.stop()
   }
 }

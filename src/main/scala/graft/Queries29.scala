@@ -34,7 +34,7 @@ object Queries29 {
       "false")
     val name = s"graft_sso_${System.nanoTime()}"
     val dim = broadcast(
-      spark.read.parquet(s"$dir/customer.parquet")
+      Tables(spark, dir, "customer")
         .where(col("c_custkey") % 3 === 0)
         .select(col("c_custkey"), col("c_mktsegment")))
     val stream = graft.streaming.EventsStream.eventsStream(spark, dir)

@@ -493,14 +493,7 @@ object Queries35 {
     spark.conf.set(
       "spark.sql.streaming.noDataMicroBatches.enabled", "false")
     val name = s"graft_mlm_${System.nanoTime()}"
-    val path = new java.io.File(s"$dir/documents.parquet")
-    val schema = spark.read.parquet(path.getPath).schema
-    val base = spark.readStream.schema(schema)
-    val raw =
-      if (path.isDirectory) base.parquet(path.getPath)
-      else base.option("pathGlobFilter", "documents.parquet")
-        .parquet(dir)
-    val docs = raw.select($"doc_id",
+    val docs = Tables.stream(spark, dir, "documents").select($"doc_id",
       slice(split(trim($"text"), "\\s+"), 1, 12).as("toks"))
     val out = graft.operators.Denoise.mlmMask(docs, "doc_id", "toks",
       density = 0.2, seed = 47L)

@@ -210,9 +210,7 @@ object Queries40 {
     val baseText = (0 until 80).map(i => s"planted$i").mkString(" ")
     val plantFreshRows =
       Seq((p0 + 1L, baseText), (p0 + 2L, baseText + " plantedtail"))
-    val docsPath = new java.io.File(s"$dir/documents.parquet")
-    val docs = spark.read.parquet(docsPath.getPath)
-      .select($"doc_id", $"text")
+    val docs = Tables(spark, dir, "documents").select($"doc_id", $"text")
     val store = docs.where($"doc_id" < 250)
       .unionByName(spark.createDataFrame(Seq((p0, baseText)))
         .toDF("doc_id", "text"))
@@ -225,15 +223,8 @@ object Queries40 {
     val plantDir = new java.io.File(Fs.scratchDir("q291_plants"))
     spark.createDataFrame(plantFreshRows).toDF("doc_id", "text")
       .coalesce(1).write.mode("overwrite").parquet(plantDir.getPath)
-    val schema = spark.read.parquet(docsPath.getPath).schema
-    val sDocs = {
-      val base = spark.readStream.schema(schema)
-      val raw =
-        if (docsPath.isDirectory) base.parquet(docsPath.getPath)
-        else base.option("pathGlobFilter", "documents.parquet")
-          .parquet(dir)
-      raw.select($"doc_id", $"text").where($"doc_id" >= 250)
-    }
+    val sDocs = Tables.stream(spark, dir, "documents")
+      .select($"doc_id", $"text").where($"doc_id" >= 250)
     val sPlants = spark.readStream
       .schema(StructType(Seq(
         StructField("doc_id", LongType, nullable = false),
@@ -518,8 +509,7 @@ object Queries40 {
       Multimodal.encodeGrayPng(Multimodal.synthGray(id, W, H, ImgSeed), W, H))
     def dh(df: DataFrame): DataFrame =
       df.select($"doc_id", Functional.dhash64($"blob").as("dhash"))
-    val docsPath = new java.io.File(s"$dir/documents.parquet")
-    val docs = spark.read.parquet(docsPath.getPath).select($"doc_id")
+    val docs = Tables(spark, dir, "documents").select($"doc_id")
     val storeSig = dh(docs.where($"doc_id" < 250)
       .unionByName(spark.range(1).select(lit(p0).as("doc_id")))
       .select($"doc_id", synth($"doc_id").as("blob")))
@@ -546,15 +536,9 @@ object Queries40 {
     val plantDir = new java.io.File(Fs.scratchDir("q295_plants"))
     spark.createDataFrame(plantRows).toDF("doc_id", "blob")
       .coalesce(1).write.mode("overwrite").parquet(plantDir.getPath)
-    val schema = spark.read.parquet(docsPath.getPath).schema
-    val sDocs = {
-      val b = spark.readStream.schema(schema)
-      val raw =
-        if (docsPath.isDirectory) b.parquet(docsPath.getPath)
-        else b.option("pathGlobFilter", "documents.parquet").parquet(dir)
-      raw.select($"doc_id").where($"doc_id" >= 250)
-        .select($"doc_id", synth($"doc_id").as("blob"))
-    }
+    val sDocs = Tables.stream(spark, dir, "documents")
+      .select($"doc_id").where($"doc_id" >= 250)
+      .select($"doc_id", synth($"doc_id").as("blob"))
     val sPlants = spark.readStream
       .schema(StructType(Seq(
         StructField("doc_id", LongType, nullable = false),

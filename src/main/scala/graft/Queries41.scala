@@ -223,8 +223,7 @@ object Queries41 {
       Multimodal.synthPcm16(id, NSamp, AudSeed)))
     def fp(df: DataFrame): DataFrame =
       df.select($"doc_id", Functional.audioFp64($"blob").as("afp"))
-    val docsPath = new java.io.File(s"$dir/documents.parquet")
-    val docs = spark.read.parquet(docsPath.getPath).select($"doc_id")
+    val docs = Tables(spark, dir, "documents").select($"doc_id")
     val storeSig = fp(docs.where($"doc_id" < 250)
       .unionByName(spark.range(1).select(lit(p0).as("doc_id")))
       .select($"doc_id", synth($"doc_id").as("blob")))
@@ -244,15 +243,9 @@ object Queries41 {
     val plantDir = new java.io.File(Fs.scratchDir("q300_plants"))
     spark.createDataFrame(plantRows).toDF("doc_id", "blob")
       .coalesce(1).write.mode("overwrite").parquet(plantDir.getPath)
-    val schema = spark.read.parquet(docsPath.getPath).schema
-    val sDocs = {
-      val b = spark.readStream.schema(schema)
-      val raw =
-        if (docsPath.isDirectory) b.parquet(docsPath.getPath)
-        else b.option("pathGlobFilter", "documents.parquet").parquet(dir)
-      raw.select($"doc_id").where($"doc_id" >= 250)
-        .select($"doc_id", synth($"doc_id").as("blob"))
-    }
+    val sDocs = Tables.stream(spark, dir, "documents")
+      .select($"doc_id").where($"doc_id" >= 250)
+      .select($"doc_id", synth($"doc_id").as("blob"))
     val sPlants = spark.readStream
       .schema(StructType(Seq(
         StructField("doc_id", LongType, nullable = false),
@@ -340,8 +333,7 @@ object Queries41 {
     def fps(df: DataFrame): DataFrame =
       df.select($"doc_id",
         explode(Functional.videoFrameHashes($"blob")).as("fhash"))
-    val docsPath = new java.io.File(s"$dir/documents.parquet")
-    val docs = spark.read.parquet(docsPath.getPath).select($"doc_id")
+    val docs = Tables(spark, dir, "documents").select($"doc_id")
     val storeFps = fps(docs.where($"doc_id" < 250)
       .unionByName(spark.range(1).select(lit(p0).as("doc_id")))
       .select($"doc_id", synth($"doc_id").as("blob")))
@@ -360,15 +352,9 @@ object Queries41 {
     val plantDir = new java.io.File(Fs.scratchDir("q301_plants"))
     spark.createDataFrame(plantRows).toDF("doc_id", "blob")
       .coalesce(1).write.mode("overwrite").parquet(plantDir.getPath)
-    val schema = spark.read.parquet(docsPath.getPath).schema
-    val sDocs = {
-      val b = spark.readStream.schema(schema)
-      val raw =
-        if (docsPath.isDirectory) b.parquet(docsPath.getPath)
-        else b.option("pathGlobFilter", "documents.parquet").parquet(dir)
-      raw.select($"doc_id").where($"doc_id" >= 250)
-        .select($"doc_id", synth($"doc_id").as("blob"))
-    }
+    val sDocs = Tables.stream(spark, dir, "documents")
+      .select($"doc_id").where($"doc_id" >= 250)
+      .select($"doc_id", synth($"doc_id").as("blob"))
     val sPlants = spark.readStream
       .schema(StructType(Seq(
         StructField("doc_id", LongType, nullable = false),
@@ -543,8 +529,7 @@ object Queries41 {
         posexplode(Functional.videoFrameHashes($"blob")))
       .select($"doc_id", $"pos".cast(LongType).as("idx"),
         $"col".as("fhash"))
-    val docsPath = new java.io.File(s"$dir/documents.parquet")
-    val docs = spark.read.parquet(docsPath.getPath).select($"doc_id")
+    val docs = Tables(spark, dir, "documents").select($"doc_id")
     val storeFrames = fr(docs.where($"doc_id" < 250)
       .unionByName(spark.range(1).select(lit(p0).as("doc_id")))
       .select($"doc_id", synth($"doc_id").as("blob")))
@@ -562,15 +547,9 @@ object Queries41 {
     val plantDir = new java.io.File(Fs.scratchDir("q305_plants"))
     spark.createDataFrame(plantRows).toDF("doc_id", "blob")
       .coalesce(1).write.mode("overwrite").parquet(plantDir.getPath)
-    val schema = spark.read.parquet(docsPath.getPath).schema
-    val sDocs = {
-      val b = spark.readStream.schema(schema)
-      val raw =
-        if (docsPath.isDirectory) b.parquet(docsPath.getPath)
-        else b.option("pathGlobFilter", "documents.parquet").parquet(dir)
-      raw.select($"doc_id").where($"doc_id" >= 250)
-        .select($"doc_id", synth($"doc_id").as("blob"))
-    }
+    val sDocs = Tables.stream(spark, dir, "documents")
+      .select($"doc_id").where($"doc_id" >= 250)
+      .select($"doc_id", synth($"doc_id").as("blob"))
     val sPlants = spark.readStream
       .schema(StructType(Seq(
         StructField("doc_id", LongType, nullable = false),

@@ -41,7 +41,7 @@ object ScaleUp {
 
     def replicate(name: String, keys: Seq[String],
         tweak: DataFrame => DataFrame = identity): Unit = {
-      val df = spark.read.parquet(s"$src/$name.parquet")
+      val df = Tables.parquet(spark, s"$src/$name.parquet")
       val stacked = df.crossJoin(broadcast(rep))
       val shifted = keys.foldLeft(stacked)((d, c) =>
         d.withColumn(c, col(c) + col("__rep") * OFF))
@@ -52,7 +52,7 @@ object ScaleUp {
     }
 
     for (name <- Seq("region", "nation")) {
-      spark.read.parquet(s"$src/$name.parquet")
+      Tables.parquet(spark, s"$src/$name.parquet")
         .write.mode("overwrite").parquet(s"$dst/$name.parquet")
       println(s"[scaleup] $name x1 (dimension)")
     }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.graftshim.FooterSchema
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -8,8 +9,33 @@ import org.apache.spark.sql.types._
   * (TESTDATA.md). At cluster scale these reads are plain distributed
   * parquet scans — filters/projections in the queries below push down
   * into them (verify via .explain: PushedFilters / ReadSchema).
+  *
+  * Every read of an input table goes through [[parquet]] or [[stream]],
+  * which take the schema from one parquet footer on the driver
+  * ([[FooterSchema]]), so building a gate's plan runs no
+  * schema-inference job (`spark.read.parquet` runs one per load). The
+  * schema is whatever the file declares, converted by Spark's own code
+  * under the session's conf — never a hand-declared copy of the
+  * generator's.
   */
 object Tables {
+
+  /** `spark.read.parquet(path)` without its schema-inference job. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(FooterSchema(spark, path)).parquet(path)
+
+  /** Streaming reader over table `name` with the footer schema (the
+    * file source needs one). Handles both layouts: a single file at
+    * the small test SFs (the file source requires a directory, so the
+    * parent dir is streamed with a glob filter) and a directory of
+    * part-files at sf1.0+ (where the glob filter would match nothing,
+    * and the stream would silently be empty). */
+  def stream(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = new java.io.File(s"$dir/$name.parquet")
+    val base = spark.readStream.schema(FooterSchema(spark, path.getPath))
+    if (path.isDirectory) base.parquet(path.getPath)
+    else base.option("pathGlobFilter", path.getName).parquet(dir)
+  }
 
   /** events.ts contract for every consumer in this repo: LONG
     * nanoseconds since epoch. Early testdata generations annotated the
@@ -37,7 +63,7 @@ object Tables {
     }
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = parquet(spark, s"$dir/$name.parquet")
     if (name == "events") normalizeEventsTs(df) else df
   }
 
@@ -51,7 +77,7 @@ object Tables {
     * normalized schema as [[apply]]: ts = long ns. */
   def eventsRange(spark: SparkSession, dir: String,
       fromUs: Long, untilUs: Long): DataFrame = {
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = parquet(spark, s"$dir/events.parquet")
     val filtered = raw.schema("ts").dataType match {
       case LongType => // ns layout: long predicate pushes natively
         raw.where(col("ts") >= fromUs * 1000L &&

@@ -15,35 +15,17 @@ import org.apache.spark.sql.types._
   */
 object EventsStream {
 
-  /** Streaming reader for the events table, robust to both layouts:
-    * a single file at the small test SFs (the file source requires a
-    * directory, so stream the parent dir with a glob filter) and a
-    * directory of part-files at sf1.0+ (where the glob filter would
-    * match nothing — the round-10 fix; before it, every sf1.0
-    * streaming sample timed an EMPTY stream).
-    *
-    * The streaming source needs an explicit schema, and the file's ts
-    * annotation varies by testdata generation (TIMESTAMP(NANOS) = long
-    * ns under nanosAsLong, vs TIMESTAMP(MICROS) = TIMESTAMP_NTZ). A
+  /** Streaming reader for the events table ([[graft.Tables.stream]]:
+    * both layouts, the file's own schema). The file's ts annotation
+    * varies by testdata generation (TIMESTAMP(NANOS) = long ns under
+    * nanosAsLong, vs TIMESTAMP(MICROS) = TIMESTAMP_NTZ), and a
     * hardcoded long schema over a micros file silently reads the raw
-    * micros AS nanos — event times 1000× off (the round-11 streaming
-    * regression). So: probe the actual ts type with a footer-only
-    * batch read, stream with a schema matching the file, then apply
-    * the SAME normalization as the batch loader
-    * ([[graft.Tables.normalizeEventsTs]]) so stream and batch share
+    * micros AS nanos — event times 1000× off. So the stream takes the footer's schema, then the
+    * SAME normalization as the batch loader
+    * ([[graft.Tables.normalizeEventsTs]]), so stream and batch share
     * one ts contract: long nanoseconds since epoch. */
-  private[graft] def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    val path = new java.io.File(s"$dir/events.parquet")
-    val tsType =
-      spark.read.parquet(path.getPath).schema("ts").dataType
-    val fileSchema = StructType(eventsSchema.map(f =>
-      if (f.name == "ts") f.copy(dataType = tsType) else f))
-    val base = spark.readStream.schema(fileSchema)
-    val raw =
-      if (path.isDirectory) base.parquet(path.getPath)
-      else base.option("pathGlobFilter", "events.parquet").parquet(dir)
-    graft.Tables.normalizeEventsTs(raw)
-  }
+  private[graft] def eventsStream(spark: SparkSession, dir: String): DataFrame =
+    graft.Tables.normalizeEventsTs(graft.Tables.stream(spark, dir, "events"))
 
   /** The NORMALIZED events schema every streaming consumer sees (and
     * the sentinel writer targets): ts = long nanoseconds since epoch,
@@ -198,7 +180,7 @@ object EventsStream {
     spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     val name = s"graft_ssjoin_${System.nanoTime()}"
     val dim = functions.broadcast(
-      spark.read.parquet(s"$dir/customer.parquet")
+      graft.Tables(spark, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment")))
     val stream = eventsStream(spark, dir)
       .join(dim, col("user_id") === col("c_custkey"))

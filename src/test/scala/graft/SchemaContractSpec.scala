@@ -7,10 +7,12 @@ import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
   * canonical forms — numpy arrays (and structs/maps) are unsortable
   * there and ERROR the row even when values are right (round-12 q151).
   * So every `SparkEntry.queries` output schema must be scalar-only,
-  * or carry an explicit allow-list reason. Schema derivation is
-  * analysis-only for batch gates (no jobs run); streaming gates
-  * execute as they construct, which this spec accepts as the price of
-  * covering them. */
+  * or carry an explicit allow-list reason. Table loads take their
+  * schema from a parquet footer on the driver (no jobs run), so
+  * schema derivation is analysis-only for batch gates without eager
+  * steps; gates with `localCheckpoint` loops or driver pulls, and
+  * streaming gates, execute as they construct, which this spec
+  * accepts as the price of covering them. */
 class SchemaContractSpec extends SparkSpec {
 
   // name -> reason; empty today, and adding to it should hurt: an
