@@ -41,7 +41,8 @@ object Queries {
           .as("sum_disc_price"),
         round(avg($"l_quantity"), 4).as("avg_qty"),
         count(lit(1)).as("count_order"))
-      .orderBy($"l_returnflag", $"l_linestatus")
+      // (a) at most 6 (returnflag, linestatus) pairs
+      .orderByInOnePartition($"l_returnflag", $"l_linestatus")
 
   val q01Sql: String =
     s"""SELECT l_returnflag, l_linestatus,
@@ -81,7 +82,8 @@ object Queries {
       .join(broadcast(region), $"n_regionkey" === $"r_regionkey")
       .groupBy($"r_name", $"n_name")
       .agg(dsum($"o_totalprice").as("revenue"), count(lit(1)).as("n_orders"))
-      .orderBy($"r_name", $"n_name")
+      // (a) at most 25 nations
+      .orderByInOnePartition($"r_name", $"n_name")
   }
 
   val q03Sql: String =

@@ -131,10 +131,12 @@ object Queries10 {
     * note. */
   /** The reusable containment join behind q147:
     * `eval` = (eval_id, gs: array<string>), `corpus` = (doc_id,
-    * gs: array<string>), both element-distinct; emits every (eval_id,
-    * doc_id, shared, ne) with |E ∩ C| · den ≥ |E| · num — exact, no
-    * cross product. Threshold is the rational num/den so the qualifying
-    * test is pure integer arithmetic.
+    * gs: array<string>); emits every (eval_id, doc_id, shared, ne) with
+    * |E ∩ C| · den ≥ |E| · num over the DISTINCT elements of each
+    * array — exact, no cross product. Both inputs go through
+    * `array_distinct` here, so the count below never sees a repeat.
+    * Threshold is the rational num/den so the qualifying test is pure
+    * integer arithmetic.
     *
     * Round 22 (guide §1.1 first-principles / §2.3): because both
     * shingle arrays are element-distinct, |E ∩ C| is a JOIN-ROW COUNT —
@@ -162,9 +164,10 @@ object Queries10 {
       num: Int, den: Int): DataFrame = {
     require(num > 0 && num <= den,
       s"containmentPairs: need 0 < num <= den, got $num/$den")
-    val evalG = eval_.select($"eval_id", explode($"gs").as("g"))
-    val evalNe = eval_.select($"eval_id", size($"gs").as("ne"))
-    val cg = corpus.select($"doc_id", explode($"gs").as("g"))
+    val ev = eval_.select($"eval_id", array_distinct($"gs").as("gs"))
+    val evalG = ev.select($"eval_id", explode($"gs").as("g"))
+    val evalNe = ev.select($"eval_id", size($"gs").as("ne"))
+    val cg = corpus.select($"doc_id", explode(array_distinct($"gs")).as("g"))
     cg.join(broadcast(evalG), Seq("g"))
       .groupBy($"eval_id", $"doc_id")
       .agg(count(lit(1)).cast(IntegerType).as("shared"))
@@ -176,12 +179,12 @@ object Queries10 {
   def q147ContainJoin(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
     val corpus = docs.select($"doc_id",
-      array_distinct(Functional.wordShingles($"text", 3)).as("gs"))
+      Functional.wordShingles($"text", 3).as("gs"))
     val snippet = concat_ws(" ",
       slice(split(trim($"text"), "\\s+"), 1, 30))
     val eval_ = docs.where($"doc_id" % 20 === 7)
       .select($"doc_id".as("eval_id"),
-        array_distinct(Functional.wordShingles(snippet, 3)).as("gs"))
+        Functional.wordShingles(snippet, 3).as("gs"))
     val result = containmentPairs(eval_, corpus, 6, 10)
       .orderBy($"eval_id", $"doc_id")
     val plan = result.queryExecution.executedPlan.toString()

@@ -109,7 +109,8 @@ object Queries3 {
         graft.functions.Functional.jaccardSorted($"sh_a", $"sh_b").as("j"))
       .where($"j" >= 0.60)
       .select($"id_a", $"id_b", round($"j", 4).as("jaccard"))
-      .orderBy($"id_a", $"id_b")
+      // (a) doc_id < 200: at most 19 900 pairs
+      .orderByInOnePartition($"id_a", $"id_b")
   }
 
   val q44Sql: String =
@@ -282,7 +283,8 @@ object Queries3 {
         round($"q".getItem(1), 4).as("p50"),
         round($"q".getItem(2), 4).as("p75"),
         $"qty_p90")
-      .orderBy($"l_returnflag")
+      // (a) at most 3 return flags
+      .orderByInOnePartition($"l_returnflag")
   }
 
   val q28Sql: String =

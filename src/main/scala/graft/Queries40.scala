@@ -78,7 +78,8 @@ object Queries40 {
   def q289ImageDhash(s: SparkSession, dir: String): DataFrame =
     imageCorpus(s, dir)
       .select($"doc_id", Functional.dhash64($"blob").as("dhash"))
-      .orderBy($"doc_id")
+      // (b) one (long, long) row per image from the dhash64 kernel
+      .orderByInOnePartition($"doc_id")
 
   /** Content-level near-dup pairs via [[Dedup.hammingPairs]] (4×16
     * banding — lossless to Hamming 3 — + capGroups + exact verify) over
@@ -657,7 +658,8 @@ object Queries40 {
         posexplode(Functional.videoFrameHashes($"blob")))
       .select($"doc_id", $"pos".cast(LongType).as("frame_idx"),
         $"col".as("fhash"))
-      .orderBy($"doc_id", $"frame_idx")
+      // (b) a few (long, long, long) rows per video from videoFrameHashes
+      .orderByInOnePartition($"doc_id", $"frame_idx")
 
   /** Video near-dup by shared frame fingerprints
     * ([[Dedup.fingerprintOverlap]] — the winnowOverlap machinery over

@@ -275,7 +275,8 @@ object Queries5 {
         round($"r.dup_10gram_char_frac", 4).as("dup_10gram_char_frac"),
         $"gopher_ok")
       .crossJoin(broadcast(ok))
-      .orderBy($"doc_id")
+      // (b) one narrow row per document from repetitionSignals
+      .orderByInOnePartition($"doc_id")
   }
 
   // ---- deterministic sampling / splits (operators/Sampling.scala) ------

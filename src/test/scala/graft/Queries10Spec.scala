@@ -92,6 +92,31 @@ class Queries10Spec extends SparkSpec {
     }
   }
 
+  test("containmentPairs gives arrays with duplicates their distinct pairs") {
+    // e1 vs d10: a raw join count would see 3 shared of 5 (qualifies at
+    // 6/10); distinct it is 1 of 3. d11 repeats one gram of e2 likewise.
+    val eval_ = Seq(1L -> Seq("a", "a", "a", "b", "c"),
+      2L -> Seq("p", "q", "r", "s", "t"))
+    val corpus = Seq(10L -> Seq("a", "x", "y"),
+      11L -> Seq("p", "p", "p", "z"))
+    def distinct(sets: Seq[(Long, Seq[String])]) =
+      sets.map { case (id, gs) => id -> gs.distinct }
+    val rnd = new scala.util.Random(7)
+    val grams = (0 until 10).map(i => s"g$i")
+    def randSets(n: Int, base: Long) = (0 until n).map { i =>
+      val gs = rnd.shuffle(grams).take(2 + rnd.nextInt(7))
+      (base + i) -> rnd.shuffle(gs ++ gs.take(1 + rnd.nextInt(gs.size)))
+    }
+    val cases = (eval_, corpus) +:
+      (0 until 3).map(seed => (randSets(6, 100L * seed),
+        randSets(15, 1000L * seed)))
+    for ((ev, cp) <- cases) {
+      val expected = brute(distinct(ev), distinct(cp), 6, 10)
+      assert(pruned(ev, cp, 6, 10) === expected)
+      assert(pruned(distinct(ev), distinct(cp), 6, 10) === expected)
+    }
+  }
+
   // ---- funnel ordering --------------------------------------------------
 
   test("q149 funnel enforces stage order and the 24h bound") {
