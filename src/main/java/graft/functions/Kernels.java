@@ -3,8 +3,10 @@ package graft.functions;
 import java.util.concurrent.ConcurrentHashMap;
 import java.math.BigInteger;
 
+import org.apache.spark.sql.catalyst.expressions.XXH64;
 import org.apache.spark.sql.catalyst.util.ArrayData;
 import org.apache.spark.sql.catalyst.util.GenericArrayData;
+import org.apache.spark.unsafe.Platform;
 import org.apache.spark.unsafe.types.UTF8String;
 
 /**
@@ -1059,6 +1061,41 @@ public final class Kernels {
     java.util.Arrays.sort(out);
     int m = 0;
     for (int s = 0; s < nShingles; s++) {
+      if (m == 0 || out[s] != out[m - 1]) out[m++] = out[s];
+    }
+    return new GenericArrayData(java.util.Arrays.copyOf(out, m));
+  }
+
+  /** Distinct hashed character k-grams of a text (sorted array<long>):
+   * Spark's `xxhash64` (seed 42) of every window of k code points, the
+   * same values as `xxhash64(substr(text, i, k))` for i in 1..len-k+1,
+   * in one pass over the bytes with no substring copies. Code points are
+   * walked by their UTF-8 lead byte, clamped to the string's bytes, so a
+   * malformed trailing byte ends the string rather than reading past it.
+   * A text of fewer than k code points has no k-grams. */
+  public static ArrayData charShingleSet(UTF8String text, int k) {
+    Object base = text.getBaseObject();
+    long off = text.getBaseOffset();
+    int nb = text.numBytes();
+    // starts[c] = byte offset of code point c; starts[n] = nb ends the
+    // last code point even when its lead byte claims more bytes
+    int[] starts = new int[nb + 1];
+    int n = 0;
+    for (int i = 0; i < nb; n++) {
+      starts[n] = i;
+      i += UTF8String.numBytesForFirstByte(Platform.getByte(base, off + i));
+    }
+    starts[n] = nb;
+    if (k < 1 || n < k) return new GenericArrayData(new long[0]);
+    int count = n - k + 1;
+    long[] out = new long[count];
+    for (int c = 0; c < count; c++) {
+      out[c] = XXH64.hashUnsafeBytes(base, off + starts[c],
+          starts[c + k] - starts[c], 42L);
+    }
+    java.util.Arrays.sort(out);
+    int m = 0;
+    for (int s = 0; s < count; s++) {
       if (m == 0 || out[s] != out[m - 1]) out[m++] = out[s];
     }
     return new GenericArrayData(java.util.Arrays.copyOf(out, m));

@@ -80,38 +80,19 @@ object Queries3 {
 
   // ---- exact n-gram Jaccard, fully oracled ----------------------------
 
-  /** Character-3-gram Jaccard over a bounded doc subset, computed from
-    * first principles with array built-ins on BOTH engines (identical
-    * shingle definition: substr(text, i, 3) for i in 1..len-2,
-    * distinct). Unlike q42 (hash-based LSH pipeline, rows-only check)
-    * every value here is DuckDB-verified. The subset bound keeps the
-    * all-pairs step at 19,900 pairs; at corpus scale the same jaccard
-    * expression runs on LSH candidates only (q42 path). */
-  def q44JaccardExact(s: SparkSession, dir: String): DataFrame = {
-    // shingles hashed to 64-bit and kept as sorted distinct sets: the
-    // per-pair jaccard is then ONE merge scan (Kernels.jaccardSorted)
-    // instead of a string-array intersect per pair. |∩|/|∪| is
-    // unchanged up to 64-bit collisions (~1e-12 at these set sizes);
-    // the oracle computes the same ratio over the raw shingle strings.
-    val sh = sort_array(array_distinct(transform(
-      sequence(lit(1), length($"text") - 2),
-      i => xxhash64($"text".substr(i, lit(3))))))
-    // length >= 3 guard: sequence(1, len-2) would DESCEND for shorter
-    // docs (e.g. [1,0]) and fabricate shingles the oracle's half-open
-    // range(1, len-1) never produces
-    val d = t(s, dir, "documents")
-      .where($"doc_id" < 200 && length($"text") >= 3)
-      .select($"doc_id", sh.as("sh"))
-    val a = d.select($"doc_id".as("id_a"), $"sh".as("sh_a"))
-    val b = d.select($"doc_id".as("id_b"), $"sh".as("sh_b"))
-    a.join(broadcast(b), $"id_a" < $"id_b")
-      .select($"id_a", $"id_b",
-        graft.functions.Functional.jaccardSorted($"sh_a", $"sh_b").as("j"))
-      .where($"j" >= 0.60)
+  /** Character-3-gram Jaccard over a bounded doc subset, every value
+    * DuckDB-verified: the pairs of [[Queries6.jaccardPairFixture]] with
+    * their jaccard rounded to 4 places. The oracle computes it from
+    * first principles (substr(text, i, 3) for i in 1..len-2, distinct,
+    * list intersect). Unlike q42 (hash-based LSH pipeline, rows-only
+    * check) this is exact; the subset bound keeps the all-pairs step
+    * at 19,900 pairs, and at corpus scale the same jaccard runs on LSH
+    * candidates only (q42 path). */
+  def q44JaccardExact(s: SparkSession, dir: String): DataFrame =
+    Queries6.jaccardPairFixture(s, dir)
       .select($"id_a", $"id_b", round($"j", 4).as("jaccard"))
       // (a) doc_id < 200: at most 19 900 pairs
       .orderByInOnePartition($"id_a", $"id_b")
-  }
 
   val q44Sql: String =
     """WITH d AS (

@@ -371,7 +371,8 @@ object Queries38 {
   def q282LeakageSafeSplit(s: SparkSession, dir: String): DataFrame = {
     val weights = Seq("train" -> 0.8, "test" -> 0.2)
     val comp = graft.operators.Dedup
-      .connectedComponents(Queries6.jaccardPairFixture(s, dir))
+      .connectedComponents(
+        Queries6.jaccardPairFixture(s, dir).select($"id_a", $"id_b"))
       .select($"id", $"component")
     val docs = t(s, dir, "documents").select($"doc_id")
     val rep = docs.join(broadcast(comp), $"doc_id" === $"id", "left")

@@ -47,7 +47,8 @@ object Queries40 {
   private def imageCorpus(s: SparkSession, dir: String): DataFrame = {
     val synth = udf((id: Long) =>
       Multimodal.encodeGrayPng(Multimodal.synthGray(id, W, H, ImgSeed), W, H))
-    val corpus = t(s, dir, "documents")
+    val corpus = t(s, dir, "documents").select($"doc_id")
+      .spreadOverCores // (a) the synth UDF
       .select($"doc_id", synth($"doc_id").as("blob"))
     val p0 = Queries2.plantBase
     val base = Multimodal.synthGray(p0, W, H, ImgSeed)
@@ -370,7 +371,8 @@ object Queries40 {
   private def audioCorpus(s: SparkSession, dir: String): DataFrame = {
     val synth = udf((id: Long) => Multimodal.encodePcm16Wav(
       Multimodal.synthPcm16(id, NSamp, AudSeed)))
-    val corpus = t(s, dir, "documents")
+    val corpus = t(s, dir, "documents").select($"doc_id")
+      .spreadOverCores // (a) the synth UDF
       .select($"doc_id", synth($"doc_id").as("blob"))
     val p0 = Queries2.plantBase
     val base = Multimodal.synthPcm16(p0, NSamp, AudSeed)
@@ -628,7 +630,8 @@ object Queries40 {
   private[graft] def videoCorpus(s: SparkSession, dir: String): DataFrame = {
     val synth = udf((id: Long) => Multimodal.synthesizeMp4WithFrames(
       videoFrames(id, (0 until NFrames).map(f => id * 16L + f))))
-    val corpus = t(s, dir, "documents")
+    val corpus = t(s, dir, "documents").select($"doc_id")
+      .spreadOverCores // (a) the synth UDF
       .select($"doc_id", synth($"doc_id").as("blob"))
     val p0 = Queries2.plantBase
     def grays(fid: Long) = Multimodal.synthGray(fid, W, H, VidSeed)

@@ -59,7 +59,8 @@ object Queries41 {
   private def videoCorpusMulti(s: SparkSession, dir: String): DataFrame = {
     val synth = udf((id: Long) => multiChunkBlob(id,
       (0 until NFrames).map(f => encFrame(id * 16L + f))))
-    val corpus = t(s, dir, "documents")
+    val corpus = t(s, dir, "documents").select($"doc_id")
+      .spreadOverCores // (a) the synth UDF
       .select($"doc_id", synth($"doc_id").as("blob"))
     val p0 = Queries2.plantBase
     val baseFids = (0 until NFrames).map(f => p0 * 16L + f)
@@ -107,7 +108,8 @@ object Queries41 {
   private def stereoCorpus(s: SparkSession, dir: String): DataFrame = {
     val synth = udf((id: Long) =>
       encodeStereo(Multimodal.synthPcm24Stereo(id, NSamp, St24Seed)))
-    val corpus = t(s, dir, "documents")
+    val corpus = t(s, dir, "documents").select($"doc_id")
+      .spreadOverCores // (a) the synth UDF
       .select($"doc_id", synth($"doc_id").as("blob"))
     val p0 = Queries2.plantBase
     val base = Multimodal.synthPcm24Stereo(p0, NSamp, St24Seed)
@@ -659,7 +661,8 @@ object Queries41 {
       (p0 + 3L, Multimodal.synthesizeMp4MultiTrak(
         Seq(encFrame(p0 * 16L)) ++
           (1 until NFrames).map(f => encFrame(p0 * 16L + 8 + f)))))
-    t(s, dir, "documents")
+    t(s, dir, "documents").select($"doc_id")
+      .spreadOverCores // (a) the synth UDF
       .select($"doc_id", synth($"doc_id").as("blob"))
       .unionByName(s.createDataFrame(plants).toDF("doc_id", "blob"))
       .select($"doc_id",

@@ -67,32 +67,35 @@ object Queries6 {
 
   // ---- dup-group resolution (connected components) ---------------------
 
-  /** Near-dup pipeline completion: candidate pairs (the q44-oracled
-    * exact-Jaccard set over the bounded doc_id < 200 subset) resolved
-    * into duplicate GROUPS via min-label connected components — the
-    * step that turns pairwise similarity into one-keeper-per-group at
-    * corpus scale. component = min reachable id = the deterministic
-    * keep-id. The DuckDB oracle computes the same components by
-    * recursive transitive closure; both sides emit only ids that
-    * appear in at least one pair. */
-  /** q88/q94 shared fixture: exact char-3-gram Jaccard ≥ 0.60 pairs
-    * over the bounded doc_id < 200 subset — ONE definition, so the two
-    * resolution gates provably consume the identical pair graph (they
-    * are documented as the same graph resolved under two policies). */
+  /** The exact char-3-gram Jaccard ≥ 0.60 pairs (id_a < id_b, with
+    * their jaccard `j`) over the bounded doc_id < 200 subset — ONE
+    * definition for q44 (which reports `j`) and q88, q94 and q282
+    * (which resolve the pair graph under three policies). A doc's
+    * shingles are the distinct 64-bit hashes of its 3-code-point
+    * substrings ([[Functional.charShingleSet]]), so the per-pair
+    * jaccard is ONE merge scan ([[Functional.jaccardSorted]]) instead
+    * of a string-array intersect per pair. |∩|/|∪| is unchanged up to
+    * 64-bit collisions (~1e-12 at these set sizes); the oracle computes
+    * the same ratio over the raw shingle strings. */
   private[graft] def jaccardPairFixture(s: SparkSession, dir: String): DataFrame = {
-    val sh = sort_array(array_distinct(transform(
-      sequence(lit(1), length($"text") - 2),
-      i => xxhash64($"text".substr(i, lit(3))))))
+    // length >= 3 mirrors the oracle's filter: a doc with no 3-gram is
+    // in no pair on either side
     val d = t(s, dir, "documents")
       .where($"doc_id" < 200 && length($"text") >= 3)
-      .select($"doc_id", sh.as("sh"))
+      .select($"doc_id", $"text")
+      // (a) charShingleSet, (b) the pair loop over its streamed side
+      .spreadOverCores
+      // coalesce: a non-null sh gets no inferred isnotnull(sh) filter,
+      // which Catalyst would push below the spread, running the kernel
+      // a second time in the one-task scan stage
+      .select($"doc_id", coalesce(Functional.charShingleSet($"text", 3),
+        typedLit(Seq.empty[Long])).as("sh"))
     val a = d.select($"doc_id".as("id_a"), $"sh".as("sh_a"))
     val b = d.select($"doc_id".as("id_b"), $"sh".as("sh_b"))
     a.join(broadcast(b), $"id_a" < $"id_b")
       .select($"id_a", $"id_b",
         Functional.jaccardSorted($"sh_a", $"sh_b").as("j"))
       .where($"j" >= 0.60)
-      .select($"id_a", $"id_b")
   }
 
   /** SQL half of [[jaccardPairFixture]] + transitive closure, shared
@@ -119,8 +122,17 @@ object Queries6 {
       |  UNION
       |  SELECT r.src, e2.b FROM reach r JOIN edges e2 ON r.dst = e2.a)""".stripMargin
 
+  /** Near-dup pipeline completion: candidate pairs (the q44-oracled
+    * exact-Jaccard set over the bounded doc_id < 200 subset) resolved
+    * into duplicate GROUPS via min-label connected components — the
+    * step that turns pairwise similarity into one-keeper-per-group at
+    * corpus scale. component = min reachable id = the deterministic
+    * keep-id. The DuckDB oracle computes the same components by
+    * recursive transitive closure; both sides emit only ids that
+    * appear in at least one pair. */
   def q88DupGroups(s: SparkSession, dir: String): DataFrame =
-    Dedup.connectedComponents(jaccardPairFixture(s, dir))
+    Dedup.connectedComponents(
+      jaccardPairFixture(s, dir).select($"id_a", $"id_b"))
       .select($"id", $"component")
       .orderBy($"id")
 
@@ -432,7 +444,8 @@ object Queries6 {
       .where($"doc_id" < 200 && length($"text") >= 3)
       .select($"doc_id".as("id"),
         TextAnalysis.tokenCount($"text").cast(LongType).as("score"))
-    Dedup.resolveKeepBest(jaccardPairFixture(s, dir), scores)
+    Dedup.resolveKeepBest(
+      jaccardPairFixture(s, dir).select($"id_a", $"id_b"), scores)
       .select($"id", $"component", $"keep_id")
       .orderBy($"id")
   }

@@ -198,6 +198,12 @@ object Functional {
     invoke("shingleSet", ArrayType(LongType, containsNull = false),
       Seq(text, lit(shingleSize)), Seq(StringType, IntegerType))
 
+  /** Distinct hashed character k-grams (sorted array<long>): the
+    * `xxhash64` of every k-code-point substring, in one pass. */
+  def charShingleSet(text: Column, k: Int): Column =
+    invoke("charShingleSet", ArrayType(LongType, containsNull = false),
+      Seq(text, lit(k)), Seq(StringType, IntegerType))
+
   /** Word k-shingles as strings, fused (the kernel behind
     * [[graft.operators.TextAnalysis.shingles]]). */
   def wordShingles(text: Column, k: Int): Column =

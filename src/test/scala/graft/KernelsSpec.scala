@@ -2,6 +2,10 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.expressions.XXH64
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.{Functional, Kernels}
 
@@ -318,6 +322,59 @@ class KernelsSpec extends SparkSpec {
       assert(winnowSet(text, k, w) === naiveWinnow(text, k, w),
         s"case $case_: k=$k w=$w n=$n text=$text")
     }
+  }
+
+  // ---- character k-gram shingle sets -----------------------------------
+
+  private def longs(a: ArrayData): Seq[Long] =
+    (0 until a.numElements()).map(a.getLong)
+
+  test("charShingleSet: property — equals the sorted distinct xxhash64 of " +
+      "every 3-code-point substring on 200 random UTF-8 texts") {
+    val rnd = new scala.util.Random(0xC4A25L)
+    // code point ranges by UTF-8 width: 1, 2, 3 (no surrogates), 4 bytes
+    val widths = Seq((0x20, 0x7f), (0x80, 0x800), (0x800, 0xd800),
+      (0x10000, 0x110000))
+    val texts = (0 until 200).map { i =>
+      // one width per text, every fifth text mixed; a small pool of code
+      // points so that windows repeat and the set has to drop them
+      val pool = Seq.fill(2 + rnd.nextInt(6)) {
+        val (lo, hi) = widths(if (i % 5 < 4) i % 5 else rnd.nextInt(4))
+        lo + rnd.nextInt(hi - lo)
+      }
+      val sb = new java.lang.StringBuilder
+      for (_ <- 0 until 3 + rnd.nextInt(398))
+        sb.appendCodePoint(pool(rnd.nextInt(pool.size)))
+      sb.toString
+    }
+    val spark3grams = sort_array(array_distinct(transform(
+      sequence(lit(1), length(col("t")) - 2),
+      i => xxhash64(col("t").substr(i, lit(3))))))
+    val rows = texts.toDF("t")
+      .select(col("t"), spark3grams,
+        Functional.charShingleSet(col("t"), 3))
+      .collect()
+    assert(rows.length === texts.size)
+    for (r <- rows)
+      assert(r.getSeq[Long](2) === r.getSeq[Long](1), s"text: ${r.getString(0)}")
+  }
+
+  test("charShingleSet: a text shorter than k has no k-grams; a malformed " +
+      "trailing byte neither throws nor reads past the string") {
+    for (t <- Seq("", "a", "ab", "é", "日本", "\uD83D\uDE00x"))
+      assert(longs(Kernels.charShingleSet(UTF8String.fromString(t), 3))
+        .isEmpty, t)
+    assert(col0(Seq("ab").toDF("t")
+      .select(Functional.charShingleSet(col("t"), 3))) === Seq(Nil))
+    // "abcd" and a 4-byte lead byte with nothing after it, at the start
+    // of a longer buffer: the last 3-gram is clamped to the 5 bytes
+    val bytes = "abcd".getBytes("UTF-8") :+ 0xf0.toByte
+    val buf = bytes ++ "XYZ".getBytes("UTF-8")
+    def h(from: Int, until: Int): Long = XXH64.hashUnsafeBytes(
+      bytes, Platform.BYTE_ARRAY_OFFSET + from, until - from, 42L)
+    val got = Kernels.charShingleSet(
+      UTF8String.fromBytes(buf, 0, bytes.length), 3)
+    assert(longs(got) === Seq(h(0, 3), h(1, 4), h(2, 5)).sorted)
   }
 
   test("winnow is SQL-callable after registerAll") {

@@ -6,21 +6,31 @@ import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-  SparkListenerStageCompleted}
+  SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning,
+  RoundRobinPartitioning}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
   QueryStageExec}
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec,
+  ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 
-/** [[OrderedResult.orderByInOnePartition]] and the gates that end in it:
-  * the rows come out in `orderBy`'s order, no range exchange (and so no
-  * sampling job) is planned, and the stages that scan the input still
-  * run one task per file, which `coalesce(1)` in place of the shuffle
-  * would not. */
+/** The two [[PartitionLayout]] helpers and the gates that use them.
+  *
+  * [[PartitionLayout.orderByInOnePartition]]: the rows come out in
+  * `orderBy`'s order, no range exchange (and so no sampling job) is
+  * planned, and the stages that scan the input still run one task per
+  * file, which `coalesce(1)` in place of the shuffle would not.
+  *
+  * [[PartitionLayout.spreadOverCores]]: over the one-file `documents`
+  * table, the per-row kernel sits above a round-robin exchange, the
+  * stage that runs it reads rows in more than one task, and the rows
+  * are those the gate gave before it was spread. */
 class OrderedResultSpec extends SparkSpec with BeforeAndAfterAll {
 
   private val sf = "/root/testdata/sf0.001"
@@ -38,20 +48,29 @@ class OrderedResultSpec extends SparkSpec with BeforeAndAfterAll {
     try Fs.rmTree(new java.io.File(multi)) finally super.afterAll()
   }
 
-  private def shuffles(p: SparkPlan): Seq[ShuffleExchangeExec] = p match {
-    case a: AdaptiveSparkPlanExec => shuffles(a.executedPlan)
-    case q: QueryStageExec => shuffles(q.plan)
-    case e: ShuffleExchangeExec => e +: shuffles(e.child)
-    case _ => p.children.flatMap(shuffles)
-  }
+  /** Every node below `p`, through adaptive stages and reused exchanges. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case q: QueryStageExec => nodes(q.plan)
+    case r: ReusedExchangeExec => nodes(r.child)
+    case _ => p.children.flatMap(nodes)
+  })
 
-  /** Task counts of the completed stages that read a parquet file, over
-    * the jobs `run` starts. */
-  private def scanStageTasks(run: => Unit): Seq[Int] = {
+  private def shuffles(p: SparkPlan): Seq[ShuffleExchangeExec] =
+    nodes(p).collect { case e: ShuffleExchangeExec => e }
+
+  /** Per completed stage of the jobs `run` starts: whether it reads a
+    * parquet file, its task count, and how many of its tasks read at
+    * least one row from a shuffle. */
+  private case class StageStat(scansFile: Boolean, tasks: Int,
+      shuffleReadingTasks: Int)
+
+  private def stageStats(run: => Unit): Seq[StageStat] = {
     val sc = spark.sparkContext
     val group = "ordered-result-spec"
     val stages = new ConcurrentLinkedQueue[Int]()
-    val scans = new ConcurrentHashMap[Int, Int]()
+    val done = new ConcurrentHashMap[Int, (Boolean, Int)]()
+    val reading = new ConcurrentHashMap[Int, Integer]()
     @volatile var markerSeen = false
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
@@ -60,22 +79,30 @@ class OrderedResultSpec extends SparkSpec with BeforeAndAfterAll {
           case Some("ordered-result-marker") => markerSeen = true
           case _ =>
         }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null &&
+            e.taskMetrics.shuffleReadMetrics.recordsRead > 0)
+          reading.merge(e.stageId, 1, (a, b) => a + b)
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-        if (e.stageInfo.rddInfos.exists(_.name == "FileScanRDD"))
-          scans.put(e.stageInfo.stageId, e.stageInfo.numTasks)
+        done.put(e.stageInfo.stageId,
+          (e.stageInfo.rddInfos.exists(_.name == "FileScanRDD"),
+            e.stageInfo.numTasks))
     }
     sc.addSparkListener(listener)
     try {
       sc.setJobGroup(group, "gate under test")
       run
       // listener events arrive in order: once the marker job is seen,
-      // every stage of the jobs before it has been seen too
+      // every stage and task of the jobs before it has been seen too
       sc.setJobGroup("ordered-result-marker", "marker")
       sc.parallelize(Seq(1), 1).count()
       val deadline = System.nanoTime() + 30L * 1000000000L
       while (!markerSeen && System.nanoTime() < deadline) Thread.sleep(10)
       assert(markerSeen)
-      stages.asScala.toSeq.distinct.flatMap(s => Option(scans.get(s)))
+      stages.asScala.toSeq.distinct.flatMap(s => Option(done.get(s)).map {
+        case (scans, tasks) =>
+          StageStat(scans, tasks, Option(reading.get(s)).fold(0)(_.intValue))
+      })
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
@@ -93,7 +120,8 @@ class OrderedResultSpec extends SparkSpec with BeforeAndAfterAll {
       .filter(_.outputPartitioning.isInstanceOf[RangePartitioning])
     assert(ranges.isEmpty, s"range exchange in the final plan: $ranges")
     val fourFiles = multi // written before the listener starts counting
-    val tasks = scanStageTasks(build(fourFiles).collect(): Unit)
+    val tasks = stageStats(build(fourFiles).collect(): Unit)
+      .filter(_.scansFile).map(_.tasks)
     assert(tasks.nonEmpty && tasks.forall(_ > 1),
       s"scan-stage task counts over 4-file tables: $tasks")
   }
@@ -120,5 +148,65 @@ class OrderedResultSpec extends SparkSpec with BeforeAndAfterAll {
   for ((name, gate, keys) <- gates)
     test(s"$name is ordered in one partition, with no range exchange") {
       assertOrderedInOnePartition(dir => gate(spark, dir), keys.map(col): _*)
+    }
+
+  // ---- spreadOverCores --------------------------------------------------
+
+  test("spreadOverCores deals the same rows over one partition per core") {
+    val docs = Tables(spark, sf, "documents").select(col("doc_id"))
+    val spread = docs.spreadOverCores
+    assert(spread.rdd.getNumPartitions ===
+      spark.sparkContext.defaultParallelism)
+    assert(spread.rdd.glom().collect().count(_.nonEmpty) > 1)
+    assert(spread.collect().map(_.getLong(0)).sorted ===
+      docs.collect().map(_.getLong(0)).sorted)
+  }
+
+  private def hasRoundRobin(p: SparkPlan): Boolean =
+    shuffles(p).exists(
+      _.outputPartitioning.isInstanceOf[RoundRobinPartitioning])
+
+  /** A plan node that evaluates a per-row kernel: a synth UDF or a
+    * `graft.functions.Kernels` method. */
+  private def runsKernel(p: SparkPlan): Boolean =
+    p.expressions.exists(_.exists {
+      case _: ScalaUDF => true
+      case i: StaticInvoke =>
+        i.staticObject == classOf[graft.functions.Kernels]
+      case _ => false
+    })
+
+  /** (rows, Σ xxhash64 of each row) of a result, order-insensitive. */
+  private def digest(df: DataFrame): (Long, BigDecimal) = {
+    val r = df.agg(count(lit(1)), sum(xxhash64(df.columns.map(col): _*)
+      .cast("decimal(38,0)"))).head()
+    (r.getLong(0), BigDecimal(r.getDecimal(1)))
+  }
+
+  /** The gates' digests over sf0.001 from before their kernels were
+    * spread (q44 also from before `charShingleSet` replaced its
+    * `transform(sequence(...), xxhash64(substr(...)))` shingles). */
+  private val spreadGates: Seq[(String, (SparkSession, String) => DataFrame,
+      (Long, BigDecimal))] = Seq(
+    ("q44", Queries3.q44JaccardExact,
+      (1198L, BigDecimal("153094968173894883285"))),
+    ("q289", Queries40.q289ImageDhash,
+      (504L, BigDecimal("48519976489001279840"))),
+    ("q296", Queries40.q296VideoFrames,
+      (2016L, BigDecimal("128236271821019117345"))))
+
+  for ((name, gate, before) <- spreadGates)
+    test(s"$name runs its kernel above a round-robin exchange, in more " +
+        "than one task, with the same rows") {
+      val df = gate(spark, sf)
+      val stats = stageStats(df.collect(): Unit)
+      assert(stats.map(_.shuffleReadingTasks).max >= 2,
+        s"tasks reading shuffled rows, per stage: $stats")
+      val kernels = nodes(df.queryExecution.executedPlan).filter(runsKernel)
+      assert(kernels.nonEmpty)
+      for (k <- kernels)
+        assert(hasRoundRobin(k),
+          s"no round-robin exchange below ${k.nodeName}: ${k.expressions}")
+      assert(digest(df) === before)
     }
 }
