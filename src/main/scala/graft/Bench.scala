@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR, prints the bench artifact as JSON. Queries run
   * in sorted name order after a JVM/session warmup; each query is
@@ -68,32 +66,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // A 290-gate suite in ONE JVM accumulates broadcast blocks and
-      // shuffle state that the ContextCleaner only reclaims when their
-      // references get GC'd — and with a large heap, full GCs are rare,
-      // so STORAGE occupancy quietly squeezes the unified-memory
-      // EXECUTION share and the suite's biggest hash aggregates start
-      // spilling (observed: q216's wedge agg at 17 s in a fresh JVM vs
-      // 63 s late in a long pass, bimodal across rounds 18-19). The
-      // documented knob for long-running drivers: force the cleaner's
-      // periodic GC often enough to matter within one pass (default
-      // 30min — longer than the whole suite). 300s, not 60s: a forced
-      // full GC at a 24g heap pauses all 32 threads for seconds, and
-      // at 60s those pauses landed INSIDE sub-second gates (measured:
-      // the sf0.1 suite read 475/464 s with six small-gate over_2x
-      // flags at 60s vs 408/311 clean at none) — one reclamation per
-      // pass captures the memory benefit without the jitter.
-      .config("spark.cleaner.periodicGC.interval", "300s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.hostCores
+    val spark = GraftSession(cpus)
     // bench times the sketch-only plans; the exact-bound self-checks
     // stay on in the Verify/correctness path (default true)
     spark.conf.set("graft.sketch.selfcheck", "false")
@@ -140,7 +114,7 @@ object Bench {
       val t0 = System.nanoTime()
       // pmod before the sum: 512M raw 64-bit hashes would overflow the
       // LONG sum under ANSI; max reduced sum ~5.1e17, five-fold headroom
-      spark.range(0L, 512000000L, 1L, cpus.toInt)
+      spark.range(0L, 512000000L, 1L, cpus)
         .selectExpr("sum(pmod(xxhash64(id), 1000000007L))").collect()
       (System.nanoTime() - t0) / 1e9
     }

@@ -1,22 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints formatted physical plans for key queries — the scale review
   * loop: confirm PushedFilters / ReadSchema pruning, broadcast joins,
   * partial aggregation, and WholeStageCodegen coverage.
   */
 object Plans {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the NTZ→TIMESTAMP cast in Tables.normalizeEventsTs is only an
-      // identity under UTC — pin it like every other entrypoint does
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(GraftSession.hostCores)
     val dir = "/root/testdata/sf0.001"
     val names = if (args.nonEmpty) args.toSeq
       else Seq("q02_filter_project", "q03_join_agg", "q01_groupby_agg",

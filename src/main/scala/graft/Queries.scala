@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -19,20 +19,12 @@ import org.apache.spark.sql.types._
   */
 object Queries {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
-  /** Exact distributed sum of a double column: cast to decimal before
-    * aggregation so partial-agg order cannot change the result. */
-  private def dsum(c: Column): Column =
-    sum(c.cast(DecimalType(25, 4))).cast(DoubleType)
-
   private val DSUM = "CAST(SUM(CAST(%s AS DECIMAL(25,4))) AS DOUBLE)"
 
   // ---- §2.4 grouped aggregation (flagship) ----------------------------
 
   def q01GroupbyAgg(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables(s, dir, "lineitem")
       .groupBy($"l_returnflag", $"l_linestatus")
       .agg(
         dsum($"l_quantity").as("sum_qty"),
@@ -57,7 +49,7 @@ object Queries {
   // ---- §2.2 projection + filter (where/select with computed column) ---
 
   def q02FilterProject(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables(s, dir, "lineitem")
       .where($"l_quantity" < 24 && $"l_discount" > 0.02)
       .select($"l_orderkey", $"l_linenumber", $"l_quantity",
         ($"l_extendedprice" * (lit(1.0) - $"l_discount")).as("disc_price"))
@@ -72,10 +64,10 @@ object Queries {
   // ---- §2.3 join (declared surface; broadcast the dimensions) ---------
 
   def q03JoinAgg(s: SparkSession, dir: String): DataFrame = {
-    val orders = t(s, dir, "orders")
-    val customer = t(s, dir, "customer")
-    val nation = t(s, dir, "nation")
-    val region = t(s, dir, "region")
+    val orders = Tables(s, dir, "orders")
+    val customer = Tables(s, dir, "customer")
+    val nation = Tables(s, dir, "nation")
+    val region = Tables(s, dir, "region")
     orders
       .join(broadcast(customer), $"o_custkey" === $"c_custkey")
       .join(broadcast(nation), $"c_nationkey" === $"n_nationkey")
@@ -97,7 +89,7 @@ object Queries {
   // ---- §2.6 sort + limit (top-k) --------------------------------------
 
   def q04TopK(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
+    Tables(s, dir, "orders")
       .orderBy($"o_totalprice".desc, $"o_orderkey".asc)
       .limit(10)
       .select($"o_orderkey", $"o_custkey", $"o_totalprice")
@@ -109,7 +101,7 @@ object Queries {
   // ---- §2.7 distinct --------------------------------------------------
 
   def q05Distinct(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables(s, dir, "lineitem")
       .select($"l_returnflag", $"l_linestatus")
       .distinct()
       .orderBy($"l_returnflag", $"l_linestatus")
@@ -121,7 +113,7 @@ object Queries {
   // ---- §2.7 isin ------------------------------------------------------
 
   def q06Isin(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "customer")
+    Tables(s, dir, "customer")
       .where($"c_mktsegment".isin("BUILDING", "MACHINERY"))
       .groupBy($"c_mktsegment")
       .agg(count(lit(1)).as("n_cust"), dsum($"c_acctbal").as("sum_bal"))
@@ -136,7 +128,7 @@ object Queries {
   // ---- §2.8 null handling: fill_null / drop_null ----------------------
 
   def q07NullClean(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables(s, dir, "lineitem")
       .select($"l_orderkey", $"l_linenumber",
         coalesce(nullif($"l_discount", lit(0.0)), lit(-1.0)).as("disc_filled"))
       .where(nullif($"l_tax", lit(0.0)).isNotNull)
@@ -151,7 +143,7 @@ object Queries {
   // ---- §2.6 multi-key sort w/ mixed direction -------------------------
 
   def q08Sort(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "part")
+    Tables(s, dir, "part")
       .where($"p_size" <= 15)
       .select($"p_partkey", $"p_brand", $"p_size", $"p_retailprice")
       .orderBy($"p_brand".asc, $"p_retailprice".desc, $"p_partkey".asc)
@@ -169,7 +161,7 @@ object Queries {
     val w = Window.partitionBy($"o_custkey")
       .orderBy($"o_orderdate", $"o_orderkey")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    t(s, dir, "orders")
+    Tables(s, dir, "orders")
       .select($"o_custkey", $"o_orderkey",
         sum($"o_totalprice".cast(DecimalType(25, 4))).over(w)
           .cast(DoubleType).as("running_spend"))
@@ -187,7 +179,7 @@ object Queries {
   // ---- §2.4 describe (column-level reductions) ------------------------
 
   def q10Describe(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem").agg(
+    Tables(s, dir, "lineitem").agg(
       count($"l_quantity").as("qty_count"),
       round(avg($"l_quantity"), 4).as("qty_mean"),
       round(stddev_samp($"l_quantity"), 2).as("qty_std"),
@@ -210,7 +202,7 @@ object Queries {
   def q11WindowRank(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy($"o_custkey")
       .orderBy($"o_totalprice".desc, $"o_orderkey".asc)
-    t(s, dir, "orders")
+    Tables(s, dir, "orders")
       .select($"o_custkey", $"o_orderkey", $"o_totalprice",
         row_number().over(w).as("rn"))
       .where($"rn" <= 3)
@@ -227,9 +219,9 @@ object Queries {
   // ---- §2.1 concat (union-all) ----------------------------------------
 
   def q12Concat(s: SparkSession, dir: String): DataFrame = {
-    val a = t(s, dir, "lineitem").where($"l_returnflag" === "A")
+    val a = Tables(s, dir, "lineitem").where($"l_returnflag" === "A")
       .select($"l_orderkey".as("k"))
-    val b = t(s, dir, "orders").where($"o_orderstatus" === "F")
+    val b = Tables(s, dir, "orders").where($"o_orderstatus" === "F")
       .select($"o_orderkey".as("k"))
     a.unionAll(b).groupBy($"k").agg(count(lit(1)).as("n")).orderBy($"k")
   }
@@ -247,7 +239,7 @@ object Queries {
     * nanosecond long (spark.sql.legacy.parquet.nanosAsLong=true, set in
     * Verify/Bench/GraftSession); hour-bucketing is integer arithmetic. */
   def q13EventsWindow(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
+    Tables(s, dir, "events")
       .groupBy((expr("ts div 3600000000000") * lit(3600L)).as("bucket_ts"),
         $"event_type")
       .agg(count(lit(1)).as("n"), dsum($"value").as("sum_value"))
@@ -261,7 +253,7 @@ object Queries {
   // ---- §2.4 agg forms: multiple ops per column + nunique --------------
 
   def q14AggForms(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables(s, dir, "lineitem")
       .groupBy($"l_returnflag")
       .agg(
         min($"l_quantity").as("qty_min"),

@@ -18,9 +18,6 @@ import graft.operators.TextAnalysis
   */
 object Queries10 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
   // ---- q146: BM25 lexical retrieval scoring -----------------------------
 
   /** The fixed query-term set scored against every document. Small by
@@ -52,7 +49,7 @@ object Queries10 {
     * keeps 20 rows per partition. */
   def q146Bm25(s: SparkSession, dir: String): DataFrame = {
     val toks = split(trim($"text"), "\\s+")
-    val d = t(s, dir, "documents")
+    val d = Tables(s, dir, "documents")
       .select($"doc_id" +: size(toks).cast(LongType).as("dl") +:
         bm25Terms.zipWithIndex.map { case (w, i) =>
           size(filter(toks, x => x === w)).cast(LongType).as(s"tf_$i")
@@ -177,7 +174,7 @@ object Queries10 {
   }
 
   def q147ContainJoin(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
+    val docs = Tables(s, dir, "documents")
     val corpus = docs.select($"doc_id",
       Functional.wordShingles($"text", 3).as("gs"))
     val snippet = concat_ws(" ",
@@ -239,7 +236,7 @@ object Queries10 {
   def q148Normalize(s: SparkSession, dir: String): DataFrame = {
     val deco = concat(lit("é\tÅ "), $"text",
       lit(" \u0007x\u0301"))
-    val out = t(s, dir, "documents")
+    val out = Tables(s, dir, "documents")
       .select($"doc_id", TextAnalysis.normalizeText(deco).as("clean_text"))
     val probe = out
       .select(
@@ -276,7 +273,7 @@ object Queries10 {
     * integer microseconds (ts div 1000) end to end. */
   def q149Funnel(s: SparkSession, dir: String): DataFrame = {
     val dayUs = 86400000000L
-    val e = t(s, dir, "events")
+    val e = Tables(s, dir, "events")
       .select($"user_id", $"event_type", expr("ts div 1000").as("us"))
     val v = e.where($"event_type" === "view")
       .groupBy($"user_id").agg(min($"us").as("t_view"))
@@ -319,7 +316,7 @@ object Queries10 {
     * countDistinct — at 100 TB the (cohort, offset, user) expand is the
     * standard pre-aggregate and nothing materializes driver-side. */
   def q150Cohort(s: SparkSession, dir: String): DataFrame = {
-    val pe = t(s, dir, "events").where($"event_type" === "purchase")
+    val pe = Tables(s, dir, "events").where($"event_type" === "purchase")
       .select($"user_id",
         expr("ts div 1000 div 1000000 div 86400 div 7").as("wk"))
     val first = pe.groupBy($"user_id").agg(min($"wk").as("cohort"))

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types._
 
 import graft.functions.Functional
 import graft.operators.GroupTopK
+import graft.streaming.StreamDrain
 
 /** Round-12 gates past q150: inverted-index construction with bounded
   * posting lists (q151), an exact edit-distance-1 similarity join via
@@ -16,12 +17,6 @@ import graft.operators.GroupTopK
   * conventions as in [[Queries]].
   */
 object Queries11 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
-  private def dsum(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    sum(c.cast(DecimalType(25, 4))).cast(DoubleType)
 
   // ---- q151: inverted index with bounded posting lists ------------------
 
@@ -36,7 +31,7 @@ object Queries11 {
     * variant here is the skew-safe head every query path touches
     * first. */
   def q151InvertedIndex(s: SparkSession, dir: String): DataFrame = {
-    val td = t(s, dir, "documents")
+    val td = Tables(s, dir, "documents")
       .select($"doc_id",
         explode(array_distinct(split(trim($"text"), "\\s+"))).as("term"))
     val stats = td.groupBy($"term").agg(count(lit(1)).as("df"))
@@ -83,7 +78,7 @@ object Queries11 {
     * shape as q129/q147. The oracle replays the same mutation and an
     * UNPRUNED all-pairs levenshtein — green certifies completeness. */
   def q152EditJoin(s: SparkSession, dir: String): DataFrame = {
-    val base = t(s, dir, "part").where($"p_partkey" < 300)
+    val base = Tables(s, dir, "part").where($"p_partkey" < 300)
       .select($"p_partkey".as("id"),
         concat($"p_name", lit(" #"), $"p_partkey".cast(StringType))
           .as("s"))
@@ -139,7 +134,7 @@ object Queries11 {
     * engines implement the same proleptic Gregorian calendar so every
     * value is exact. Spark's weekday() is 0=Monday; +1 = ISO dow. */
   def q153DateBattery(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders").where($"o_orderkey" < 3000)
+    Tables(s, dir, "orders").where($"o_orderkey" < 3000)
       .select($"o_orderkey", $"o_orderdate".cast(DateType).as("d"))
       .select($"o_orderkey",
         year($"d").as("yr"), quarter($"d").as("qtr"),
@@ -182,7 +177,7 @@ object Queries11 {
     * exact 4-dp decimals (prices are 2-dp, bounds 4-dp) so the sum is
     * exact in DECIMAL(25,4) in both engines. */
   def q154Winsorize(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
+    val li = Tables(s, dir, "lineitem")
     // ONE percentile() call for both borders — separate calls each
     // build their own per-group value buffer (the q122/q160 lesson)
     val bands = li.groupBy($"l_returnflag")
@@ -235,8 +230,7 @@ object Queries11 {
   def q155BackfillAvailableNow(parent: SparkSession, dir: String)
       : DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    val spark = parent.newSession()
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    val spark = StreamDrain.session(parent, emptyBatches = true)
     val base = Fs.scratchDir("backfill")
     val (srcDir, sink, chk) = (s"$base/src", s"$base/sink", s"$base/chk")
     val ev = Tables(parent, dir, "events")
@@ -280,7 +274,7 @@ object Queries11 {
     * noise), and the z expression is the identical IEEE divide both
     * engines evaluate. */
   def q156GroupZscore(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders")
+    val o = Tables(s, dir, "orders")
     val st = o.groupBy($"o_orderpriority").agg(
       round(avg($"o_totalprice"), 6).as("mu"),
       round(stddev_pop($"o_totalprice"), 6).as("sigma"))
@@ -310,7 +304,7 @@ object Queries11 {
     * SF. One pre-aggregated shuffle of ≤ nb rows; the per-bucket
     * min/max double as the observed bucket edges. */
   def q157Histogram(s: SparkSession, dir: String): DataFrame = {
-    val q = t(s, dir, "lineitem")
+    val q = Tables(s, dir, "lineitem")
       .select($"l_quantity".cast(LongType).as("v"))
     val m = q.agg(min($"v"), max($"v")).head()
     val (mn, mx) = (m.getLong(0), m.getLong(1))

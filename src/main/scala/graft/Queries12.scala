@@ -11,12 +11,6 @@ import org.apache.spark.sql.types._
   */
 object Queries12 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
-  private def dsum(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    sum(c.cast(DecimalType(25, 4))).cast(DoubleType)
-
   // ---- q158: JSON column processing -------------------------------------
 
   /** The JSON surface over the events `props` column: path extraction
@@ -33,7 +27,7 @@ object Queries12 {
       StructField("et", StringType), StructField("k", LongType)))
     val rt = from_json(
       to_json(struct($"event_type".as("et"), k.as("k"))), rtSchema)
-    t(s, dir, "events")
+    Tables(s, dir, "events")
       // <=> not ===: a row whose props lacks $.k round-trips k as
       // NULL on both sides — that is a PRESERVED value, and the
       // null-unsafe === would silently drop it from n_rt
@@ -68,7 +62,7 @@ object Queries12 {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy($"user_id")
       .orderBy(expr("ts div 1000"), $"event_id")
-    t(s, dir, "events")
+    Tables(s, dir, "events")
       .select($"user_id", $"event_type", $"ts", $"event_id")
       .select($"event_type".as("next"),
         lag($"event_type", 1).over(w).as("prev"))
@@ -97,7 +91,7 @@ object Queries12 {
     * (equi-width) and q60 (fixed borders). Per-bucket stats go through
     * DECIMAL. */
   def q160EquiDepth(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
+    val li = Tables(s, dir, "lineitem")
     // ONE percentile() call for all three borders — each call builds
     // its own full-column value buffer, so three calls tripled the
     // dominant cost (the q122 lesson)
@@ -149,8 +143,8 @@ object Queries12 {
     * by the oracle equality. The NOT IN legs go through spark.sql —
     * the null-aware-anti-join path the DataFrame API does not expose. */
   def q161JoinSemantics(s: SparkSession, dir: String): DataFrame = {
-    val cust = t(s, dir, "customer").select($"c_custkey")
-    val sub = t(s, dir, "orders").where($"o_orderkey" < 2000)
+    val cust = Tables(s, dir, "customer").select($"c_custkey")
+    val sub = Tables(s, dir, "orders").where($"o_orderkey" < 2000)
       .select($"o_custkey")
     val semiN = cust.join(sub, $"c_custkey" === $"o_custkey", "left_semi")
       .count()

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -12,12 +12,6 @@ import org.apache.spark.sql.types._
   * float conventions as in [[Queries]].
   */
 object Queries13 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
-  private def dsum(c: Column): Column =
-    sum(c.cast(DecimalType(25, 4))).cast(DoubleType)
 
   // ---- q162: parquet aggregate pushdown ----------------------------------
 
@@ -44,7 +38,8 @@ object Queries13 {
     require(plan.contains("PushedAggregation: [MIN("),
       s"q162: expected PushedAggregation on the v2 scan, got:\n$plan")
     val m = pushed.head()
-    val c = t(s, dir, "lineitem").agg(aggCols.head, aggCols.tail: _*).head()
+    val c = Tables(s, dir, "lineitem")
+      .agg(aggCols.head, aggCols.tail: _*).head()
     require(m == c,
       s"q162: metadata aggregate $m != computed aggregate $c")
     import s.implicits._
@@ -69,7 +64,7 @@ object Queries13 {
     * rebuild, and incremental maintenance joins only the new snapshot
     * against current rows. */
   def q163Scd2(s: SparkSession, dir: String): DataFrame = {
-    val cust = t(s, dir, "customer")
+    val cust = Tables(s, dir, "customer")
     val v1 = cust.select($"c_custkey", $"c_acctbal", $"c_mktsegment",
       lit(1).as("version"))
     val v2 = cust.select($"c_custkey",
@@ -141,7 +136,7 @@ object Queries13 {
     * (not a join), so the fraction (ts−t0)/(t1−t0) is exact long
     * arithmetic until the final double divide. */
   def q164Interpolate(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
+    val ev = Tables(s, dir, "events")
     val x = when(pmod($"event_id", lit(5)) =!= 0, $"value")
     // work in MICROsecond ticks on both sides: ts is long ns here but
     // DuckDB surfaces the same parquet as µs timestamps, and µs deltas
@@ -221,7 +216,7 @@ object Queries13 {
     * backs broadcast; the value rows shuffle only for the two
     * per-group percentile aggs. */
   def q165MadOutliers(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events").where($"value".isNotNull)
+    val ev = Tables(s, dir, "events").where($"value".isNotNull)
     val med = ev.groupBy($"event_type")
       .agg(percentile($"value", lit(0.5)).as("med"))
     val dev = ev.join(broadcast(med), "event_type")
@@ -268,7 +263,7 @@ object Queries13 {
     * sized) — NOT a window over a 5-value partition key, which would
     * shuffle the whole table into 5 partitions. */
   def q166TargetEncode(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders")
+    val o = Tables(s, dir, "orders")
     val stats = o.groupBy($"o_orderpriority")
       .agg(count(lit(1)).as("n_p"),
         sum($"o_totalprice".cast(DecimalType(25, 4))).as("s_p"))
@@ -322,7 +317,7 @@ object Queries13 {
     * of exact. The oracled output is the exact side; q114 covers
     * one-shot HLL accuracy — this gate is about MERGEABILITY. */
   def q167SketchCube(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
+    val ev = Tables(s, dir, "events")
       .withColumn("day", to_date(timestamp_micros(expr("ts div 1000"))))
     val cells = ev.groupBy($"event_type", $"day")
       .agg(hll_sketch_agg($"user_id", lit(12)).as("sk"))

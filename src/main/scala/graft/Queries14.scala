@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -12,12 +12,6 @@ import org.apache.spark.sql.types._
   */
 object Queries14 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
-  private def dsum(c: Column): Column =
-    sum(c.cast(DecimalType(25, 4))).cast(DoubleType)
-
   // ---- q169: CUBE + grouping_id ------------------------------------------
 
   /** Full CUBE over (status, priority) with the standard bit-encoded
@@ -28,7 +22,7 @@ object Queries14 {
     * COALESCE-based rollup displays can't. ≤ (|status|+1)·(|prio|+1)
     * result rows at any SF. */
   def q169Cube(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders")
+    Tables(s, dir, "orders")
       .cube($"o_orderstatus", $"o_orderpriority")
       .agg(grouping_id($"o_orderstatus", $"o_orderpriority")
           .cast(LongType).as("gid"),
@@ -57,7 +51,7 @@ object Queries14 {
     * at 6 dp (O(1) magnitude), covariances at 2 dp (merge-order float
     * noise lives ~1e-10 relative, far inside both roundings). */
   def q170CorrBattery(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
+    val li = Tables(s, dir, "lineitem")
     li.groupBy($"l_returnflag")
       .agg(count(lit(1)).as("n"),
         round(corr($"l_quantity", $"l_extendedprice"), 6).as("corr_qp"),
@@ -89,7 +83,7 @@ object Queries14 {
     * full table. Output is a single exact-integer summary row —
     * deterministic at any SF. */
   def q171NearestJoin(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
+    val ev = Tables(s, dir, "events")
       .where($"event_type".isin("click", "purchase"))
       .select($"user_id", expr("ts div 1000").as("tsu"), $"event_id",
         $"event_type")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -10,12 +10,6 @@ import org.apache.spark.sql.types._
   * [[Queries]].
   */
 object Queries15 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
-  private def dsum(c: Column): Column =
-    sum(c.cast(DecimalType(25, 4))).cast(DoubleType)
 
   // ---- q172: dynamic partition overwrite ---------------------------------
 
@@ -32,7 +26,7 @@ object Queries15 {
     * original events. */
   def q172DynamicOverwrite(s: SparkSession, dir: String): DataFrame = {
     val path = "/tmp/graft_formats/dynover_events"
-    val ev = t(s, dir, "events")
+    val ev = Tables(s, dir, "events")
       .select($"event_id", $"event_type", $"value")
     ev.write.mode("overwrite").partitionBy("event_type").parquet(path)
     def files(): Map[String, Set[String]] =
@@ -77,7 +71,7 @@ object Queries15 {
     * feature-engineering pipeline uses for per-segment trend columns
     * at 100 TB: one shuffle of (group, moments), never the rows. */
   def q173Regression(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
+    val li = Tables(s, dir, "lineitem")
     li.groupBy($"l_returnflag")
       .agg(regr_count($"l_extendedprice", $"l_quantity").as("n"),
         round(regr_slope($"l_extendedprice", $"l_quantity"), 6)
@@ -136,7 +130,7 @@ object Queries15 {
     * on the q127 range-sorted layout or a weighted sketch — the
     * per-group sort here is the exactness price, paid once. */
   def q175WeightedPercentile(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
+    val li = Tables(s, dir, "lineitem")
       .select($"l_returnflag", $"l_extendedprice",
         $"l_quantity".cast(LongType).as("w"))
     val win = org.apache.spark.sql.expressions.Window
@@ -201,7 +195,7 @@ object Queries15 {
     * a one-day window. At 100 TB this is the difference between
     * reading a day and reading a year. */
   def q176TsRangeScan(s: SparkSession, dir: String): DataFrame = {
-    val bounds = t(s, dir, "events")
+    val bounds = Tables(s, dir, "events")
       .agg(min(expr("ts div 1000")).as("lo")).head()
     val fromUs = bounds.getLong(0)
     val untilUs = fromUs + 86400000000L // one day

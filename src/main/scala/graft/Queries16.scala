@@ -1,8 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+
+import graft.streaming.StreamDrain
 
 /** Round-12 session gates past q177: integer-exact PageRank (q178),
   * time-RANGE window frames (q179), stats-driven join planning (q180),
@@ -11,12 +13,6 @@ import org.apache.spark.sql.types._
   * Naming/oracle/float conventions as in [[Queries]].
   */
 object Queries16 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
-  private def dsum(c: Column): Column =
-    sum(c.cast(DecimalType(25, 4))).cast(DoubleType)
 
   // ---- q178: PageRank (integer-exact power iteration) --------------------
 
@@ -43,8 +39,8 @@ object Queries16 {
     * re-shuffling. Rank state is O(|V|), never O(|E|). */
   def q178PageRank(s: SparkSession, dir: String): DataFrame = {
     val SCALE = 1000000000L
-    val pairs = t(s, dir, "orders")
-      .join(t(s, dir, "lineitem"),
+    val pairs = Tables(s, dir, "orders")
+      .join(Tables(s, dir, "lineitem"),
         $"o_orderkey" === $"l_orderkey")
       .select(($"o_custkey" * 2).as("c"), ($"l_suppkey" * 2 + 1).as("s"))
       .distinct()
@@ -116,7 +112,7 @@ object Queries16 {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy($"user_id").orderBy($"ts")
       .rangeBetween(-3600000000000L, 0) // 1 hour in ns
-    t(s, dir, "events")
+    Tables(s, dir, "events")
       .select($"event_id", $"user_id", $"ts", $"value")
       .select($"event_id",
         count(lit(1)).over(w).as("n_1h"),
@@ -155,7 +151,7 @@ object Queries16 {
     val stamp = java.lang.Long.toHexString(System.nanoTime())
     val loc = s"/tmp/graft_cbo/orders_$stamp"
     val tbl = s"graft_cbo_orders_$stamp"
-    t(s, dir, "orders")
+    Tables(s, dir, "orders")
       .select($"o_orderkey", $"o_custkey", $"o_orderpriority")
       .write.mode("overwrite").parquet(loc)
     def dirBytes(p: String): Long =
@@ -165,7 +161,7 @@ object Queries16 {
     // no-stats estimate (= file size) always exceeds it and the
     // ~1%-selective stats estimate always undercuts it, at any SF
     val threshold = math.max(dirBytes(loc) / 4, 1024)
-    val kMax = t(s, dir, "orders").agg(max($"o_custkey")).head().getLong(0)
+    val kMax = Tables(s, dir, "orders").agg(max($"o_custkey")).head().getLong(0)
     val kCut = kMax / 100 + 1 // ~1% of the key range
     def session(cbo: Boolean): SparkSession = {
       val ss = s.newSession()
@@ -241,7 +237,7 @@ object Queries16 {
   def q181CodecAtRest(s: SparkSession, dir: String): DataFrame = {
     val stamp = java.lang.Long.toHexString(System.nanoTime())
     val base = s"/tmp/graft_codec_$stamp"
-    val docs = t(s, dir, "documents")
+    val docs = Tables(s, dir, "documents")
     def write(codec: String): Long = {
       docs.write.mode("overwrite").option("compression", codec)
         .parquet(s"$base/$codec")
@@ -294,29 +290,18 @@ object Queries16 {
     * it must equal the batch aggregate (the oracle). Sums are
     * DECIMAL-mediated in state, so re-emission is exact. */
   def q182StreamUpdateMode(parent: SparkSession, dir: String): DataFrame = {
-    val spark = parent.newSession()
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-      "false")
+    val spark = StreamDrain.session(parent, emptyBatches = false)
     val ev = Tables(parent, dir, "events")
     val stage = Fs.scratchDir("upd")
     ev.where($"event_id" % 2 === 0).coalesce(1)
       .write.mode("overwrite").parquet(s"$stage/b1")
     ev.where($"event_id" % 2 === 1).coalesce(1)
       .write.mode("overwrite").parquet(s"$stage/b2")
-    def promote(sub: String, dst: String, mtime: Long): Unit = {
-      val f = new java.io.File(s"$stage/$sub").listFiles()
-        .find(_.getName.startsWith("part-")).get
-      val d = new java.io.File(s"$stage/$dst")
-      f.renameTo(d); d.setLastModified(mtime)
-    }
-    promote("b1", "batch1.parquet", 1000000L)
-    promote("b2", "batch2.parquet", 2000000L)
+    StreamDrain.promote(stage, "b1", "b2")
     val typesB1 = ev.where($"event_id" % 2 === 0)
       .select($"event_type").distinct().count()
     val typesB2 = ev.where($"event_id" % 2 === 1)
       .select($"event_type").distinct().count()
-    val name = s"graft_upd_${System.nanoTime()}"
     val stream = spark.readStream
       .schema(graft.streaming.EventsStream.eventsSchema)
       .option("maxFilesPerTrigger", "1")
@@ -324,18 +309,10 @@ object Queries16 {
       .parquet(stage)
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n"),
-        sum($"value".cast(DecimalType(25, 4))).cast(DoubleType)
-          .as("sum_value"))
-    val q = stream.writeStream
-      .outputMode("update")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable() finally {
-      q.stop()
-      Fs.rmTree(new java.io.File(stage))
-    }
-    val sink = spark.table(name)
+        dsum($"value").as("sum_value"))
+    val sink =
+      try StreamDrain.toMemory(stream.writeStream.outputMode("update"))
+      finally Fs.rmTree(new java.io.File(stage))
     val emitted = sink.count()
     require(emitted == typesB1 + typesB2,
       s"q182: update mode emitted $emitted rows, expected changed " +
@@ -371,7 +348,7 @@ object Queries16 {
     * struct order (linenumber, quantity, price) on both sides —
     * a linenumber-only tie-break would be nondeterministic. */
   def q183NestedStructs(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
+    val li = Tables(s, dir, "lineitem")
     li.groupBy($"l_orderkey")
       .agg(sort_array(collect_list(struct(
         $"l_linenumber", $"l_quantity", $"l_extendedprice"))).as("items"))

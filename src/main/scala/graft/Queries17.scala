@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -11,12 +11,6 @@ import org.apache.spark.sql.types._
   * conventions as in [[Queries]].
   */
 object Queries17 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
-  private def dsum(c: Column): Column =
-    sum(c.cast(DecimalType(25, 4))).cast(DoubleType)
 
   // ---- q184: map-column higher-order functions ---------------------------
 
@@ -30,7 +24,7 @@ object Queries17 {
     * every derived column is then an integer-exact fold, so the oracle
     * replays them relationally with no float anywhere. */
   def q184MapHof(s: SparkSession, dir: String): DataFrame = {
-    val perLine = t(s, dir, "lineitem")
+    val perLine = Tables(s, dir, "lineitem")
       .groupBy($"l_orderkey", $"l_linenumber")
       .agg(sum(($"l_quantity".cast(DecimalType(25, 4)) * 10000)
         .cast(LongType)).as("sq"),
@@ -89,13 +83,13 @@ object Queries17 {
     val stamp = java.lang.Long.toHexString(System.nanoTime())
     val path = s"/tmp/graft_csv_modes_$stamp"
     val bad = $"l_orderkey" % 97 === 0
-    t(s, dir, "lineitem")
+    Tables(s, dir, "lineitem")
       .select(concat_ws(",", $"l_orderkey",
         when(bad, lit("bogus")).otherwise($"l_quantity".cast(StringType)),
         $"l_extendedprice").as("value"))
       .write.mode("overwrite").text(path)
-    val nBad = t(s, dir, "lineitem").where(bad).count()
-    val nAll = t(s, dir, "lineitem").count()
+    val nBad = Tables(s, dir, "lineitem").where(bad).count()
+    val nAll = Tables(s, dir, "lineitem").count()
     val schema = StructType(Seq(
       StructField("l_orderkey", LongType),
       StructField("l_quantity", DoubleType),
@@ -157,7 +151,7 @@ object Queries17 {
     * function-for-function by DuckDB. Per-part rows keep the battery
     * honest (no aggregation hiding a per-row divergence). */
   def q186StringBattery(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "part")
+    Tables(s, dir, "part")
       .select($"p_partkey",
         levenshtein($"p_name", lower($"p_type")).as("lev"),
         translate($"p_name", "aeiou", "AEIOU").as("tr"),
@@ -211,7 +205,7 @@ object Queries17 {
     * operators on the same strings. */
   def q188Variant(s: SparkSession, dir: String): DataFrame = {
     val v = parse_json($"props")
-    t(s, dir, "events")
+    Tables(s, dir, "events")
       .select($"event_type",
         variant_get(v, "$.k", "bigint").as("k"),
         try_variant_get(v, "$.missing", "bigint").as("miss"),

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -11,12 +11,6 @@ import org.apache.spark.sql.types._
   * float conventions as in [[Queries]].
   */
 object Queries18 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
-  private def dsum(c: Column): Column =
-    sum(c.cast(DecimalType(25, 4))).cast(DoubleType)
 
   // ---- q189: binaryFile source -------------------------------------------
 
@@ -36,7 +30,7 @@ object Queries18 {
     val stamp = java.lang.Long.toHexString(System.nanoTime())
     val base = new java.io.File(s"/tmp/graft_blobs_$stamp")
     base.mkdirs()
-    val docs = t(s, dir, "documents")
+    val docs = Tables(s, dir, "documents")
       .where($"doc_id" % 97 === 0 && $"doc_id" < 97L * 1000)
       .select($"doc_id", $"text").collect()
     try {
@@ -83,7 +77,7 @@ object Queries18 {
     * anywhere surfaces as a string mismatch. Also emits the per-domain
     * rollup (the domain-blocklist aggregation shape). */
   def q190UrlNormalize(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
+    val ev = Tables(s, dir, "events")
       .select($"event_id", $"user_id",
         concat(lit("HTTP://Site"), $"user_id" % 50,
           lit(".Example.COM:80/p/"), $"event_id",
@@ -123,7 +117,7 @@ object Queries18 {
     * rewrite targets only changed partitions (q172). Updates are
     * DECIMAL-mediated so updated totals replay exactly. */
   def q191MergeUpsert(s: SparkSession, dir: String): DataFrame = {
-    val base = t(s, dir, "orders")
+    val base = Tables(s, dir, "orders")
       .select($"o_orderkey", $"o_custkey", $"o_totalprice")
     val maxKey = base.agg(max($"o_orderkey")).head().getLong(0)
     // changes: update every 13th order (price +10% exactly, via
@@ -183,9 +177,9 @@ object Queries18 {
     * state per key is O(1) accumulators. Oracle: outer-join replay. */
   def q192Cogroup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val cust = t(s, dir, "customer")
+    val cust = Tables(s, dir, "customer")
       .select(col("c_custkey"), col("c_mktsegment")).as[(Long, String)]
-    val ords = t(s, dir, "orders")
+    val ords = Tables(s, dir, "orders")
       .select(col("o_custkey"),
         (col("o_totalprice").cast(DecimalType(25, 4)) * 10000)
           .cast(LongType)).as[(Long, Long)]
@@ -223,7 +217,7 @@ object Queries18 {
     * exactly what FILTER-ed COUNT DISTINCTs express). Arrays stay
     * row-local; ONE l_orderkey shuffle builds them. */
   def q193ArrayBattery(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
+    val li = Tables(s, dir, "lineitem")
     li.groupBy($"l_orderkey")
       .agg(
         sort_array(array_distinct(collect_list(
@@ -282,7 +276,7 @@ object Queries18 {
   def q194NestedPruning(s: SparkSession, dir: String): DataFrame = {
     val stamp = java.lang.Long.toHexString(System.nanoTime())
     val path = s"/tmp/graft_nested_$stamp"
-    t(s, dir, "lineitem")
+    Tables(s, dir, "lineitem")
       .groupBy($"l_orderkey")
       .agg(collect_list(struct($"l_linenumber", $"l_quantity",
         $"l_extendedprice")).as("items"))

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -12,12 +12,6 @@ import graft.operators.{AsOfJoin, Sampling}
   * float conventions as in [[Queries]].
   */
 object Queries19 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
-  private def dsum(c: Column): Column =
-    sum(c.cast(DecimalType(25, 4))).cast(DoubleType)
 
   // ---- q195: as-of join with tolerance -----------------------------------
 
@@ -33,7 +27,7 @@ object Queries19 {
     * sees either). */
   def q195AsofTolerance(s: SparkSession, dir: String): DataFrame = {
     val tolUs = 7200000000L // 2 h in µs
-    val ev = t(s, dir, "events")
+    val ev = Tables(s, dir, "events")
     val clicks = ev.where($"event_type" === "click")
       .select($"event_id", $"user_id", expr("ts div 1000").as("us"))
     val purchases = ev.where($"event_type" === "purchase")
@@ -93,7 +87,7 @@ object Queries19 {
     * unpredictable residue. */
   def q196TryBattery(s: SparkSession, dir: String): DataFrame = {
     val faulty = $"l_orderkey" % 97 === 0
-    val li = t(s, dir, "lineitem")
+    val li = Tables(s, dir, "lineitem")
       .select($"l_returnflag", $"l_orderkey", $"l_quantity",
         $"l_extendedprice")
     li.select($"l_returnflag",
@@ -152,7 +146,7 @@ object Queries19 {
     * test-split value and reddens the row. */
   def q197FitTransform(s: SparkSession, dir: String): DataFrame = {
     val weights = Seq("train" -> 0.8, "test" -> 0.2)
-    val li = t(s, dir, "lineitem")
+    val li = Tables(s, dir, "lineitem")
       .select($"l_orderkey", $"l_returnflag", $"l_extendedprice",
         Sampling.splitLabel($"l_orderkey", weights, 11L).as("split"))
     val stats = li.where($"split" === "train")

@@ -15,14 +15,11 @@ import graft.streaming.EventsStream
   */
 object Queries2 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
   // ---- sessionization (window lag over event time) --------------------
 
   def q15Sessionize(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
-    t(s, dir, "events")
+    Tables(s, dir, "events")
       .withColumn("new_session",
         when($"ts" - lag($"ts", 1).over(w) > 1800000000000L, 1).otherwise(0))
       .groupBy($"user_id")
@@ -43,11 +40,10 @@ object Queries2 {
   // ---- high-cardinality aggregation (shuffle-heavy scale probe) -------
 
   def q16HighcardAgg(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables(s, dir, "lineitem")
       .groupBy($"l_partkey")
       .agg(count(lit(1)).as("n"),
-        sum($"l_quantity".cast(DecimalType(25, 4))).cast(DoubleType)
-          .as("qty_sum"),
+        dsum($"l_quantity").as("qty_sum"),
         max($"l_extendedprice").as("price_max"))
       .orderBy($"l_partkey")
 
@@ -60,7 +56,7 @@ object Queries2 {
   // ---- scale_to_0_1 (two-pass min-max, functional.py:568-579) ---------
 
   def q17MinmaxScale(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
+    val li = Tables(s, dir, "lineitem")
     val mm = li.agg(min($"l_extendedprice").as("__mn"),
       max($"l_extendedprice").as("__mx"))
     li.crossJoin(broadcast(mm))
@@ -81,7 +77,7 @@ object Queries2 {
   // arithmetic, so aggregate fp noise cannot leak into row values.
 
   def q18Zscore(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
+    val li = Tables(s, dir, "lineitem")
     val st = li.agg(round(avg($"l_quantity"), 6).as("__m"),
       round(stddev_pop($"l_quantity"), 6).as("__s"))
     li.crossJoin(broadcast(st))
@@ -99,7 +95,7 @@ object Queries2 {
   // ---- text analysis --------------------------------------------------
 
   def q30TokenStats(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
+    Tables(s, dir, "documents")
       .select($"doc_id",
         TextAnalysis.tokenCount($"text").cast(LongType).as("n_tokens"),
         (length(regexp_replace($"text", "\\s+", "")).cast(DoubleType) /
@@ -139,7 +135,7 @@ object Queries2 {
     val cases = casesRaw
       .select($"case_id", TextAnalysis.langId($"sentence").as("lang_pred"))
     val known = Seq("en", "de", "fr", "es", "zh", "und")
-    val dist = t(s, dir, "documents")
+    val dist = Tables(s, dir, "documents")
       .select(TextAnalysis.langId($"text").as("p"))
       .agg(count(lit(1)).as("n_docs"),
         sum(when($"p".isin(known: _*), 0L).otherwise(1L)).as("__bad"))
@@ -166,7 +162,7 @@ object Queries2 {
     * the regex formulation counts, so the divisions are bit-identical
     * to the DuckDB oracle's regex restatement. */
   def q32Quality(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
+    Tables(s, dir, "documents")
       .select($"doc_id",
         Functional.asciiAlphaRatio($"text").as("alpha_ratio"),
         Functional.stopwordRatioEn($"text").as("stopword_ratio"))
@@ -189,7 +185,7 @@ object Queries2 {
 
   /** Exact dedup keep-first on a prefix key (synthesizes dup groups). */
   def q33ExactDedup(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
+    val docs = Tables(s, dir, "documents")
       .withColumn("__key", substring($"text", 1, 80))
     Dedup.exact(docs, "__key", "doc_id").select($"doc_id").orderBy($"doc_id")
   }
@@ -282,7 +278,7 @@ object Queries2 {
     * planted j≈0.99/1.0 pairs are near-certain — deterministic per
     * dataset, verified green at sf0.001/0.01/0.1). */
   def q40MinhashLsh(s: SparkSession, dir: String): DataFrame = {
-    val corpus = t(s, dir, "documents").select($"doc_id", $"text")
+    val corpus = Tables(s, dir, "documents").select($"doc_id", $"text")
       .unionByName(plantedDocs(s))
     val cand = Dedup.minHashLsh(corpus, "text", "doc_id",
       k = 64, bands = 16, shingleSize = 3, threshold = 0.30)
@@ -298,7 +294,7 @@ object Queries2 {
     * chunks, so it must share a chunk bucket and surface as a candidate
     * (the planted identical pair is at distance 0). */
   def q41Simhash(s: SparkSession, dir: String): DataFrame = {
-    val corpus = t(s, dir, "documents").select($"doc_id", $"text")
+    val corpus = Tables(s, dir, "documents").select($"doc_id", $"text")
       .unionByName(plantedDocs(s))
     // maxHamming = 8 deliberately over-generates vs the <= 3 the
     // self-check guarantees: the pigeonhole argument (4 chunks) is
@@ -322,7 +318,7 @@ object Queries2 {
     * ≥ 0.30 verify filter by definition, so they must appear in the
     * output unless LSH (threshold 0.20) missed the candidate. */
   def q42NgramJaccard(s: SparkSession, dir: String): DataFrame = {
-    val corpus = t(s, dir, "documents").select($"doc_id", $"text")
+    val corpus = Tables(s, dir, "documents").select($"doc_id", $"text")
       .unionByName(plantedDocs(s))
     val cands = Dedup.minHashLsh(corpus, "text", "doc_id",
       k = 64, bands = 16, shingleSize = 3, threshold = 0.20)
@@ -342,7 +338,7 @@ object Queries2 {
     * candidates — the planted twins are bit-identical vectors, which
     * hash to the same bucket by construction. */
   def q43EmbedDedup(s: SparkSession, dir: String): DataFrame = {
-    val corpus = t(s, dir, "embeddings").select($"vec_id", $"embedding")
+    val corpus = Tables(s, dir, "embeddings").select($"vec_id", $"embedding")
       .unionByName(plantedVecs(s))
     val cand = Dedup.embeddingCosine(corpus, "embedding", "vec_id",
       threshold = 0.30, bits = 8)
@@ -369,7 +365,7 @@ object Queries2 {
     * partial-overlap case no whole-doc hash can see. k=24 (~4 words)
     * per the operator's selectivity note. */
   def q78WinnowOverlap(s: SparkSession, dir: String): DataFrame = {
-    val corpus = t(s, dir, "documents").select($"doc_id", $"text")
+    val corpus = Tables(s, dir, "documents").select($"doc_id", $"text")
       .unionByName(plantedDocs(s))
     val cand = Dedup.winnowOverlap(corpus, "text", "doc_id",
       k = 24, w = 16, minShared = 2)
@@ -394,7 +390,7 @@ object Queries2 {
   /** Brute-force cosine top-k for 5 probe vectors; oracle re-derives the
     * ranking with DuckDB's own cosine (fp-independent rank compare). */
   def q50KnnBrute(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
+    val emb = Tables(s, dir, "embeddings")
     val probes = emb.where($"vec_id" < 5)
     Similarity.bruteForceTopK(emb, probes, "embedding", "vec_id", "vec_id",
         k = 10)
@@ -470,7 +466,7 @@ object Queries2 {
     * structureless data recall tracks scan fraction. The twin check
     * is the correctness proof; the floor is drift detection. */
   def q51KnnLsh(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
+    val emb = Tables(s, dir, "embeddings")
     val probes = emb.where($"vec_id" < 5)
     def run(corpus: DataFrame): DataFrame =
       Similarity.lshTopK(corpus, probes, "embedding", "vec_id", "vec_id",
@@ -487,7 +483,7 @@ object Queries2 {
   // ---- domain kernels -------------------------------------------------
 
   def q60Bucketize(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables(s, dir, "lineitem")
       .select(Functional.bucketize($"l_quantity", Seq(10, 20, 30, 40))
         .as("bucket"))
       .groupBy($"bucket").agg(count(lit(1)).as("n"))
@@ -512,7 +508,7 @@ object Queries2 {
   def q61SigridHash(s: SparkSession, dir: String): DataFrame = {
     val fixture = s.range(16).toDF("i")
       .select($"i", Functional.sigridHash($"i", 0L, 100L).as("h"))
-    val dist = t(s, dir, "lineitem")
+    val dist = Tables(s, dir, "lineitem")
       .select(Functional.sigridHash($"l_partkey", 0L, 1000L).as("bucket"))
       .agg(count(lit(1)).as("n_rows"),
         min($"bucket").as("__mn"), max($"bucket").as("__mx"))
@@ -535,7 +531,7 @@ object Queries2 {
 
   /** firstx over per-order sorted quantity arrays (array ops path). */
   def q62Firstx(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables(s, dir, "lineitem")
       .groupBy($"l_orderkey")
       .agg(sort_array(collect_list($"l_quantity")).as("arr"))
       .select($"l_orderkey",
@@ -552,7 +548,7 @@ object Queries2 {
 
   /** clamp_list over per-order arrays (transform HOF path). */
   def q63ClampList(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables(s, dir, "lineitem")
       .groupBy($"l_orderkey")
       .agg(collect_list($"l_quantity").as("arr"))
       .select($"l_orderkey",
@@ -567,7 +563,7 @@ object Queries2 {
 
   /** Python-semantics string predicates (ASCII slice is oracle-able). */
   def q64StrPredicates(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "part")
+    Tables(s, dir, "part")
       .select($"p_partkey",
         Functional.isalpha(regexp_replace($"p_name", " ", ""))
           .as("name_alpha"),
@@ -586,7 +582,7 @@ object Queries2 {
 
   /** str namespace built-ins (§2.10): length/upper/slice/find/replace. */
   def q65StringFuncs(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "part")
+    Tables(s, dir, "part")
       .select($"p_partkey",
         length($"p_name").as("name_len"),
         upper($"p_brand").as("brand_upper"),
@@ -607,7 +603,7 @@ object Queries2 {
   /** list namespace (§2.11): split → join round-trip + element access. */
   def q66SplitJoin(s: SparkSession, dir: String): DataFrame = {
     val toks = split($"p_name", " ")
-    t(s, dir, "part")
+    Tables(s, dir, "part")
       .select($"p_partkey",
         array_join(toks, "|").as("joined"),
         toks.getItem(0).as("first_tok"),
@@ -628,7 +624,7 @@ object Queries2 {
   def q67MapOps(s: SparkSession, dir: String): DataFrame = {
     val k = element_at(
       from_json($"props", MapType(StringType, LongType)), "k")
-    t(s, dir, "events")
+    Tables(s, dir, "events")
       .select((k.cast(LongType)).as("k"))
       .groupBy(expr("k div 10").as("kb"))
       .agg(count(lit(1)).as("n"), sum($"k").cast(LongType).as("sum_k"))
@@ -645,7 +641,7 @@ object Queries2 {
     * dict form → rename → sort) against the same DuckDB oracle. */
   def q21TframePipeline(s: SparkSession, dir: String): DataFrame = {
     import graft.frame.TFrame
-    val li = TFrame(t(s, dir, "lineitem"))
+    val li = TFrame(Tables(s, dir, "lineitem"))
     li.where(li("l_quantity") < 24)
       .select("l_returnflag", "l_quantity")(
         "disc_price" -> (li("l_extendedprice") * (lit(1.0) - li("l_discount")))
@@ -676,7 +672,7 @@ object Queries2 {
     * sort, oracle-checked. */
   def q22TframeClean(s: SparkSession, dir: String): DataFrame = {
     import graft.frame.TFrame
-    val o = TFrame(t(s, dir, "orders"))
+    val o = TFrame(Tables(s, dir, "orders"))
     o.dropDuplicates(Seq("o_custkey"), order = Seq("o_orderkey"))
       .select("o_custkey", "o_orderkey")(
         "status_filled" -> coalesce(nullif(o("o_orderstatus"), lit("O")),
@@ -702,7 +698,7 @@ object Queries2 {
 
   /** Grouped exact median (continuous interpolation in both engines). */
   def q20Median(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables(s, dir, "lineitem")
       .groupBy($"l_returnflag")
       .agg(median($"l_quantity").as("qty_median"),
         count(lit(1)).as("n"))
@@ -727,7 +723,7 @@ object Queries2 {
   def q19ApproxSketch(s: SparkSession, dir: String): DataFrame = {
     val selfCheck =
       s.conf.get("graft.sketch.selfcheck", "true").toBoolean
-    val sketches = t(s, dir, "lineitem").groupBy($"l_returnflag")
+    val sketches = Tables(s, dir, "lineitem").groupBy($"l_returnflag")
     if (!selfCheck)
       sketches.agg(
         approx_count_distinct($"l_partkey").as("approx_parts"),
@@ -783,7 +779,7 @@ object Queries2 {
   def q70Multimodal(s: SparkSession, dir: String): DataFrame = {
     val synth = udf((id: Long) =>
       Multimodal.synthesizeBlob(id * 1048573L + 11L))
-    val docs = t(s, dir, "documents")
+    val docs = Tables(s, dir, "documents")
       .select($"doc_id", synth($"doc_id").as("blob"))
     Multimodal.decodeMeta(docs)
       .select($"media_meta.format".as("format"),

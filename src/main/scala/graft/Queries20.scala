@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+
+import graft.streaming.StreamDrain
 
 /** Round-12 session gates past q197: the correlated-subquery battery
   * (q198), the TPC-H Q5 six-table join shape (q199), and the
@@ -10,12 +11,6 @@ import org.apache.spark.sql.types._
   * conventions as in [[Queries]].
   */
 object Queries20 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
-  private def dsum(c: Column): Column =
-    sum(c.cast(DecimalType(25, 4))).cast(DoubleType)
 
   // ---- q198: correlated-subquery battery ---------------------------------
 
@@ -32,7 +27,7 @@ object Queries20 {
     * decorrelation trap). */
   def q198SubqueryBattery(s: SparkSession, dir: String): DataFrame = {
     Seq("region", "nation", "customer", "orders").foreach { n =>
-      t(s, dir, n).createOrReplaceTempView(n)
+      Tables(s, dir, n).createOrReplaceTempView(n)
     }
     s.sql(q198Sql)
   }
@@ -70,22 +65,22 @@ object Queries20 {
     * plan one wants: one shuffle (orders⨝lineitem), everything else
     * map-side. */
   def q199TpchQ5(s: SparkSession, dir: String): DataFrame = {
-    val region = t(s, dir, "region").where($"r_name" === "ASIA")
-    val nation = t(s, dir, "nation")
+    val region = Tables(s, dir, "region").where($"r_name" === "ASIA")
+    val nation = Tables(s, dir, "nation")
       .join(broadcast(region), $"n_regionkey" === $"r_regionkey")
       .select($"n_nationkey", $"n_name")
-    val cust = t(s, dir, "customer")
+    val cust = Tables(s, dir, "customer")
       .join(broadcast(nation), $"c_nationkey" === $"n_nationkey")
       .select($"c_custkey", $"c_nationkey", $"n_name")
     // range literals, not year(): a function over the column would
     // defeat parquet predicate pushdown on the orders scan
     def ntz(y: Int) = lit(java.time.LocalDateTime.of(y, 1, 1, 0, 0))
-    val ord = t(s, dir, "orders")
+    val ord = Tables(s, dir, "orders")
       .where($"o_orderdate" >= ntz(1996) && $"o_orderdate" < ntz(1997))
       .select($"o_orderkey", $"o_custkey")
-    val supp = t(s, dir, "supplier")
+    val supp = Tables(s, dir, "supplier")
       .select($"s_suppkey", $"s_nationkey")
-    val joined = t(s, dir, "lineitem")
+    val joined = Tables(s, dir, "lineitem")
       .select($"l_orderkey", $"l_suppkey", $"l_extendedprice",
         $"l_discount")
       .join(ord, $"l_orderkey" === $"o_orderkey")
@@ -135,10 +130,7 @@ object Queries20 {
     * batch aggregate per type. */
   def q200StreamPartitionedSink(parent: SparkSession, dir: String)
       : DataFrame = {
-    val spark = parent.newSession()
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-      "false")
+    val spark = StreamDrain.session(parent, emptyBatches = false)
     val base = Fs.scratchDir("psink")
     val sinkDir = s"$base/out"
     val ckpt = s"$base/ckpt"
@@ -166,13 +158,9 @@ object Queries20 {
       // metric: Dataset.inputFiles is PRE-pruning (whole relation)
       val qe = filtered.queryExecution
       qe.toRdd.count()
-      def strip(p: org.apache.spark.sql.execution.SparkPlan)
-          : org.apache.spark.sql.execution.SparkPlan = p match {
-        case a: org.apache.spark.sql.execution.adaptive
-            .AdaptiveSparkPlanExec => strip(a.executedPlan)
-        case other => other
-      }
-      val scan = strip(qe.executedPlan).collectLeaves().map(strip).head
+      val scan = planNodes(qe.executedPlan).collectFirst {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+      }.getOrElse(sys.error(s"q200: no file scan in:\n${qe.executedPlan}"))
       require(scan.toString().contains("PartitionFilters"),
         "q200: type filter did not become a partition filter on the " +
           "stream-written table")
@@ -182,8 +170,7 @@ object Queries20 {
           "no subset pruning on the stream-written layout")
       val agg = table.groupBy($"event_type")
         .agg(count(lit(1)).as("n"),
-          sum($"value".cast(DecimalType(25, 4))).cast(DoubleType)
-            .as("sum_value"))
+          dsum($"value").as("sum_value"))
         .withColumn("pruned_ok", lit(true))
         .orderBy($"event_type")
       import scala.jdk.CollectionConverters._

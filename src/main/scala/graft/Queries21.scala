@@ -13,9 +13,6 @@ import graft.operators.TextAnalysis
   */
 object Queries21 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
   // ---- q201: corpus QA report --------------------------------------------
 
   /** The corpus data card in ONE scan + one small aggregate: per
@@ -27,7 +24,7 @@ object Queries21 {
     * emitting (group, token-count, fingerprint), then a groups-sized
     * aggregate. */
   def q201CorpusReport(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
+    Tables(s, dir, "documents")
       .select($"source", $"lang",
         TextAnalysis.tokenCount($"text").cast(LongType).as("nt"),
         // md5 not xxhash64: a 64-bit collision at corpus scale would
@@ -64,7 +61,7 @@ object Queries21 {
     * rounded at 6 dp. Oracle replays the vocabulary (same window
     * tie-break) and the membership counts relationally. */
   def q202OovStats(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
+    val docs = Tables(s, dir, "documents")
     val vocab = TextAnalysis.buildVocab(docs, "text", maxSize = 500)
       .select($"term")
     val toks = docs.select($"lang",
@@ -112,7 +109,7 @@ object Queries21 {
     import s.implicits._
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
     val gapNs = 30L * 60 * 1000000000L
-    val ds = t(s, dir, "events")
+    val ds = Tables(s, dir, "events")
       .select(col("user_id"), col("ts")).as[(Long, Long)]
     ds.groupByKey(_._1)
       .flatMapGroupsWithState[Long, (Long, Long, Long)](

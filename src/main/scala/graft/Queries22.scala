@@ -1,8 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 import graft.sources.Bucketed
 
@@ -12,12 +11,6 @@ import graft.sources.Bucketed
   * [[Queries]].
   */
 object Queries22 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
-  private def dsum(c: Column): Column =
-    sum(c.cast(DecimalType(25, 4))).cast(DoubleType)
 
   // ---- q204: shuffle-free aggregation on the bucketed layout -------------
 
@@ -36,7 +29,7 @@ object Queries22 {
     val sf = dir.replaceAll(".*sf", "").replace(".", "_")
     val table = s"graft_q204_li_$sf"
     if (!s.catalog.tableExists(table))
-      Bucketed.writeTable(s, t(s, dir, "lineitem")
+      Bucketed.writeTable(s, Tables(s, dir, "lineitem")
         .select($"l_orderkey", $"l_quantity", $"l_extendedprice"),
         table, "l_orderkey", 8)
     val agg = s.table(table)
@@ -68,7 +61,7 @@ object Queries22 {
     * (status)-only set a cube would compute and a rollup could not
     * skip. Same bit convention as DuckDB (leftmost column = MSB). */
   def q205GroupingSets(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "lineitem").createOrReplaceTempView("q205_li")
+    Tables(s, dir, "lineitem").createOrReplaceTempView("q205_li")
     s.sql(
       """SELECT l_returnflag, l_linestatus,
         |  CAST(grouping_id(l_returnflag, l_linestatus) AS BIGINT)
@@ -107,7 +100,7 @@ object Queries22 {
     val bands = Seq(("tiny", 0.0, 10.0), ("small", 10.0, 25.0),
       ("mid", 25.0, 40.0), ("large", 40.0, 1e9))
       .toDF("band", "lo", "hi")
-    val joined = t(s, dir, "lineitem")
+    val joined = Tables(s, dir, "lineitem")
       .select(col("l_quantity"), col("l_extendedprice"))
       .join(broadcast(bands),
         col("l_quantity") >= col("lo") && col("l_quantity") < col("hi"))

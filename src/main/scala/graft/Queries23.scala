@@ -1,20 +1,13 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Round-12 session gates past q206: the AQE partition-coalescing
   * witness (q207), two-pass global row ids (q208), and file metadata
   * columns (q209). Naming/oracle/float conventions as in [[Queries]].
   */
 object Queries23 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
-  private def dsum(c: Column): Column =
-    sum(c.cast(DecimalType(25, 4))).cast(DoubleType)
 
   // ---- q207: AQE shuffle-partition coalescing ----------------------------
 
@@ -73,7 +66,7 @@ object Queries23 {
     // the id pass must see the SAME boundaries (two independent
     // executions of repartitionByRange re-sample and may split
     // differently, silently corrupting the offsets)
-    val src = t(s, dir, "orders")
+    val src = Tables(s, dir, "orders")
       .select($"o_orderkey", $"o_custkey")
       .repartitionByRange(8, $"o_orderkey")
       .sortWithinPartitions($"o_orderkey")
@@ -124,8 +117,8 @@ object Queries23 {
     * read_parquet(filename=true) over the SAME staged files. */
   def q209FileMetadata(s: SparkSession, dir: String): DataFrame = {
     val stage = "/tmp/graft_fmeta/orders4"
-    val mx = t(s, dir, "orders").agg(max($"o_orderkey")).head().getLong(0)
-    t(s, dir, "orders").select($"o_orderkey", $"o_totalprice")
+    val mx = Tables(s, dir, "orders").agg(max($"o_orderkey")).head().getLong(0)
+    Tables(s, dir, "orders").select($"o_orderkey", $"o_totalprice")
       .withColumn("b", expr(s"(o_orderkey * 4) div ${mx + 1}"))
       .repartition($"b")
       .write.mode("overwrite").partitionBy("b").parquet(stage)

@@ -13,9 +13,6 @@ import graft.operators.TextAnalysis
   */
 object Queries24 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
   /** Engine-portable feature hash: first 8 hex chars of md5 as an
     * integer, mod the feature-space size — identical in Spark
     * (conv(hex,16,10)) and DuckDB (CAST('0x'||hex AS BIGINT)), unlike
@@ -38,7 +35,7 @@ object Queries24 {
     * same md5-prefix hash. */
   def q210HashingTrick(s: SparkSession, dir: String): DataFrame = {
     val D = 1024
-    val counts = t(s, dir, "documents")
+    val counts = Tables(s, dir, "documents")
       .select($"lang",
         explode(TextAnalysis.tokens($"text")).as("term"))
       .select($"lang", featHash($"term", D).as("feat"))
@@ -80,8 +77,8 @@ object Queries24 {
     * cross dimension's count is replayed exactly, and hash COLLISIONS
     * are made visible (distinct crosses vs distinct dims). */
   def q211FeatureCross(s: SparkSession, dir: String): DataFrame = {
-    val joined = t(s, dir, "orders")
-      .join(t(s, dir, "customer"), $"o_custkey" === $"c_custkey")
+    val joined = Tables(s, dir, "orders")
+      .join(Tables(s, dir, "customer"), $"o_custkey" === $"c_custkey")
       .select($"c_mktsegment".as("seg"), $"o_orderpriority".as("prio"))
     val segs = Seq("AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD",
       "MACHINERY")

@@ -1,20 +1,13 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Round-12 session gates past q211: hopping (sliding) time windows
   * (q212) and bitmap-aggregate exact distinct counts (q213). Naming/
   * oracle/float conventions as in [[Queries]].
   */
 object Queries25 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
-  private def dsum(c: Column): Column =
-    sum(c.cast(DecimalType(25, 4))).cast(DoubleType)
 
   // ---- q212: hopping (sliding) windows -----------------------------------
 
@@ -28,7 +21,7 @@ object Queries25 {
     * k=0..3). Conservation is implicit in the oracle: every event
     * counted exactly 4 times across windows. */
   def q212HoppingWindow(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
+    Tables(s, dir, "events")
       .select(timestamp_micros(expr("ts div 1000")).as("event_time"),
         $"event_type", $"value")
       .groupBy(window($"event_time", "1 hour", "15 minutes"),
@@ -65,7 +58,7 @@ object Queries25 {
     * DISTINCT. The right tool for dense integer domains (user ids,
     * entity keys); sparse 64-bit domains stay with HLL. */
   def q213BitmapDistinct(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "lineitem").createOrReplaceTempView("q213_li")
+    Tables(s, dir, "lineitem").createOrReplaceTempView("q213_li")
     val out = s.sql(
       """WITH cell AS (
         |  SELECT l_returnflag, l_linestatus,
@@ -89,7 +82,7 @@ object Queries25 {
         |ORDER BY 1, 2""".stripMargin)
     // mergeability witness: the OR-rollup must equal a direct exact
     // count (bitmaps are exact, not sketches)
-    val direct = t(s, dir, "lineitem")
+    val direct = Tables(s, dir, "lineitem")
       .groupBy($"l_returnflag")
       .agg(countDistinct($"l_suppkey").as("d")).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap

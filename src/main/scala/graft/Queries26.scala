@@ -13,9 +13,6 @@ import graft.operators.Skew
   */
 object Queries26 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
   // ---- q214: stream-stream FULL OUTER interval join ----------------------
 
   /** The last stream-stream join shape (inner q105, left outer q110,
@@ -48,7 +45,7 @@ object Queries26 {
     * boundaries survive, content does not. Oracle replays both the
     * default and a custom-char form with regexp_replace chains. */
   def q215Mask(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "customer")
+    Tables(s, dir, "customer")
       .select($"c_custkey",
         concat($"c_name", lit(" #"), $"c_custkey" % 1000).as("raw"))
       .select($"c_custkey",
@@ -96,8 +93,8 @@ object Queries26 {
   val wedgeCap = 64
 
   def q216LinkPrediction(s: SparkSession, dir: String): DataFrame = {
-    val cs = t(s, dir, "orders")
-      .join(t(s, dir, "lineitem"), $"o_orderkey" === $"l_orderkey")
+    val cs = Tables(s, dir, "orders")
+      .join(Tables(s, dir, "lineitem"), $"o_orderkey" === $"l_orderkey")
       .select($"o_custkey".as("c"), $"l_suppkey".as("sk"))
       .distinct()
     val deg = cs.groupBy($"sk").agg(count(lit(1)).as("deg"))

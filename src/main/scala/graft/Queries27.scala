@@ -11,9 +11,6 @@ import org.apache.spark.sql.types._
   */
 object Queries27 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
   // ---- q217: recursive CTE -----------------------------------------------
 
   /** `WITH RECURSIVE` (new in Spark 4.x) — two classic shapes in one
@@ -32,8 +29,8 @@ object Queries27 {
     * recurses BY YEAR — identical output, ~7 rounds, in band. Shape
     * recursions wide-and-shallow; depth, not data, is what costs. */
   def q217RecursiveCte(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("q217_ord")
-    t(s, dir, "customer").createOrReplaceTempView("q217_cust")
+    Tables(s, dir, "orders").createOrReplaceTempView("q217_ord")
+    Tables(s, dir, "customer").createOrReplaceTempView("q217_cust")
     s.sql(
       """WITH RECURSIVE bounds AS (
         |  SELECT date_trunc('MONTH', min(o_orderdate)) AS lo,
@@ -115,7 +112,7 @@ object Queries27 {
       .partitionBy($"l_returnflag")
       .orderBy($"l_extendedprice".desc, $"l_orderkey", $"l_linenumber",
         $"l_quantity")
-    val out = t(s, dir, "lineitem")
+    val out = Tables(s, dir, "lineitem")
       .select($"l_returnflag", $"l_orderkey", $"l_extendedprice",
         $"l_linenumber", $"l_quantity")
       .withColumn("rk", row_number().over(w))
@@ -146,7 +143,7 @@ object Queries27 {
     * fetched independently and asserted disjoint AND contiguous
     * in-gate; the oracle replays both pages. */
   def q219OffsetPagination(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("q219_ord")
+    Tables(s, dir, "orders").createOrReplaceTempView("q219_ord")
     def page(off: Int): DataFrame = s.sql(
       s"""SELECT o_orderkey, o_custkey, o_orderpriority
          |FROM q219_ord ORDER BY o_orderkey LIMIT 100 OFFSET $off"""

@@ -12,9 +12,6 @@ import graft.operators.{Sampling, TextAnalysis}
   */
 object Queries28 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
   // ---- q220: web-corpus refresh pipeline ---------------------------------
 
   /** The composed web-corpus refresh, each stage an operator gated
@@ -38,7 +35,7 @@ object Queries28 {
     * replayed — canonicalization, keep-min dedup, both quality rules,
     * the split hash, and the rollup, value-for-value. */
   def q220CorpusRefresh(s: SparkSession, dir: String): DataFrame = {
-    val raw = t(s, dir, "documents")
+    val raw = Tables(s, dir, "documents")
       .select($"doc_id", $"text",
         concat(lit("HTTP://Host"), $"doc_id" % 50, lit(".Crawl.ORG:80/d/"),
           $"doc_id" % 250, lit("?utm_ref=x&v=1#top")).as("url"))

@@ -1,20 +1,16 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+
+import graft.streaming.StreamDrain
 
 /** Round-12 session gates past q220: stream-static LEFT OUTER join
   * (q221) and GROUP BY ALL syntax parity (q222). Naming/oracle/float
   * conventions as in [[Queries]].
   */
 object Queries29 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
-  private def dsum(c: Column): Column =
-    sum(c.cast(DecimalType(25, 4))).cast(DoubleType)
 
   // ---- q221: stream-static LEFT OUTER join -------------------------------
 
@@ -28,11 +24,7 @@ object Queries29 {
     * as its own row. */
   def q221StreamStaticOuter(parent: SparkSession, dir: String)
       : DataFrame = {
-    val spark = parent.newSession()
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-      "false")
-    val name = s"graft_sso_${System.nanoTime()}"
+    val spark = StreamDrain.session(parent, emptyBatches = false)
     val dim = broadcast(
       Tables(spark, dir, "customer")
         .where(col("c_custkey") % 3 === 0)
@@ -42,15 +34,9 @@ object Queries29 {
       .groupBy(coalesce(col("c_mktsegment"), lit("__miss"))
         .as("segment"))
       .agg(count(lit(1)).as("n"),
-        sum(col("value").cast(DecimalType(25, 4))).cast(DoubleType)
-          .as("sum_value"))
-    val q = stream.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name).orderBy("segment")
+        dsum(col("value")).as("sum_value"))
+    StreamDrain.toMemory(stream.writeStream.outputMode("complete"))
+      .orderBy("segment")
   }
 
   val q221Sql: String =
@@ -72,7 +58,7 @@ object Queries29 {
     * query migrated between engines. Identical statement both
     * sides. */
   def q222GroupByAll(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "lineitem").createOrReplaceTempView("q222_li")
+    Tables(s, dir, "lineitem").createOrReplaceTempView("q222_li")
     s.sql(
       """SELECT l_returnflag, l_linestatus, count(*) AS n,
         |  CAST(sum(CAST(l_quantity AS DECIMAL(25,4))) AS DOUBLE)
@@ -99,7 +85,7 @@ object Queries29 {
   def q223AudioMeta(s: SparkSession, dir: String): DataFrame = {
     val synth = udf((id: Long) =>
       graft.operators.Multimodal.synthesizeWavBlob(id * 1048573L + 13L))
-    val docs = t(s, dir, "documents")
+    val docs = Tables(s, dir, "documents")
       .select($"doc_id", synth($"doc_id").as("blob"))
     graft.operators.Multimodal.decodeMeta(docs)
       .select($"media_meta.format".as("format"),

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -14,12 +14,6 @@ import graft.streaming.EventsStream
   */
 object Queries3 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
-  private def dsum(c: Column): Column =
-    sum(c.cast(DecimalType(25, 4))).cast(DoubleType)
-
   // ---- custom Catalyst operator: backward as-of join ------------------
 
   /** For every click, the latest preceding purchase by the same user —
@@ -29,7 +23,7 @@ object Queries3 {
     * the purchase side is pre-deduped to one row per (user, µs) so the
     * as-of match is deterministic in any engine. */
   def q24AsofJoin(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
+    val ev = Tables(s, dir, "events")
     val clicks = ev.where($"event_type" === "click")
       .select($"event_id", $"user_id", expr("ts div 1000").as("us"))
     // repartition by user BEFORE the (user, µs) dedup: clustering by a
@@ -63,7 +57,7 @@ object Queries3 {
   /** Hierarchical subtotals via rollup; null grouping markers coalesced
     * to 'ALL' on both sides so ordering and hashing are engine-neutral. */
   def q25Rollup(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables(s, dir, "lineitem")
       .rollup($"l_returnflag", $"l_linestatus")
       .agg(count(lit(1)).as("n"), dsum($"l_quantity").as("qty_sum"))
       .select(coalesce($"l_returnflag", lit("ALL")).as("returnflag"),
@@ -121,7 +115,7 @@ object Queries3 {
     * oracle states the same query as a plain inequality join. */
   def q26RangeJoin(s: SparkSession, dir: String): DataFrame = {
     val dayUs = 86400000000L
-    val ev = t(s, dir, "events")
+    val ev = Tables(s, dir, "events")
     val errors = ev.where($"event_type" === "error")
       .select($"event_id", $"user_id", expr("ts div 1000").as("e_us"))
       .withColumn("bucket", expr(s"e_us div $dayUs"))
@@ -156,7 +150,7 @@ object Queries3 {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy($"o_custkey").orderBy($"o_orderdate", $"o_orderkey")
       .rowsBetween(-2, org.apache.spark.sql.expressions.Window.currentRow)
-    t(s, dir, "orders")
+    Tables(s, dir, "orders")
       .select($"o_custkey", $"o_orderkey",
         round(avg($"o_totalprice").over(w), 4).as("roll_avg"),
         min($"o_totalprice").over(w).as("roll_min"))
@@ -186,7 +180,7 @@ object Queries3 {
     * defaultdict default. */
   def q29UdfMap(s: SparkSession, dir: String): DataFrame = {
     import graft.frame.TFrame
-    val li = TFrame(t(s, dir, "lineitem"))
+    val li = TFrame(Tables(s, dir, "lineitem"))
     li.keep("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice",
         "l_tax")
       .filterRows(Seq("l_quantity"))(v => v.head.asInstanceOf[Double] >= 30.0)
@@ -225,7 +219,7 @@ object Queries3 {
     val vocab = Map("the" -> 1L, "of" -> 2L, "and" -> 3L, "to" -> 4L,
       "data" -> 5L, "model" -> 6L)
     val toks = slice(split(trim(lower($"text")), "\\s+"), 1, 5)
-    t(s, dir, "documents")
+    Tables(s, dir, "documents")
       .select($"doc_id",
         aggregate(
           graft.functions.Functional.lookupIndices(vocab, 0L)(toks),
@@ -255,7 +249,7 @@ object Queries3 {
     // compare cannot hash list columns)
     val q = percentile($"l_extendedprice",
       array(lit(0.25), lit(0.5), lit(0.75)))
-    t(s, dir, "lineitem")
+    Tables(s, dir, "lineitem")
       .groupBy($"l_returnflag")
       .agg(q.as("q"),
         round(percentile($"l_quantity", lit(0.9)), 4).as("qty_p90"))
@@ -281,7 +275,7 @@ object Queries3 {
   /** Grouped all/any (null-skipping bool reductions) — the reference's
     * col.all/col.any lifted through groupby. */
   def q35BoolAgg(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables(s, dir, "lineitem")
       .groupBy($"l_returnflag")
       .agg(
         min(($"l_quantity" < 50).cast(BooleanType)).as("all_small"),
@@ -310,7 +304,7 @@ object Queries3 {
     * from noise — SimilaritySpec pins 1.00-vs-0.53 hash-vs-first-N.
     * See Queries2.annTwinCheck/annRecallCheck. */
   def q52KnnIvf(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
+    val emb = Tables(s, dir, "embeddings")
     val probes = emb.where($"vec_id" < 5)
     def run(corpus: DataFrame): DataFrame =
       graft.operators.Similarity.ivfTopK(corpus, probes, "embedding",

@@ -14,9 +14,6 @@ import graft.operators.Skew
   */
 object Queries30 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
   // ---- q224: SCD2 (slowly-changing dimension, type 2) ---------------------
 
   /** Build SCD2 history from an update log: orders as versioned status
@@ -35,7 +32,7 @@ object Queries30 {
     * change detection and the validity intervals engine-portable.) */
   def q224Scd2(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy($"custkey").orderBy($"eff", $"ver")
-    val upd = t(s, dir, "orders")
+    val upd = Tables(s, dir, "orders")
       .select($"o_custkey".as("custkey"),
         $"o_orderdate".cast(TimestampType).as("eff"),
         $"o_orderkey".as("ver"),
@@ -92,7 +89,7 @@ object Queries30 {
     * the verify is confined to capped blocks (≤ cap² each), and the
     * planted containment is asserted in-gate. */
   def q225EntityResolution(s: SparkSession, dir: String): DataFrame = {
-    val base = t(s, dir, "part").where($"p_partkey" < 300)
+    val base = Tables(s, dir, "part").where($"p_partkey" < 300)
       .select($"p_partkey".as("id"), $"p_name".as("name"))
     // mutate one mid-string char to 'q' at pos 3 + id % (len-4): never
     // the first two or last two chars, so both blocks still match
@@ -192,9 +189,9 @@ object Queries30 {
     * and a scheduler alerts on violations > 0 instead of eyeballing
     * dashboards. */
   def q226DqReport(s: SparkSession, dir: String): DataFrame = {
-    val orders = t(s, dir, "orders")
-    val li = t(s, dir, "lineitem")
-    val ev = t(s, dir, "events")
+    val orders = Tables(s, dir, "orders")
+    val li = Tables(s, dir, "lineitem")
+    val ev = Tables(s, dir, "events")
     def row(name: String, violations: Column, checked: Column,
         df: DataFrame): DataFrame =
       df.agg(violations.cast(LongType).as("violations"),
@@ -275,7 +272,7 @@ object Queries30 {
     * costs nothing to "read"). The oracle replays the expected merged
     * semantics from the source table directly. */
   def q227SchemaEvolution(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
+    val docs = Tables(s, dir, "documents")
     // Fs.scratchDir (round 22): tmpfs-backed when roomy — the staged
     // two-generation table is harness scaffolding, not the measured
     // operator; disk fsync on /tmp was pure overhead
@@ -328,7 +325,7 @@ object Queries30 {
     * one summary row — edges, capped wedges, triangles, and the
     * honest dropped count. */
   def q228Triangles(s: SparkSession, dir: String): DataFrame = {
-    val items = t(s, dir, "lineitem")
+    val items = Tables(s, dir, "lineitem")
       .select($"l_orderkey".as("o"), $"l_partkey".as("p")).distinct()
     val edges = items.select($"o", $"p".as("a"))
       .join(items.select($"o", $"p".as("b")), "o")

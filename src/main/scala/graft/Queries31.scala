@@ -11,9 +11,6 @@ import org.apache.spark.sql.types._
   */
 object Queries31 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
   // ---- q229: video (MP4/ISO-BMFF) container probe -------------------------
 
   /** Real ISO-BMFF box-walk end-to-end — the video face of q70's image
@@ -34,7 +31,7 @@ object Queries31 {
     // oracle's BIGINT raises, diverging gate and oracle at target scale
     val synth = udf((id: Long) =>
       graft.operators.Multimodal.synthesizeMp4Blob(id * 1048573L + 29L))
-    val docs = t(s, dir, "documents")
+    val docs = Tables(s, dir, "documents")
       .select($"doc_id", synth($"doc_id").as("blob"))
     graft.operators.Multimodal.decodeMeta(docs)
       .select($"media_meta.format".as("format"),
@@ -73,7 +70,7 @@ object Queries31 {
     * the aggregate), which is what makes XML ingest viable at 100 TB:
     * the parse cost is embarrassingly parallel. */
   def q230XmlRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "lineitem").createOrReplaceTempView("q230_li")
+    Tables(s, dir, "lineitem").createOrReplaceTempView("q230_li")
     s.sql(
       """SELECT r.sm AS sm, count(*) AS n,
         |  CAST(sum(r.qty) AS BIGINT) AS qty,
@@ -111,7 +108,7 @@ object Queries31 {
     * crosses the single exchange; the sort-vs-hash difference only
     * matters within a task. */
   def q231Collation(s: SparkSession, dir: String): DataFrame = {
-    val m = t(s, dir, "customer").select(
+    val m = Tables(s, dir, "customer").select(
       when($"c_custkey" % 3 === 0, upper($"c_mktsegment"))
         .when($"c_custkey" % 3 === 1, lower($"c_mktsegment"))
         .otherwise(concat(upper(substring($"c_mktsegment", 1, 1)),
@@ -144,8 +141,8 @@ object Queries31 {
     * run to run under shuffle). Groups are region-sized (5 rows), so
     * the agg state is trivially bounded. */
   def q232Listagg(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "nation").createOrReplaceTempView("q232_n")
-    t(s, dir, "region").createOrReplaceTempView("q232_r")
+    Tables(s, dir, "nation").createOrReplaceTempView("q232_n")
+    Tables(s, dir, "region").createOrReplaceTempView("q232_r")
     s.sql(
       """SELECT r_name,
         |  listagg(n_name, ',') WITHIN GROUP (ORDER BY n_name)
@@ -174,7 +171,7 @@ object Queries31 {
     * by item so the sketch's internal count ordering never leaks into
     * the hash. */
   def q233ApproxTopK(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("q233_o")
+    Tables(s, dir, "orders").createOrReplaceTempView("q233_o")
     s.sql(
       """SELECT t.item AS priority, CAST(t.count AS BIGINT) AS n
         |FROM (SELECT approx_top_k(o_orderpriority, 10, 100) AS tk

@@ -10,9 +10,6 @@ import org.apache.spark.sql.types._
   */
 object Queries32 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
   // ---- q234: observed metrics (Dataset.observe) ---------------------------
 
   /** Pipeline observability without a second scan (q126's observe
@@ -31,15 +28,14 @@ object Queries32 {
     * hash-mismatch. */
   def q234Observe(s: SparkSession, dir: String): DataFrame = {
     val obs = new Observation(s"q234_${System.nanoTime()}")
-    val grouped = t(s, dir, "lineitem")
+    val grouped = Tables(s, dir, "lineitem")
       .observe(obs,
         count(lit(1)).as("obs_rows"),
         sum($"l_quantity".cast(DecimalType(25, 4))).as("obs_qty"),
         count(when($"l_discount" > lit(0.05), 1)).as("obs_disc"))
       .groupBy($"l_returnflag")
       .agg(count(lit(1)).as("n"),
-        sum($"l_quantity".cast(DecimalType(25, 4))).cast(DoubleType)
-          .as("qty"))
+        dsum($"l_quantity").as("qty"))
     val rows = grouped.collect() // group-sized (|returnflag| = 3)
     val m = obs.get
     val obsRows = m("obs_rows").asInstanceOf[Long]
@@ -88,7 +84,7 @@ object Queries32 {
     // other gates' environment depend on iteration order)
     val s = parent.newSession()
     s.conf.set("spark.sql.timeType.enabled", "true")
-    t(s, dir, "events").createOrReplaceTempView("q235_e")
+    Tables(s, dir, "events").createOrReplaceTempView("q235_e")
     s.sql(
       """SELECT CAST(time_trunc('HOUR', t) AS STRING) AS hr,
         |  count(*) AS n,
@@ -121,7 +117,7 @@ object Queries32 {
     * row moves n/n_rt/first_name). */
   def q236AesRoundtrip(s: SparkSession, dir: String): DataFrame = {
     val key = "0123456789abcdef" // fixture key: gate tests the identity
-    t(s, dir, "customer")
+    Tables(s, dir, "customer")
       .selectExpr("c_nationkey", "c_name",
         s"CAST(aes_decrypt(aes_encrypt(CAST(c_name AS BINARY), '$key'), '$key') AS STRING) AS dec")
       .groupBy($"c_nationkey")

@@ -6,15 +6,14 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
+import graft.streaming.StreamDrain
+
 /** Round-13 session gates past q236: incremental rollup maintenance
   * (q237), Trigger.AvailableNow batch-drain (q238), bitwise aggregates
   * (q239), higher central moments (q240), the streaming state-store reader (q241), timezone conversion (q242), the binary-encoding battery (q243), parquet bloom filters (q244), the warehouse capstone (q245), and SQL pipe syntax (q246). Naming/oracle/float
   * conventions as in [[Queries]].
   */
 object Queries33 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
 
   // ---- q237: incremental rollup maintenance -------------------------------
 
@@ -30,7 +29,7 @@ object Queries33 {
     * group, decimal drift) hash-mismatches. Refresh cost is
     * O(delta + |groups|), independent of base size. */
   def q237IncrementalRollup(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
+    val li = Tables(s, dir, "lineitem")
     val keys = Seq($"l_returnflag", $"l_linestatus")
     def partial(df: DataFrame): DataFrame =
       df.groupBy(keys: _*)
@@ -86,11 +85,10 @@ object Queries33 {
     * is REQUIRED in-gate; the aggregate must equal the batch oracle
     * over the same rows. */
   def q238AvailableNow(parent: SparkSession, dir: String): DataFrame = {
-    val spark = parent.newSession()
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    val spark = StreamDrain.session(parent, emptyBatches = true)
     val stage = Fs.scratchDir("avnow")
     try {
-      t(spark, dir, "events")
+      Tables(spark, dir, "events")
         .select($"event_type", $"value")
         .repartition(4)
         .write.mode("overwrite").parquet(stage)
@@ -102,8 +100,7 @@ object Queries33 {
         .option("maxFilesPerTrigger", "1").parquet(stage)
         .groupBy($"event_type")
         .agg(count(lit(1)).as("n"),
-          sum($"value".cast(DecimalType(25, 4))).cast(DoubleType)
-            .as("sum_value"))
+          dsum($"value").as("sum_value"))
       val q = agg.writeStream
         .outputMode("complete")
         .format("memory")
@@ -135,7 +132,7 @@ object Queries33 {
     * Parity matters because flag-mask rollups silently corrupt if an
     * engine treats the aggregate as nullable-skipping differently. */
   def q239BitAggs(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "events").createOrReplaceTempView("q239_e")
+    Tables(s, dir, "events").createOrReplaceTempView("q239_e")
     s.sql(
       """SELECT event_type, count(*) AS n,
         |  bit_and(user_id) AS mask_and,
@@ -165,7 +162,7 @@ object Queries33 {
     * significant digits of cross-algorithm agreement), same
     * convention as the regr_* gate (q174). */
   def q240Moments(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "lineitem")
+    Tables(s, dir, "lineitem")
       .groupBy($"l_returnflag")
       .agg(count(lit(1)).as("n"),
         round(var_pop($"l_extendedprice") / 1e6, 6).as("var_p_m"),
@@ -205,12 +202,11 @@ object Queries33 {
     * drain reuses q238's AvailableNow shape; the state-metadata
     * source first certifies WHICH stores the checkpoint holds. */
   def q241StateReader(parent: SparkSession, dir: String): DataFrame = {
-    val spark = parent.newSession()
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    val spark = StreamDrain.session(parent, emptyBatches = true)
     val stage = Fs.scratchDir("stsrc")
     val ckpt = Fs.scratchDir("stckpt")
     try {
-      t(spark, dir, "events")
+      Tables(spark, dir, "events")
         .select($"event_type", $"value")
         .repartition(2)
         .write.mode("overwrite").parquet(stage)
@@ -277,7 +273,7 @@ object Queries33 {
     * same IANA database, so a hash mismatch means a real rule/offset
     * divergence. */
   def q242Timezones(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "events").createOrReplaceTempView("q242_e")
+    Tables(s, dir, "events").createOrReplaceTempView("q242_e")
     s.sql(
       """SELECT tz, lhour, count(*) AS n
         |FROM (
@@ -311,7 +307,7 @@ object Queries33 {
     * lower()ed on both sides so the claim is about the DIGITS, not a
     * case convention. */
   def q243Encoding(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "customer").createOrReplaceTempView("q243_c")
+    Tables(s, dir, "customer").createOrReplaceTempView("q243_c")
     s.sql(
       """SELECT c_nationkey, count(*) AS n,
         |  sum(CASE WHEN CAST(unbase64(base64(CAST(c_name AS BINARY)))
@@ -348,7 +344,7 @@ object Queries33 {
   def q244ParquetBloom(s: SparkSession, dir: String): DataFrame = {
     val stage = Fs.scratchDir("bloom")
     try {
-      t(s, dir, "orders")
+      Tables(s, dir, "orders")
         .select($"o_orderkey", $"o_custkey", $"o_orderstatus",
           $"o_totalprice")
         .repartition(4)
@@ -382,8 +378,7 @@ object Queries33 {
         "q244: dict-encoded o_orderstatus unexpectedly carries a bloom")
       val agg = s.read.parquet(stage).agg(
         count(lit(1)).cast(LongType).as("n_rows"),
-        sum($"o_totalprice".cast(DecimalType(25, 4))).cast(DoubleType)
-          .as("sum_price"),
+        dsum($"o_totalprice").as("sum_price"),
         countDistinct($"o_orderkey").cast(LongType).as("n_keys"))
         .withColumn("n_files", lit(files.length.toLong))
         .withColumn("n_bloom_files",
@@ -418,7 +413,7 @@ object Queries33 {
     * the ENTIRE chain in one statement. */
   def q245WarehouseCapstone(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy($"custkey").orderBy($"eff", $"ver")
-    val upd = t(s, dir, "orders")
+    val upd = Tables(s, dir, "orders")
       .select($"o_custkey".as("custkey"),
         $"o_orderdate".cast(TimestampType).as("eff"),
         $"o_orderkey".as("ver"), $"o_orderstatus".as("status"),
@@ -429,7 +424,7 @@ object Queries33 {
       .withColumn("__next_eff", lead($"eff", 1).over(w))
     val current = scd.where($"__next_eff".isNull)
       .select($"custkey", $"status")
-    val dim = t(s, dir, "customer")
+    val dim = Tables(s, dir, "customer")
       .where($"c_custkey" % 2 === 0) // deliberately incomplete dim
       .select($"c_custkey", $"c_mktsegment")
     val enriched = current.join(broadcast(dim),
@@ -485,7 +480,7 @@ object Queries33 {
     * so a green row certifies the pipe chain resolves to exactly the
     * classic semantics. */
   def q246PipeSyntax(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "lineitem").createOrReplaceTempView("q246_li")
+    Tables(s, dir, "lineitem").createOrReplaceTempView("q246_li")
     s.sql(
       """FROM q246_li
         ||> WHERE l_quantity < 30

@@ -16,9 +16,6 @@ import graft.operators.{Packing, Sampling, TextAnalysis}
   */
 object Queries34 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
   // ---- q247: packing conservation, hashed ---------------------------------
 
   /** The oracle-restatable half of q97's self-checks: run the SAME
@@ -34,7 +31,7 @@ object Queries34 {
     * engine-defined per-sequence rows and raise_error checks. */
   def q247PackConserve(s: SparkSession, dir: String): DataFrame = {
     val maxTok = 256
-    val docs = t(s, dir, "documents")
+    val docs = Tables(s, dir, "documents")
       .select($"doc_id", TextAnalysis.tokenCount($"text").cast(LongType)
         .as("n_tokens"))
     val ordered = docs
@@ -134,7 +131,7 @@ object Queries34 {
     * token, which would silently shrink the vocab). q108 keeps the
     * engine-defined ranked merge table and the losslessness check. */
   def q249BpeFrame(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
+    val docs = Tables(s, dir, "documents")
     val (ranks, vocab) = BpeTrain.trainFromCorpus(docs, "text",
       numMerges = 60)
     val ranksOk = ranks.values.toSeq.sorted == (0 until ranks.size) &&
@@ -182,7 +179,7 @@ object Queries34 {
     * kind — the text leaves the scan only as (doc_id, segment) pairs,
     * and the kernel pass is scan-side. */
   def q250DupSegments(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
+    val docs = Tables(s, dir, "documents")
     // ONE corpus scan: both segment kinds ride the same explode as
     // tagged structs, then conditional aggregation splits them back
     // into the 8 counters — vs the naive 4-subtree form that scanned
@@ -310,7 +307,7 @@ object Queries34 {
     val toks = slice(split(trim($"text"), "\\s+"), lit(1),
       ($"doc_id" % 12 + 1).cast(IntegerType))
     val mask = graft.operators.Packing.attentionMask(toks, L)
-    t(s, dir, "documents").select(
+    Tables(s, dir, "documents").select(
       $"doc_id",
       array_join(graft.operators.Packing.padToLength(
         toks, L, lit("<pad>")), "|").as("padded"),
@@ -359,7 +356,7 @@ object Queries34 {
     * partitioning on doc_id reused by the groupBy rebuild. */
   def q252SpanCorrupt(s: SparkSession, dir: String): DataFrame = {
     val toks = slice(split(trim($"text"), "\\s+"), 1, 16)
-    val docs = t(s, dir, "documents").select($"doc_id", toks.as("toks"))
+    val docs = Tables(s, dir, "documents").select($"doc_id", toks.as("toks"))
     graft.operators.Denoise.spanCorrupt(docs, "doc_id", "toks",
       density = 0.25, seed = 17L)
   }
@@ -429,7 +426,7 @@ object Queries34 {
     * counts bit-for-bit. */
   def q253MlmMask(s: SparkSession, dir: String): DataFrame = {
     val toks = slice(split(trim($"text"), "\\s+"), 1, 16)
-    val docs = t(s, dir, "documents").select($"doc_id", toks.as("toks"))
+    val docs = Tables(s, dir, "documents").select($"doc_id", toks.as("toks"))
     graft.operators.Denoise.mlmMask(docs, "doc_id", "toks",
       density = 0.15, seed = 23L)
   }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.operators.{Denoise, Packing, TextAnalysis}
+import graft.streaming.StreamDrain
 
 /** Round-16 gates: the remaining objective-prep surfaces of a
   * training-data pipeline — fill-in-the-middle (q254), NSP pair prep
@@ -15,9 +16,6 @@ import graft.operators.{Denoise, Packing, TextAnalysis}
   * Naming/oracle/float conventions as in [[Queries]].
   */
 object Queries35 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
 
   // ---- q254: fill-in-the-middle transform, hashed ---------------------------
 
@@ -33,7 +31,7 @@ object Queries35 {
     * expressions, ZERO shuffles (plan-asserted in DenoiseSpec). */
   def q254Fim(s: SparkSession, dir: String): DataFrame = {
     val toks = slice(split(trim($"text"), "\\s+"), 1, 12)
-    val docs = t(s, dir, "documents").select($"doc_id", toks.as("toks"))
+    val docs = Tables(s, dir, "documents").select($"doc_id", toks.as("toks"))
     Denoise.fimTransform(docs, "doc_id", "toks", fimRate = 0.5,
       seed = 31L)
   }
@@ -98,7 +96,7 @@ object Queries35 {
     * window functions share its sort (plan-asserted in DenoiseSpec). */
   def q255Nsp(s: SparkSession, dir: String): DataFrame = {
     val toks = slice(split(trim($"text"), "\\s+"), 1, 10)
-    val docs = t(s, dir, "documents").select($"doc_id", toks.as("toks"))
+    val docs = Tables(s, dir, "documents").select($"doc_id", toks.as("toks"))
     Denoise.nspPairs(docs, "doc_id", "toks", swapRate = 0.4,
       seed = 41L, groups = 64)
   }
@@ -161,7 +159,7 @@ object Queries35 {
   def q256LenBuckets(s: SparkSession, dir: String): DataFrame = {
     val bounds = Seq(16, 32, 64, 128, 256, 512)
     val len = TextAnalysis.tokenCount($"text").cast(LongType)
-    t(s, dir, "documents")
+    Tables(s, dir, "documents")
       .select(Packing.lengthBucket(len, bounds).cast(LongType)
         .as("bucket_len"), len.as("len"))
       .groupBy($"bucket_len")
@@ -211,7 +209,7 @@ object Queries35 {
     * notwithstanding (the partition-count invariance is additionally
     * pinned in PackingSpec across parts = 3 vs 8). */
   def q257BlockPack(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
+    val docs = Tables(s, dir, "documents")
       .select($"doc_id", (TextAnalysis.tokenCount($"text") + 1L)
         .cast(LongType).as("len"))
     val off = Packing.contiguousOffsets(docs, "doc_id", "len",
@@ -262,7 +260,7 @@ object Queries35 {
     * prepend is id arithmetic, not a join). */
   def q258Ul2(s: SparkSession, dir: String): DataFrame = {
     val toks = slice(split(trim($"text"), "\\s+"), 1, 16)
-    val docs = t(s, dir, "documents").select($"doc_id", toks.as("toks"))
+    val docs = Tables(s, dir, "documents").select($"doc_id", toks.as("toks"))
     graft.operators.Denoise.spanCorruptMixture(docs, "doc_id", "toks",
       seed = 29L)
   }
@@ -362,7 +360,7 @@ object Queries35 {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy($"prompt_id")
       .orderBy($"score".desc, $"doc_id".desc)
-    t(s, dir, "documents")
+    Tables(s, dir, "documents")
       .select(shiftright($"doc_id", 3).as("prompt_id"),
         $"doc_id",
         TextAnalysis.tokenCount($"text").cast(LongType).as("score"))
@@ -429,7 +427,7 @@ object Queries35 {
     // a future fractional quantity must fail loudly here instead of
     // silently diverging the oracle. The raise_error rides the same
     // projection — no extra pass.
-    val li = t(s, dir, "lineitem")
+    val li = Tables(s, dir, "lineitem")
       .select(($"l_orderkey" * 8 + $"l_linenumber").cast(LongType)
         .as("lk"),
         when($"l_quantity" =!= floor($"l_quantity"), raise_error(lit(
@@ -478,39 +476,15 @@ object Queries35 {
     * the incremental-corpus path: new shards land, prep runs on
     * exactly the new rows, checkpointed offsets resume.
     *
-    * The memory sink here is GATE-HARNESS-ONLY: it exists so the
-    * drained result is a DataFrame the driver can hash, and it holds
-    * the full result in driver memory — fine for the bounded gate
-    * fixture, wrong for production. A production caller writes the
-    * same transform through `foreachBatch` or a file/table sink (the
-    * q200 partitioned-sink gate demonstrates that path), where
-    * nothing accumulates on the driver. The temp view is dropped
-    * before returning so repeated in-JVM runs (bench loops,
-    * parallelism sweeps) do not accumulate result copies. */
+    * The memory sink is gate-harness-only; see
+    * [[graft.streaming.StreamDrain.toMemory]]. */
   def q261StreamMlm(s: SparkSession, dir: String): DataFrame = {
-    val spark = s.newSession()
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    spark.conf.set(
-      "spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    val name = s"graft_mlm_${System.nanoTime()}"
+    val spark = StreamDrain.session(s, emptyBatches = false)
     val docs = Tables.stream(spark, dir, "documents").select($"doc_id",
       slice(split(trim($"text"), "\\s+"), 1, 12).as("toks"))
     val out = graft.operators.Denoise.mlmMask(docs, "doc_id", "toks",
       density = 0.2, seed = 47L)
-    val q = out.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    // resolve the DataFrame first (analysis binds the memory sink's
-    // relation into the plan), THEN drop the catalog entry — the
-    // returned frame stays readable while the JVM-lifetime leak of one
-    // uniquely-named view per invocation is gone
-    val drained = spark.table(name)
-    drained.queryExecution.assertAnalyzed()
-    spark.catalog.dropTempView(name)
-    drained
+    StreamDrain.toMemory(out.writeStream.outputMode("append"))
   }
 
   // thresholds: sel floor(0.2*8192)=1638; 80/10/10 constants shared
@@ -543,7 +517,7 @@ object Queries35 {
   def q262RepeatSchedule(s: SparkSession, dir: String): DataFrame = {
     val len = TextAnalysis.tokenCount($"text").cast(LongType)
     // thresholds: frac 0.5 -> 4096, 0.25 -> 2048 of 8192
-    val docs = t(s, dir, "documents").select($"doc_id", len.as("len"))
+    val docs = Tables(s, dir, "documents").select($"doc_id", len.as("len"))
       .withColumn("tier",
         when($"len" <= 30, "low").when($"len" <= 60, "mid")
           .otherwise("high"))

@@ -17,9 +17,6 @@ import graft.operators.{Packing, TextAnalysis}
   */
 object Queries36 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
   // ---- q263: SemDeDup survivor accounting, hashed ---------------------------
 
   /** The oracle-restatable half of q96's SemDeDup pipeline: run the
@@ -144,7 +141,7 @@ object Queries36 {
     * (frag_off, frag_len). DuckDB replays the shuffle key, the prefix
     * sum, and the slicing with generate_series + list_slice. */
   def q264BlockRows(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
+    val docs = Tables(s, dir, "documents")
       .select($"doc_id",
         concat(split(trim($"text"), "\\s+"), array(lit("<eos>")))
           .as("toks"))
@@ -248,7 +245,7 @@ object Queries36 {
     * literal — shared by q265 and q267. */
   private def bpeLenExpr(s: SparkSession, dir: String): org.apache.spark.sql.Column = {
     val enc = Queries4.q36Encoder
-    val words = t(s, dir, "documents")
+    val words = Tables(s, dir, "documents")
       .select(explode(split(trim($"text"), "\\s+")).as("w"))
       .distinct()
       .collect().map(_.getString(0))
@@ -273,7 +270,7 @@ object Queries36 {
   def q265BpeLenBuckets(s: SparkSession, dir: String): DataFrame = {
     val len = bpeLenExpr(s, dir)
     val bounds = Seq(16, 32, 64, 128, 256, 512)
-    t(s, dir, "documents")
+    Tables(s, dir, "documents")
       .select(Packing.lengthBucket(len, bounds).cast(LongType)
         .as("bucket_len"), len.as("len"))
       .groupBy($"bucket_len")
@@ -346,7 +343,7 @@ object Queries36 {
     * — a green hash proves the two-phase rank equals the global sort
     * exactly. */
   def q266Curriculum(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
+    val docs = Tables(s, dir, "documents")
       .select($"doc_id",
         TextAnalysis.tokenCount($"text").cast(LongType).as("score"),
         TextAnalysis.tokenCount($"text").cast(LongType).as("len"))
@@ -403,7 +400,7 @@ object Queries36 {
     * collect); no shuffle at any corpus size. */
   def q267Fertility(s: SparkSession, dir: String): DataFrame = {
     val bpe = bpeLenExpr(s, dir)
-    t(s, dir, "documents")
+    Tables(s, dir, "documents")
       .select($"doc_id",
         TextAnalysis.tokenCount($"text").cast(LongType).as("n_words"),
         // n_bpe = 0 (an empty-text document) must raise, not divide:
@@ -457,7 +454,7 @@ object Queries36 {
     * integrality-asserted as in q260. DuckDB replays rank and decile
     * over the same total order. */
   def q268GlobalRank(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
+    val li = Tables(s, dir, "lineitem")
       .select(($"l_orderkey" * 8 + $"l_linenumber").cast(LongType)
         .as("lk"),
         when($"l_quantity" =!= floor($"l_quantity"), raise_error(lit(

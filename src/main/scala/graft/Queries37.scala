@@ -17,9 +17,6 @@ import graft.functions.{Bpe, BpeEncoder}
   */
 object Queries37 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
   /** Unique-key money frame shared by q269/q272: the synthetic
     * lineitem duplicates (orderkey, linenumber), so aggregate to the
     * q268 composite key first. Prices go double → DECIMAL(18,2)
@@ -27,7 +24,7 @@ object Queries37 {
     * nearest cent identically — no half-way case exists within one
     * double ulp of a cent), and the per-key sum is decimal-exact. */
   private def moneyKeys(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables(s, dir, "lineitem")
       .select(($"l_orderkey" * 8 + $"l_linenumber").cast(LongType).as("lk"),
         $"l_extendedprice".cast(DecimalType(18, 2)).as("p"))
       .groupBy($"lk")
@@ -94,7 +91,7 @@ object Queries37 {
     * never |corpus| times, at any corpus size. */
   def q270BpeDictDistributed(s: SparkSession, dir: String): DataFrame = {
     val counts = Bpe.bpeDocTokenCounts(
-      t(s, dir, "documents"), "doc_id", "text", Queries4.q36Encoder)
+      Tables(s, dir, "documents"), "doc_id", "text", Queries4.q36Encoder)
     val bounds = Seq(16, 32, 64, 128, 256, 512)
     val len = $"n_bpe"
     counts
@@ -162,7 +159,7 @@ object Queries37 {
         Bpe.bpeTokenize(enc)(lit("Hello World!, how are you?")))
         .as(Seq("pos", "id")))
 
-    val docs = t(s, dir, "documents")
+    val docs = Tables(s, dir, "documents")
     val counts = Bpe.bpeDocTokenCounts(docs, "doc_id", "text", enc)
       .localCheckpoint() // feeds both checks; don't re-run the dict join
     val words = docs.select($"doc_id",
@@ -228,7 +225,7 @@ object Queries37 {
     * executed plan (pinned window-free in TFrameSpec) never funnels
     * the corpus through one task. */
   def q272RankFamily(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
+    val li = Tables(s, dir, "lineitem")
       .select(($"l_orderkey" * 8 + $"l_linenumber").cast(LongType)
         .as("lk"),
         when($"l_quantity" =!= floor($"l_quantity"), raise_error(lit(
@@ -267,7 +264,7 @@ object Queries37 {
     * order — no window at any corpus size. DuckDB replays the signed
     * window sum over the same total order. */
   def q273SignedBalance(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
+    val li = Tables(s, dir, "lineitem")
       .select(($"l_orderkey" * 8 + $"l_linenumber").cast(LongType)
         .as("lk"),
         (when($"l_returnflag" === "R", -1L).otherwise(1L) *
@@ -306,7 +303,7 @@ object Queries37 {
     * one-task global funnel, and this gate pins its replacement
     * window-free (TFrameSpec). DuckDB replays the native ntile(7). */
   def q274Ntile(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
+    val li = Tables(s, dir, "lineitem")
       .select(($"l_orderkey" * 8 + $"l_linenumber").cast(LongType)
         .as("lk"),
         when($"l_quantity" =!= floor($"l_quantity"), raise_error(lit(

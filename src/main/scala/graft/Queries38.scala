@@ -18,16 +18,13 @@ import graft.operators.{Retrieval, Sampling, Similarity}
   */
 object Queries38 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
   /** Unique-key quantity frame shared by q275/q276/q277 — the q272
     * composite key with an integrality raise (Spark truncates and
     * DuckDB rounds on the long cast, so a fractional quantity would
     * silently diverge the order). Quantities repeat heavily across
     * keys, so peer groups are real, not degenerate. */
   private def qtyKeys(s: SparkSession, dir: String, gate: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables(s, dir, "lineitem")
       .select(($"l_orderkey" * 8 + $"l_linenumber").cast(LongType).as("lk"),
         when($"l_quantity" =!= floor($"l_quantity"), raise_error(lit(
           s"$gate: non-integer l_quantity — Spark truncates and DuckDB " +
@@ -106,7 +103,7 @@ object Queries38 {
     * of the running sum); long arithmetic makes the difference form
     * lossless. DuckDB replays the native windowed frame. */
   def q277RollingSum(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
+    val li = Tables(s, dir, "lineitem")
       .select(($"l_orderkey" * 8 + $"l_linenumber").cast(LongType)
         .as("lk"),
         (when($"l_returnflag" === "R", -1L).otherwise(1L) *
@@ -146,7 +143,7 @@ object Queries38 {
     * the selected/ranked sets bit-for-bit. */
   def q278Bm25(s: SparkSession, dir: String): DataFrame = {
     val queries = retrievalQueries
-    Retrieval.bm25TopK(t(s, dir, "documents"), "doc_id", "text",
+    Retrieval.bm25TopK(Tables(s, dir, "documents"), "doc_id", "text",
         queries, k = 5)
       .orderBy($"qid", $"rank")
   }
@@ -179,10 +176,10 @@ object Queries38 {
     * spaces are the shared entity-id space by corpus construction. */
   def q279HybridRrf(s: SparkSession, dir: String): DataFrame = {
     val queries = retrievalQueries
-    val lex = Retrieval.bm25TopK(t(s, dir, "documents"), "doc_id", "text",
+    val lex = Retrieval.bm25TopK(Tables(s, dir, "documents"), "doc_id", "text",
         queries, k = 20)
       .select($"qid", $"doc_id".as("id"), $"rank")
-    val emb = t(s, dir, "embeddings")
+    val emb = Tables(s, dir, "embeddings")
     val den = Similarity.bruteForceTopK(emb, emb.where($"vec_id" < 4),
         "embedding", "vec_id", "vec_id", k = 20)
       .select($"probe_id".as("qid"), $"id", $"rank")
@@ -237,7 +234,7 @@ object Queries38 {
           .map(tm => (qid, tm))
       }
       .toDF("qid", "term")
-    t(s, dir, "documents")
+    Tables(s, dir, "documents")
       .select($"doc_id", explode(split(trim($"text"), "\\s+")).as("term"))
       .distinct()
       .join(broadcast(qterms), "term")
@@ -261,7 +258,7 @@ object Queries38 {
     * division of exact integers. The ideal ranking is the k-heap over
     * the relevance set (grade desc, id asc), window-free. */
   def q280RetrievalEval(s: SparkSession, dir: String): DataFrame = {
-    val run = Retrieval.bm25TopK(t(s, dir, "documents"), "doc_id", "text",
+    val run = Retrieval.bm25TopK(Tables(s, dir, "documents"), "doc_id", "text",
         retrievalQueries, k = 20)
       .select($"qid", $"doc_id".as("id"), $"rank")
     Retrieval.evalAtK(run, gradedRel(s, dir), k = 10).orderBy($"qid")
@@ -323,7 +320,7 @@ object Queries38 {
     * cross-engine trust point and this hash pins it). Output is the
     * q106 shape: per-language kept count + kept id sum. */
   def q281TemperatureMix(s: SparkSession, dir: String): DataFrame = {
-    val mixed = Sampling.mixByTemperature(t(s, dir, "documents"),
+    val mixed = Sampling.mixByTemperature(Tables(s, dir, "documents"),
       $"lang", $"doc_id", alpha = 0.5, seed = 47L)
     mixed.groupBy($"lang")
       .agg(count(lit(1)).as("kept_n"), sum($"doc_id").as("kept_id_sum"))
@@ -374,7 +371,7 @@ object Queries38 {
       .connectedComponents(
         Queries6.jaccardPairFixture(s, dir).select($"id_a", $"id_b"))
       .select($"id", $"component")
-    val docs = t(s, dir, "documents").select($"doc_id")
+    val docs = Tables(s, dir, "documents").select($"doc_id")
     val rep = docs.join(broadcast(comp), $"doc_id" === $"id", "left")
       .select($"doc_id", $"component",
         coalesce($"component", $"doc_id").as("rep"))
@@ -503,7 +500,7 @@ object Queries38 {
     * chose the SAME expansion vocabulary. */
   def q283PrfExpansion(s: SparkSession, dir: String): DataFrame = {
     val queries = retrievalQueries
-    Retrieval.bm25PrfTopK(t(s, dir, "documents"), "doc_id", "text",
+    Retrieval.bm25PrfTopK(Tables(s, dir, "documents"), "doc_id", "text",
         queries, k = 5, fbDocs = 5, fbTerms = 3)
       .orderBy($"qid", $"rank")
   }
@@ -552,7 +549,7 @@ object Queries38 {
     * made explicit), rounded to 6. Output: type/token/spectrum counts
     * + the ×10⁹ integer sum witnesses + slope/intercept. */
   def q284ZipfFit(s: SparkSession, dir: String): DataFrame = {
-    val tfreq = t(s, dir, "documents")
+    val tfreq = Tables(s, dir, "documents")
       .select(explode(split(trim($"text"), "\\s+")).as("term"))
       .groupBy($"term").agg(count(lit(1)).as("freq"))
     val spec = tfreq.groupBy($"freq").agg(count(lit(1)).as("ntypes"))
@@ -654,7 +651,7 @@ object Queries38 {
     * by (score desc, id asc) via the window-free k-heap. */
   def q285HardNegatives(s: SparkSession, dir: String): DataFrame = {
     val queries = retrievalQueries
-    val scored = Retrieval.bm25Scores(t(s, dir, "documents"), "doc_id",
+    val scored = Retrieval.bm25Scores(Tables(s, dir, "documents"), "doc_id",
         "text", queries)
       .select($"qid", $"doc_id".as("id"), $"score_units")
     val negs = scored.join(gradedRel(s, dir).select($"qid", $"id"),
@@ -698,7 +695,7 @@ object Queries38 {
     * the arrays with range() and replays concat/transform/slice
     * bit-for-bit — the q251 array-hash precedent. */
   def q286SftMask(s: SparkSession, dir: String): DataFrame = {
-    val base = t(s, dir, "documents").select($"doc_id",
+    val base = Tables(s, dir, "documents").select($"doc_id",
       sequence($"doc_id" * 1000 + 1,
         $"doc_id" * 1000 + ($"doc_id" % 7 + 1)).as("p"),
       sequence($"doc_id" * 1000 + 100,

@@ -16,9 +16,6 @@ import graft.operators.{QualityModel, TextAnalysis}
   */
 object Queries39 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
   // ---- q287/q288: distilled quality filter (ridge regression) ---------------
   //
   // Target: the composite [[TextAnalysis.qualityScore]] (soft-windowed
@@ -35,7 +32,7 @@ object Queries39 {
   private def lambdaRidge = 1.0
 
   private def fitQuality(s: SparkSession, dir: String): QualityModel.Fit = {
-    val docs = t(s, dir, "documents")
+    val docs = Tables(s, dir, "documents")
     QualityModel.fit(
       QualityModel.gramSums(docs,
         QualityModel.featureX1($"text"),
@@ -50,7 +47,7 @@ object Queries39 {
     * chain). Raises if the model fails to beat the baseline — a
     * quality filter that learned nothing must not ship silently. */
   def q287QualityFit(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
+    val docs = Tables(s, dir, "documents")
     val fit = fitQuality(s, dir)
     val yBar = fit.syu.toDouble / 1.0e9 / fit.nDocs.toDouble
     def u(c: Column): Column =
@@ -97,7 +94,7 @@ object Queries39 {
     val fit = fitQuality(s, dir)
     val score = QualityModel.score(fit,
       QualityModel.featureX1($"text"), QualityModel.featureX2($"text"))
-    t(s, dir, "documents")
+    Tables(s, dir, "documents")
       .select($"doc_id",
         round(TextAnalysis.qualityScore($"text"), 6).as("target"),
         round(score, 6).as("score"),

@@ -17,9 +17,6 @@ import graft.functions.{Bpe, BpeEncoder, Functional}
   */
 object Queries4 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
   // ---- §2.14 compute_score family, fully oracled -----------------------
 
   /** Every compute_score kernel (reference functional.py:366-564,
@@ -36,7 +33,7 @@ object Queries4 {
     //   min map {1:0.5, 2:1.0, 5:0.25}; max map {1:0.5, 2:2.0, 5:0.25}
     val matchIds = array(Seq(1L, 2L, 2L, 5L).map(lit): _*)
     val matchScores = array(Seq(0.5f, 1.0f, 2.0f, 0.25f).map(lit): _*)
-    t(s, dir, "lineitem")
+    Tables(s, dir, "lineitem")
       .where($"l_orderkey" < 2000)
       .select($"l_orderkey",
         ($"l_partkey" % 8).cast(LongType).as("id"),
@@ -123,7 +120,7 @@ object Queries4 {
     val a = $"l_quantity" - 25.0
     val b = ($"l_linenumber" - 3).cast(DoubleType)
     val p = $"l_partkey" - 100L
-    t(s, dir, "lineitem")
+    Tables(s, dir, "lineitem")
       .where(!($"l_quantity" === 25.0 && $"l_linenumber" === 3))
       .select($"l_orderkey", $"l_linenumber",
         a.arith.truediv(b).as("td"),
@@ -178,7 +175,7 @@ object Queries4 {
     * safe): the two-level aggregate in TGrouped.modeDet shuffles counts,
     * never rows, and the same definition is restated in the oracle. */
   def q39Mode(s: SparkSession, dir: String): DataFrame =
-    TFrame(t(s, dir, "lineitem").select($"l_returnflag", $"l_quantity"))
+    TFrame(Tables(s, dir, "lineitem").select($"l_returnflag", $"l_quantity"))
       .groupby("l_returnflag")
       .modeDet("l_quantity")
       .pipe(f => TFrame(f.df.select($"l_returnflag",
@@ -203,7 +200,7 @@ object Queries4 {
       StructField("doc_id", LongType, nullable = false),
       StructField("pos", IntegerType, nullable = false),
       StructField("tok", StringType, nullable = false)))
-    TFrame(t(s, dir, "documents").select($"doc_id", $"text"))
+    TFrame(Tables(s, dir, "documents").select($"doc_id", $"text"))
       .flatmapRows(schema, Seq("doc_id", "text")) { case Seq(id, text) =>
         text.asInstanceOf[String].trim.split("\\s+").take(3).toSeq
           .zipWithIndex.map { case (tk, i) =>
@@ -228,12 +225,11 @@ object Queries4 {
   // ---- §2.4 grouped.select (computed aggregation exprs) ----------------
 
   def q46GroupedSelect(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
+    val li = Tables(s, dir, "lineitem")
     TFrame(li)
       .groupby("l_returnflag")
       .select(
-        "rev" -> sum(($"l_extendedprice" * (lit(1.0) - $"l_discount"))
-          .cast(DecimalType(25, 4))).cast(DoubleType),
+        "rev" -> dsum($"l_extendedprice" * (lit(1.0) - $"l_discount")),
         "avg_disc" -> round(avg($"l_discount"), 6),
         "n" -> count(lit(1)))
       .sort(Seq("l_returnflag"))
@@ -255,7 +251,7 @@ object Queries4 {
     * would fail the job, so a green row proves every array passed. */
   def q47AddTokens(s: SparkSession, dir: String): DataFrame = {
     val toks = split(trim($"text"), "\\s+")
-    t(s, dir, "documents")
+    Tables(s, dir, "documents")
       .where(size(toks) >= 3)
       .select($"doc_id",
         array_join(
@@ -279,10 +275,10 @@ object Queries4 {
   // ---- §2.7 set ops: intersect / except --------------------------------
 
   def q48SetOps(s: SparkSession, dir: String): DataFrame = {
-    val bld = TFrame(t(s, dir, "customer")
+    val bld = TFrame(Tables(s, dir, "customer")
       .where($"c_mktsegment" === "BUILDING")
       .select($"c_custkey".as("k")))
-    val ordered = TFrame(t(s, dir, "orders").select($"o_custkey".as("k")))
+    val ordered = TFrame(Tables(s, dir, "orders").select($"o_custkey".as("k")))
     bld.intersect(ordered).withCol("op", lit("with_orders"))
       .concat(bld.except(ordered).withCol("op", lit("no_orders")))
       .sort(Seq("op", "k"))
@@ -310,7 +306,7 @@ object Queries4 {
     // pre-aggregate to one row per (order, linenumber): the synthetic
     // lineitem has duplicate keys, and a running computation needs a
     // TOTAL order to be engine-deterministic
-    TFrame(t(s, dir, "lineitem")
+    TFrame(Tables(s, dir, "lineitem")
       .groupBy($"l_orderkey", $"l_linenumber")
       .agg(min($"l_quantity").as("l_quantity"))
       .select($"l_orderkey", $"l_linenumber", $"l_quantity",
@@ -346,13 +342,13 @@ object Queries4 {
     * is the distributed-safe set-membership reading (broadcast semi
     * join per shared column). */
   def q54IsinForms(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders")
+    val o = Tables(s, dir, "orders")
     val dictFlags = TFrame(o.select($"o_orderstatus", $"o_orderpriority"))
       .isinDict(Map(
         "o_orderstatus" -> Seq("F"),
         "o_orderpriority" -> Seq("1-URGENT", "2-HIGH")))
     val frameFlags = TFrame(o.select($"o_custkey".as("c_custkey")))
-      .isinFrame(TFrame(t(s, dir, "customer")
+      .isinFrame(TFrame(Tables(s, dir, "customer")
         .where($"c_mktsegment" === "BUILDING").select($"c_custkey")))
     val d = dictFlags.df.agg(
       sum($"o_orderstatus".cast(LongType)).as("n_status"),
@@ -380,7 +376,7 @@ object Queries4 {
     * order-sensitive fold (string concat in key order) prove the
     * sequential left-fold contract. */
   def q55Reduce(s: SparkSession, dir: String): DataFrame = {
-    val counts = TFrame(t(s, dir, "lineitem")
+    val counts = TFrame(Tables(s, dir, "lineitem")
       .groupBy($"l_returnflag").agg(count(lit(1)).as("n")))
     val total = counts.reduceCol[Long]("n", Seq("l_returnflag"))(0L)(
       (acc, v) => acc + v.asInstanceOf[Long])
@@ -438,7 +434,7 @@ object Queries4 {
         Bpe.bpeTokenize(enc)(lit("the and ring or in")))
         .as(Seq("pos", "id")))
     val ids = Bpe.bpeTokenize(enc)(lower(substring($"text", 1, 60)))
-    val corpus = t(s, dir, "documents")
+    val corpus = Tables(s, dir, "documents")
       .select(size(ids).as("nt"),
         aggregate(ids, lit(0L), (acc, x) => acc + x).as("sum"))
       .agg(count(lit(1)).as("n_docs"),
@@ -473,11 +469,10 @@ object Queries4 {
     * is the bounded 3-row aggregate, never base-table rows. */
   def q71ArrowRoundtrip(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.graftshim.Shim
-    val agg = t(s, dir, "orders")
+    val agg = Tables(s, dir, "orders")
       .groupBy($"o_orderstatus")
       .agg(
-        sum($"o_totalprice".cast(DecimalType(25, 4))).cast(DoubleType)
-          .as("sum_price"),
+        dsum($"o_totalprice").as("sum_price"),
         count(lit(1)).as("n"))
     val roundTripped =
       Shim.fromArrowBatches(s, agg.schema, Shim.toArrowBatches(agg))

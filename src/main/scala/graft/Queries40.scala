@@ -6,6 +6,7 @@ import org.apache.spark.sql.types._
 
 import graft.functions.Functional
 import graft.operators.{Dedup, Multimodal}
+import graft.streaming.StreamDrain
 
 /** Round-19 gates: content-level image near-duplicate detection — the
   * multimodal story extended from container metadata (q70/q223/q229)
@@ -20,16 +21,6 @@ import graft.operators.{Dedup, Multimodal}
   * Naming/oracle/float conventions as in [[Queries]].
   */
 object Queries40 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
-  /** Remove a per-run plant-shard directory once its stream has fully
-    * drained (the memory sink holds the rows; the files are dead). */
-  private def deleteRecursively(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete(): Unit
-  }
 
   private[graft] val ImgSeed = 1019L
   private[graft] val W = 18
@@ -47,7 +38,7 @@ object Queries40 {
   private def imageCorpus(s: SparkSession, dir: String): DataFrame = {
     val synth = udf((id: Long) =>
       Multimodal.encodeGrayPng(Multimodal.synthGray(id, W, H, ImgSeed), W, H))
-    val corpus = t(s, dir, "documents").select($"doc_id")
+    val corpus = Tables(s, dir, "documents").select($"doc_id")
       .spreadOverCores // (a) the synth UDF
       .select($"doc_id", synth($"doc_id").as("blob"))
     val p0 = Queries2.plantBase
@@ -204,10 +195,7 @@ object Queries40 {
     * arrives through the same file-stream source as the corpus shard —
     * the stream sees files, not fixtures. */
   def q291StreamNeardup(s: SparkSession, dir: String): DataFrame = {
-    val spark = s.newSession()
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    spark.conf.set(
-      "spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    val spark = StreamDrain.session(s, emptyBatches = false)
     val p0 = Queries2.plantBase
     val baseText = (0 until 80).map(i => s"planted$i").mkString(" ")
     val plantFreshRows =
@@ -236,14 +224,8 @@ object Queries40 {
     val fresh = sDocs.unionByName(sPlants)
     val cand = Dedup.minHashStoreCandidates(store, fresh,
       "text", "doc_id")
-    val name = s"graft_q291_${System.nanoTime()}"
-    val q = cand.writeStream
-      .outputMode("append").format("memory").queryName(name).start()
-    try q.processAllAvailable() finally q.stop()
-    val drained = spark.table(name)
-    drained.queryExecution.assertAnalyzed()
-    spark.catalog.dropTempView(name)
-    deleteRecursively(plantDir) // drained; nothing reads the shard again
+    val drained = StreamDrain.toMemory(cand.writeStream.outputMode("append"))
+    Fs.rmTree(plantDir) // drained; nothing reads the shard again
     def pairify(c: DataFrame): DataFrame = c
       .groupBy($"id_a", $"id_b")
       .agg(max($"est_jaccard").as("est_jaccard"))
@@ -302,7 +284,7 @@ object Queries40 {
     * from "rows-only" to "rows-only with a hashed integer companion". */
   def q292WinnowDensity(s: SparkSession, dir: String): DataFrame = {
     val k = 8; val w = 16
-    val per = t(s, dir, "documents").select(
+    val per = Tables(s, dir, "documents").select(
       greatest(octet_length($"text") - (k - 1), lit(0))
         .cast(LongType).as("m"),
       Functional.winnowSelCount($"text", k, w).as("nsel"))
@@ -371,7 +353,7 @@ object Queries40 {
   private def audioCorpus(s: SparkSession, dir: String): DataFrame = {
     val synth = udf((id: Long) => Multimodal.encodePcm16Wav(
       Multimodal.synthPcm16(id, NSamp, AudSeed)))
-    val corpus = t(s, dir, "documents").select($"doc_id")
+    val corpus = Tables(s, dir, "documents").select($"doc_id")
       .spreadOverCores // (a) the synth UDF
       .select($"doc_id", synth($"doc_id").as("blob"))
     val p0 = Queries2.plantBase
@@ -503,10 +485,7 @@ object Queries40 {
     * blob bytes in a parquet shard) and their dHashes probe the static
     * signature store via [[Dedup.hammingStoreCandidates]]. */
   def q295StreamImageNeardup(s: SparkSession, dir: String): DataFrame = {
-    val spark = s.newSession()
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    spark.conf.set(
-      "spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    val spark = StreamDrain.session(s, emptyBatches = false)
     val p0 = Queries2.plantBase
     val synth = udf((id: Long) =>
       Multimodal.encodeGrayPng(Multimodal.synthGray(id, W, H, ImgSeed), W, H))
@@ -550,14 +529,8 @@ object Queries40 {
     val cand = Dedup.hammingStoreCandidates(
       storeSig, dh(sDocs.unionByName(sPlants)), "doc_id", "dhash",
       maxHamming = 3, maxBucket = 1000)
-    val name = s"graft_q295_${System.nanoTime()}"
-    val q = cand.writeStream
-      .outputMode("append").format("memory").queryName(name).start()
-    try q.processAllAvailable() finally q.stop()
-    val drained = spark.table(name)
-    drained.queryExecution.assertAnalyzed()
-    spark.catalog.dropTempView(name)
-    deleteRecursively(plantDir) // drained; nothing reads the shard again
+    val drained = StreamDrain.toMemory(cand.writeStream.outputMode("append"))
+    Fs.rmTree(plantDir) // drained; nothing reads the shard again
     val streamPairs = drained.distinct()
     val batchFresh = dh(docs.where($"doc_id" >= 250)
         .select($"doc_id", synth($"doc_id").as("blob"))
@@ -630,7 +603,7 @@ object Queries40 {
   private[graft] def videoCorpus(s: SparkSession, dir: String): DataFrame = {
     val synth = udf((id: Long) => Multimodal.synthesizeMp4WithFrames(
       videoFrames(id, (0 until NFrames).map(f => id * 16L + f))))
-    val corpus = t(s, dir, "documents").select($"doc_id")
+    val corpus = Tables(s, dir, "documents").select($"doc_id")
       .spreadOverCores // (a) the synth UDF
       .select($"doc_id", synth($"doc_id").as("blob"))
     val p0 = Queries2.plantBase

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types._
 
 import graft.functions.Functional
 import graft.operators.{Dedup, Multimodal}
+import graft.streaming.StreamDrain
 
 /** Round-20 gates: the content-level media family taken to PRODUCTION
   * CONTAINER SHAPES and SEQUENCE awareness.
@@ -30,9 +31,6 @@ import graft.operators.{Dedup, Multimodal}
   * definition of the pixel/sample arithmetic serves both rounds.
   */
 object Queries41 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
 
   import Queries40.{W, H, VidSeed, NFrames, AudSeed, NSamp}
 
@@ -59,7 +57,7 @@ object Queries41 {
   private def videoCorpusMulti(s: SparkSession, dir: String): DataFrame = {
     val synth = udf((id: Long) => multiChunkBlob(id,
       (0 until NFrames).map(f => encFrame(id * 16L + f))))
-    val corpus = t(s, dir, "documents").select($"doc_id")
+    val corpus = Tables(s, dir, "documents").select($"doc_id")
       .spreadOverCores // (a) the synth UDF
       .select($"doc_id", synth($"doc_id").as("blob"))
     val p0 = Queries2.plantBase
@@ -108,7 +106,7 @@ object Queries41 {
   private def stereoCorpus(s: SparkSession, dir: String): DataFrame = {
     val synth = udf((id: Long) =>
       encodeStereo(Multimodal.synthPcm24Stereo(id, NSamp, St24Seed)))
-    val corpus = t(s, dir, "documents").select($"doc_id")
+    val corpus = Tables(s, dir, "documents").select($"doc_id")
       .spreadOverCores // (a) the synth UDF
       .select($"doc_id", synth($"doc_id").as("blob"))
     val p0 = Queries2.plantBase
@@ -216,10 +214,7 @@ object Queries41 {
     * store via [[Dedup.hammingStoreCandidates]], and DuckDB re-derives
     * the exact store×fresh pair set from the sample arithmetic. */
   def q300StreamAudioNeardup(s: SparkSession, dir: String): DataFrame = {
-    val spark = s.newSession()
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    spark.conf.set(
-      "spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    val spark = StreamDrain.session(s, emptyBatches = false)
     val p0 = Queries2.plantBase
     val synth = udf((id: Long) => Multimodal.encodePcm16Wav(
       Multimodal.synthPcm16(id, NSamp, AudSeed)))
@@ -256,14 +251,8 @@ object Queries41 {
     val cand = Dedup.hammingStoreCandidates(
       storeSig, fp(sDocs.unionByName(sPlants)), "doc_id", "afp",
       maxHamming = 3, maxBucket = 1000)
-    val name = s"graft_q300_${System.nanoTime()}"
-    val q = cand.writeStream
-      .outputMode("append").format("memory").queryName(name).start()
-    try q.processAllAvailable() finally q.stop()
-    val drained = spark.table(name)
-    drained.queryExecution.assertAnalyzed()
-    spark.catalog.dropTempView(name)
-    Queries41.deleteRecursively(plantDir)
+    val drained = StreamDrain.toMemory(cand.writeStream.outputMode("append"))
+    Fs.rmTree(plantDir) // drained; nothing reads the shard again
     val streamPairs = drained.distinct()
     val batchFresh = fp(docs.where($"doc_id" >= 250)
       .select($"doc_id", synth($"doc_id").as("blob"))
@@ -325,10 +314,7 @@ object Queries41 {
     * aggregates shared-frame counts. DuckDB re-derives the exact
     * store×fresh shared counts from the pixel arithmetic. */
   def q301StreamVideoNeardup(s: SparkSession, dir: String): DataFrame = {
-    val spark = s.newSession()
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    spark.conf.set(
-      "spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    val spark = StreamDrain.session(s, emptyBatches = false)
     val p0 = Queries2.plantBase
     val synth = udf((id: Long) => Multimodal.synthesizeMp4WithFrames(
       (0 until NFrames).map(f => encFrame(id * 16L + f))))
@@ -365,14 +351,8 @@ object Queries41 {
     val cand = Dedup.fingerprintStoreCandidates(
       storeFps, fps(sDocs.unionByName(sPlants)), "doc_id", "fhash",
       maxBucket = 1000)
-    val name = s"graft_q301_${System.nanoTime()}"
-    val q = cand.writeStream
-      .outputMode("append").format("memory").queryName(name).start()
-    try q.processAllAvailable() finally q.stop()
-    val drained = spark.table(name)
-    drained.queryExecution.assertAnalyzed()
-    spark.catalog.dropTempView(name)
-    Queries41.deleteRecursively(plantDir)
+    val drained = StreamDrain.toMemory(cand.writeStream.outputMode("append"))
+    Fs.rmTree(plantDir) // drained; nothing reads the shard again
     // the sink's merge step: distinct shared fingerprints per pair
     def pairify(c: DataFrame): DataFrame = c
       .groupBy($"id_a", $"id_b")
@@ -519,10 +499,7 @@ object Queries41 {
     * but run 1, the reorder case only sequence awareness catches,
     * now detected AT INGEST TIME. stream == batch == DuckDB. */
   def q305StreamVideoFramerun(s: SparkSession, dir: String): DataFrame = {
-    val spark = s.newSession()
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    spark.conf.set(
-      "spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    val spark = StreamDrain.session(s, emptyBatches = false)
     val p0 = Queries2.plantBase
     val synth = udf((id: Long) => Multimodal.synthesizeMp4WithFrames(
       (0 until NFrames).map(f => encFrame(id * 16L + f))))
@@ -560,14 +537,8 @@ object Queries41 {
     val cand = Dedup.frameRunStoreCandidates(
       storeFrames, fr(sDocs.unionByName(sPlants)), "doc_id", "idx",
       "fhash", maxBucket = 1000)
-    val name = s"graft_q305_${System.nanoTime()}"
-    val q = cand.writeStream
-      .outputMode("append").format("memory").queryName(name).start()
-    try q.processAllAvailable() finally q.stop()
-    val drained = spark.table(name)
-    drained.queryExecution.assertAnalyzed()
-    spark.catalog.dropTempView(name)
-    deleteRecursively(plantDir)
+    val drained = StreamDrain.toMemory(cand.writeStream.outputMode("append"))
+    Fs.rmTree(plantDir) // drained; nothing reads the shard again
     val streamPairs = Dedup.frameRunStats(drained)
     val batchFresh = fr(docs.where($"doc_id" >= 250)
       .select($"doc_id", synth($"doc_id").as("blob"))
@@ -661,7 +632,7 @@ object Queries41 {
       (p0 + 3L, Multimodal.synthesizeMp4MultiTrak(
         Seq(encFrame(p0 * 16L)) ++
           (1 until NFrames).map(f => encFrame(p0 * 16L + 8 + f)))))
-    t(s, dir, "documents").select($"doc_id")
+    Tables(s, dir, "documents").select($"doc_id")
       .spreadOverCores // (a) the synth UDF
       .select($"doc_id", synth($"doc_id").as("blob"))
       .unionByName(s.createDataFrame(plants).toDF("doc_id", "blob"))
@@ -712,7 +683,7 @@ object Queries41 {
       (((graft.functions.Kernels.sampleHash(id * 256L + i, PqSeed)
         >>> 8) % 41L) - 20L).toFloat))
     val p0 = Queries2.plantBase
-    val corpus = t(s, dir, "documents")
+    val corpus = Tables(s, dir, "documents")
       .select($"doc_id", synthVec($"doc_id").as("vec"))
     val probes = s.range(4)
       .select(($"id" + p0).as("probe_id"))
@@ -787,13 +758,6 @@ object Queries41 {
        |SELECT a.probe_id, a.id AS doc_id, p.code_packed, a.adc
        |FROM adc a JOIN packed p ON a.id = p.id
        |ORDER BY probe_id, doc_id""".stripMargin
-  }
-
-  /** Remove a per-run plant-shard directory once its stream has fully
-    * drained (the memory sink holds the rows; the files are dead). */
-  private def deleteRecursively(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete(): Unit
   }
 
   val entries: Map[String, (SparkSession, String) => DataFrame] = Map(

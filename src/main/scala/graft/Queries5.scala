@@ -17,9 +17,6 @@ import graft.operators.{Dedup, Sampling, TextAnalysis}
   */
 object Queries5 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
   // ---- §2.1/2.2/2.6 TFrame surface sweep -------------------------------
 
   /** rename → reorder → append(literal row) → computed columns via the
@@ -30,7 +27,7 @@ object Queries5 {
     * the scalar predicates are bounded, and the constructed tag frame
     * broadcasts. */
   def q72TframeSurface(s: SparkSession, dir: String): DataFrame = {
-    val nat = TFrame(t(s, dir, "nation"))
+    val nat = TFrame(Tables(s, dir, "nation"))
       .rename(Map("n_name" -> "name"))
       .reorder(Seq("name", "n_nationkey", "n_regionkey"))
       .append(Seq(Row("NATION_99", 99, 4)))
@@ -72,7 +69,7 @@ object Queries5 {
     * (count/mean/min/max — the percentile rows are sketch-based by
     * design); mean is rounded per the float convention. */
   def q73DescribeForms(s: SparkSession, dir: String): DataFrame =
-    TFrame(t(s, dir, "supplier"))
+    TFrame(Tables(s, dir, "supplier"))
       .describe(include = Seq("numeric"), exclude = Seq("int"))
       .where(col("metric").isin("count", "mean", "min", "max"))
       .withCol("s_acctbal", round(col("s_acctbal"), 4))
@@ -96,8 +93,9 @@ object Queries5 {
     * run (like the reference), so the oracle checks the [0,1) contract
     * and row count, not values. */
   def q74GroupedColRand(s: SparkSession, dir: String): DataFrame = {
-    val byRegion = TGrouped(t(s, dir, "nation"), Seq("n_regionkey"))("n_name")
-    val randProof = t(s, dir, "supplier")
+    val byRegion =
+      TGrouped(Tables(s, dir, "nation"), Seq("n_regionkey"))("n_name")
+    val randProof = Tables(s, dir, "supplier")
       .select(Functional.randCol().as("r"))
       .agg(count(lit(1)).as("n_sup"),
         (min($"r") >= 0.0 && max($"r") < 1.0).as("rand_ok"))
@@ -122,7 +120,7 @@ object Queries5 {
     * grouped iteration; each subframe aggregate is its own pushed-down
     * Spark job. */
   def q75IterGroups(s: SparkSession, dir: String): DataFrame = {
-    val groups = TFrame(t(s, dir, "nation"))
+    val groups = TFrame(Tables(s, dir, "nation"))
       .groupby("n_regionkey").iterGroups(maxGroups = 16)
     val rows = groups.map { case (kr, sub) =>
       val agg = sub.df.agg(count(lit(1)).as("n_nations"),
@@ -151,7 +149,7 @@ object Queries5 {
     * export round-trips names, values, nulls and types exactly. The
     * collected payload is the 5-row aggregate, never base-table rows. */
   def q76CollectExport(s: SparkSession, dir: String): DataFrame = {
-    val agg = TFrame(t(s, dir, "customer")
+    val agg = TFrame(Tables(s, dir, "customer")
       .groupBy($"c_mktsegment")
       .agg(count(lit(1)).as("n"),
         sum($"c_acctbal".cast(DecimalType(25, 2))).cast(DoubleType)
@@ -211,7 +209,7 @@ object Queries5 {
         lit(" n_base="), $"n_base".cast(StringType),
         lit(s" bounds=[$minSel,$mBase])"))))
     val check = stats.select(ok.as("winnow_ok"))
-    t(s, dir, "documents")
+    Tables(s, dir, "documents")
       .select($"doc_id", Functional.winnow($"text", k, w).as("fp"))
       .select($"doc_id", size($"fp").as("n_fp"),
         // the set is sorted -> element 1 is the (signed) min fingerprint
@@ -265,7 +263,7 @@ object Queries5 {
       .otherwise(raise_error(concat(
         lit("q79: repetition fixture mismatch ("),
         $"nbad".cast(StringType), lit(" slots)")))).as("rep_ok"))
-    t(s, dir, "documents")
+    Tables(s, dir, "documents")
       .select($"doc_id", TextAnalysis.repetitionSignals($"text").as("r"),
         TextAnalysis.gopherRepetitionOk($"text").as("gopher_ok"))
       .select($"doc_id",
@@ -353,7 +351,7 @@ object Queries5 {
     * hash, the threshold floors, AND the when-chain range assignment
     * are engine-portable exactly as Sampling.scala promises. */
   def q83Sample(s: SparkSession, dir: String): DataFrame = {
-    val orders = t(s, dir, "orders")
+    val orders = Tables(s, dir, "orders")
     val split = Sampling.splitLabel($"o_orderkey", q83Weights, 7L)
     val all = orders.select($"o_orderkey", split.as("split"))
       .groupBy($"split")
@@ -399,7 +397,7 @@ object Queries5 {
     * drift (filter-then-dedup ordering, dedup keep-first tie-breaks
     * feeding the split hash) that per-operator gates cannot. */
   def q84Pipeline(s: SparkSession, dir: String): DataFrame = {
-    val scored = t(s, dir, "documents")
+    val scored = Tables(s, dir, "documents")
       .select($"doc_id", $"text",
         TextAnalysis.tokenCount($"text").cast(LongType).as("n_tokens"),
         Functional.asciiAlphaRatio($"text").as("alpha_ratio"))

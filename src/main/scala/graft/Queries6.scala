@@ -21,9 +21,6 @@ import graft.operators.{Clustering, Dedup, Packing, Salting, Sampling, TextAnaly
   */
 object Queries6 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
   // ---- benchmark decontamination ---------------------------------------
 
   /** Eval-overlap decontamination (GPT-3 Appendix C / Gopher pattern):
@@ -37,7 +34,7 @@ object Queries6 {
     * strings; Spark joins on xxhash64 of the gram (collision odds
     * ~1e-12 at these cardinalities). */
   def q85Decontaminate(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
+    val docs = Tables(s, dir, "documents")
     val evalSet = docs.where($"doc_id" % 20 === 0)
     val train = docs.where($"doc_id" % 20 =!= 0)
     Dedup.decontaminate(train, evalSet, "text", "doc_id", n = 3)
@@ -80,7 +77,7 @@ object Queries6 {
   private[graft] def jaccardPairFixture(s: SparkSession, dir: String): DataFrame = {
     // length >= 3 mirrors the oracle's filter: a doc with no 3-gram is
     // in no pair on either side
-    val d = t(s, dir, "documents")
+    val d = Tables(s, dir, "documents")
       .where($"doc_id" < 200 && length($"text") >= 3)
       .select($"doc_id", $"text")
       // (a) charShingleSet, (b) the pair loop over its streamed side
@@ -161,7 +158,7 @@ object Queries6 {
     val extra = when($"doc_id" % 5 === 0,
       lit(" also admin@example.org")).otherwise(lit(""))
     val ptext = concat(planted, $"text", extra)
-    t(s, dir, "documents")
+    Tables(s, dir, "documents")
       .select($"doc_id", ptext.as("ptext"))
       .select($"doc_id",
         TextAnalysis.piiRedact($"ptext").as("redacted"),
@@ -208,7 +205,7 @@ object Queries6 {
     * same double expression over identical integer (tf, df, N), so the
     * rounded values hash-match exactly. */
   def q87Tfidf(s: SparkSession, dir: String): DataFrame =
-    TextAnalysis.tfIdfTopTerms(t(s, dir, "documents"), "text", "doc_id", 3)
+    TextAnalysis.tfIdfTopTerms(Tables(s, dir, "documents"), "text", "doc_id", 3)
       .select($"doc_id", $"term", round($"score", 4).as("score"), $"rk")
       .orderBy($"doc_id", $"rk")
 
@@ -239,7 +236,7 @@ object Queries6 {
     * partition-order-sensitive), and q87 already proved ln() is
     * bit-identical across engines. */
   def q89Perplexity(s: SparkSession, dir: String): DataFrame =
-    TextAnalysis.bigramPerplexity(t(s, dir, "documents"), "text", "doc_id")
+    TextAnalysis.bigramPerplexity(Tables(s, dir, "documents"), "text", "doc_id")
       .select($"doc_id", $"n_bigrams", round($"ppl", 4).as("ppl"))
       .orderBy($"doc_id")
 
@@ -274,7 +271,7 @@ object Queries6 {
     * ORDER BY agree across engines, i.e. both engines materialize the
     * identical training order. */
   def q90ShuffleOrder(s: SparkSession, dir: String): DataFrame =
-    Sampling.shuffled(t(s, dir, "documents").select($"doc_id"),
+    Sampling.shuffled(Tables(s, dir, "documents").select($"doc_id"),
         $"doc_id", 17L)
       .limit(100)
       .select($"doc_id", Sampling.shuffleKey($"doc_id", 17L).as("h"))
@@ -306,7 +303,7 @@ object Queries6 {
     * repartitionings — same discipline as q89's DECIMAL log-prob mean.
     */
   def q91SemDedup(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
+    val emb = Tables(s, dir, "embeddings")
     val corpus = emb.select($"vec_id", $"embedding")
       .unionByName(Queries2.plantedVecs(s))
     val nCells = 10
@@ -355,8 +352,8 @@ object Queries6 {
     * DuckDB-oracled (bucketing must not change semantics — same rows,
     * same sums). */
   def q92BucketedJoin(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders").select($"o_orderkey", $"o_orderstatus")
-    val l = t(s, dir, "lineitem")
+    val o = Tables(s, dir, "orders").select($"o_orderkey", $"o_orderstatus")
+    val l = Tables(s, dir, "lineitem")
       .select($"l_orderkey", $"l_quantity", $"l_extendedprice")
     graft.sources.Bucketed.writeTable(s, o, "graft_bkt_orders",
       "o_orderkey", 8)
@@ -371,10 +368,8 @@ object Queries6 {
     graft.sources.Bucketed.requireColocated(j, "q92")
     j.groupBy($"o_orderstatus")
       .agg(count(lit(1)).as("n"),
-        sum($"l_quantity".cast(DecimalType(25, 4))).cast(DoubleType)
-          .as("qty_sum"),
-        sum($"l_extendedprice".cast(DecimalType(25, 4))).cast(DoubleType)
-          .as("price_sum"))
+        dsum($"l_quantity").as("qty_sum"),
+        dsum($"l_extendedprice").as("price_sum"))
       .withColumn("colocated_ok", lit(true)) // requireColocated RAN above
       .orderBy($"o_orderstatus")
   }
@@ -400,7 +395,7 @@ object Queries6 {
     * when-chain thresholds are engine-portable exactly like q83 proved
     * bernoulli/splitLabel. */
   def q93Stratified(s: SparkSession, dir: String): DataFrame = {
-    val orders = t(s, dir, "orders")
+    val orders = Tables(s, dir, "orders")
     val smp = Sampling.stratified(orders, $"o_orderstatus", $"o_orderkey",
       Map("F" -> 0.05, "O" -> 0.20), default = 0.50, seed = 21L)
       .groupBy($"o_orderstatus")
@@ -440,7 +435,7 @@ object Queries6 {
     * components by transitive closure and the keeper by a window
     * argmax with the identical tie-break. */
   def q94KeepBest(s: SparkSession, dir: String): DataFrame = {
-    val scores = t(s, dir, "documents")
+    val scores = Tables(s, dir, "documents")
       .where($"doc_id" < 200 && length($"text") >= 3)
       .select($"doc_id".as("id"),
         TextAnalysis.tokenCount($"text").cast(LongType).as("score"))
@@ -504,7 +499,7 @@ object Queries6 {
       .zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("doc_id", "text")
     val planted = dsirPlantedTexts.toDF("doc_id", "text")
-    val corpus = t(s, dir, "documents").select($"doc_id", $"text")
+    val corpus = Tables(s, dir, "documents").select($"doc_id", $"text")
       .unionByName(planted)
     (target, corpus)
   }
@@ -554,7 +549,7 @@ object Queries6 {
     * consumers off them. */
   private[graft] def q96Frames(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    val emb = t(s, dir, "embeddings").select($"vec_id", $"embedding")
+    val emb = Tables(s, dir, "embeddings").select($"vec_id", $"embedding")
       .unionByName(Queries2.plantedVecs(s))
     // localCheckpoint: the pair frame feeds the CC loop, the orphan
     // check, and (via resolved) three stat branches — without it every
@@ -623,7 +618,7 @@ object Queries6 {
     * Emits one row per sequence (seq_id, n_docs, seq_tokens). */
   def q97Packing(s: SparkSession, dir: String): DataFrame = {
     val maxTok = 256
-    val docs = t(s, dir, "documents")
+    val docs = Tables(s, dir, "documents")
       .select($"doc_id", TextAnalysis.tokenCount($"text").cast(LongType)
         .as("n_tokens"))
     val ordered = docs
@@ -691,7 +686,7 @@ object Queries6 {
     * lengths with list slicing over the same regex tokenization the
     * q30 gate proved equivalent. Row-local explode, no shuffle. */
   def q98Chunk(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
+    Tables(s, dir, "documents")
       .select($"doc_id",
         explode(TextAnalysis.chunk($"text", maxTokens = 40, overlap = 8))
           .as("c"))
@@ -728,7 +723,7 @@ object Queries6 {
   def q99SaltedJoin(s: SparkSession, dir: String): DataFrame = {
     val skewKey = when($"l_orderkey" % 2 === 0, 0L)
       .otherwise($"l_partkey" % 100 + 1)
-    val big = t(s, dir, "lineitem")
+    val big = Tables(s, dir, "lineitem")
       .select($"l_orderkey", $"l_linenumber", $"l_quantity",
         skewKey.as("k"))
     val small = s.range(0, 101)
@@ -737,8 +732,7 @@ object Queries6 {
       struct($"l_orderkey", $"l_linenumber"), nSalts = 8)
       .groupBy($"k")
       .agg(count(lit(1)).as("n"),
-        sum($"l_quantity".cast(DecimalType(25, 4))).cast(DoubleType)
-          .as("qty_sum"),
+        dsum($"l_quantity").as("qty_sum"),
         max($"weight").as("weight"))
       .orderBy($"k")
   }
@@ -764,7 +758,7 @@ object Queries6 {
     * this is where a real pipeline gets one). Fully oracled: DuckDB
     * recomputes counts and the rank with the identical tie-break. */
   def q101BuildVocab(s: SparkSession, dir: String): DataFrame =
-    TextAnalysis.buildVocab(t(s, dir, "documents"), "text",
+    TextAnalysis.buildVocab(Tables(s, dir, "documents"), "text",
         maxSize = 50, minFreq = 2)
       .orderBy($"term_id")
 
@@ -793,7 +787,7 @@ object Queries6 {
     * format this engine must ingest losslessly. */
   def q102JsonlRoundtrip(s: SparkSession, dir: String): DataFrame = {
     val path = "/tmp/graft_formats/jsonl_docs"
-    t(s, dir, "documents").select($"doc_id", $"text")
+    Tables(s, dir, "documents").select($"doc_id", $"text")
       .write.mode("overwrite").json(path)
     s.read.schema(StructType(Seq(
         StructField("doc_id", LongType), StructField("text", StringType))))
@@ -812,7 +806,7 @@ object Queries6 {
     * empty→NULL collapse. */
   def q103CsvRoundtrip(s: SparkSession, dir: String): DataFrame = {
     val path = "/tmp/graft_formats/csv_docs"
-    t(s, dir, "documents").select($"doc_id", $"text")
+    Tables(s, dir, "documents").select($"doc_id", $"text")
       .write.mode("overwrite")
       .option("header", "true").option("escape", "\"")
       .option("nullValue", "\\N")
@@ -844,7 +838,7 @@ object Queries6 {
     // no pre-sort: the arithmetic is row-local, and the final orderBy
     // (kept for the oracle's deterministic row order) is the only sort
     // the plan needs — the earlier extra global sort was pure waste
-    val base = t(s, dir, "lineitem")
+    val base = Tables(s, dir, "lineitem")
       .select($"l_orderkey", $"l_linenumber", $"l_quantity",
         $"l_extendedprice")
     val a = graft.frame.TFrame(base)
@@ -893,7 +887,7 @@ object Queries6 {
     * splitmix64 buckets — the whole chain engine-portable, per the q83
     * discipline. */
   def q106MixToTarget(s: SparkSession, dir: String): DataFrame = {
-    val mixed = Sampling.mixToTarget(t(s, dir, "documents"), $"lang",
+    val mixed = Sampling.mixToTarget(Tables(s, dir, "documents"), $"lang",
       $"doc_id", Map("en" -> 0.5, "de" -> 0.2, "fr" -> 0.15,
         "es" -> 0.1, "zh" -> 0.05), seed = 33L)
     mixed.groupBy($"lang")
@@ -940,7 +934,7 @@ object Queries6 {
     val paras = transform(
       sequence(lit(0), greatest(nPara, lit(1)) - 1),
       i => array_join(slice(words, i * 8 + 1, lit(8)), " "))
-    val pdf = t(s, dir, "documents").select($"doc_id", paras.as("paras"))
+    val pdf = Tables(s, dir, "documents").select($"doc_id", paras.as("paras"))
     Dedup.dedupParagraphs(pdf, "doc_id", "paras")
       .select($"id".as("doc_id"),
         array_join($"kept", "\n").as("kept_text"),
@@ -988,7 +982,7 @@ object Queries6 {
     * equal for degenerate docs); any violation raises. */
   def q108BpeTrain(s: SparkSession, dir: String): DataFrame = {
     import s.implicits.{localSeqToDatasetHolder, newProductEncoder}
-    val docs = t(s, dir, "documents")
+    val docs = Tables(s, dir, "documents")
     val (ranks, vocab) = BpeTrain.trainFromCorpus(docs, "text",
       numMerges = 60)
     val enc = new BpeEncoder(ranks, vocab, unkId = -1L, byteLevel = true)
@@ -1034,7 +1028,7 @@ object Queries6 {
     * at sf0.001/0.01/0.1/sf1.0 with m=8, 256 codes, refine 4, trained
     * on a hash-ordered 4096-sample; floor 0.70). */
   def q109KnnPq(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
+    val emb = Tables(s, dir, "embeddings")
     val probes = emb.where($"vec_id" < 5)
     def run(corpus: DataFrame): DataFrame =
       graft.operators.Similarity.pqTopK(corpus, probes, "embedding",
@@ -1081,7 +1075,7 @@ object Queries6 {
     * replica corpus — the q52 band, floor 0.50); planted twins rank
     * first at every SF (same cell by construction + exact refine). */
   def q111KnnIvfPq(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
+    val emb = Tables(s, dir, "embeddings")
     val probes = emb.where($"vec_id" < 5)
     def run(corpus: DataFrame): DataFrame =
       graft.operators.Similarity.ivfPqTopK(corpus, probes, "embedding",

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -17,14 +17,6 @@ import graft.operators.{Sketches, TextAnalysis}
   */
 object Queries7 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
-  /** Exact distributed sum of a double column (the [[Queries]] DECIMAL
-    * convention, so partial-agg order cannot change the result). */
-  private def dsum(c: Column): Column =
-    sum(c.cast(DecimalType(25, 4))).cast(DoubleType)
-
   // ---- C4-style document filter ----------------------------------------
 
   /** C4 document-quality filter (Raffel et al. 2020 §2.2; see
@@ -35,7 +27,7 @@ object Queries7 {
     * expressions (the top-word count is a row-local sorted-run fold),
     * no shuffle. */
   def q112C4Filter(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
+    Tables(s, dir, "documents")
       .select($"doc_id", TextAnalysis.c4Filter($"text").as("f"))
       .select($"doc_id", $"f.keep".as("keep"), $"f.reason".as("reason"))
       .orderBy($"doc_id")
@@ -82,7 +74,7 @@ object Queries7 {
     * witnesses xxhash64 collision-freedom, as in q107), expands loser
     * positions, and rebuilds kept_text from the uncovered words. */
   def q113SpanDedup(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Dedup.dedupSpans(t(s, dir, "documents"),
+    graft.operators.Dedup.dedupSpans(Tables(s, dir, "documents"),
         "doc_id", "text", k = 8)
       .select($"id".as("doc_id"), $"kept_text", $"n_removed")
       .orderBy($"doc_id")
@@ -133,7 +125,7 @@ object Queries7 {
     * scan, fixed-size registers, no shuffle of values — where the
     * exact count here shuffles every distinct shingle. */
   def q114SketchDistinct(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
+    val docs = Tables(s, dir, "documents")
     val grams = docs.select($"lang",
       explode(when(size(TextAnalysis.tokens($"text")) >= 8,
         Functional.wordShingles($"text", 8))
@@ -193,8 +185,8 @@ object Queries7 {
     * sketch is deterministic, so this is pinned, not sampled). The
     * oracled output is the exact post-join aggregate. */
   def q115BloomSemijoin(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
-    val keys = t(s, dir, "part").where($"p_size" < 10).select($"p_partkey")
+    val li = Tables(s, dir, "lineitem")
+    val keys = Tables(s, dir, "part").where($"p_size" < 10).select($"p_partkey")
     val pre = Sketches.bloomPrefilter(li, "l_partkey", keys, "p_partkey",
       expectedItems = keys.count(), fpp = 0.01)
     val exact = pre.join(broadcast(keys), $"l_partkey" === $"p_partkey",
@@ -237,7 +229,7 @@ object Queries7 {
     * encode/decode including the timestamp column. */
   def q116OrcRoundtrip(s: SparkSession, dir: String): DataFrame = {
     val path = "/tmp/graft_formats/orc_lineitem"
-    t(s, dir, "lineitem")
+    Tables(s, dir, "lineitem")
       .select($"l_orderkey", $"l_linenumber", $"l_quantity",
         $"l_returnflag", $"l_shipdate")
       .write.mode("overwrite").orc(path)
@@ -267,7 +259,7 @@ object Queries7 {
     * DuckDB chains the q112 and q113 CTEs over the same intermediate
     * population. Output = surviving (doc_id, n_words_final). */
   def q117HygienePipeline(s: SparkSession, dir: String): DataFrame = {
-    val kept = t(s, dir, "documents")
+    val kept = Tables(s, dir, "documents")
       .where(TextAnalysis.c4Filter($"text").getField("keep"))
     graft.operators.Dedup.dedupSpans(kept, "doc_id", "text", k = 8)
       .select($"id".as("doc_id"),
@@ -333,7 +325,7 @@ object Queries7 {
     * hand-built exact-gap fixture in Queries7Spec. Event-time ns are
     * truncated to µs identically on both sides. */
   def q118SessionWindow(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
+    Tables(s, dir, "events")
       .groupBy($"user_id",
         session_window(timestamp_micros(expr("ts div 1000")),
           "30 minutes").as("sw"))
@@ -373,7 +365,7 @@ object Queries7 {
     * 1/|partitions| scan for partition-aligned predicates. */
   def q119PartitionedScan(s: SparkSession, dir: String): DataFrame = {
     val path = "/tmp/graft_formats/part_lineitem"
-    t(s, dir, "lineitem")
+    Tables(s, dir, "lineitem")
       .select($"l_orderkey", $"l_linenumber", $"l_quantity",
         $"l_returnflag")
       .write.mode("overwrite").partitionBy("l_returnflag").parquet(path)
@@ -383,15 +375,9 @@ object Queries7 {
     // it lists the whole relation)
     val qe = pruned.queryExecution
     qe.toRdd.count()
-    // strip a potential AQE wrapper (AdaptiveSparkPlanExec is itself a
-    // LeafExecNode, so a raw collectLeaves would return the wrapper)
-    def strip(p: org.apache.spark.sql.execution.SparkPlan)
-        : org.apache.spark.sql.execution.SparkPlan = p match {
-      case a: org.apache.spark.sql.execution.adaptive
-          .AdaptiveSparkPlanExec => strip(a.executedPlan)
-      case other => other
-    }
-    val scan = strip(qe.executedPlan).collectLeaves().map(strip).head
+    val scan = planNodes(qe.executedPlan).collectFirst {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+    }.getOrElse(sys.error(s"q119: no file scan in:\n${qe.executedPlan}"))
     require(scan.toString().contains("PartitionFilters"),
       s"q119: scan carries no partition filter:\n$scan")
     val filesRead = scan.metrics("numFiles").value

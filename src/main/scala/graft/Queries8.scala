@@ -14,14 +14,6 @@ import graft.operators.{GroupTopK, Sketches}
   */
 object Queries8 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
-  /** Exact distributed sum of a double column (the [[Queries]] DECIMAL
-    * convention, so partial-agg order cannot change the result). */
-  private def dsum(c: Column): Column =
-    sum(c.cast(DecimalType(25, 4))).cast(DoubleType)
-
   // ---- pivot / unpivot round trip ---------------------------------------
 
   private val eventTypes = Seq("click", "error", "purchase", "signup",
@@ -36,7 +28,7 @@ object Queries8 {
     * HAVING). Pivot with a value list is one shuffle on user_id; the
     * unpivot is a row-local expand. */
   def q120PivotUnpivot(s: SparkSession, dir: String): DataFrame = {
-    val wide = t(s, dir, "events")
+    val wide = Tables(s, dir, "events")
       .groupBy($"user_id")
       .pivot("event_type", eventTypes)
       .agg(dsum($"value"))
@@ -63,7 +55,7 @@ object Queries8 {
     * significant bit), so the marker column is oracled as a value, not
     * just coalesced away. */
   def q121Cube(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables(s, dir, "lineitem")
       .cube($"l_returnflag", $"l_linestatus")
       .agg(grouping_id().as("gid"), count(lit(1)).as("n"),
         dsum($"l_quantity").as("qty_sum"))
@@ -109,7 +101,7 @@ object Queries8 {
     val allPs = ps ++ ps.map(p => math.max(0.0, p - eps)) ++
       ps.map(p => math.min(1.0, p + eps))
     val k = ps.length
-    val rows = t(s, dir, "lineitem")
+    val rows = Tables(s, dir, "lineitem")
       .groupBy($"l_linestatus")
       .agg(
         percentile($"l_extendedprice", arr(allPs)).as("exall"),
@@ -168,7 +160,7 @@ object Queries8 {
         concat(lit("h"), pmod($"l_orderkey", lit(3)).cast(StringType)))
       .otherwise(concat(lit("c"), $"l_orderkey".cast(StringType)))
     Sketches.heavyHitters(
-        t(s, dir, "lineitem").select(key.as("k")), "k", theta = 0.05)
+        Tables(s, dir, "lineitem").select(key.as("k")), "k", theta = 0.05)
       .orderBy($"k")
   }
 
@@ -195,17 +187,11 @@ object Queries8 {
     * (q90's HUGEINT CTEs) plus the (h, id) rank order bit-for-bit. */
   def q124GroupSample(s: SparkSession, dir: String): DataFrame = {
     val out = GroupTopK.sampleKPerGroup(
-        t(s, dir, "documents").select($"lang", $"doc_id"),
+        Tables(s, dir, "documents").select($"lang", $"doc_id"),
         Seq("lang"), "doc_id", k = 20, seed = 29L)
       .select($"lang", $"id".as("doc_id"), $"key".as("h"),
         $"rank".as("rnk"))
-    def nodes(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
-      case a: org.apache.spark.sql.execution.adaptive
-          .AdaptiveSparkPlanExec => nodes(a.executedPlan)
-      case other => other +: other.children.flatMap(nodes)
-    }
-    val windows = nodes(out.queryExecution.executedPlan).count(
+    val windows = planNodes(out.queryExecution.executedPlan).count(
       _.isInstanceOf[org.apache.spark.sql.execution.window.WindowExec])
     require(windows == 0,
       s"q124: expected a bounded partial-merge aggregate, found " +
@@ -248,7 +234,7 @@ object Queries8 {
     * every row the aggregate consumed). */
   def q126ObserveMetrics(s: SparkSession, dir: String): DataFrame = {
     val obs = org.apache.spark.sql.Observation(s"q126_${System.nanoTime()}")
-    val out = t(s, dir, "lineitem")
+    val out = Tables(s, dir, "lineitem")
       .observe(obs, count(lit(1)).as("cnt"),
         sum($"l_quantity".cast(DecimalType(25, 4))).as("qty"))
       .groupBy($"l_returnflag")
@@ -288,7 +274,7 @@ object Queries8 {
     * from the unsorted original. */
   def q127SortedLayout(s: SparkSession, dir: String): DataFrame = {
     val path = "/tmp/graft_formats/range_lineitem"
-    t(s, dir, "lineitem")
+    Tables(s, dir, "lineitem")
       .select($"l_orderkey", $"l_linenumber", $"l_quantity")
       .repartitionByRange(8, $"l_orderkey")
       .sortWithinPartitions($"l_orderkey", $"l_linenumber")

@@ -1,11 +1,12 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.operators.ZOrder
+import graft.streaming.StreamDrain
 
 /** Round-12 gates past q127: the full analytic window-function surface
   * (q128), an EXACT token-set similarity self-join via prefix filtering
@@ -16,14 +17,6 @@ import graft.operators.ZOrder
   * conventions as in [[Queries]].
   */
 object Queries9 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
-  /** Exact distributed sum of a double column (the [[Queries]] DECIMAL
-    * convention, so partial-agg order cannot change the result). */
-  private def dsum(c: Column): Column =
-    sum(c.cast(DecimalType(25, 4))).cast(DoubleType)
 
   // ---- q128: analytic window-function suite -----------------------------
 
@@ -42,7 +35,7 @@ object Queries9 {
     val wCum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wTail = w.rowsBetween(Window.currentRow, Window.unboundedFollowing)
     val wM3 = w.rowsBetween(-2, 0)
-    t(s, dir, "lineitem")
+    Tables(s, dir, "lineitem")
       .where($"l_suppkey" < 10)
       .select($"l_suppkey", $"l_orderkey", $"l_linenumber",
         row_number().over(w).as("rn"),
@@ -111,7 +104,7 @@ object Queries9 {
   def q129SimJoinPrefix(s: SparkSession, dir: String): DataFrame = {
     val toks = array_distinct(filter(
       split(lower($"text"), "[^a-z]+"), x => x =!= ""))
-    val d = t(s, dir, "documents")
+    val d = Tables(s, dir, "documents")
       .where($"doc_id" < 200)
       .select($"doc_id", toks.as("tok"))
       .where(size($"tok") > 0)
@@ -184,7 +177,7 @@ object Queries9 {
     * box bounds derive from max(key) by integer division so both
     * engines compute identical bounds at every SF. */
   def q130ZorderLayout(s: SparkSession, dir: String): DataFrame = {
-    val src = t(s, dir, "lineitem")
+    val src = Tables(s, dir, "lineitem")
       .select($"l_partkey", $"l_suppkey", $"l_returnflag", $"l_quantity")
     val mrow = src.agg(max($"l_partkey"), max($"l_suppkey")).head()
     val (mp, ms) = (mrow.getLong(0), mrow.getLong(1))
@@ -250,8 +243,7 @@ object Queries9 {
     * so the same recovery works for any deterministic transform. */
   def q131StreamRecovery(parent: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    val spark = parent.newSession()
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    val spark = StreamDrain.session(parent, emptyBatches = true)
     val base = Fs.scratchDir("recovery")
     val (stage, srcDir, sink, chk) =
       (s"$base/stage", s"$base/src", s"$base/sink", s"$base/chk")
@@ -323,14 +315,14 @@ object Queries9 {
     * tie-break. */
   def q132StarJoin(s: SparkSession, dir: String): DataFrame = {
     val cutoff = lit("1998-06-01").cast(TimestampNTZType)
-    val cust = t(s, dir, "customer")
+    val cust = Tables(s, dir, "customer")
       .where($"c_mktsegment" === "BUILDING")
       .select($"c_custkey")
-    val ord = t(s, dir, "orders")
+    val ord = Tables(s, dir, "orders")
       .where($"o_orderdate" < cutoff)
       .select($"o_orderkey", $"o_custkey", $"o_orderdate",
         $"o_orderpriority")
-    val li = t(s, dir, "lineitem")
+    val li = Tables(s, dir, "lineitem")
       .where($"l_shipdate" > cutoff)
       .select($"l_orderkey", $"l_extendedprice", $"l_discount")
     val result = li
@@ -383,7 +375,7 @@ object Queries9 {
       "false")
     val factPath = "/tmp/graft_formats/dpp_lineitem"
     val dimPath = "/tmp/graft_formats/dpp_dim"
-    t(s, dir, "lineitem")
+    Tables(s, dir, "lineitem")
       .select($"l_orderkey", $"l_linenumber", $"l_quantity",
         $"l_returnflag")
       .write.mode("overwrite").partitionBy("l_returnflag")
@@ -403,18 +395,7 @@ object Queries9 {
       .orderBy($"l_linenumber")
     val qe = joined.queryExecution
     qe.toRdd.count()
-    // AQE wraps finished stages in QueryStageExec LEAF nodes — a plain
-    // collectLeaves stops at the stage boundary and never sees the
-    // scans, so descend into every stage's plan explicitly
-    def allNodes(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
-      case a: org.apache.spark.sql.execution.adaptive
-          .AdaptiveSparkPlanExec => allNodes(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        p +: allNodes(q.plan)
-      case _ => p +: p.children.flatMap(allNodes)
-    }
-    val factScan = allNodes(qe.executedPlan).collectFirst {
+    val factScan = planNodes(qe.executedPlan).collectFirst {
       case f: org.apache.spark.sql.execution.FileSourceScanExec
           if f.toString().contains("dynamicpruningexpression") => f
     }.getOrElse(
@@ -452,7 +433,7 @@ object Queries9 {
     * IEEE double, and the sum goes through DECIMAL. */
   def q134AqeSkewJoin(parent: SparkSession, dir: String): DataFrame = {
     val s = parent.newSession()
-    val li0 = t(s, dir, "lineitem")
+    val li0 = Tables(s, dir, "lineitem")
     val rows = li0.count()
     val hotBytes = rows / 2 * 16
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -507,7 +488,7 @@ object Queries9 {
     * never moves, and the anti-join + min-agg are both map-side
     * partial-friendly. */
   def q135IncrementalIngest(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
+    val docs = Tables(s, dir, "documents")
     val store = docs.where($"doc_id" < 250)
       .select(xxhash64($"text").as("fp")).distinct()
     val incoming = docs.where($"doc_id" >= 250)
@@ -548,7 +529,7 @@ object Queries9 {
     * codegen'd filter — the corpus is never shuffled. */
   def q136WeightedSample(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.Sampling
-    val docs = t(s, dir, "documents")
+    val docs = Tables(s, dir, "documents")
     val maxn = docs.agg(max($"n_chars")).head().getLong(0)
     val thr = expr(
       s"least(${Sampling.Buckets}, (n_chars * ${Sampling.Buckets}) " +
@@ -584,8 +565,8 @@ object Queries9 {
     * approximate. One strategy's result is oracled; the others equal
     * it in-gate. */
   def q137JoinHints(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem").select($"l_suppkey", $"l_quantity")
-    val sup = t(s, dir, "supplier")
+    val li = Tables(s, dir, "lineitem").select($"l_suppkey", $"l_quantity")
+    val sup = Tables(s, dir, "supplier")
       .select($"s_suppkey", $"s_nationkey")
     def run(hint: String, shape: String): DataFrame = {
       val j = li.join(sup.hint(hint), $"l_suppkey" === $"s_suppkey")
@@ -629,7 +610,7 @@ object Queries9 {
   def q138FileSizing(s: SparkSession, dir: String): DataFrame = {
     val sized = "/tmp/graft_formats/sized_events"
     val compact = "/tmp/graft_formats/compact_events"
-    val ev = t(s, dir, "events")
+    val ev = Tables(s, dir, "events")
       .select($"event_id", $"event_type", $"value")
     val n = ev.count()
     // 1/8 of the table per file at any SF, so the sized write always
@@ -671,8 +652,8 @@ object Queries9 {
     * is reachable from the SQL front end a BI tool or notebook user
     * would hit; the oracle is the same statement's DuckDB reading. */
   def q139SqlApi(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("orders_v")
-    t(s, dir, "customer").createOrReplaceTempView("customer_v")
+    Tables(s, dir, "orders").createOrReplaceTempView("orders_v")
+    Tables(s, dir, "customer").createOrReplaceTempView("customer_v")
     s.sql("""
       SELECT c_mktsegment,
         COUNT(*) AS n,
@@ -714,7 +695,7 @@ object Queries9 {
     * metastore schema); the data files are never rewritten. */
   def q140SchemaMerge(s: SparkSession, dir: String): DataFrame = {
     val path = "/tmp/graft_formats/evolving_orders"
-    val o = t(s, dir, "orders")
+    val o = Tables(s, dir, "orders")
     o.where($"o_orderkey" % 2 === 0)
       .select($"o_orderkey", $"o_custkey", $"o_totalprice")
       .write.mode("overwrite").parquet(path)
@@ -755,7 +736,7 @@ object Queries9 {
     * broadcasts. */
   def q141ResampleGapfill(s: SparkSession, dir: String): DataFrame = {
     val binNs = 900L * 1000000000L // 15 min
-    val agg = t(s, dir, "events")
+    val agg = Tables(s, dir, "events")
       .select(expr(s"ts div $binNs").as("bin"), $"value")
       .groupBy($"bin")
       .agg(count(lit(1)).as("n0"), dsum($"value").as("s0"))
@@ -797,7 +778,7 @@ object Queries9 {
     * repeated bench loops don't accumulate executors-full of old
     * cache entries. */
   def q142CacheReuse(s: SparkSession, dir: String): DataFrame = {
-    val base = t(s, dir, "lineitem")
+    val base = Tables(s, dir, "lineitem")
       .where($"l_quantity" > 10)
       .select($"l_returnflag", $"l_quantity", $"l_extendedprice")
       .persist()
@@ -839,11 +820,11 @@ object Queries9 {
     * agree on exactly. Complements the inner/semi/anti forms gates
     * q03/q115/q135 exercise. */
   def q143OuterJoin(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders")
+    val o = Tables(s, dir, "orders")
       .where($"o_custkey" % 3 === 0)
       .groupBy($"o_custkey".as("k"))
       .agg(count(lit(1)).as("n_orders"))
-    val c = t(s, dir, "customer")
+    val c = Tables(s, dir, "customer")
       .where($"c_custkey" % 3 =!= 1)
       .select($"c_custkey".as("k"), $"c_nationkey")
     o.join(c, Seq("k"), "full_outer")
@@ -884,7 +865,7 @@ object Queries9 {
   def q144ExplodeForms(s: SparkSession, dir: String): DataFrame = {
     val words = filter(
       split(lower($"text"), "[^a-z]+"), w => length(w) > 7)
-    t(s, dir, "documents")
+    Tables(s, dir, "documents")
       .where($"doc_id" < 100)
       .select($"doc_id", words.as("arr"))
       .select($"doc_id", posexplode_outer($"arr"))
@@ -922,8 +903,7 @@ object Queries9 {
     * sink must hold each row exactly once. */
   def q145ForeachBatch(parent: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    val spark = parent.newSession()
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    val spark = StreamDrain.session(parent, emptyBatches = true)
     val base = Fs.scratchDir("fb")
     val (stage, srcDir, sink, chk) =
       (s"$base/stage", s"$base/src", s"$base/sink", s"$base/chk")

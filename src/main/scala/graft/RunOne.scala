@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Executes named gate queries once and prints row count + head + wall
   * time — the single-query smoke loop (Verify runs everything; Plans
   * only explains). Usage: runMain graft.RunOne [sfDir] q85 q91 ... */
@@ -11,14 +9,7 @@ object RunOne {
       if (args.nonEmpty && args.head.startsWith("/"))
         (args.head, args.tail.toSeq)
       else ("/root/testdata/sf0.01", args.toSeq)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(GraftSession.hostCores)
     names.foreach { short =>
       // exact name wins; otherwise a prefix must be unambiguous (the
       // Map is unordered — "first match" would be hash-order roulette)

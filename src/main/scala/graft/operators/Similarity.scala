@@ -2,8 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.aggregate.{ObjectHashAggregateExec, SortAggregateExec}
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.expressions.Aggregator
@@ -159,11 +157,7 @@ object Similarity {
     * exists to avoid. Same in-gate discipline as
     * Bucketed.requireColocated. */
   def requireBoundedTopK(df: DataFrame, what: String): Unit = {
-    def strip(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => strip(a.executedPlan)
-      case other => other +: other.children.flatMap(strip)
-    }
-    val ns = strip(df.queryExecution.executedPlan)
+    val ns = graft.planNodes(df.queryExecution.executedPlan)
     val windows = ns.count(_.isInstanceOf[WindowExec])
     val aggs = ns.count(p => p.isInstanceOf[ObjectHashAggregateExec] ||
       p.isInstanceOf[SortAggregateExec])

@@ -1,12 +1,34 @@
 package object graft {
   import org.apache.spark.sql.{Column, DataFrame}
-  import org.apache.spark.sql.functions.col
+  import org.apache.spark.sql.execution.SparkPlan
+  import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+    QueryStageExec}
+  import org.apache.spark.sql.functions.{col, sum}
+  import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
   /** `$"name"` column interpolator, usable without a SparkSession's
     * implicits in scope (queries here are session-agnostic). */
   implicit class ColumnInterpolator(private val sc: StringContext)
       extends AnyVal {
     def $(args: Any*): Column = col(sc.s(args: _*))
+  }
+
+  /** Exact distributed sum of a double column: cast to decimal before
+    * aggregation so partial-agg order cannot change the result. The
+    * oracle side writes the same sum as
+    * `CAST(SUM(CAST(x AS DECIMAL(25,4))) AS DOUBLE)`. */
+  def dsum(c: Column): Column =
+    sum(c.cast(DecimalType(25, 4))).cast(DoubleType)
+
+  /** Every node of a physical plan, this one first. Descends through
+    * AQE's wrapper (its current plan) and through every finished query
+    * stage, which AQE makes a leaf: a plain `collect` stops at stage
+    * boundaries once the plan has run, and reads an executed plan as
+    * having no exchanges or scans below its stages. */
+  def planNodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+    case q: QueryStageExec => q +: planNodes(q.plan)
+    case _ => p +: p.children.flatMap(planNodes)
   }
 
   implicit class PartitionLayout(private val df: DataFrame) extends AnyVal {

@@ -1,8 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
 import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.functions.col
@@ -56,15 +54,8 @@ object Bucketed {
       .saveAsTable(table)
   }
 
-  /** All nodes of `df`'s physical plan (AQE wrapper transparently
-    * unwrapped). */
-  private def nodes(df: DataFrame): Seq[SparkPlan] = {
-    def strip(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => strip(a.executedPlan)
-      case other => other +: other.children.flatMap(strip)
-    }
-    strip(df.queryExecution.executedPlan)
-  }
+  private def nodes(df: DataFrame) =
+    graft.planNodes(df.queryExecution.executedPlan)
 
   /** Number of shuffle exchanges in `df`'s physical plan. 0 over a
     * join = the join is co-located: no data movement beyond the scans

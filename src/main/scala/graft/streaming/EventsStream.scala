@@ -42,29 +42,14 @@ object EventsStream {
     * real streaming query with a 1-hour watermark; returns the final
     * result table (complete mode memory sink, drained synchronously). */
   def hourlyWindow(parent: SparkSession, dir: String): DataFrame = {
-    // cloned session: fewer shuffle partitions = fewer state stores to
-    // initialize for a single-file micro-batch (result is identical);
-    // on a real cluster this is sized to the key cardinality instead
-    val spark = parent.newSession()
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    // complete-mode single-batch queries need no watermark-advancing
-    // empty batch; skipping it trims fixed per-query startup
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    val name = s"graft_stream_${System.nanoTime()}"
+    val spark = StreamDrain.session(parent, emptyBatches = false)
     val stream = eventsStream(spark, dir)
       .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
       .withWatermark("event_time", "1 hour")
       .groupBy(window(col("event_time"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"),
-        sum(col("value").cast(DecimalType(25, 4))).cast(DoubleType)
-          .as("sum_value"))
-    val q = stream.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name)
+        graft.dsum(col("value")).as("sum_value"))
+    StreamDrain.toMemory(stream.writeStream.outputMode("complete"))
       .select(col("window.start").cast(LongType).as("bucket_ts"),
         col("event_type"), col("n"), col("sum_value"))
       .orderBy("bucket_ts", "event_type")
@@ -82,23 +67,14 @@ object EventsStream {
     * complete mode yields exactly the batch result — the q118 oracle
     * verifies it value-for-value. */
   def sessionWindows(parent: SparkSession, dir: String): DataFrame = {
-    val spark = parent.newSession()
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    val name = s"graft_sessions_${System.nanoTime()}"
+    val spark = StreamDrain.session(parent, emptyBatches = false)
     val stream = eventsStream(spark, dir)
       .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
       .withWatermark("event_time", "1 hour")
       .groupBy(col("user_id"),
         session_window(col("event_time"), "30 minutes").as("sw"))
       .agg(count(lit(1)).as("n_events"))
-    val q = stream.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name)
+    StreamDrain.toMemory(stream.writeStream.outputMode("complete"))
       .select(col("user_id"), unix_micros(col("sw.start")).as("start_us"),
         unix_micros(col("sw.end")).as("end_us"), col("n_events"))
       .orderBy("user_id", "start_us")
@@ -112,22 +88,12 @@ object EventsStream {
     * dropDuplicatesWithinWatermark to bound state; the single-file
     * micro-batch here needs no eviction. */
   def streamDedup(parent: SparkSession, dir: String): DataFrame = {
-    val spark = parent.newSession()
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    // complete-mode single-batch queries need no watermark-advancing
-    // empty batch; skipping it trims fixed per-query startup
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    val name = s"graft_dedup_${System.nanoTime()}"
+    val spark = StreamDrain.session(parent, emptyBatches = false)
     val stream = eventsStream(spark, dir)
       .select(col("user_id"), col("event_type"))
       .dropDuplicates("user_id", "event_type")
-    val q = stream.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name).orderBy("user_id", "event_type")
+    StreamDrain.toMemory(stream.writeStream.outputMode("append"))
+      .orderBy("user_id", "event_type")
   }
 
   /** TTL-bounded streaming dedup: `dropDuplicatesWithinWatermark` —
@@ -144,10 +110,7 @@ object EventsStream {
     * single-file micro-batch every duplicate is within the watermark,
     * so the result equals batch SELECT DISTINCT — the oracle. */
   def streamDedupTtl(parent: SparkSession, dir: String): DataFrame = {
-    val spark = parent.newSession()
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    val name = s"graft_dedupttl_${System.nanoTime()}"
+    val spark = StreamDrain.session(parent, emptyBatches = false)
     val stream = eventsStream(spark, dir)
       // integer div: (ts / 1000L) would round-trip the ~1.5e18 nano
       // value through a double (ulp 256 ns) and can truncate to a
@@ -157,13 +120,8 @@ object EventsStream {
       .withWatermark("ets", "1 hour")
       .dropDuplicatesWithinWatermark("user_id", "event_type")
       .select(col("user_id"), col("event_type"))
-    val q = stream.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name).orderBy("user_id", "event_type")
+    StreamDrain.toMemory(stream.writeStream.outputMode("append"))
+      .orderBy("user_id", "event_type")
   }
 
   /** Stream-static join: the event stream enriched against a static
@@ -173,12 +131,7 @@ object EventsStream {
     * re-read per micro-batch, so dimension updates are picked up
     * without restarting the query. */
   def streamStaticJoin(parent: SparkSession, dir: String): DataFrame = {
-    val spark = parent.newSession()
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    // complete-mode single-batch queries need no watermark-advancing
-    // empty batch; skipping it trims fixed per-query startup
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    val name = s"graft_ssjoin_${System.nanoTime()}"
+    val spark = StreamDrain.session(parent, emptyBatches = false)
     val dim = functions.broadcast(
       graft.Tables(spark, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment")))
@@ -186,15 +139,9 @@ object EventsStream {
       .join(dim, col("user_id") === col("c_custkey"))
       .groupBy(col("c_mktsegment"))
       .agg(count(lit(1)).as("n"),
-        sum(col("value").cast(DecimalType(25, 4))).cast(DoubleType)
-          .as("sum_value"))
-    val q = stream.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name).orderBy("c_mktsegment")
+        graft.dsum(col("value")).as("sum_value"))
+    StreamDrain.toMemory(stream.writeStream.outputMode("complete"))
+      .orderBy("c_mktsegment")
   }
 
   /** Stream-stream interval join — the remaining Structured Streaming
@@ -209,10 +156,7 @@ object EventsStream {
     * the single-file micro-batch here emits the complete pair set, so
     * the batch SQL inequality join is an exact oracle. */
   def streamStreamJoin(parent: SparkSession, dir: String): DataFrame = {
-    val spark = parent.newSession()
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    val name = s"graft_ss2_${System.nanoTime()}"
+    val spark = StreamDrain.session(parent, emptyBatches = false)
     def side(tp: String, pfx: String): DataFrame =
       eventsStream(spark, dir)
         .where(col("event_type") === tp)
@@ -224,13 +168,7 @@ object EventsStream {
       col("c_user") === col("p_user") &&
         col("p_time") >= col("c_time") &&
         col("p_time") <= col("c_time") + expr("INTERVAL 1 HOUR"))
-    val q = joined.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name)
+    StreamDrain.toMemory(joined.writeStream.outputMode("append"))
       .select(col("c_id"), col("p_id"))
       .orderBy("c_id", "p_id")
   }
@@ -263,8 +201,7 @@ object EventsStream {
 
   private def streamStreamOuterJoinImpl(parent: SparkSession,
       dir: String, joinType: String): DataFrame = {
-    val spark = parent.newSession()
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    val spark = StreamDrain.session(parent, emptyBatches = true)
     val maxTs = graft.Tables(parent, dir, "events")
       .agg(max(col("ts"))).head().getLong(0)
     val sentDir = graft.Fs.scratchDir("ss_sentinel")
@@ -289,20 +226,13 @@ object EventsStream {
         col("p_time") >= col("c_time") &&
         col("p_time") <= col("c_time") + expr("INTERVAL 1 HOUR"),
       joinType)
-    val name = s"graft_ss2o_${System.nanoTime()}"
-    val q = joined.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable() finally {
-      q.stop()
-      // the memory sink holds the rows; the per-run sentinel dir is
-      // dead weight — delete it so repeated bench loops don't
-      // accumulate orphans under /tmp
-      graft.Fs.rmTree(new java.io.File(sentDir))
-    }
-    spark.table(name)
+    // the memory sink holds the rows; the per-run sentinel dir is dead
+    // weight — delete it so repeated bench loops don't accumulate
+    // orphans under /tmp
+    val drained =
+      try StreamDrain.toMemory(joined.writeStream.outputMode("append"))
+      finally graft.Fs.rmTree(new java.io.File(sentDir))
+    drained
       // drop sentinel rows NULL-SAFELY: in full outer, c_user (or
       // p_user) is null on unmatched rows and `=!= -1` would be null
       // → silently filtered — the row the join exists to emit
@@ -357,8 +287,7 @@ object EventsStream {
     * metric on the source side counts batch-2 rows to prove they
     * ARRIVED and were dropped by the operator, not lost upstream. */
   def lateDataDrop(parent: SparkSession, dir: String): DataFrame = {
-    val spark = parent.newSession()
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    val spark = StreamDrain.session(parent, emptyBatches = true)
     val ev = graft.Tables(parent, dir, "events")
     val maxTs = ev.agg(max(col("ts"))).head().getLong(0)
     val h3 = 3L * 3600 * 1000000000L
@@ -381,19 +310,8 @@ object EventsStream {
       .coalesce(1).write.mode("overwrite").parquet(s"$stage/b2")
     ev.where(isLate).coalesce(1)
       .write.mode("overwrite").parquet(s"$stage/b3")
-    val dirFile = new java.io.File(stage)
-    def promote(sub: String, dst: String, mtime: Long): Unit = {
-      val f = new java.io.File(s"$stage/$sub").listFiles()
-        .find(_.getName.startsWith("part-")).get
-      val d = new java.io.File(s"$stage/$dst")
-      f.renameTo(d); d.setLastModified(mtime)
-    }
-    // file source processes by (mtime, path): pin batch order
-    promote("b1", "batch1.parquet", 1000000L)
-    promote("b2", "batch2.parquet", 2000000L)
-    promote("b3", "batch3.parquet", 3000000L)
+    StreamDrain.promote(stage, "b1", "b2", "b3")
     val nLate = ev.where(isLate).count()
-    val name = s"graft_late_${System.nanoTime()}"
     val stream = spark.readStream.schema(eventsSchema)
       .option("maxFilesPerTrigger", "1")
       .option("pathGlobFilter", "batch*.parquet")
@@ -403,22 +321,18 @@ object EventsStream {
       .withWatermark("event_time", "1 hour")
       .groupBy(window(col("event_time"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"))
-    val q = stream.writeStream
-      .outputMode("append") // only watermark-finalized windows emit
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable() finally {
-      q.stop()
-      graft.Fs.rmTree(dirFile)
-    }
-    val seen = q.recentProgress
+    val (drained, progress) =
+      // append: only watermark-finalized windows emit
+      try StreamDrain.toMemoryWithProgress(
+        stream.writeStream.outputMode("append"))
+      finally graft.Fs.rmTree(new java.io.File(stage))
+    val seen = progress
       .flatMap(p => Option(p.observedMetrics.get("src")))
       .map(_.getAs[Long]("rows_seen")).sum
     require(seen == ev.count() + 1,
       s"q177: source observed $seen rows, expected ${ev.count() + 1} — " +
         "the late batch must ARRIVE and be dropped by the operator")
-    val dropped = q.recentProgress
+    val dropped = progress
       .filter(_.stateOperators.nonEmpty)
       .map(_.stateOperators(0).numRowsDroppedByWatermark).sum
     require(nLate > 0, "q177: no late rows at this SF — witness vacuous")
@@ -434,7 +348,7 @@ object EventsStream {
     require(dropped == latePairs,
       s"q177: operator dropped $dropped state-input rows by watermark, " +
         s"expected one per late (window,type) pair = $latePairs")
-    spark.table(name)
+    drained
       .where(col("event_type") =!= "__wm")
       .select(unix_micros(col("window.start")).as("win_us"),
         col("event_type"), col("n"))
@@ -449,10 +363,7 @@ object EventsStream {
     * arrives, so the bounded single micro-batch emits the complete
     * qualifying set without the outer join's sentinel machinery. */
   def streamSemiJoin(parent: SparkSession, dir: String): DataFrame = {
-    val spark = parent.newSession()
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    val name = s"graft_sssemi_${System.nanoTime()}"
+    val spark = StreamDrain.session(parent, emptyBatches = false)
     def side(tp: String, pfx: String): DataFrame =
       eventsStream(spark, dir)
         .where(col("event_type") === tp)
@@ -465,13 +376,8 @@ object EventsStream {
         col("p_time") >= col("c_time") &&
         col("p_time") <= col("c_time") + expr("INTERVAL 1 HOUR"),
       "left_semi")
-    val q = joined.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name).select(col("c_id")).orderBy("c_id")
+    StreamDrain.toMemory(joined.writeStream.outputMode("append"))
+      .select(col("c_id")).orderBy("c_id")
   }
 
   /** Per-user running aggregate through `transformWithState` — the
@@ -489,16 +395,12 @@ object EventsStream {
     * bounded at any SF. */
   def transformWithStateAgg(parent: SparkSession, dir: String)
       : DataFrame = {
-    val spark = parent.newSession()
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    val spark = StreamDrain.session(parent, emptyBatches = false)
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state." +
         "RocksDBStateStoreProvider")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-      "false")
     import spark.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val name = s"graft_tws_${System.nanoTime()}"
     val src = eventsStream(spark, dir)
       .where(col("value").isNotNull)
       .select(col("user_id"), col("value")).as[UserEvent]
@@ -506,13 +408,7 @@ object EventsStream {
       .transformWithState(new UserRunningAgg, TimeMode.None(),
         OutputMode.Append(),
         org.apache.spark.sql.Encoders.product[UserAggOut])
-    val q = out.toDF().writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name)
+    StreamDrain.toMemory(out.toDF().writeStream.outputMode("append"))
       .groupBy(pmod(col("user_id"), lit(10)).as("bucket"))
       .agg(count(lit(1)).as("n_users"),
         sum(col("n")).as("n_events"),

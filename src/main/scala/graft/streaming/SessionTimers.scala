@@ -36,13 +36,12 @@ object SessionTimers {
     * sessionizer; value-equal to the batch lag-window formulation
     * (shares q23's oracle). */
   def sessionsViaTimers(parent: SparkSession, dir: String): DataFrame = {
-    val spark = parent.newSession()
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    // no-data micro-batches stay ENABLED: timers fire in the trigger
+    // AFTER the watermark advances (same lag as q110's outer join)
+    val spark = StreamDrain.session(parent, emptyBatches = true)
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state." +
         "RocksDBStateStoreProvider")
-    // no-data micro-batches stay ENABLED: timers fire in the trigger
-    // AFTER the watermark advances (same lag as q110's outer join)
     import spark.implicits._
     val ev = graft.Tables(parent, dir, "events")
     val Array(minTs, maxTs) = ev
@@ -64,17 +63,7 @@ object SessionTimers {
       java.util.Arrays.asList(org.apache.spark.sql.Row(
         -1L, maxTs + 30L * 24 * 3600 * 1000000000L, -1L, "__wm", 0.0,
         null)), EventsStream.eventsSchema), "b4")
-    def promote(sub: String, dst: String, mtime: Long): Unit = {
-      val f = new java.io.File(s"$stage/$sub").listFiles()
-        .find(_.getName.startsWith("part-")).get
-      val d = new java.io.File(s"$stage/$dst")
-      f.renameTo(d); d.setLastModified(mtime)
-    }
-    promote("b1", "batch1.parquet", 1000000L)
-    promote("b2", "batch2.parquet", 2000000L)
-    promote("b3", "batch3.parquet", 3000000L)
-    promote("b4", "batch4.parquet", 4000000L)
-    val name = s"graft_timers_${System.nanoTime()}"
+    StreamDrain.promote(stage, "b1", "b2", "b3", "b4")
     val src = spark.readStream.schema(EventsStream.eventsSchema)
       .option("maxFilesPerTrigger", "1")
       .option("pathGlobFilter", "batch*.parquet")
@@ -93,16 +82,9 @@ object SessionTimers {
       .transformWithState(new SessionCloser, TimeMode.EventTime(),
         OutputMode.Append(),
         org.apache.spark.sql.Encoders.product[ClosedSession])
-    val q = out.toDF().writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable() finally {
-      q.stop()
-      graft.Fs.rmTree(new java.io.File(stage))
-    }
-    val sink = spark.table(name)
+    val sink =
+      try StreamDrain.toMemory(out.toDF().writeStream.outputMode("append"))
+      finally graft.Fs.rmTree(new java.io.File(stage))
     // witness: every user must have a TIMER-closed session — the
     // distinct-user count alone would also pass when a user's timer
     // never fired but a handler-closed mid-stream session emitted them.

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 
@@ -61,12 +60,7 @@ class GroupTopKSpec extends SparkSpec {
     val df = spark.range(0, 1000)
       .select((col("id") % 4).cast("string").as("g"), col("id"))
     val out = GroupTopK.sampleKPerGroup(df, Seq("g"), "id", 5, 17L)
-    def nodes(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-      case other => other +: other.children.flatMap(nodes)
-    }
-    assert(nodes(out.queryExecution.executedPlan)
+    assert(planNodes(out.queryExecution.executedPlan)
       .count(_.isInstanceOf[WindowExec]) === 0)
     val a = out.orderBy("g", "rank").collect().map(_.toSeq).toSeq
     val b = GroupTopK.sampleKPerGroup(df.repartition(13), Seq("g"),
