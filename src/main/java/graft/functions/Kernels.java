@@ -1639,7 +1639,7 @@ public final class Kernels {
    * train-val-test splits (Sampling.scala) — reproducible for a given
    * (key, seed) across runs, partitionings, and engines with exact
    * 64-bit arithmetic; the DuckDB oracle replays it bit-for-bit in
-   * HUGEINT/UBIGINT (Queries5.bucketCtes). */
+   * HUGEINT/UBIGINT (LmPrepGates.bucketCtes). */
   public static int sampleBucket(long key, long seed) {
     return (int) (sampleHash(key, seed) >>> 51);
   }

@@ -2,15 +2,19 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.operators.GraftExtensions
+
 /** The one engine configuration that every main and every test runs:
   * `local[cores]` with one shuffle partition per core, UTC session
   * time (the NTZ→TIMESTAMP cast in [[Tables.normalizeEventsTs]] is an
   * identity only under UTC), `events.parquet`'s TIMESTAMP(NANOS) read
-  * as long nanoseconds, and no UI. */
+  * as long nanoseconds, no UI, and the graft planner strategy and
+  * optimizer rules ([[graft.operators.GraftExtensions]]). */
 object GraftSession {
 
   def apply(cores: Int): SparkSession = {
     val spark = SparkSession.builder()
+      .withExtensions(new GraftExtensions)
       .master(s"local[$cores]")
       .appName("graft")
       .config("spark.sql.shuffle.partitions", cores.toString)

@@ -2,64 +2,25 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
-  * Every entry in `queries` is one operator family from SURVEY.md §2 (or
-  * an LLM-pipeline extension); entries with a DuckDB-expressible oracle
-  * also appear in `oracleSql` with IDENTICAL output column names.
+  * Every entry in `queries` is one gate of [[GateFamily.gates]]: an
+  * operator family from SURVEY.md §2 or an LLM-pipeline extension.
+  * Entries with a DuckDB-expressible oracle also appear in `oracleSql`
+  * with IDENTICAL output column names.
   */
 object SparkEntry {
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    Queries.q01GroupbyAgg(spark, "/root/testdata/sf0.001")
+    RelationalGates.q01GroupbyAgg(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_groupby_agg" -> (Queries.q01GroupbyAgg _),
-    "q02_filter_project" -> (Queries.q02FilterProject _),
-    "q03_join_agg" -> (Queries.q03JoinAgg _),
-    "q04_topk" -> (Queries.q04TopK _),
-    "q05_distinct" -> (Queries.q05Distinct _),
-    "q06_isin" -> (Queries.q06Isin _),
-    "q07_null_clean" -> (Queries.q07NullClean _),
-    "q08_sort" -> (Queries.q08Sort _),
-    "q09_cumsum" -> (Queries.q09Cumsum _),
-    "q10_describe" -> (Queries.q10Describe _),
-    "q11_window_rank" -> (Queries.q11WindowRank _),
-    "q12_concat" -> (Queries.q12Concat _),
-    "q13_events_window" -> (Queries.q13EventsWindow _),
-    "q14_agg_forms" -> (Queries.q14AggForms _)
-  ) ++ Queries2.entries ++ Queries3.entries ++ Queries4.entries ++
-    Queries5.entries ++ Queries6.entries ++ Queries7.entries ++
-    Queries8.entries ++ Queries9.entries ++ Queries10.entries ++
-    Queries11.entries ++ Queries12.entries ++ Queries13.entries ++
-    Queries14.entries ++ Queries15.entries ++ Queries16.entries ++
-    Queries17.entries ++ Queries18.entries ++ Queries19.entries ++
-    Queries20.entries ++ Queries21.entries ++ Queries22.entries ++ Queries23.entries ++ Queries24.entries ++ Queries25.entries ++ Queries26.entries ++ Queries27.entries ++ Queries28.entries ++ Queries29.entries ++ Queries30.entries ++ Queries31.entries ++ Queries32.entries ++ Queries33.entries ++ Queries34.entries ++ Queries35.entries ++ Queries36.entries ++ Queries37.entries ++ Queries38.entries ++ Queries39.entries ++ Queries40.entries ++ Queries41.entries
+  /** One entry per gate. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    GateFamily.gates.map(g => g.name -> g.build).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] = Map(
-    "q01_groupby_agg" -> Queries.q01Sql,
-    "q02_filter_project" -> Queries.q02Sql,
-    "q03_join_agg" -> Queries.q03Sql,
-    "q04_topk" -> Queries.q04Sql,
-    "q05_distinct" -> Queries.q05Sql,
-    "q06_isin" -> Queries.q06Sql,
-    "q07_null_clean" -> Queries.q07Sql,
-    "q08_sort" -> Queries.q08Sql,
-    "q09_cumsum" -> Queries.q09Sql,
-    "q10_describe" -> Queries.q10Sql,
-    "q11_window_rank" -> Queries.q11Sql,
-    "q12_concat" -> Queries.q12Sql,
-    "q13_events_window" -> Queries.q13Sql,
-    "q14_agg_forms" -> Queries.q14Sql
-  ) ++ Queries2.oracles ++ Queries3.oracles ++ Queries4.oracles ++
-    Queries5.oracles ++ Queries6.oracles ++ Queries7.oracles ++
-    Queries8.oracles ++ Queries9.oracles ++ Queries10.oracles ++
-    Queries11.oracles ++ Queries12.oracles ++ Queries13.oracles ++
-    Queries14.oracles ++ Queries15.oracles ++ Queries16.oracles ++
-    Queries17.oracles ++ Queries18.oracles ++ Queries19.oracles ++
-    Queries20.oracles ++ Queries21.oracles ++ Queries22.oracles ++ Queries23.oracles ++ Queries24.oracles ++ Queries25.oracles ++ Queries26.oracles ++ Queries27.oracles ++ Queries28.oracles ++ Queries29.oracles ++ Queries30.oracles ++ Queries31.oracles ++ Queries32.oracles ++ Queries33.oracles ++ Queries34.oracles ++ Queries35.oracles ++ Queries36.oracles ++ Queries37.oracles ++ Queries38.oracles ++ Queries39.oracles ++ Queries40.oracles ++ Queries41.oracles
+  def oracleSql: Map[String, String] =
+    GateFamily.gates.flatMap(g => g.oracle.map(g.name -> _)).toMap
 }

@@ -189,8 +189,10 @@ object Bpe {
   /** Column function: text → array<bigint> of BPE token ids. The encoder
     * is closed over once and shipped with the task closure (one
     * deserialized copy per executor — the broadcast pattern for model
-    * assets). */
-  def bpeTokenize(encoder: BpeEncoder)(text: Column): Column = {
+    * assets). It is passed by name: an encoder that loads its model
+    * files is first resolved inside a task, not while the plan is
+    * built. */
+  def bpeTokenize(encoder: => BpeEncoder)(text: Column): Column = {
     val f = udf((s: String) =>
       if (s == null) null else encoder.encode(s).toArray)
     f(text)
@@ -226,7 +228,7 @@ object Bpe {
       docs: org.apache.spark.sql.DataFrame,
       idCol: String,
       textCol: String,
-      encoder: BpeEncoder,
+      encoder: => BpeEncoder,
       broadcastDict: Boolean = true): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.LongType

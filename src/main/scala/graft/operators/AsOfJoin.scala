@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, DataFrame, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Cast, Expression}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.expressions.Window
@@ -8,14 +8,13 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.Shim
 import org.apache.spark.sql.types.LongType
 
-import graft.plans.{AsOfJoinOptimizations, AsOfJoinPlan, AsOfJoinStrategy,
-  PruneAsOfJoinChildren, PushFilterThroughAsOfJoin}
+import graft.plans.{AsOfJoinPlan, AsOfJoinStrategy, PruneAsOfJoinChildren,
+  PushFilterThroughAsOfJoin}
 
-/** `SparkSessionExtensions` hook for cluster deployments:
-  * `spark.sql.extensions=graft.operators.GraftExtensions` makes the
-  * as-of join strategy (and any future graft rules) available in every
-  * session without code changes. Local callers get the same effect via
-  * [[AsOfJoin.ensureRegistered]].
+/** The graft planner strategy and optimizer rules, installed once per
+  * application: [[graft.GraftSession]] builds every session with them,
+  * and sessions from `newSession()` inherit them. A cluster deployment
+  * sets `spark.sql.extensions=graft.operators.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -41,16 +40,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   */
 object AsOfJoin {
 
-  /** Idempotently add the planner strategy and optimizer rules to an
-    * existing session (for sessions not built with GraftExtensions). */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val ex = spark.experimental
-    if (!ex.extraStrategies.contains(AsOfJoinStrategy))
-      ex.extraStrategies = ex.extraStrategies :+ AsOfJoinStrategy
-    if (!ex.extraOptimizations.contains(AsOfJoinOptimizations))
-      ex.extraOptimizations = ex.extraOptimizations :+ AsOfJoinOptimizations
-  }
-
   /** As-of join via the custom Catalyst operator.
     *
     * @param leftOn/rightOn  equality key columns (same count/types)
@@ -75,7 +64,9 @@ object AsOfJoin {
       s"asof: tolerance must be non-negative, got $t"))
     require(leftOn.length == rightOn.length, "key arity mismatch")
     val spark = left.sparkSession
-    ensureRegistered(spark)
+    require(Shim.plannerStrategies(spark).contains(AsOfJoinStrategy),
+      "asof: this session cannot plan an as-of join; build it with " +
+        "GraftExtensions (GraftSession does)")
     // fresh exprIds on the right so self-joins cannot alias-collide
     val r = right.select(right.columns.map(c => right(c).as(c)): _*)
     val lPlan = Shim.analyzed(left)

@@ -297,7 +297,7 @@ object Multimodal {
   /** Deterministic grayscale test pixels for content-level image
     * gates: gray(p) = (splitmix64(id·2¹⁶ + p, seed) >>> 8) mod 250 —
     * pure integer arithmetic over the SAME splitmix64 finalizer the
-    * sampling family already replays in DuckDB (Queries5.hashCtes), so
+    * sampling family already replays in DuckDB (LmPrepGates.hashCtes), so
     * an oracle can re-derive every pixel. The 0..249 range leaves
     * +5-brightness perturbations clamp-free (a clamp at 255 would
     * break dHash's brightness invariance on saturated cells). */

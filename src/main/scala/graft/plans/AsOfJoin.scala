@@ -13,8 +13,7 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
   * this is the Spark-native extension implemented at the preferred
   * depth for whole-operator semantics: custom `LogicalPlan` →
   * `SparkStrategy` → `SparkPlan`, registered via
-  * `SparkSessionExtensions` (GraftExtensions) or
-  * `spark.experimental.extraStrategies`.
+  * `SparkSessionExtensions` (GraftExtensions).
   *
   * Semantics: for every left row, join the single right row with the
   * same key whose timestamp is the greatest one ≤ the left timestamp

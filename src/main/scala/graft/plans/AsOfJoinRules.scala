@@ -1,16 +1,15 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeSet, PredicateHelper}
-import org.apache.spark.sql.catalyst.optimizer.{ColumnPruning, PushDownPredicates}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 
 /** Optimizer rules that make [[AsOfJoinPlan]] a first-class citizen of
   * Catalyst: the built-in pushdown/pruning rules do not know the node,
   * so without these a `where` above an as-of join would scan and
-  * shuffle full tables. Injected by `GraftExtensions`
-  * (injectOptimizerRule → operator-optimization batch) or appended to
-  * `experimental.extraOptimizations` via `AsOfJoin.ensureRegistered`.
+  * shuffle full tables. Injected by `GraftExtensions` into the
+  * operator-optimization batch, where Catalyst iterates them with its
+  * own pushdown and pruning rules to a fixed point.
   */
 
 /** Push deterministic left-only predicates below the as-of join.
@@ -52,35 +51,5 @@ object PruneAsOfJoinChildren extends Rule[LogicalPlan] {
       val nr = prune(j.right)
       if ((nl eq j.left) && (nr eq j.right)) p
       else p.withNewChildren(Seq(j.copy(left = nl, right = nr)))
-  }
-}
-
-/** Self-contained fixed-point composition for sessions that can only
-  * append post-hoc rules (`experimental.extraOptimizations` runs after
-  * the main operator-optimization batch, so the standard pushdown /
-  * pruning rules would not re-fire on what our rules expose; here they
-  * are iterated together). Sessions configured with
-  * `spark.sql.extensions=graft.operators.GraftExtensions` get the two
-  * rules injected into the operator batch instead, where Catalyst
-  * itself drives the fixed point. */
-object AsOfJoinOptimizations extends Rule[LogicalPlan] {
-  private val rules: Seq[Rule[LogicalPlan]] =
-    Seq(PushFilterThroughAsOfJoin, PruneAsOfJoinChildren,
-      PushDownPredicates, ColumnPruning)
-
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    // no-op unless an as-of join is present: post-hoc batch must not
-    // perturb already-optimized ordinary plans
-    if (!plan.exists(_.isInstanceOf[AsOfJoinPlan])) return plan
-    var cur = plan
-    var changed = true
-    var i = 0
-    while (changed && i < 10) {
-      val next = rules.foldLeft(cur)((p, r) => r(p))
-      changed = !next.fastEquals(cur)
-      cur = next
-      i += 1
-    }
-    cur
   }
 }

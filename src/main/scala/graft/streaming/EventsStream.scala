@@ -247,7 +247,7 @@ object EventsStream {
     * invocation per key, as here) and under readStream (incremental
     * state with a gap timeout); state per key is O(1): (last ts,
     * session count). Verified against the window-lag formulation
-    * (Queries2.q15) by a shared DuckDB oracle. */
+    * (RelationalGates.q15Sessionize) by a shared DuckDB oracle. */
   def sessionizeStateful(spark: SparkSession, dir: String,
       gapMinutes: Int = 30): DataFrame = {
     import spark.implicits._

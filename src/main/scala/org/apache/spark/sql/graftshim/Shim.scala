@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.{ClassicConversions, Dataset, ExpressionUtils}
+import org.apache.spark.sql.execution.SparkStrategy
 
 /** Narrow bridge into `private[sql]` Spark internals (Spark 4 wraps
   * `Column` around `ColumnNode`, not `Expression`). Lives under
@@ -26,6 +27,10 @@ object Shim {
 
   /** The analyzed logical plan backing a DataFrame. */
   def analyzed(df: DataFrame): LogicalPlan = df.queryExecution.analyzed
+
+  /** The session's planner strategies, injected ones included. */
+  def plannerStrategies(spark: SparkSession): Seq[SparkStrategy] =
+    ClassicConversions.castToImpl(spark).sessionState.planner.strategies
 
   /** Session function registry, for registering custom expressions under
     * SQL-callable names. */

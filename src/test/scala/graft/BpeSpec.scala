@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.apache.spark.sql.functions._
 
 import graft.frame.TFrame
@@ -8,6 +9,9 @@ import graft.functions.{Bpe, BpeEncoder, Vocab}
 /** BPE encoder, Vocab, and TFrame.join behavior. */
 class BpeSpec extends SparkSpec {
   import spark.implicits._
+
+  // the sf0.01 tables committed with the benchmark, inside the repository
+  private val dir = "perfbench/data/sf0.01"
 
   test("vocab insert/append/default semantics (lib.cpp:969-1022)") {
     val v = Vocab(Seq("<unk>", "hello", "world"))
@@ -131,5 +135,35 @@ class BpeSpec extends SparkSpec {
     // left join keeps unmatched
     assert(l.join(r, Seq("k"), "left", "_l", "_r").length === 2L)
     intercept[IllegalArgumentException] { l.join(r, Seq("k")) }
+  }
+
+  test("q271 builds without GPT-2 assets and fails when it runs, naming " +
+      "the asset directory") {
+    val assets = LmPrepGates.gpt2Assets
+    assume(!java.nio.file.Files.exists(
+      java.nio.file.Paths.get(s"$assets/gpt2_bpe_encoder.json")))
+    val df = SparkEntry.queries("q271_gpt2_corpus")(spark, dir)
+    val err = intercept[Exception](df.collect())
+    val messages = Iterator.iterate[Throwable](err)(_.getCause)
+      .takeWhile(_ != null).map(e => String.valueOf(e.getMessage))
+      .mkString("\n")
+    assert(messages.contains(s"GPT-2 assets not found under $assets"),
+      messages)
+  }
+
+  test("q271's plan under a tiny byte-level encoder passes both checks " +
+      "and encodes the dictionary once") {
+    // printable ASCII only: every other byte is an unknown token
+    val vocab = (32 until 127).map(b =>
+      BpeEncoder.byteToUnicode(b).toString -> b.toLong).toMap
+    val enc = new BpeEncoder(Map.empty, vocab, unkId = 0L)
+    val df = LmPrepGates.gpt2Corpus(spark, dir, enc)
+    val rows = df.collect()
+    assert(rows.length === 26) // one row per byte of the fixed sentence
+    assert(rows.forall(r => r.getAs[Boolean]("corpus_ok") &&
+      r.getAs[Boolean]("dict_ok")))
+    // the corpus and dictionary checks share one `counts` exchange
+    assert(planNodes(df.queryExecution.executedPlan)
+      .exists(_.isInstanceOf[ReusedExchangeExec]))
   }
 }

@@ -32,6 +32,7 @@ class GateHelpersSpec extends SparkSpec {
     "q168_transform_state", "q174_stream_semi_join", "q177_late_data",
     "q182_stream_update", "q187_session_timers",
     "q214_stream_full_outer", "q221_stream_static_outer",
+    "q238_available_now", "q241_state_reader",
     "q261_stream_mlm", "q291_stream_neardup",
     "q295_stream_image_neardup", "q300_stream_audio_neardup",
     "q301_stream_video_neardup", "q305_stream_video_framerun")

@@ -429,13 +429,13 @@ class OperatorsSpec extends SparkSpec {
     val dir = "/root/testdata/sf0.001"
     // verify mode emits the oracle-restatable exact side + the bound
     // check; the raw sketch values stay internal (engine-specific)
-    val checked = Queries2.q19ApproxSketch(spark, dir)
+    val checked = RelationalGates.q19ApproxSketch(spark, dir)
     assert(checked.columns.toSeq ===
       Seq("l_returnflag", "exact_parts", "n", "sketch_ok"))
     assert(checked.collect().forall(_.getAs[Boolean]("sketch_ok")))
     try {
       spark.conf.set("graft.sketch.selfcheck", "false")
-      val bench = Queries2.q19ApproxSketch(spark, dir)
+      val bench = RelationalGates.q19ApproxSketch(spark, dir)
       // bench mode emits the sketch values themselves and names the
       // flag sketch_unchecked: the bound check does not run there,
       // and the name must say so

@@ -136,14 +136,14 @@ class OrderedResultSpec extends SparkSpec with BeforeAndAfterAll {
 
   private val gates: Seq[(String, (SparkSession, String) => DataFrame,
       Seq[String])] = Seq(
-    ("q01", Queries.q01GroupbyAgg, Seq("l_returnflag", "l_linestatus")),
-    ("q03", Queries.q03JoinAgg, Seq("r_name", "n_name")),
-    ("q28", Queries3.q28Percentiles, Seq("l_returnflag")),
-    ("q44", Queries3.q44JaccardExact, Seq("id_a", "id_b")),
-    ("q60", Queries2.q60Bucketize, Seq("bucket")),
-    ("q79", Queries5.q79Repetition, Seq("doc_id")),
-    ("q289", Queries40.q289ImageDhash, Seq("doc_id")),
-    ("q296", Queries40.q296VideoFrames, Seq("doc_id", "frame_idx")))
+    ("q01", RelationalGates.q01GroupbyAgg, Seq("l_returnflag", "l_linestatus")),
+    ("q03", RelationalGates.q03JoinAgg, Seq("r_name", "n_name")),
+    ("q28", RelationalGates.q28Percentiles, Seq("l_returnflag")),
+    ("q44", DedupGates.q44JaccardExact, Seq("id_a", "id_b")),
+    ("q60", FeatureGates.q60Bucketize, Seq("bucket")),
+    ("q79", TextGates.q79Repetition, Seq("doc_id")),
+    ("q289", MediaGates.q289ImageDhash, Seq("doc_id")),
+    ("q296", MediaGates.q296VideoFrames, Seq("doc_id", "frame_idx")))
 
   for ((name, gate, keys) <- gates)
     test(s"$name is ordered in one partition, with no range exchange") {
@@ -188,11 +188,11 @@ class OrderedResultSpec extends SparkSpec with BeforeAndAfterAll {
     * `transform(sequence(...), xxhash64(substr(...)))` shingles). */
   private val spreadGates: Seq[(String, (SparkSession, String) => DataFrame,
       (Long, BigDecimal))] = Seq(
-    ("q44", Queries3.q44JaccardExact,
+    ("q44", DedupGates.q44JaccardExact,
       (1198L, BigDecimal("153094968173894883285"))),
-    ("q289", Queries40.q289ImageDhash,
+    ("q289", MediaGates.q289ImageDhash,
       (504L, BigDecimal("48519976489001279840"))),
-    ("q296", Queries40.q296VideoFrames,
+    ("q296", MediaGates.q296VideoFrames,
       (2016L, BigDecimal("128236271821019117345"))))
 
   for ((name, gate, before) <- spreadGates)

@@ -53,7 +53,7 @@ class Queries10Spec extends SparkSpec {
   private def pruned(eval_ : Seq[(Long, Seq[String])],
       corpus: Seq[(Long, Seq[String])], num: Int, den: Int)
       : Set[(Long, Long, Int, Int)] =
-    Queries10.containmentPairs(
+    DedupGates.containmentPairs(
       eval_.toDF("eval_id", "gs"), corpus.toDF("doc_id", "gs"), num, den)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getInt(3)))
@@ -139,7 +139,7 @@ class Queries10Spec extends SparkSpec {
         lit(0.0).as("value"),
         lit(null.asInstanceOf[String]).as("props"))
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = Queries10.q149Funnel(spark, dir).collect()
+    val out = RelationalGates.q149Funnel(spark, dir).collect()
       .map(r => (r.getLong(0),
         if (r.isNullAt(2)) None else Some(r.getLong(2)),
         if (r.isNullAt(3)) None else Some(r.getLong(3))))

@@ -39,8 +39,8 @@ class Queries16Spec extends SparkSpec {
   test("q178 gate is deterministic across runs with positive " +
       "desc-sorted ranks") {
     val dir = "/root/testdata/sf0.001"
-    val once = Queries16.q178PageRank(spark, dir).collect().toSeq
-    val again = Queries16.q178PageRank(spark, dir).collect().toSeq
+    val once = GraphGates.q178PageRank(spark, dir).collect().toSeq
+    val again = GraphGates.q178PageRank(spark, dir).collect().toSeq
     assert(once == again)
     assert(once.size == 20)
     val ranks = once.map(_.getLong(1))

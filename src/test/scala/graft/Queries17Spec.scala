@@ -94,8 +94,8 @@ class Queries17Spec extends SparkSpec {
         .toDF("event_id", "ts", "user_id", "event_type", "value",
           "props")
         .write.parquet(s"$dir/events.parquet")
-      for (rows <- Seq(Queries12.q158JsonOps(spark, dir).collect(),
-          Queries17.q188Variant(spark, dir).collect())) {
+      for (rows <- Seq(RelationalGates.q158JsonOps(spark, dir).collect(),
+          FormatGates.q188Variant(spark, dir).collect())) {
         assert(rows.length === 2)
         rows.foreach { r =>
           assert(r.getAs[Long]("n_rt") === r.getAs[Long]("n"),

@@ -27,7 +27,7 @@ class Queries20Spec extends SparkSpec {
   test("q199 plan broadcasts all three dimension chains") {
     // the in-gate require already enforces this; pin it as a spec so
     // a plan regression fails fast in CI, not only at verify time
-    Queries20.q199TpchQ5(spark, "/root/testdata/sf0.001")
+    RelationalGates.q199TpchQ5(spark, "/root/testdata/sf0.001")
       .collect() // executes the require inside the gate
   }
 }

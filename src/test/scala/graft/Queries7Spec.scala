@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.operators.Sketches
 
 /** Pins for the round-11h gate semantics that the DuckDB oracles must
-  * mirror exactly (Queries7). */
+  * mirror exactly (gates q112-q119). */
 class Queries7Spec extends SparkSpec {
   import spark.implicits._
 

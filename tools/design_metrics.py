@@ -11,6 +11,13 @@ Prints one JSON line:
                         first>, "names": {<name>: <files holding a copy>}}
   memory_drains         `processAllAvailable` calls that drain a memory
                         sink (one started within the 8 lines above)
+  gate_files            files under src/main that declare gates: a
+                        `Gate(` row or a map of gate rows
+  gate_maps             `Map(` literals of `"q..." ->` rows (the
+                        per-file `entries` / `oracles` maps)
+  gates                 `Gate("q..."` rows plus the rows of the gate
+                        maps that hold DataFrame builders
+  eager_gates           `Gate` rows that declare an `eager` reason
 
 Usage: python3 tools/design_metrics.py [repo_root]
 """
@@ -52,14 +59,56 @@ def private_defs(lines):
         yield m.group(2), " ".join(body)
 
 
+GATE = re.compile(r'^\s*Gate\("q\w+"')
+ROW = re.compile(r'^\s*"q\w+"\s*->')
+
+
+def gate_counts(lines):
+    """(maps, gates, eager) declared in one file. A gate map is a `Map(`
+    literal whose rows are `"q..." ->` pairs; its gates are the rows of
+    the maps typed to DataFrame builders. A `Gate` row may wrap: its
+    `eager` reason is looked for until the next row starts."""
+    maps = gates = eager = 0
+    opened = builders = in_row = False
+    for line in lines:
+        stripped = line.strip()
+        if opened and stripped and not stripped.startswith("//"):
+            if ROW.match(line):
+                maps += 1
+                gates += 1 if builders else 0
+            else:
+                builders = False
+            opened = False
+        elif builders and ROW.match(line):
+            gates += 1
+        if stripped == ")":
+            builders = False
+        if line.rstrip().endswith("Map("):
+            opened, builders = True, "DataFrame" in line
+            in_row = False
+        if GATE.match(line):
+            gates += 1
+            in_row = True
+        if in_row and "eager = Some(" in line:
+            eager += 1
+            in_row = False
+    return maps, gates, eager
+
+
 def main():
     root = sys.argv[1] if len(sys.argv) > 1 else os.getcwd()
     main_lines = builders = drains = 0
+    gate_files = gate_maps = gates = eager_gates = 0
     seen = {}
     for rel, lines in sources(root, "src"):
         text = "\n".join(lines)
         if rel.startswith(os.path.join("src", "main")):
             main_lines += len(lines) - (1 if lines[-1] == "" else 0)
+            maps, n, e = gate_counts(lines)
+            if maps or n:
+                gate_files += 1
+            gate_maps, gates, eager_gates = \
+                gate_maps + maps, gates + n, eager_gates + e
         builders += len(re.findall(r"SparkSession\s*\.builder\b", text))
         for i, line in enumerate(lines):
             if "processAllAvailable" in line and any(
@@ -81,6 +130,10 @@ def main():
             "names": dict(sorted(dups.items())),
         },
         "memory_drains": drains,
+        "gate_files": gate_files,
+        "gate_maps": gate_maps,
+        "gates": gates,
+        "eager_gates": eager_gates,
     }, sort_keys=False))
 
 
