@@ -1,7 +1,9 @@
 package graft.functions;
 
 import java.util.concurrent.ConcurrentHashMap;
+import java.math.BigDecimal;
 import java.math.BigInteger;
+import java.math.RoundingMode;
 
 import org.apache.spark.sql.catalyst.expressions.XXH64;
 import org.apache.spark.sql.catalyst.util.ArrayData;
@@ -1289,6 +1291,55 @@ public final class Kernels {
     }
     double factor = Math.pow(10, -decimals);
     return Math.rint(number / factor) * factor;
+  }
+
+  // ---------------------------------------------------------------------
+  // Exact sums: doubles as 4-decimal fixed point
+  // ---------------------------------------------------------------------
+
+  /** Below this magnitude the fast path's margin,
+   * 10^4·ulp(x) + ulp(10^4·x), stays under 0.3: a midpoint half a unit
+   * away is never within it. */
+  private static final double DECIMAL4_FAST_LIMIT = 1e11;
+  /** 2^63 / 10^4 rounded up to a double: every smaller magnitude has an
+   * unscaled value that fits a long. */
+  private static final double DECIMAL4_LIMIT = 0x1p63 / 1e4;
+
+  /**
+   * The unscaled value of Spark's {@code CAST(x AS DECIMAL(25,4))}: the
+   * decimal {@code Double.toString(x)} rounded HALF_UP to 4 places, times
+   * 10^4. Sums of these longs are exact, so an aggregate over them does
+   * not depend on partial-aggregation order.
+   *
+   * <p>Fast path, for |x| below 1e11: with y = |x|·10^4 as a double and
+   * its fraction d = y − floor(y) (exact), the answer is
+   * floor(y) + (d > 0.5), with x's sign, whenever |d − 0.5| exceeds the
+   * margin 10^4·ulp(x) + ulp(y). {@code Double.toString} round-trips, so
+   * its decimal is within ulp(x)/2 of x, and y is within ulp(y)/2 of
+   * 10^4·x: the scaled decimal is within half the margin of y, and no
+   * rounding midpoint lies between them. Every other input takes the
+   * exact BigDecimal path.
+   *
+   * @throws ArithmeticException naming x when x is NaN, infinite, or at
+   *     least 2^63/10^4 in magnitude
+   */
+  public static long decimal4Unscaled(double x) {
+    double a = Math.abs(x);
+    if (a < DECIMAL4_FAST_LIMIT) {
+      double y = a * 1e4;
+      double whole = Math.floor(y);
+      double d = y - whole;
+      if (Math.abs(d - 0.5) > 1e4 * Math.ulp(x) + Math.ulp(y)) {
+        long u = (long) whole + (d > 0.5 ? 1 : 0);
+        return x < 0 ? -u : u;
+      }
+    } else if (!(a < DECIMAL4_LIMIT)) {
+      throw new ArithmeticException("decimal4Unscaled: " + x
+          + " is NaN, infinite or at least 2^63/10^4 in magnitude;"
+          + " its 4-decimal unscaled value does not fit a long");
+    }
+    return new BigDecimal(Double.toString(x))
+        .setScale(4, RoundingMode.HALF_UP).unscaledValue().longValueExact();
   }
 
   public static double dotF(ArrayData a, ArrayData b) {

@@ -72,6 +72,9 @@ object Bench {
     // stay on in the Verify/correctness path (default true)
     spark.conf.set("graft.sketch.selfcheck", "false")
 
+    // each failed gate's innermost cause message (the first, if it
+    // failed in both passes)
+    val failureReasons = scala.collection.mutable.Map.empty[String, String]
     def materialize(name: String): (Double, Boolean) = {
       val t0 = System.nanoTime()
       val ok =
@@ -80,7 +83,9 @@ object Bench {
             .write.mode("overwrite").format("noop").save()
           true
         } catch { case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+          val reason = innermostMessage(e)
+          System.err.println(s"[bench] $name FAILED: $reason")
+          failureReasons.getOrElseUpdate(name, reason)
           false
         }
       val dt = (System.nanoTime() - t0) / 1e9
@@ -193,6 +198,9 @@ object Bench {
     // banded on its surviving pass
     val failed = (s1 ++ s2).collect { case (k, (_, false)) => k }
       .distinct.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val reasonsJson = failureReasons.toSeq.sorted
+      .map { case (k, v) => s"${jsonString(k)}:${jsonString(v)}" }
+      .mkString("{", ",", "}")
     val t1 = s1.map(_._2._1).sum
     val t2 = s2.map(_._2._1).sum
     val total = pairMin.map(_._2).sum
@@ -332,7 +340,7 @@ object Bench {
     val canaryJson =
       s"""{"samples":${cwJson(cw1 ++ cw2)},"value":${r3(canaryMin)},"ratio":${r3(canaryRatio)}}"""
     val summaryFields =
-      s""""band_median":$bandMedian,"over_2x":${overNames.map("\"" + _ + "\"").mkString("[", ",", "]")},"over_detail":$overDetail,"env_suspect":$envSuspect,"env_loaded":$envLoaded,"canary":$canaryJson,"load_avg_1m":$load,"nproc":$nproc,"samples":[$t1,$t2],"value":$total,"failed":$failed,"subset":$subset,"only":$onlyJson,"sf":"$sfDir""""
+      s""""band_median":$bandMedian,"over_2x":${overNames.map("\"" + _ + "\"").mkString("[", ",", "]")},"over_detail":$overDetail,"env_suspect":$envSuspect,"env_loaded":$envLoaded,"canary":$canaryJson,"load_avg_1m":$load,"nproc":$nproc,"samples":[$t1,$t2],"value":$total,"failed":$failed,"failure_reasons":$reasonsJson,"subset":$subset,"only":$onlyJson,"sf":"$sfDir""""
     // line 1: summary-first witness (head-truncation-proof)
     println(s"""{"metric":"pair_min_summary",$summaryFields}""")
     // Full artifact (big maps: full-precision pair-min, both raw
@@ -342,7 +350,7 @@ object Bench {
     // per-query numbers were ever machine-readable. Nothing is
     // dropped: the file carries strictly more than the old line 2.
     val fullArtifact =
-      s"""{"metric":"pair_min_total","value":$total,"unit":"sec","sf":"$sfDir","run_id":"$runId","subset":$subset,"only":$onlyJson,"queries":$qs,"queries_s1":${fmt(s1)},"queries_s2":${fmt(s2)},"samples":[$t1,$t2],"failed":$failed,"load_avg_1m":$load,"nproc":$nproc,"canary":$canaryJson,"canary_windows":{"s1":${cwJson(cw1)},"s2":${cwJson(cw2)}}$bandReport,"env_suspect":$envSuspect,"env_loaded":$envLoaded,"summary_tail":{$summaryFields}}"""
+      s"""{"metric":"pair_min_total","value":$total,"unit":"sec","sf":"$sfDir","run_id":"$runId","subset":$subset,"only":$onlyJson,"queries":$qs,"queries_s1":${fmt(s1)},"queries_s2":${fmt(s2)},"samples":[$t1,$t2],"failed":$failed,"failure_reasons":$reasonsJson,"load_avg_1m":$load,"nproc":$nproc,"canary":$canaryJson,"canary_windows":{"s1":${cwJson(cw1)},"s2":${cwJson(cw2)}}$bandReport,"env_suspect":$envSuspect,"env_loaded":$envLoaded,"summary_tail":{$summaryFields}}"""
     // sf + run id in the default name: concurrent runs (an sf0.1 and
     // an sf1.0 pair) no longer overwrite each other's artifact
     val artifactPath = sys.env.getOrElse("SPARK_GRAFT_ARTIFACT",

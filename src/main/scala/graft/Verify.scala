@@ -1,7 +1,9 @@
 package graft
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for a DuckDB compare (`tools/check_oracle.py`).
+  * Closes with a summary that lists each gate that failed, with its
+  * reason. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, prefixes @ _*) = args
@@ -11,31 +13,28 @@ object Verify {
       prefixes.isEmpty || prefixes.exists(name.startsWith)
     val spark = GraftSession(GraftSession.hostCores)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
-      if (selected(name)) {
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        }
+    val names = SparkEntry.queries.keys.filter(selected).toSeq
+    val failures = names.flatMap { name =>
+      try {
+        SparkEntry.queries(name)(spark, sfDir).coalesce(1).write
+          .mode("overwrite").parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
+        val reason = innermostMessage(e)
+        System.err.println(s"[verify] $name failed: $reason")
+        Some(name -> reason)
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
       .filter { case (k, _) => selected(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    println(s"[verify] ${names.size - failures.size} of ${names.size} " +
+      s"gates written, ${failures.size} failed")
+    failures.sortBy(_._1).foreach { case (name, reason) =>
+      println(s"[verify] FAILED $name: $reason")
+    }
   }
 }

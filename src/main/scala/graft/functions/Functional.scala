@@ -318,6 +318,13 @@ object Functional {
     invoke("roundRef", DoubleType, Seq(c.cast(DoubleType), lit(decimals)),
       Seq(DoubleType, IntegerType))
 
+  /** The unscaled LONG of `CAST(c AS DECIMAL(25,4))` (Kernels
+    * .decimal4Unscaled): the value in ten-thousandths, rounded HALF_UP
+    * from the double's shortest decimal. Fails on NaN, ±Inf and
+    * |c| ≥ 2^63/10^4. */
+  def decimal4Unscaled(c: Column): Column =
+    invoke("decimal4Unscaled", LongType, Seq(c.cast(DoubleType)))
+
   /** functional.rand (velox_rt/functional.py:47-63): uniform [0,1) per
     * row. The seeded form is deterministic for a fixed partition
     * layout (per-partition XOR-shift streams — Spark semantics); the

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types._
 
 import graft.frame.TFrame
 import graft.frame.namespaces._
+import graft.functions.Functional
 import graft.operators.ZOrder
 import graft.sources.Bucketed
 
@@ -769,9 +770,8 @@ object FormatGates extends GateFamily("formats") {
       val q = s.read.parquet(path)
         .select($"l_orderkey",
           size($"items.l_quantity").as("n_items"),
-          aggregate($"items.l_quantity", lit(0L), (a, x) => a +
-            (x.cast(DecimalType(25, 4)) * 10000).cast(LongType))
-            .as("qty_scaled"))
+          aggregate($"items.l_quantity", lit(0L),
+            (a, x) => a + Functional.decimal4Unscaled(x)).as("qty_scaled"))
       val scan = q.queryExecution.executedPlan.collectLeaves()
         .map(_.toString()).mkString("\n")
       require(scan.contains("l_quantity"),

@@ -27,9 +27,10 @@ final case class Gate(
   * and final hash aggregates, and every output is deterministically
   * ordered. Float-safety convention for the oracle compare: per-row
   * arithmetic is written with the identical IEEE expression on both
-  * sides (bit-exact); order-dependent SUMs go through an exact
-  * DECIMAL(25,4) cast; AVG/STDDEV are rounded to a tolerance far above
-  * fp noise.
+  * sides (bit-exact); order-dependent SUMs are exact, computed over the
+  * DECIMAL(25,4) unscaled longs of the values (`dsum`, which the oracle
+  * writes as a SUM over a DECIMAL(25,4) cast); AVG/STDDEV are rounded
+  * to a tolerance far above fp noise.
   */
 abstract class GateFamily(val name: String) {
   def gates: Seq[Gate]

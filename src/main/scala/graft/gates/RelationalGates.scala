@@ -2806,9 +2806,9 @@ object RelationalGates extends GateFamily("relational") {
           .as("max_qty"),
         exists($"items", x => x.getField("l_extendedprice") > 50000)
           .as("has_big"),
-        (aggregate($"items", lit(0L), (acc, x) => acc +
-          (x.getField("l_extendedprice").cast(DecimalType(25, 4)) * 10000)
-            .cast(LongType)) / 10000.0).as("price_total"))
+        (aggregate($"items", lit(0L), (acc, x) =>
+          acc + Functional.decimal4Unscaled(x.getField("l_extendedprice")))
+          / 10000.0).as("price_total"))
       .orderBy($"l_orderkey")
   }
 
@@ -2838,8 +2838,7 @@ object RelationalGates extends GateFamily("relational") {
   def q184MapHof(s: SparkSession, dir: String): DataFrame = {
     val perLine = Tables(s, dir, "lineitem")
       .groupBy($"l_orderkey", $"l_linenumber")
-      .agg(sum(($"l_quantity".cast(DecimalType(25, 4)) * 10000)
-        .cast(LongType)).as("sq"),
+      .agg(sum(Functional.decimal4Unscaled($"l_quantity")).as("sq"),
         count(lit(1)).as("cnt"))
     perLine.groupBy($"l_orderkey")
       .agg(
@@ -2953,8 +2952,7 @@ object RelationalGates extends GateFamily("relational") {
       .select(col("c_custkey"), col("c_mktsegment")).as[(Long, String)]
     val ords = Tables(s, dir, "orders")
       .select(col("o_custkey"),
-        (col("o_totalprice").cast(DecimalType(25, 4)) * 10000)
-          .cast(LongType)).as[(Long, Long)]
+        Functional.decimal4Unscaled(col("o_totalprice"))).as[(Long, Long)]
     cust.groupByKey(_._1).cogroup(ords.groupByKey(_._1)) {
       (key, cs, os) =>
         val segs = cs.map(_._2).toArray

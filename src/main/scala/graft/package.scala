@@ -3,8 +3,11 @@ package object graft {
   import org.apache.spark.sql.execution.SparkPlan
   import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
     QueryStageExec}
-  import org.apache.spark.sql.functions.{col, sum}
-  import org.apache.spark.sql.types.{DecimalType, DoubleType}
+  import org.apache.spark.sql.functions.col
+  import org.apache.spark.sql.graftshim.Shim
+  import org.apache.spark.sql.types.DoubleType
+
+  import graft.functions.Functional
 
   /** `$"name"` column interpolator, usable without a SparkSession's
     * implicits in scope (queries here are session-agnostic). */
@@ -13,12 +16,55 @@ package object graft {
     def $(args: Any*): Column = col(sc.s(args: _*))
   }
 
-  /** Exact distributed sum of a double column: cast to decimal before
-    * aggregation so partial-agg order cannot change the result. The
-    * oracle side writes the same sum as
-    * `CAST(SUM(CAST(x AS DECIMAL(25,4))) AS DOUBLE)`. */
+  /** Exact distributed sum of a double column, equal bit for bit to the
+    * oracle's `CAST(SUM(CAST(x AS DECIMAL(25,4))) AS DOUBLE)`.
+    *
+    * Each row becomes the unscaled long of its DECIMAL(25,4) cast
+    * (`Functional.decimal4Unscaled`): `Double.toString(x)` rounded
+    * HALF_UP to 4 places. Its fast path rounds y = |x|·10^4 as a double
+    * and is exact because `Double.toString` round-trips (its decimal is
+    * within ulp(x)/2 of x) and y is within ulp(y)/2 of 10^4·x: when y's
+    * fraction is more than 10^4·ulp(x) + ulp(y) from one half, no
+    * rounding midpoint lies between y and the scaled decimal; every
+    * other x takes the exact `BigDecimal` path. The longs are summed
+    * exactly, so partial-aggregation order cannot change the result, and
+    * each group's total becomes a DECIMAL(38,4), with the value of the
+    * oracle's decimal sum, and then a double. No row pays for a
+    * `BigDecimal` cast or a BigInteger buffer update.
+    *
+    * Range: every |x| and every partial or final total must stay below
+    * 2^63 ten-thousandths, about 9.2e14; at TPC-H prices that covers a
+    * one-group `sum(l_extendedprice)` up to about sf1000. Beyond it the
+    * query fails: a NaN, infinite or too-large x with an
+    * `ArithmeticException` naming x, an overflowing total with Spark's
+    * ARITHMETIC_OVERFLOW error, also where `spark.sql.ansi.enabled` is
+    * false. The sum never wraps and never turns null; a group with no
+    * non-null x gives null. */
   def dsum(c: Column): Column =
-    sum(c.cast(DecimalType(25, 4))).cast(DoubleType)
+    Shim.unscaledSum(Functional.decimal4Unscaled(c), 4).cast(DoubleType)
+
+  /** The message of `e`'s innermost cause: what a failed gate reports,
+    * rather than the job-abort and task-failure wrappers around it. */
+  def innermostMessage(e: Throwable): String = {
+    var c = e
+    while (c.getCause != null && (c.getCause ne c)) c = c.getCause
+    Option(c.getMessage).getOrElse(c.getClass.getName)
+  }
+
+  /** `s` as an ASCII JSON string literal. Escapes backslash, quote,
+    * every control character (< 0x20): a tab or CR left raw in an
+    * oracle's SQL or an error message would make a strict JSON parser
+    * reject the whole document. Escapes every non-ASCII character too:
+    * a JVM whose stdout is not UTF-8 prints it as `?`. */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' || c > '~' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 
   /** Every node of a physical plan, this one first. Descends through
     * AQE's wrapper (its current plan) and through every finished query

@@ -100,6 +100,20 @@ object Shim {
       propagateNull = true, returnNullable = false, isDeterministic = true,
       None))
 
+  /** The sum of a LONG column of unscaled values, as the DECIMAL(38,
+    * scale) they stand for. The long sum runs in ANSI mode whatever the
+    * session's `spark.sql.ansi.enabled`, so an overflow fails the query
+    * and never wraps; precision 38 holds every long, so the decimal
+    * never overflows. */
+  def unscaledSum(unscaled: Column, scale: Int): Column = {
+    import org.apache.spark.sql.catalyst.expressions.{EvalMode, MakeDecimal,
+      NumericEvalContext}
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Sum
+    val sum = Sum(expression(unscaled), NumericEvalContext(EvalMode.ANSI))
+    column(MakeDecimal(sum.toAggregateExpression(), 38, scale,
+      nullOnOverflow = false))
+  }
+
   /** Bloom-filter aggregate over a pre-hashed LONG column (pass
     * xxhash64 of the key) → binary sketch. The same expression Spark's
     * InjectRuntimeFilter builds for its runtime row-group filters,

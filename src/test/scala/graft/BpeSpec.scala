@@ -94,7 +94,7 @@ class BpeSpec extends SparkSpec {
 
   test("real GPT-2 encoder files reproduce the reference's pinned ids " +
       "(test_text_ops.py:87-94)") {
-    val assets = "/root/reference/torcharrow/test/asset"
+    val assets = LmPrepGates.gpt2Assets
     assume(java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$assets/gpt2_bpe_encoder.json")))
     val enc = BpeEncoder.fromFiles(s"$assets/gpt2_bpe_encoder.json",

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -417,5 +418,61 @@ class KernelsSpec extends SparkSpec {
     val viaNs = Seq(2.5, 3.5).toDF("x")
       .select(col("x").arith.round(0)).collect().map(_.getDouble(0)).toSeq
     assert(viaNs === Seq(2.0, 4.0))
+  }
+
+  test("decimal4Unscaled: property — equals the unscaled value of Spark's " +
+      "CAST(x AS DECIMAL(25,4)) on 1.25 M fuzzed doubles and on every " +
+      "double column of the committed sf0.01 tables") {
+    val rnd = new scala.util.Random(20261019L)
+    val n = 250000
+    def signed(x: Double) = if (rnd.nextBoolean()) x else -x
+    def price = (rnd.nextInt(10000000) + 1) / 100.0
+    def disc = 1.0 - rnd.nextInt(11) / 100.0
+    def tax = 1.0 + rnd.nextInt(9) / 100.0
+    // halfway between two 4-place decimals, as literals would parse
+    // (k + 0.5) / 10^4 and as sums would land (k / 10^4 ± 0.00005):
+    // the inputs the fast path must hand to the exact one
+    def tie =
+      if (rnd.nextBoolean()) (2.0 * rnd.nextInt(1 << 30) + 1) / 2e4
+      else rnd.nextInt(1 << 30) / 1e4 + signed(0.00005)
+    def magnitude = signed(math.pow(10, -8 + 21 * rnd.nextDouble()))
+    val fuzz = Seq(() => price, () => price * disc,
+      () => price * disc * tax, () => signed(tie), () => magnitude)
+      .flatMap(gen => Seq.fill(n)(gen()))
+    val dir = "perfbench/data/sf0.01"
+    val tableCols = new java.io.File(dir).list().toSeq.sorted
+      .map(_.stripSuffix(".parquet")).flatMap { t =>
+        val df = Tables(spark, dir, t)
+        df.schema.fields.filter(_.dataType == DoubleType)
+          .map(f => df.select(col(f.name).as("x")))
+      }
+    assert(tableCols.size >= 8)
+    val xs = (fuzz.toDF("x") +: tableCols).reduce(_ union _)
+    val cast = (col("x").cast(DecimalType(25, 4)) * 10000).cast(LongType)
+    val bad = xs
+      .select(col("x"), Functional.decimal4Unscaled(col("x")).as("got"),
+        cast.as("want"))
+      .where(!(col("got") <=> col("want"))).limit(10).collect()
+    assert(bad.isEmpty, bad.mkString("mismatches (x, kernel, cast): ", ", ", ""))
+    assert(xs.count() >= fuzz.size + 60000)
+  }
+
+  test("decimal4Unscaled: ties round half up, -0.0 is 0, null stays null, " +
+      "and NaN, ±Inf and 1e15 fail naming the value") {
+    assert(Kernels.decimal4Unscaled(1.00005) === 10001L)
+    assert(Kernels.decimal4Unscaled(-1.00005) === -10001L)
+    assert(Kernels.decimal4Unscaled(0.00005) === 1L)
+    assert(Kernels.decimal4Unscaled(2.675) === 26750L)
+    assert(Kernels.decimal4Unscaled(-0.0) === 0L)
+    assert(Kernels.decimal4Unscaled(922337203685477.5) ===
+      9223372036854775000L)
+    Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity,
+        1e15).foreach { x =>
+      val e = intercept[ArithmeticException](Kernels.decimal4Unscaled(x))
+      assert(e.getMessage.contains(x.toString), e.getMessage)
+    }
+    val got = Seq(Some(1.5), None).toDF("x")
+      .select(Functional.decimal4Unscaled(col("x")))
+    assert(col0(got) === Seq(15000L, null))
   }
 }

@@ -18,6 +18,9 @@ Prints one JSON line:
   gates                 `Gate("q..."` rows plus the rows of the gate
                         maps that hold DataFrame builders
   eager_gates           `Gate` rows that declare an `eager` reason
+  decimal4_inline       `DecimalType(25, 4)` literals under src/main: exact
+                        sums and scaled values written inline rather than
+                        through `dsum` / `Functional.decimal4Unscaled`
 
 Usage: python3 tools/design_metrics.py [repo_root]
 """
@@ -98,7 +101,7 @@ def gate_counts(lines):
 def main():
     root = sys.argv[1] if len(sys.argv) > 1 else os.getcwd()
     main_lines = builders = drains = 0
-    gate_files = gate_maps = gates = eager_gates = 0
+    gate_files = gate_maps = gates = eager_gates = decimal4 = 0
     seen = {}
     for rel, lines in sources(root, "src"):
         text = "\n".join(lines)
@@ -109,6 +112,7 @@ def main():
                 gate_files += 1
             gate_maps, gates, eager_gates = \
                 gate_maps + maps, gates + n, eager_gates + e
+            decimal4 += len(re.findall(r"DecimalType\(25,\s*4\)", text))
         builders += len(re.findall(r"SparkSession\s*\.builder\b", text))
         for i, line in enumerate(lines):
             if "processAllAvailable" in line and any(
@@ -134,6 +138,7 @@ def main():
         "gate_maps": gate_maps,
         "gates": gates,
         "eager_gates": eager_gates,
+        "decimal4_inline": decimal4,
     }, sort_keys=False))
 
 
