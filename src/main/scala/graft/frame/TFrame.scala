@@ -262,6 +262,8 @@ final case class TFrame(df: DataFrame) extends TFrameArith {
   def min: TFrame = summarize(c => functions.min(df(c)))
   def max: TFrame = summarize(c => functions.max(df(c)))
   def std: TFrame = summarize(c => stddev_samp(df(c)))
+  /** Spark's exact `median` per column, not `graft.exactPercentile`: a
+    * column here may be decimal, which that helper rejects. */
   def median: TFrame = summarize(c => functions.median(df(c)))
   def modeAgg: TFrame = summarize(c => functions.mode(df(c)))
   def nunique(c: String): Long =

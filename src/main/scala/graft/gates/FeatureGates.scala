@@ -260,11 +260,10 @@ object FeatureGates extends GateFamily("features") {
     * exact in DECIMAL(25,4) in both engines. */
   def q154Winsorize(s: SparkSession, dir: String): DataFrame = {
     val li = Tables(s, dir, "lineitem")
-    // ONE percentile() call for both borders — separate calls each
+    // ONE percentile call for both borders — separate calls each
     // build their own per-group value buffer (the q122/q160 lesson)
     val bands = li.groupBy($"l_returnflag")
-      .agg(percentile($"l_extendedprice", array(lit(0.05), lit(0.95)))
-        .as("ps"))
+      .agg(exactPercentiles($"l_extendedprice", Seq(0.05, 0.95)).as("ps"))
       .select($"l_returnflag",
         round(element_at($"ps", 1), 4).as("p05"),
         round(element_at($"ps", 2), 4).as("p95"))
@@ -364,12 +363,12 @@ object FeatureGates extends GateFamily("features") {
     * DECIMAL. */
   def q160EquiDepth(s: SparkSession, dir: String): DataFrame = {
     val li = Tables(s, dir, "lineitem")
-    // ONE percentile() call for all three borders — each call builds
+    // ONE percentile call for all three borders — each call builds
     // its own full-column value buffer, so three calls tripled the
     // dominant cost (the q122 lesson)
     val b = li.agg(
-      percentile($"l_extendedprice", array(lit(0.25), lit(0.5), lit(0.75)))
-        .as("ps")).head().getSeq[Double](0)
+      exactPercentiles($"l_extendedprice", Seq(0.25, 0.5, 0.75)).as("ps"))
+      .head().getSeq[Double](0)
     // driver-side replica of Spark round(_, 4): HALF_UP over the
     // shortest decimal repr (BigDecimal.valueOf semantics) — the
     // contract the DuckDB oracle's round() matched all along
@@ -500,11 +499,11 @@ object FeatureGates extends GateFamily("features") {
   def q165MadOutliers(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables(s, dir, "events").where($"value".isNotNull)
     val med = ev.groupBy($"event_type")
-      .agg(percentile($"value", lit(0.5)).as("med"))
+      .agg(exactPercentile($"value", 0.5).as("med"))
     val dev = ev.join(broadcast(med), "event_type")
       .withColumn("adev", abs($"value" - $"med"))
     val mad = dev.groupBy($"event_type")
-      .agg(percentile($"adev", lit(0.5)).as("mad"))
+      .agg(exactPercentile($"adev", 0.5).as("mad"))
     dev.join(broadcast(mad), "event_type")
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n"),

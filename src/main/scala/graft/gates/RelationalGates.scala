@@ -542,7 +542,7 @@ object RelationalGates extends GateFamily("relational") {
   def q20Median(s: SparkSession, dir: String): DataFrame =
     Tables(s, dir, "lineitem")
       .groupBy($"l_returnflag")
-      .agg(median($"l_quantity").as("qty_median"),
+      .agg(exactPercentile($"l_quantity", 0.5).as("qty_median"),
         count(lit(1)).as("n"))
       .orderBy($"l_returnflag")
 
@@ -590,9 +590,8 @@ object RelationalGates extends GateFamily("relational") {
           .as("__p99"),
         countDistinct($"l_partkey").as("exact_parts"),
         count(lit(1)).as("n"),
-        percentile($"l_extendedprice",
-          array(lit(0.485), lit(0.515), lit(0.975), lit(0.9999)))
-          .as("__pb"))
+        exactPercentiles($"l_extendedprice",
+          Seq(0.485, 0.515, 0.975, 0.9999)).as("__pb"))
       .select($"l_returnflag", $"exact_parts", $"n",
         when(
           abs($"__approx_parts" - $"exact_parts").cast(DoubleType) /
@@ -782,15 +781,14 @@ object RelationalGates extends GateFamily("relational") {
     * Both engines interpolate linearly; rounding absorbs expression-
     * form fp noise. */
   def q28Percentiles(s: SparkSession, dir: String): DataFrame = {
-    // one percentile() aggregate computes all three order statistics in
-    // a single per-group pass; scalar output columns (the driver's
-    // compare cannot hash list columns)
-    val q = percentile($"l_extendedprice",
-      array(lit(0.25), lit(0.5), lit(0.75)))
+    // one aggregate computes all three order statistics in a single
+    // per-group pass; scalar output columns (the oracle compare cannot
+    // hash list columns)
+    val q = exactPercentiles($"l_extendedprice", Seq(0.25, 0.5, 0.75))
     Tables(s, dir, "lineitem")
       .groupBy($"l_returnflag")
       .agg(q.as("q"),
-        round(percentile($"l_quantity", lit(0.9)), 4).as("qty_p90"))
+        round(exactPercentile($"l_quantity", 0.9), 4).as("qty_p90"))
       .select($"l_returnflag",
         round($"q".getItem(0), 4).as("p25"),
         round($"q".getItem(1), 4).as("p50"),
@@ -1525,7 +1523,7 @@ object RelationalGates extends GateFamily("relational") {
     val rows = Tables(s, dir, "lineitem")
       .groupBy($"l_linestatus")
       .agg(
-        percentile($"l_extendedprice", arr(allPs)).as("exall"),
+        exactPercentiles($"l_extendedprice", allPs).as("exall"),
         percentile_approx($"l_extendedprice", arr(ps), lit(1000))
           .as("ap"))
       .select($"l_linestatus",

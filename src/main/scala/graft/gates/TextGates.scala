@@ -759,8 +759,10 @@ object TextGates extends GateFamily("text") {
       .agg(count(lit(1)).as("n_docs"),
         (count(lit(1)) - countDistinct($"fp")).as("n_dups"),
         sum($"nt").as("tokens"),
-        round(expr("percentile(nt, 0.5)"), 4).as("med_tokens"),
-        round(expr("percentile(nt, 0.9)"), 4).as("p90_tokens"))
+        exactPercentiles($"nt", Seq(0.5, 0.9)).as("ps"))
+      .select($"source", $"lang", $"n_docs", $"n_dups", $"tokens",
+        round($"ps".getItem(0), 4).as("med_tokens"),
+        round($"ps".getItem(1), 4).as("p90_tokens"))
       .orderBy($"source", $"lang")
 
   val q201Sql: String =

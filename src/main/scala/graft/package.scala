@@ -43,6 +43,31 @@ package object graft {
   def dsum(c: Column): Column =
     Shim.unscaledSum(Functional.decimal4Unscaled(c), 4).cast(DoubleType)
 
+  /** Exact percentile of `x` at p, with the value of Spark's
+    * `percentile(x, p)` (continuous, linear interpolation between the
+    * two closest rows: TorchArrow's `quantile(q, 'linear')`), counted in
+    * a primitive double→count table (`graft.functions.DoubleCounts`)
+    * instead of Spark's boxed map. A group with no non-null x gives null.
+    *
+    * x must be a double, float or integral column; an integral x is
+    * exact up to 2^53, where doubles stop holding every integer. A
+    * decimal x is rejected: use Spark's `percentile` there. As in
+    * Spark, -0.0 and 0.0 are distinct keys that compare equal, and NaN
+    * sorts above +Inf. Memory grows with the distinct values per group. */
+  def exactPercentile(x: Column, p: Double): Column =
+    Shim.exactPercentile(x, checkedPercentages(Seq(p)), array = false)
+
+  /** `exactPercentile` at each of ps, from one table per group: an
+    * ARRAY<DOUBLE NOT NULL> in the order of ps. */
+  def exactPercentiles(x: Column, ps: Seq[Double]): Column =
+    Shim.exactPercentile(x, checkedPercentages(ps), array = true)
+
+  private def checkedPercentages(ps: Seq[Double]): Seq[Double] = {
+    require(ps.nonEmpty && ps.forall(p => p >= 0.0 && p <= 1.0),
+      s"percentages must lie in [0, 1], got ${ps.mkString(", ")}")
+    ps
+  }
+
   /** The message of `e`'s innermost cause: what a failed gate reports,
     * rather than the job-abort and task-failure wrappers around it. */
   def innermostMessage(e: Throwable): String = {

@@ -114,6 +114,11 @@ object Shim {
       nullOnOverflow = false))
   }
 
+  /** `ExactPercentile` of `x` at `ps`: an array of one double per p when
+    * `array` is true, else the double at the only p. */
+  def exactPercentile(x: Column, ps: Seq[Double], array: Boolean): Column =
+    column(ExactPercentile(expression(x), ps, array).toAggregateExpression())
+
   /** Bloom-filter aggregate over a pre-hashed LONG column (pass
     * xxhash64 of the key) → binary sketch. The same expression Spark's
     * InjectRuntimeFilter builds for its runtime row-group filters,

@@ -176,13 +176,6 @@ class OrderedResultSpec extends SparkSpec with BeforeAndAfterAll {
       case _ => false
     })
 
-  /** (rows, Σ xxhash64 of each row) of a result, order-insensitive. */
-  private def digest(df: DataFrame): (Long, BigDecimal) = {
-    val r = df.agg(count(lit(1)), sum(xxhash64(df.columns.map(col): _*)
-      .cast("decimal(38,0)"))).head()
-    (r.getLong(0), BigDecimal(r.getDecimal(1)))
-  }
-
   /** The gates' digests over sf0.001 from before their kernels were
     * spread (q44 also from before `charShingleSet` replaced its
     * `transform(sequence(...), xxhash64(substr(...)))` shingles). */

@@ -13,6 +13,14 @@ trait SparkSpec extends AnyFunSuite {
   def col0(df: DataFrame): Seq[Any] =
     df.collect().toSeq.map(r => if (r.isNullAt(0)) null else norm(r.get(0)))
 
+  /** (rows, Σ xxhash64 of each row) of a result, order-insensitive. */
+  def digest(df: DataFrame): (Long, BigDecimal) = {
+    import org.apache.spark.sql.functions.{col, count, lit, sum, xxhash64}
+    val r = df.agg(count(lit(1)), sum(xxhash64(df.columns.map(col): _*)
+      .cast("decimal(38,0)"))).head()
+    (r.getLong(0), BigDecimal(r.getDecimal(1)))
+  }
+
   private def norm(v: Any): Any = v match {
     case s: scala.collection.Seq[_] => s.toList.map(norm)
     case m: scala.collection.Map[_, _] =>

@@ -21,6 +21,11 @@ Prints one JSON line:
   decimal4_inline       `DecimalType(25, 4)` literals under src/main: exact
                         sums and scaled values written inline rather than
                         through `dsum` / `Functional.decimal4Unscaled`
+  spark_percentile      Spark `percentile(` / `median(` calls on the code
+                        lines (comments stripped) of the gate files under
+                        src/main/scala/graft/gates: exact percentiles
+                        written through Spark's boxed aggregate rather
+                        than `exactPercentile` / `exactPercentiles`
 
 Usage: python3 tools/design_metrics.py [repo_root]
 """
@@ -60,6 +65,18 @@ def private_defs(lines):
             else:
                 break
         yield m.group(2), " ".join(body)
+
+
+SPARK_PERCENTILE = re.compile(r"(?<![\w.])(?:percentile|median)\(")
+
+
+def code_text(line):
+    """A line without its comment: nothing of a scaladoc or block-comment
+    line, and nothing after `//`."""
+    stripped = line.strip()
+    if stripped.startswith(("*", "/*")):
+        return ""
+    return line.split("//", 1)[0]
 
 
 GATE = re.compile(r'^\s*Gate\("q\w+"')
@@ -102,6 +119,8 @@ def main():
     root = sys.argv[1] if len(sys.argv) > 1 else os.getcwd()
     main_lines = builders = drains = 0
     gate_files = gate_maps = gates = eager_gates = decimal4 = 0
+    spark_percentile = 0
+    gates_dir = os.path.join("src", "main", "scala", "graft", "gates")
     seen = {}
     for rel, lines in sources(root, "src"):
         text = "\n".join(lines)
@@ -113,6 +132,10 @@ def main():
             gate_maps, gates, eager_gates = \
                 gate_maps + maps, gates + n, eager_gates + e
             decimal4 += len(re.findall(r"DecimalType\(25,\s*4\)", text))
+        if rel.startswith(gates_dir):
+            spark_percentile += sum(
+                len(SPARK_PERCENTILE.findall(code_text(line)))
+                for line in lines)
         builders += len(re.findall(r"SparkSession\s*\.builder\b", text))
         for i, line in enumerate(lines):
             if "processAllAvailable" in line and any(
@@ -139,6 +162,7 @@ def main():
         "gates": gates,
         "eager_gates": eager_gates,
         "decimal4_inline": decimal4,
+        "spark_percentile": spark_percentile,
     }, sort_keys=False))
 
 
