@@ -19,6 +19,18 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     GateFamily.gates.map(g => g.name -> g.build).toMap
 
+  /** The sorted gate names that start with one of `prefixes`, or every
+    * gate name when there are none. Fails naming each prefix that
+    * matches no gate, so a mistyped prefix cannot select nothing. */
+  def select(prefixes: Seq[String]): Seq[String] = {
+    val names = queries.keys.toSeq.sorted
+    val unmatched = prefixes.filterNot(p => names.exists(_.startsWith(p)))
+    require(unmatched.isEmpty,
+      s"no gate name starts with ${unmatched.mkString(", ")}")
+    if (prefixes.isEmpty) names
+    else names.filter(n => prefixes.exists(n.startsWith))
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

@@ -9,11 +9,9 @@ object Verify {
     val Array(sfDir, outDir, prefixes @ _*) = args
     // optional name-prefix filter (local iteration); the driver passes
     // exactly (sfDir, outDir) and gets the full dump
-    def selected(name: String): Boolean =
-      prefixes.isEmpty || prefixes.exists(name.startsWith)
+    val names = SparkEntry.select(prefixes)
     val spark = GraftSession(GraftSession.hostCores)
     new java.io.File(outDir).mkdirs()
-    val names = SparkEntry.queries.keys.filter(selected).toSeq
     val failures = names.flatMap { name =>
       try {
         SparkEntry.queries(name)(spark, sfDir).coalesce(1).write
@@ -26,7 +24,7 @@ object Verify {
       }
     }
     val json = SparkEntry.oracleSql
-      .filter { case (k, _) => selected(k) }
+      .filter { case (k, _) => names.contains(k) }
       .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

@@ -3,7 +3,8 @@
 in DuckDB over the same parquet tables and compare against the Spark
 result parquet written by graft.Verify. Compares schema (column names),
 row count, and exact cell values after sorting columns by name and rows
-by all columns. Usage: check_oracle.py <sfDir> <verifyOutDir>
+by all columns. Exits nonzero on any failure, and when there was
+nothing to compare. Usage: check_oracle.py <sfDir> <verifyOutDir>
 """
 import sys, json, glob, math, struct, decimal
 import duckdb
@@ -143,6 +144,9 @@ def main(sf_dir, out_dir):
         else:
             print(f"PASS {name} ({len(g)} rows)"); n_pass += 1
     print(f"== {n_pass} pass, {n_fail} fail")
+    if n_pass + n_fail == 0:
+        print("nothing compared: oracle_sql.json names no gate")
+        return 1
     return 1 if n_fail else 0
 
 if __name__ == "__main__":

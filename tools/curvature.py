@@ -7,11 +7,13 @@ machinery failed to bound the quadratic step.
 
 Usage: curvature.py <small_dir> <big_dir> <ratio> <q1,q2,...> [out.md]
 
-Runs graft.Bench (pair-min protocol, SPARK_GRAFT_ONLY subset — a
-DIAGNOSIS artifact by construction: the subset flag keeps it out of
-the band set) once per directory, sequentially, never concurrently
-(ambient-load discipline). Emits a markdown table and exits nonzero if
-any gate measures alpha >= 2 (super-quadratic would also trip it).
+Runs graft.Bench (pair-min protocol, SPARK_GRAFT_ONLY subset: a
+diagnosis run, which the subset flag keeps out of the band set) once
+per directory, sequentially, never concurrently, on the host's cores.
+Reads each run's result line, writes a markdown table (to out.md when
+given) and exits nonzero if any gate measures alpha >= 2
+(super-quadratic would also trip it). A gate that failed in either
+run is skipped: a time-to-exception is not a growth exponent.
 Per-gate times below NOISE_FLOOR seconds at the SMALL scale are
 annotated, not judged: a 0.3 s gate's exponent is mostly constant-cost
 amortization, not growth.
@@ -29,7 +31,6 @@ def run_bench(sf_dir: str, only: str) -> dict:
     env = dict(os.environ)
     env["SPARK_GRAFT_SF_DIR"] = sf_dir
     env["SPARK_GRAFT_ONLY"] = only
-    env.setdefault("SPARK_GRAFT_CPUS", "32")
     out = subprocess.run(
         ["sbt", "-batch", "runMain graft.Bench"],
         capture_output=True, text=True, env=env, check=False)
@@ -53,10 +54,11 @@ def main() -> None:
     out_md = sys.argv[5] if len(sys.argv) > 5 else None
     a = run_bench(small, only)
     b = run_bench(big, only)
+    skipped = sorted(set(a["failed"]) | set(b["failed"]))
     rows, failed = [], []
     for q in sorted(a["queries"]):
         t1, t2 = a["queries"][q], b["queries"].get(q)
-        if t2 is None:
+        if t2 is None or q in skipped:
             continue
         alpha = math.log(t2 / t1) / math.log(ratio)
         noisy = t1 < NOISE_FLOOR
@@ -72,8 +74,9 @@ def main() -> None:
                      f"{alpha:.2f}{note} |")
     table = "\n".join(lines)
     print(table)
-    print(f"load_small={a['load_avg_1m']:.1f} load_big={b['load_avg_1m']:.1f} "
-          f"canary_small={a['canary']['value']} canary_big={b['canary']['value']}")
+    print(f"load_small={a['load_avg_1m']:.1f} load_big={b['load_avg_1m']:.1f}")
+    if skipped:
+        print(f"skipped, failed in a run: {', '.join(skipped)}")
     if out_md:
         with open(out_md, "w") as f:
             f.write(table + "\n")

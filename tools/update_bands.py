@@ -17,14 +17,17 @@ Guards:
     older Bench versions without the flag still hit the 90%-coverage
     heuristic. --force overrides both (legitimate only for a
     first-ever band set).
+  * Each section records the `nproc` of the host its bands were
+    measured on. A pair whose `nproc` differs (or is missing) is
+    refused, even with --force: bands from one host shape are never
+    folded into another's. A section created with --force takes the
+    pair's `nproc`.
   * Queries flagged in failed[] are skipped (a time-to-exception is
     not a band).
 Rounding: values are floored to 4 decimals ONCE up front
 (math.floor(v*1e4)/1e4 — conservative, never above the true pair-min)
 and every comparison is rounded-to-rounded, so sub-0.0001 differences
 can neither churn the file nor flip the tighten check inconsistently.
-The fixed-work CPU canary (pair `canary.value`) folds under the same
-min-only protocol into the reserved "__canary__" key.
 """
 import json
 import math
@@ -57,20 +60,24 @@ def main() -> None:
                  "typo here would silently seed a bogus band section; "
                  "pass --force to create a genuinely new SF.")
     cur = bands.setdefault(sf, {})
-    if cur and len(pair["queries"]) < 0.9 * len(cur) and not force:
+    nproc = pair.get("nproc")
+    cur.setdefault("nproc", nproc)
+    if nproc is None or nproc != cur["nproc"]:
+        sys.exit(
+            f"refusing to fold: pair was measured on nproc={nproc} but "
+            f"the {sf} bands on nproc={cur['nproc']} — bands from one "
+            "host shape are never folded into another's.")
+    recorded = len(cur) - 1
+    if recorded and len(pair["queries"]) < 0.9 * recorded and not force:
         sys.exit(
             f"refusing to fold: pair covers {len(pair['queries'])} "
-            f"queries but {sf} has {len(cur)} recorded bands — this "
+            f"queries but {sf} has {recorded} recorded bands — this "
             "looks like a SPARK_GRAFT_ONLY subset run (warmer cache, "
             "deflated times; min-only folding would over-tighten "
             "forever). Bands update only from full-suite pairs; pass "
             "--force only for a first-ever band set.")
-    entries = dict(pair["queries"])
-    canary = pair.get("canary", {}).get("value")
-    if canary is not None and canary > 0:
-        entries["__canary__"] = canary
     added, tightened = 0, 0
-    for q, raw in sorted(entries.items()):
+    for q, raw in sorted(pair["queries"].items()):
         if q in flagged:
             print(f"skip {q}: in failed[]")
             continue
@@ -88,7 +95,7 @@ def main() -> None:
         json.dump(bands, f, indent=1, sort_keys=True)
         f.write("\n")
     print(f"== {sf}: {added} new bands, {tightened} tightened, "
-          f"{len(cur)} total")
+          f"{len(cur) - 1} total")
 
 
 if __name__ == "__main__":
