@@ -118,9 +118,9 @@ object Bench {
       // Untimed: drop what the gate left persisted (localCheckpoint()ed
       // RDDs stay in block-manager storage until the driver GCs them).
       // No gate reads another's state, so a leaked block is accidental
-      // caching; left in place, the blocks of earlier gates squeeze the
-      // execution memory of later ones (q272: 2.2 s alone, 28.3 s late
-      // in a full pass).
+      // caching; left in place, the blocks of earlier gates (q178's five
+      // checkpointed PageRank rounds, say) squeeze the execution memory
+      // of later ones.
       spark.sparkContext.getPersistentRDDs.valuesIterator
         .foreach(_.unpersist(blocking = false))
       spark.catalog.clearCache()

@@ -387,9 +387,10 @@ final case class TFrame(df: DataFrame) extends TFrameArith {
     require(!columns.contains(rk) && !columns.contains(cnt),
       s"ntileExact: helper columns $rk/$cnt exist")
     val ranked = rankExact(order, idCol, parts, outCol = rk)
-    // count the RANKED frame: it reads from prefixSumInOrder's
-    // localCheckpoint; counting the source df would replay its full
-    // input lineage a second time
+    // count the RANKED frame: both branches plan the same range
+    // exchange, which the count reads again as a ReusedExchange;
+    // counting the source df would replay its full input lineage a
+    // second time
     TFrame(ranked.df
       .crossJoin(org.apache.spark.sql.functions.broadcast(ranked.df.agg(
         org.apache.spark.sql.functions.count(
@@ -531,10 +532,10 @@ final case class TFrame(df: DataFrame) extends TFrameArith {
       .select(order.map(col) ++ Seq(
         col("global_start").as(belowCol),
         (col("global_start") + col(cnt)).as(atOrBelowCol)): _*)
-    // n = max at-or-before over the prefix output: prefixSumInOrder
-    // localCheckpoints, so this vocabulary-sized aggregate is free —
-    // summing cnt over `keys` instead would re-run the corpus-wide
-    // distinct-key groupBy a second time
+    // n = max at-or-before over the prefix output: its range exchange
+    // is read again as a ReusedExchange, so this aggregate costs one
+    // vocabulary-sized pass — summing cnt over `keys` instead would
+    // re-run the corpus-wide distinct-key groupBy a second time
     val n = pre.agg(F.max(col(atOrBelowCol)).cast(LongType).as(nCol))
     df.join(pre, order)
       .crossJoin(F.broadcast(n))

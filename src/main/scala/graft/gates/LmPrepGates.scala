@@ -45,17 +45,14 @@ object LmPrepGates extends GateFamily("lm_prep") {
     Gate("q254_fim", q254Fim, Some(q254Sql)),
     Gate("q255_nsp", q255Nsp, Some(q255Sql)),
     Gate("q256_len_buckets", q256LenBuckets, Some(q256Sql)),
-    Gate("q257_block_pack", q257BlockPack, Some(q257Sql),
-      eager = Some("driver pull of per-partition sums for offsets")),
+    Gate("q257_block_pack", q257BlockPack, Some(q257Sql)),
     Gate("q258_ul2", q258Ul2, Some(q258Sql)),
     Gate("q259_pref_pairs", q259PrefPairs, Some(q259Sql)),
     Gate("q262_repeat_schedule", q262RepeatSchedule, Some(q262Sql)),
-    Gate("q264_block_rows", q264BlockRows, Some(q264Sql),
-      eager = Some("driver pull of per-partition sums for offsets")),
+    Gate("q264_block_rows", q264BlockRows, Some(q264Sql)),
     Gate("q265_bpe_len_buckets", q265BpeLenBuckets, Some(q265Sql),
       eager = Some("driver pull of the distinct-word vocabulary")),
-    Gate("q266_curriculum", q266Curriculum, Some(q266Sql),
-      eager = Some("driver pull of per-partition counts for exact global order")),
+    Gate("q266_curriculum", q266Curriculum, Some(q266Sql)),
     Gate("q267_fertility", q267Fertility, Some(q267Sql),
       eager = Some("driver pull of the distinct-word vocabulary")),
     Gate("q270_bpe_dict_distributed", q270BpeDictDistributed, Some(q265Sql)),

@@ -153,24 +153,15 @@ object RelationalGates extends GateFamily("relational") {
     Gate("q243_encoding", q243Encoding, Some(q243Sql)),
     Gate("q245_warehouse_capstone", q245WarehouseCapstone, Some(q245Sql)),
     Gate("q246_pipe_syntax", q246PipeSyntax, Some(q246Sql)),
-    Gate("q260_global_cumsum", q260GlobalCumsum, Some(q260Sql),
-      eager = Some("driver pull of per-partition sums for offsets")),
-    Gate("q268_global_rank", q268GlobalRank, Some(q268Sql),
-      eager = Some("driver pull of per-partition counts for exact global order")),
-    Gate("q269_money_cumsum", q269MoneyCumsum, Some(q269Sql),
-      eager = Some("driver pull of per-partition counts for exact global order")),
-    Gate("q272_rank_family", q272RankFamily, Some(q272Sql),
-      eager = Some("driver pull of per-partition counts for exact global order")),
-    Gate("q273_signed_balance", q273SignedBalance, Some(q273Sql),
-      eager = Some("driver pull of per-partition counts for exact global order")),
-    Gate("q274_ntile", q274Ntile, Some(q274Sql),
-      eager = Some("driver pull of per-partition counts for exact global order")),
-    Gate("q275_percent_rank", q275PercentRank, Some(q275Sql),
-      eager = Some("driver pull of per-partition counts for exact global order")),
-    Gate("q276_lag_lead", q276LagLead, Some(q276Sql),
-      eager = Some("driver pull of per-partition counts for exact global order")),
-    Gate("q277_rolling_sum", q277RollingSum, Some(q277Sql),
-      eager = Some("driver pull of per-partition counts for exact global order"))
+    Gate("q260_global_cumsum", q260GlobalCumsum, Some(q260Sql)),
+    Gate("q268_global_rank", q268GlobalRank, Some(q268Sql)),
+    Gate("q269_money_cumsum", q269MoneyCumsum, Some(q269Sql)),
+    Gate("q272_rank_family", q272RankFamily, Some(q272Sql)),
+    Gate("q273_signed_balance", q273SignedBalance, Some(q273Sql)),
+    Gate("q274_ntile", q274Ntile, Some(q274Sql)),
+    Gate("q275_percent_rank", q275PercentRank, Some(q275Sql)),
+    Gate("q276_lag_lead", q276LagLead, Some(q276Sql)),
+    Gate("q277_rolling_sum", q277RollingSum, Some(q277Sql))
   )
 
   private val DSUM = "CAST(SUM(CAST(%s AS DECIMAL(25,4))) AS DOUBLE)"

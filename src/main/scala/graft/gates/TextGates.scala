@@ -39,8 +39,7 @@ object TextGates extends GateFamily("text") {
     Gate("q202_oov_stats", q202OovStats, Some(q202Sql)),
     Gate("q215_mask", q215Mask, Some(q215Sql)),
     Gate("q220_corpus_refresh", q220CorpusRefresh, Some(q220Sql)),
-    Gate("q284_zipf_fit", q284ZipfFit, Some(q284Sql),
-      eager = Some("driver pull of per-partition sums for offsets")),
+    Gate("q284_zipf_fit", q284ZipfFit, Some(q284Sql)),
     Gate("q287_quality_fit", q287QualityFit, Some(q287Sql),
       eager = Some("driver pull of the least-squares sums")),
     Gate("q288_quality_scores", q288QualityScores, Some(q288Sql),

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession,
+  SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Cast, Expression}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.expressions.Window
@@ -8,10 +9,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.Shim
 import org.apache.spark.sql.types.LongType
 
-import graft.plans.{AsOfJoinPlan, AsOfJoinStrategy, PruneAsOfJoinChildren,
-  PushFilterThroughAsOfJoin}
+import graft.plans.{AsOfJoinPlan, AsOfJoinStrategy, PrefixScanStrategy,
+  PruneAsOfJoinChildren, PushFilterThroughAsOfJoin}
 
-/** The graft planner strategy and optimizer rules, installed once per
+/** The graft planner strategies and optimizer rules, installed once per
   * application: [[graft.GraftSession]] builds every session with them,
   * and sessions from `newSession()` inherit them. A cluster deployment
   * sets `spark.sql.extensions=graft.operators.GraftExtensions`.
@@ -19,10 +20,25 @@ import graft.plans.{AsOfJoinPlan, AsOfJoinStrategy, PruneAsOfJoinChildren,
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
+    ext.injectPlannerStrategy(_ => PrefixScanStrategy)
     // operator-optimization batch: Catalyst iterates these with its own
     // pushdown/pruning rules to a fixed point
     ext.injectOptimizerRule(_ => PushFilterThroughAsOfJoin)
     ext.injectOptimizerRule(_ => PruneAsOfJoinChildren)
+  }
+}
+
+object GraftExtensions {
+
+  /** Fails, while `op`'s DataFrame is built, unless `spark` can plan the
+    * graft operators; otherwise the query would fail only when it runs,
+    * with Spark's "No plan for" error. */
+  def requireInstalled(spark: SparkSession, op: String): Unit = {
+    val strategies = Shim.plannerStrategies(spark)
+    require(strategies.contains(AsOfJoinStrategy) &&
+      strategies.contains(PrefixScanStrategy),
+      s"$op: this session cannot plan the graft operators; build it with " +
+        "GraftSession, which installs GraftExtensions")
   }
 }
 
@@ -64,9 +80,7 @@ object AsOfJoin {
       s"asof: tolerance must be non-negative, got $t"))
     require(leftOn.length == rightOn.length, "key arity mismatch")
     val spark = left.sparkSession
-    require(Shim.plannerStrategies(spark).contains(AsOfJoinStrategy),
-      "asof: this session cannot plan an as-of join; build it with " +
-        "GraftExtensions (GraftSession does)")
+    GraftExtensions.requireInstalled(spark, "asof")
     // fresh exprIds on the right so self-joins cannot alias-collide
     val r = right.select(right.columns.map(c => right(c).as(c)): _*)
     val lPlan = Shim.analyzed(left)

@@ -1,8 +1,13 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute,
+  AttributeReference, Descending, KnownNotNull, SortOrder}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Shim
 import org.apache.spark.sql.types._
+
+import graft.plans.PrefixScan
 
 /** Sequence packing: greedy first-fit-in-order assembly of documents
   * into training sequences of at most `maxTokens` tokens — the step
@@ -26,6 +31,13 @@ import org.apache.spark.sql.types._
   * count (e.g. repartitionByRange on [[Sampling.shuffleKey]] then
   * sortWithinPartitions) — then the full (doc → sequence, position)
   * assignment is reproducible across runs and cluster sizes.
+  *
+  * Exact global order — offsets ([[contiguousOffsets]]), running sums
+  * ([[prefixSumInOrder]]), ranks ([[rankInOrder]]) and lag/lead
+  * ([[shiftInOrder]]) — is one physical operator,
+  * [[graft.plans.PrefixScan]]: a range-partitioned order read twice
+  * inside one query, once for per-partition totals and once to walk
+  * each partition from its base. Building these frames runs no job.
   *
   * Reference analog: none — torcharrow stops at per-column transforms;
   * packing is part of the training-data extension surface.
@@ -167,16 +179,10 @@ object Packing {
     * id) order. Block ids/offsets are then pure arithmetic on
     * (global_start, token count) — see gate q257.
     *
-    * Scale shape: a GLOBAL prefix sum without a global window (the
-    * one-partition funnel TFrame.cumsum documents for `by = Nil`).
-    * Two-phase: range-partition by the shuffle key into `parts`
-    * tasks, (1) each task sums its tokens — `parts` rows to the
-    * driver, a bounded collect; (2) each task re-walks its rows with
-    * its exclusive base offset. The localCheckpoint freezes the range
-    * boundaries so both passes see identical partitions; the OUTPUT
-    * is boundary-invariant regardless (the order is total, so each
-    * doc's prefix sum does not depend on where partitions were cut —
-    * pinned across parts = 3 vs 8 in PackingSpec).
+    * This is [[prefixSumInOrder]] over the order (shuffle key, id),
+    * plus a check that counts are >= 0 (offsets must not go
+    * backwards). The output does not depend on `parts` (pinned across
+    * parts = 3 vs 8 in PackingSpec).
     *
     * Input needs (idCol: integral non-null UNIQUE, tokenCol: integral
     * >= 0); returns (idCol, tokenCol, global_start[, payload...]) with
@@ -186,8 +192,8 @@ object Packing {
     * first — the q260 pattern; a built-in check would cost a full
     * extra shuffle, so it is deliberately not performed here).
     *
-    * `payload` columns ride the SAME rows through both passes and come
-    * back appended after global_start — the block-materialization path
+    * `payload` columns ride along on the same rows and come back
+    * appended after global_start — the block-materialization path
     * (gate q264) keeps each doc's token array alongside its offset
     * without a corpus-sized join back. */
   def contiguousOffsets(
@@ -197,107 +203,43 @@ object Packing {
       seed: Long,
       parts: Int,
       payload: Seq[String] = Nil): DataFrame = {
-    require(parts > 0, s"contiguousOffsets: parts=$parts")
-    require(!payload.contains(idCol) && !payload.contains(tokenCol) &&
-      !payload.contains("__k") && !payload.contains("global_start"),
-      s"contiguousOffsets: payload $payload collides with a core column")
-    val in = df.select(Seq(
-      when(col(idCol).isNull, raise_error(lit(
-        s"contiguousOffsets: null $idCol — ids must be non-null")))
-        .otherwise(col(idCol).cast(LongType)).as(idCol),
-      when(col(tokenCol).isNull || col(tokenCol) < 0, raise_error(lit(
-        s"contiguousOffsets: null/negative $tokenCol — offsets would " +
-          "go backwards")))
-        .otherwise(col(tokenCol).cast(LongType)).as(tokenCol)) ++
-      payload.map(col): _*)
-    val ordered = in
+    // prefixSumInOrder raises on null ids and counts and rejects a
+    // payload that collides with (__k, id, count, global_start)
+    val checked = df
+      .withColumn(tokenCol, when(col(tokenCol) < 0, raise_error(lit(
+        s"contiguousOffsets: negative $tokenCol — offsets would go " +
+          "backwards"))).otherwise(col(tokenCol)))
       .withColumn("__k", Sampling.shuffleKey(col(idCol), seed))
-      .repartitionByRange(parts, col("__k"), col(idCol))
-      .sortWithinPartitions(col("__k"), col(idCol))
-      .select(Seq(col(idCol), col(tokenCol), col("__k")) ++
-        payload.map(col): _*)
-      .localCheckpoint()
-    // Pass 1: per-partition (first-row key, token total). The
-    // partition identifies itself by its FIRST ROW's (__k, id) — NOT
-    // TaskContext.getPartitionId(): a downstream coalesce() pipelines
-    // this mapPartitions into the coalesced task, where every parent
-    // partition would read the SAME task partition id (the closure
-    // still runs once per parent partition — iterator state is safe —
-    // but TaskContext is task-scoped, not data-scoped).
-    val partInfo = ordered
-      .mapPartitions { rows =>
-        if (!rows.hasNext) Iterator.empty
-        else {
-          val first = rows.next()
-          val fk = first.getLong(2)
-          val fid = first.getLong(0)
-          var s = first.getLong(1)
-          rows.foreach(r => s = Math.addExact(s, r.getLong(1)))
-          Iterator.single(Row(fk, fid, s))
-        }
-      }(Encoders.row(StructType(Seq(
-        StructField("fk", LongType, nullable = false),
-        StructField("fid", LongType, nullable = false),
-        StructField("tot", LongType, nullable = false)))))
-      .collect()
-    // exclusive prefix of per-partition totals in range order (range
-    // partitions are disjoint and ordered, so sorting by first-row key
-    // IS partition order) — at most `parts` entries, bounded at any
-    // corpus size
-    var acc = 0L
-    val bases = partInfo.sortBy(r => (r.getLong(0), r.getLong(1)))
-      .map { r =>
-        val b = ((r.getLong(0), r.getLong(1)), acc)
-        acc = Math.addExact(acc, r.getLong(2))
-        b
-      }.toMap
-    val basesB = ordered.sparkSession.sparkContext.broadcast(bases)
-    val payloadFields = payload.map(p => ordered.schema(p))
-    val outSchema = StructType(Seq(
-      StructField(idCol, LongType, nullable = false),
-      StructField(tokenCol, LongType, nullable = false),
-      StructField("global_start", LongType, nullable = false)) ++
-      payloadFields)
-    val nPayload = payload.length
-    ordered.mapPartitions { rows =>
-      if (!rows.hasNext) Iterator.empty
-      else {
-        val first = rows.next()
-        var off = basesB.value((first.getLong(2), first.getLong(0)))
-        (Iterator.single(first) ++ rows).map { r =>
-          val start = off
-          off = Math.addExact(off, r.getLong(1))
-          Row.fromSeq(Seq(r.getLong(0), r.getLong(1), start) ++
-            (0 until nPayload).map(i => r.get(3 + i)))
-        }
-      }
-    }(Encoders.row(outSchema))
+    prefixSumInOrder(checked, idCol, tokenCol, Seq("__k"), parts, payload)
+      .drop("__k")
   }
 
-  /** Exact global prefix sum in a CALLER-SPECIFIED total order — the
-    * general form of [[contiguousOffsets]] (which fixes the order to
-    * ([[Sampling.shuffleKey]], id)): every row gets `global_start`,
-    * the exact sum of `weightCol` over all rows strictly before it in
-    * (orderCols..., idCol) order. Same two-phase shape — range
-    * partition on the order key, per-partition totals (a `parts`-row
-    * bounded collect, summaries sorted into partition order BY THE
-    * ENGINE so order-column types stay generic), second walk with
-    * exclusive bases — so there is never a one-partition global
-    * window, at any corpus size. Partition identity is the first
-    * row's id (data-derived, coalesce-immune).
+  /** Exact global prefix sum in a CALLER-SPECIFIED total order: every
+    * row gets `global_start`, the exact sum of `weightCol` over all
+    * rows strictly before it in (orderCols..., idCol) order. The rows
+    * are range-partitioned on that order into `parts` partitions and
+    * sorted within them; one [[graft.plans.PrefixScan]] operator then
+    * sums each partition and walks it again from the sum of the
+    * partitions before it. There is never a one-partition global
+    * window, at any corpus size, and nothing runs while the DataFrame
+    * is built.
     *
     * Contracts: idCol integral non-null UNIQUE (ties in orderCols
     * break on id, so the order is total); weightCol integral non-null
-    * — NEGATIVE weights are fine (long addition is associative, so the
-    * two-phase regrouping is exact for any sign; only
+    * — NEGATIVE weights are fine (long addition is associative, so
+    * summing per partition first is exact for any sign; only
     * [[contiguousOffsets]], whose output must be monotone addresses,
     * additionally requires >= 0); orderCols non-null (raise_error
     * otherwise — a null order value
     * has engine-specific sort position: Spark sorts NULLS FIRST
     * ascending where DuckDB defaults NULLS LAST, so a null would make
-    * the "same total order" cross-engine claim false). Returns
-    * (idCol, weightCol, global_start, orderCols..., payload...) —
-    * order columns ride through so a caller (e.g.
+    * the "same total order" cross-engine claim false). The running sum
+    * uses Math.addExact: a sum past Long range fails the query, never
+    * wraps — the DECIMAL surface (TFrame.cumsumExactDecimal)
+    * advertises wider output headroom than the unscaled-long
+    * accumulator, so a wrapped sum would be a confidently typed wrong
+    * value. Returns (idCol, weightCol, global_start, orderCols...,
+    * payload...) — order columns ride through so a caller (e.g.
     * [[graft.frame.TFrame.cumsumExact]]) keeps its full frame without
     * a join back. */
   def prefixSumInOrder(
@@ -316,81 +258,22 @@ object Packing {
       s"prefixSumInOrder: orderCols $orderCols / payload $payload " +
         s"collide with core columns or each other")
     val checked = df.select(Seq(
-      when(col(idCol).isNull, raise_error(lit(
+      notNull(when(col(idCol).isNull, raise_error(lit(
         s"prefixSumInOrder: null $idCol — ids must be non-null")))
-        .otherwise(col(idCol).cast(LongType)).as(idCol),
-      when(col(weightCol).isNull, raise_error(lit(
+        .otherwise(col(idCol).cast(LongType))).as(idCol),
+      notNull(when(col(weightCol).isNull, raise_error(lit(
         s"prefixSumInOrder: null $weightCol — a null weight has no " +
           "defined running sum; fill or drop nulls upstream")))
-        .otherwise(col(weightCol).cast(LongType)).as(weightCol)) ++
+        .otherwise(col(weightCol).cast(LongType))).as(weightCol)) ++
       orderCols.map(c => when(col(c).isNull, raise_error(lit(
         s"prefixSumInOrder: null order column $c — null sort position " +
           "is engine-specific, the total order would not be portable")))
         .otherwise(col(c)).as(c)) ++
       payload.map(col): _*)
-    val sortExprs = orderCols.map(col) :+ col(idCol)
-    val ordered = checked
-      .repartitionByRange(parts, sortExprs: _*)
-      .sortWithinPartitions(sortExprs: _*)
-      .localCheckpoint()
-    // column layout after `checked`: id(0), weight(1),
-    // order(2..1+nOrder), payload(2+nOrder..)
-    val nOrder = orderCols.length
-    val orderFields = orderCols.map(ordered.schema(_))
-    val infoSchema = StructType(
-      StructField("fid", LongType, nullable = false) +:
-      StructField("tot", LongType, nullable = false) +:
-      orderFields.map(f => f.copy(name = "o_" + f.name)))
-    // Pass 1: (first-row id, weight total, first-row order key) per
-    // partition — identity data-derived, never TaskContext (the
-    // coalesce-aliasing lesson, SCALE.md round 16)
-    // Math.addExact throughout (JIT intrinsic — free): a running sum
-    // past Long range must raise, never wrap. The DECIMAL surface
-    // (TFrame.cumsumExactDecimal) advertises wider output headroom
-    // than the unscaled-long accumulator, so silent wraparound would
-    // emit confidently-typed wrong values at extreme totals.
-    val partInfo = ordered.mapPartitions { rows =>
-      if (!rows.hasNext) Iterator.empty
-      else {
-        val first = rows.next()
-        var s = first.getLong(1)
-        rows.foreach(r => s = Math.addExact(s, r.getLong(1)))
-        Iterator.single(Row.fromSeq(Seq(first.getLong(0), s) ++
-          (0 until nOrder).map(i => first.get(2 + i))))
-      }
-    }(Encoders.row(infoSchema))
-    // range partitions are disjoint in the sort key, so first-row keys
-    // sort in partition order; sorting the `parts` summaries in the
-    // ENGINE keeps arbitrary order-column types out of driver code
-    val infoSorted = partInfo
-      .orderBy(orderFields.map(f => col("o_" + f.name)) :+ col("fid"): _*)
-      .select(col("fid"), col("tot"))
-      .collect()
-    var acc = 0L
-    val bases = infoSorted.map { r =>
-      val b = (r.getLong(0), acc); acc = Math.addExact(acc, r.getLong(1)); b
-    }.toMap
-    val basesB = ordered.sparkSession.sparkContext.broadcast(bases)
-    val tailFields = orderFields ++ payload.map(ordered.schema(_))
-    val outSchema = StructType(Seq(
-      StructField(idCol, LongType, nullable = false),
-      StructField(weightCol, LongType, nullable = false),
-      StructField("global_start", LongType, nullable = false)) ++
-      tailFields)
-    val nTail = tailFields.length
-    ordered.mapPartitions { rows =>
-      if (!rows.hasNext) Iterator.empty
-      else {
-        val first = rows.next()
-        var off = basesB.value(first.getLong(0))
-        (Iterator.single(first) ++ rows).map { r =>
-          val start = off
-          off = Math.addExact(off, r.getLong(1))
-          Row.fromSeq(Seq(r.getLong(0), r.getLong(1), start) ++
-            (0 until nTail).map(i => r.get(2 + i)))
-        }
-      }
-    }(Encoders.row(outSchema))
+    scan(checked, orderCols :+ idCol, descending = false, parts,
+      weightCol, None, "global_start")
+      .select((Seq(idCol, weightCol, "global_start") ++ orderCols ++
+        payload).map(col): _*)
   }
 
   /** Exact 0-based GLOBAL RANK in (orderCols..., idCol) order without
@@ -435,7 +318,6 @@ object Packing {
     require(k >= 1, s"ntileFromRank: k=$k")
     // `/` on Columns is DOUBLE division (the q264 lesson) — integral
     // DIV goes through the Catalyst node directly, exact at any LONG
-    import org.apache.spark.sql.graftshim.Shim
     def idiv(a: Column, b: Column): Column = Shim.column(
       new org.apache.spark.sql.catalyst.expressions.IntegralDivide(
         Shim.expression(a), Shim.expression(b)))
@@ -449,16 +331,13 @@ object Packing {
   /** Exact global LAG/LEAD over a total order without a one-partition
     * window — `lag(v, k) OVER (ORDER BY ...)` plans the same global
     * sort funnel as row_number, yet the value a row needs lives at
-    * most k rows away: the same two-phase shape as
-    * [[prefixSumInOrder]] (range partition on the order key, a bounded
-    * pass-1 collect, a second walk with carried state) works with the
-    * partition TAILS as the carried state. Pass 1 collects each
-    * partition's last min(k, n) values (`parts`·k values at the
-    * driver — bounded: k is a window offset, not a data size); the
-    * driver threads them in partition order so each partition receives
-    * exactly the k values preceding its first row; pass 2 is one local
-    * ring-buffer walk. Rows with fewer than k predecessors get null
-    * (SQL lag semantics with no default).
+    * most k rows away. The same [[graft.plans.PrefixScan]] operator as
+    * [[prefixSumInOrder]] carries each partition's last min(k, n)
+    * values instead of its sum: the driver threads them in partition
+    * order, so each partition starts from exactly the k values before
+    * its first row, and walks its rows with a k-slot ring buffer. Rows
+    * with fewer than k predecessors get null (SQL lag semantics with
+    * no default).
     *
     * `descending = true` reverses the ENTIRE total order (orderCols
     * and the id tie-break), which turns the primitive into LEAD:
@@ -468,8 +347,9 @@ object Packing {
     * Contracts: idCol integral non-null UNIQUE (totalizes the order);
     * orderCols non-null (engine-specific null sort position, the
     * [[prefixSumInOrder]] rationale); `valueCol` MAY be null — nulls
-    * shift like any value (matching SQL lag). Returns (idCol,
-    * valueCol, outCol, orderCols..., payload...). */
+    * shift like any value (matching SQL lag). The driver holds parts·k
+    * values, bounded at 4M. Returns (idCol, valueCol, outCol,
+    * orderCols..., payload...). */
   def shiftInOrder(
       df: DataFrame,
       idCol: String,
@@ -485,12 +365,13 @@ object Packing {
     require(k <= 65536,
       s"shiftInOrder: offset k=$k — the driver carries parts*k values; " +
         "an offset this large is a data size, not a window offset")
-    // the driver collect AND the carries broadcast scale with parts*k,
-    // so the bound must be on the product — k=65536 with parts=2048
-    // would be ~134M boxed values on the driver despite a green k check
+    // the driver's tails AND the carries shipped to the tasks scale
+    // with parts*k, so the bound must be on the product — k=65536 with
+    // parts=2048 would be ~134M values on the driver despite a green k
+    // check
     require(parts.toLong * k <= (1L << 22),
       s"shiftInOrder: parts*k = ${parts.toLong * k} carried values — " +
-        "exceeds the 4M driver/broadcast bound; lower parts or k")
+        "exceeds the 4M driver bound; lower parts or k")
     val core = Set(idCol, valueCol, outCol)
     require(valueCol != idCol && outCol != idCol && outCol != valueCol &&
       !orderCols.exists(core) && !payload.exists(core) &&
@@ -501,102 +382,56 @@ object Packing {
     // columns whose names contain dots (TFrame's `<col>.cumsum`)
     def qc(name: String): Column = col(s"`$name`")
     val checked = df.select(Seq(
-      when(qc(idCol).isNull, raise_error(lit(
+      notNull(when(qc(idCol).isNull, raise_error(lit(
         s"shiftInOrder: null $idCol — ids must be non-null")))
-        .otherwise(qc(idCol).cast(LongType)).as(idCol),
+        .otherwise(qc(idCol).cast(LongType))).as(idCol),
       qc(valueCol)) ++
       orderCols.map(c => when(qc(c).isNull, raise_error(lit(
         s"shiftInOrder: null order column $c — null sort position is " +
           "engine-specific, the total order would not be portable")))
         .otherwise(qc(c)).as(c)) ++
       payload.map(qc): _*)
-    val sortExprs =
-      if (descending) orderCols.map(qc(_).desc) :+ qc(idCol).desc
-      else orderCols.map(qc) :+ qc(idCol)
-    val ordered = checked
-      .repartitionByRange(parts, sortExprs: _*)
-      .sortWithinPartitions(sortExprs: _*)
-      .localCheckpoint()
-    // column layout after `checked`: id(0), value(1),
-    // order(2..1+nOrder), payload(2+nOrder..)
-    val nOrder = orderCols.length
-    val orderFields = orderCols.map(ordered.schema(_))
-    val valueField = ordered.schema(valueCol)
-    val infoSchema = StructType(
-      StructField("fid", LongType, nullable = false) +:
-      StructField("tail",
-        ArrayType(valueField.dataType, containsNull = true),
-        nullable = false) +:
-      orderFields.map(f => f.copy(name = "o_" + f.name)))
-    // Pass 1: (first-row id, last min(k, n) values in order, first-row
-    // order key) per partition — identity data-derived, never
-    // TaskContext (the coalesce-aliasing lesson, SCALE.md round 16)
-    val partInfo = ordered.mapPartitions { rows =>
-      if (!rows.hasNext) Iterator.empty
-      else {
-        val first = rows.next()
-        val ring = new Array[Any](k)
-        var seen = 0L
-        def push(r: Row): Unit = {
-          ring((seen % k).toInt) = r.get(1); seen += 1
-        }
-        push(first)
-        rows.foreach(push)
-        val kept = math.min(seen, k.toLong).toInt
-        val tail = (0 until kept).map(i =>
-          ring(((seen - kept + i) % k).toInt))
-        Iterator.single(Row.fromSeq(Seq(first.getLong(0), tail) ++
-          (0 until nOrder).map(i => first.get(2 + i))))
-      }
-    }(Encoders.row(infoSchema))
-    // range partitions are disjoint in the sort key, so first-row keys
-    // sort in partition order (REVERSED order when descending); the
-    // engine sorts the `parts` summaries so arbitrary order-column
-    // types stay out of driver code
-    val infoSort =
-      if (descending)
-        orderFields.map(f => qc("o_" + f.name).desc) :+ col("fid").desc
-      else orderFields.map(f => qc("o_" + f.name)) :+ col("fid")
-    val infoSorted = partInfo
-      .orderBy(infoSort: _*)
-      .select(col("fid"), col("tail"))
-      .collect()
-    // carry for partition i = the last k values before its first row =
-    // suffix of the concatenated preceding tails (each tail keeps
-    // min(k, n) values, so the concatenation's length-k suffix is the
-    // true one; when it is shorter than k, fewer than k rows precede)
-    var acc = Vector.empty[Any]
-    val carries = infoSorted.map { r =>
-      val c = (r.getLong(0), acc)
-      acc = (acc ++ r.getSeq[Any](1)).takeRight(k)
-      c
-    }.toMap
-    val carriesB = ordered.sparkSession.sparkContext.broadcast(carries)
-    val tailFields = orderFields ++ payload.map(ordered.schema(_))
-    val outSchema = StructType(Seq(
-      ordered.schema(idCol).copy(nullable = false),
-      valueField,
-      valueField.copy(name = outCol, nullable = true)) ++ tailFields)
-    val nTail = tailFields.length
-    ordered.mapPartitions { rows =>
-      if (!rows.hasNext) Iterator.empty
-      else {
-        val first = rows.next()
-        val carry = carriesB.value(first.getLong(0))
-        val ring = new Array[Any](k)
-        var seen = 0L
-        // seed: carry.length == k exactly when >= k rows precede
-        carry.foreach { v => ring((seen % k).toInt) = v; seen += 1 }
-        (Iterator.single(first) ++ rows).map { r =>
-          val shifted = if (seen >= k) ring(((seen - k) % k).toInt)
-            else null
-          ring((seen % k).toInt) = r.get(1); seen += 1
-          Row.fromSeq(Seq(r.getLong(0), r.get(1), shifted) ++
-            (0 until nTail).map(i => r.get(2 + i)))
-        }
-      }
-    }(Encoders.row(outSchema))
+    scan(checked, orderCols :+ idCol, descending, parts, valueCol,
+      Some(k), outCol)
+      .select((Seq(idCol, valueCol, outCol) ++ orderCols ++ payload)
+        .map(qc): _*)
   }
+
+  /** `in` range-partitioned into `parts` partitions on `keys` (all
+    * ascending, or all descending), sorted within them, and run
+    * through a [[graft.plans.PrefixScan]] of `value` that appends
+    * `out`: the exclusive running sum when `shift` is None, else the
+    * value `shift` rows earlier. */
+  private def scan(
+      in: DataFrame,
+      keys: Seq[String],
+      descending: Boolean,
+      parts: Int,
+      value: String,
+      shift: Option[Int],
+      out: String): DataFrame = {
+    val spark = in.sparkSession
+    GraftExtensions.requireInstalled(spark,
+      if (shift.isEmpty) "prefixSumInOrder" else "shiftInOrder")
+    val input = Shim.analyzed(in)
+    def attr(name: String): Attribute = input.output.find(_.name == name).get
+    val order = keys.map(k =>
+      SortOrder(attr(k), if (descending) Descending else Ascending))
+    val sortCols = order.map(Shim.column)
+    val ordered = in.repartitionByRange(parts, sortCols: _*)
+      .sortWithinPartitions(sortCols: _*)
+    val v = attr(value)
+    val outAttr = shift match {
+      case None => AttributeReference(out, LongType, nullable = false)()
+      case Some(_) => AttributeReference(out, v.dataType, nullable = true)()
+    }
+    Shim.ofRows(spark,
+      PrefixScan(order, v, shift, outAttr, Shim.analyzed(ordered)))
+  }
+
+  /** `c` declared non-null: for a column whose nulls already raise. */
+  private def notNull(c: Column): Column =
+    Shim.column(KnownNotNull(Shim.expression(c)))
 
   /** Reference-exact batch-max padding: every list in `arrCol` is
     * padded (never truncated) to the LONGEST list in the frame, the

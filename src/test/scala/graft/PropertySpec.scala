@@ -161,24 +161,46 @@ class PropertySpec extends SparkSpec {
   test("prefixSumInOrder equals the sequential prefix sum for random " +
       "sizes, weights (zeros included), duplicate order keys, and " +
       "partition counts") {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{col, lag, lead, row_number}
     import graft.operators.Packing
     import spark.implicits._
     val gen = Gen.zip(Gen.choose(1, 150), Gen.choose(1, 9),
       Gen.choose(2, 11))
-    samples(gen, 8).zipWithIndex.foreach { case ((rows, kMod, parts), i) =>
+    samples(gen, 8).zipWithIndex.foreach { case ((rows, kMod, drawn), i) =>
       // weights include zeros; order key deliberately NON-unique so the
-      // id tiebreak carries the total order
+      // id tiebreak carries the total order; the string value (null
+      // every 11th row) is what lag/lead shift
       val data = (0 until rows).map(j =>
-        (j.toLong, (j * 17 + i * 5) % 7L, ((j * 13 + i) % kMod).toLong))
-      val df = data.toDF("id", "w", "k").repartition(3)
-      val got = Packing.prefixSumInOrder(df, "id", "w", Seq("k"), parts)
-        .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
-      var off = 0L
-      data.sortBy(d => (d._3, d._1)).foreach { case (id, w, _) =>
-        assert(got(id) === off, s"rows=$rows kMod=$kMod parts=$parts id=$id")
-        off += w
+        (j.toLong, (j * 17 + i * 5) % 7L, ((j * 13 + i) % kMod).toLong,
+          if (j % 11 == 5) null else s"s$i-$j-" + "x" * (j % 23)))
+      val df = data.toDF("id", "w", "k", "s").repartition(3)
+      val byOrder = Window.orderBy("k", "id")
+      val want = df.select(col("id"), row_number().over(byOrder) - 1,
+          lag("s", 1).over(byOrder), lag("s", 3).over(byOrder),
+          lead("s", 1).over(byOrder), lead("s", 3).over(byOrder))
+        .collect().map(r => r.getLong(0) -> r.toSeq.drop(1)).toMap
+      for (parts <- Seq(1, 4, 32, drawn)) {
+        val at = s"rows=$rows kMod=$kMod parts=$parts"
+        val got = Packing.prefixSumInOrder(df, "id", "w", Seq("k"), parts)
+          .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
+        var off = 0L
+        data.sortBy(d => (d._3, d._1)).foreach { case (id, w, _, _) =>
+          assert(got(id) === off, s"$at id=$id")
+          off += w
+        }
+        assert(off === data.map(_._2).sum)
+        Packing.rankInOrder(df, "id", Seq("k"), parts).collect()
+          .foreach(r => assert(r.getLong(1) === want(r.getLong(0))(0),
+            s"rank $at id=${r.getLong(0)}"))
+        for ((k, c) <- Seq(1 -> 1, 3 -> 2); descending <- Seq(false, true)) {
+          val idx = if (descending) c + 2 else c
+          Packing.shiftInOrder(df, "id", "s", Seq("k"), k, parts,
+            descending = descending).collect()
+            .foreach(r => assert(r.get(2) === want(r.getLong(0))(idx),
+              s"shift k=$k descending=$descending $at id=${r.getLong(0)}"))
+        }
       }
-      assert(off === data.map(_._2).sum)
     }
   }
 }

@@ -26,6 +26,10 @@ Prints one JSON line:
                         src/main/scala/graft/gates: exact percentiles
                         written through Spark's boxed aggregate rather
                         than `exactPercentile` / `exactPercentiles`
+  local_checkpoints     `localCheckpoint(` calls on the code lines
+                        (comments stripped) under src/main: lineage
+                        truncations whose blocks are lost with their
+                        executor
 
 Usage: python3 tools/design_metrics.py [repo_root]
 """
@@ -119,7 +123,7 @@ def main():
     root = sys.argv[1] if len(sys.argv) > 1 else os.getcwd()
     main_lines = builders = drains = 0
     gate_files = gate_maps = gates = eager_gates = decimal4 = 0
-    spark_percentile = 0
+    spark_percentile = local_checkpoints = 0
     gates_dir = os.path.join("src", "main", "scala", "graft", "gates")
     seen = {}
     for rel, lines in sources(root, "src"):
@@ -132,6 +136,8 @@ def main():
             gate_maps, gates, eager_gates = \
                 gate_maps + maps, gates + n, eager_gates + e
             decimal4 += len(re.findall(r"DecimalType\(25,\s*4\)", text))
+            local_checkpoints += sum(
+                code_text(line).count("localCheckpoint(") for line in lines)
         if rel.startswith(gates_dir):
             spark_percentile += sum(
                 len(SPARK_PERCENTILE.findall(code_text(line)))
@@ -163,6 +169,7 @@ def main():
         "eager_gates": eager_gates,
         "decimal4_inline": decimal4,
         "spark_percentile": spark_percentile,
+        "local_checkpoints": local_checkpoints,
     }, sort_keys=False))
 
 
