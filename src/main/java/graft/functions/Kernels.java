@@ -110,46 +110,53 @@ public final class Kernels {
   // up to 2 repeated borders allowed (rec/bucketize.h:42-50).
   // ---------------------------------------------------------------------
 
-  private static int bucketId(double[] borders, double val) {
-    int lo = 0, hi = borders.length; // lower_bound: first i with borders[i] >= val
+  // The borders are read in place: a per-row copy to double[] cost more
+  // than the search it fed.
+  private static int bucketId(ArrayData borders, int n, double val) {
+    int lo = 0, hi = n; // lower_bound: first i with borders[i] >= val
     while (lo < hi) {
       int mid = (lo + hi) >>> 1;
-      if (borders[mid] < val) lo = mid + 1; else hi = mid;
+      if (borders.getDouble(mid) < val) lo = mid + 1; else hi = mid;
     }
     int index = lo;
-    if (index >= borders.length - 1) return index;
-    return val < borders[index + 1] ? index : index + 1;
+    if (index >= n - 1) return index;
+    return val < borders.getDouble(index + 1) ? index : index + 1;
   }
 
-  private static void validateBorders(double[] borders) {
-    if (borders.length == 0) {
+  /** The border count, after checking that the borders are a valid
+   * non-decreasing sequence. */
+  private static int validateBorders(ArrayData borders) {
+    int n = borders.numElements();
+    if (n == 0) {
       throw new IllegalArgumentException("Borders should not be empty.");
     }
-    for (int i = 1; i < borders.length; i++) {
-      if (borders[i] < borders[i - 1]) {
+    double prev2 = 0, prev = borders.getDouble(0);
+    for (int i = 1; i < n; i++) {
+      double b = borders.getDouble(i);
+      if (b < prev) {
         throw new IllegalArgumentException(
             "Borders should have non-decreasing sequence.");
       }
-      if (i > 1 && borders[i] == borders[i - 1] && !(borders[i - 2] < borders[i])) {
+      if (i > 1 && b == prev && !(prev2 < b)) {
         throw new IllegalArgumentException(
             "Borders should not have more than 2 repeated values, at " + i);
       }
+      prev2 = prev;
+      prev = b;
     }
+    return n;
   }
 
   public static int bucketize(double val, ArrayData borders) {
-    double[] b = borders.toDoubleArray();
-    validateBorders(b);
-    return bucketId(b, val);
+    return bucketId(borders, validateBorders(borders), val);
   }
 
   public static ArrayData bucketizeList(ArrayData values, ArrayData borders) {
-    double[] b = borders.toDoubleArray();
-    validateBorders(b);
+    int nb = validateBorders(borders);
     int n = values.numElements();
     int[] out = new int[n];
     for (int i = 0; i < n; i++) {
-      out[i] = bucketId(b, values.getDouble(i));
+      out[i] = bucketId(borders, nb, values.getDouble(i));
     }
     return new GenericArrayData(out);
   }

@@ -11,18 +11,20 @@ import org.apache.spark.sql.types._
   * into them (verify via .explain: PushedFilters / ReadSchema).
   *
   * Every read of an input table goes through [[parquet]] or [[stream]],
-  * which take the schema from one parquet footer on the driver
-  * ([[FooterSchema]]), so building a gate's plan runs no
-  * schema-inference job (`spark.read.parquet` runs one per load). The
-  * schema is whatever the file declares, converted by Spark's own code
-  * under the session's conf — never a hand-declared copy of the
-  * generator's.
+  * which take the schema from one parquet footer read in the calling
+  * thread ([[FooterSchema]]), so building a gate's plan runs no
+  * schema-inference job (`spark.read.parquet` runs one per load) and
+  * starts no thread pool. The schema is whatever the file declares,
+  * converted by Spark's own code under the session's conf — never a
+  * hand-declared copy of the generator's.
   */
 object Tables {
 
-  /** `spark.read.parquet(path)` without its schema-inference job. */
+  /** `spark.read.parquet(path)` without its schema-inference job: the
+    * same relation, from one listing of `path` and one footer read
+    * ([[FooterSchema.relation]]). */
   def parquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.schema(FooterSchema(spark, path)).parquet(path)
+    FooterSchema.relation(spark, path)
 
   /** Streaming reader over table `name` with the footer schema (the
     * file source needs one). Handles both layouts: a single file at

@@ -128,8 +128,7 @@ object RelationalGates extends GateFamily("relational") {
     Gate("q206_theta_join", q206ThetaJoin, Some(q206Sql)),
     Gate("q207_aqe_coalesce", q207AqeCoalesce, Some(q207Sql),
       eager = Some("runs the aggregate to check AQE coalesced it")),
-    Gate("q208_global_ids", q208GlobalIds, Some(q208Sql),
-      eager = Some("checkpointed ids, counts for its uniqueness check")),
+    Gate("q208_global_ids", q208GlobalIds, Some(q208Sql)),
     Gate("q212_hopping_window", q212HoppingWindow, Some(q212Sql)),
     Gate("q213_bitmap_distinct", q213BitmapDistinct, Some(q213Sql),
       eager = Some("driver pull of exact distinct counts for its check")),
@@ -3419,46 +3418,28 @@ object RelationalGates extends GateFamily("relational") {
   /** Contiguous global row numbering WITHOUT the single-partition
     * window: `row_number() OVER (ORDER BY …)` funnels the entire
     * dataset through ONE task (the classic scale cliff); the
-    * distributed answer is two passes — range-partition by the order
-    * key, count per partition, prefix-sum the counts on the driver
-    * (#partitions values), then assign partition-local offsets
-    * (zipWithIndex's contract, built here explicitly so the plan is
-    * inspectable). Emitted ids are asserted to be exactly
-    * 0..n-1 (dense) in-gate; the oracle replays row_number over the
-    * same unique key order. */
+    * distributed answer is [[Packing.rankInOrder]], a prefix count over
+    * the range-partitioned, sorted rows in one plan. Emitted ids are
+    * checked in the plan to be exactly 0..n-1 (dense), raising with the
+    * values otherwise; the oracle replays row_number over the same
+    * unique key order. */
   def q208GlobalIds(s: SparkSession, dir: String): DataFrame = {
-    // localCheckpoint PINS the range partitions: the counting pass and
-    // the id pass must see the SAME boundaries (two independent
-    // executions of repartitionByRange re-sample and may split
-    // differently, silently corrupting the offsets)
-    val src = Tables(s, dir, "orders")
-      .select($"o_orderkey", $"o_custkey")
-      .repartitionByRange(8, $"o_orderkey")
-      .sortWithinPartitions($"o_orderkey")
-      .localCheckpoint()
-    val counts = src.rdd
-      .mapPartitionsWithIndex((i, it) => Iterator.single(i -> it.size))
-      .collect().sortBy(_._1).map(_._2)
-    val offsets = counts.scanLeft(0L)(_ + _) // #partitions driver values
-    val bc = s.sparkContext.broadcast(offsets)
-    val withIds = src
-      .mapPartitions { it =>
-        val pid = org.apache.spark.TaskContext.getPartitionId()
-        var id = bc.value(pid)
-        it.map { r => val out = (r.getLong(0), r.getLong(1), id)
-          id += 1; out }
-      }(org.apache.spark.sql.Encoders.tuple(
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.Encoders.scalaLong))
-      .toDF("o_orderkey", "o_custkey", "row_id")
-    val n = withIds.count()
-    val check = withIds.agg(min($"row_id"), max($"row_id"),
-      countDistinct($"row_id")).head()
-    require(check.getLong(0) == 0L && check.getLong(1) == n - 1 &&
-      check.getLong(2) == n,
-      s"q208: ids not dense 0..${n - 1}: $check")
-    withIds.orderBy($"row_id")
+    val ids = Packing.rankInOrder(
+      Tables(s, dir, "orders").select($"o_orderkey", $"o_custkey"),
+      "o_orderkey", Nil, parts = 8, payload = Seq("o_custkey"))
+      .select($"o_orderkey", $"o_custkey", $"rank".as("row_id"))
+    val dense = ids
+      .agg(min($"row_id").as("lo"), max($"row_id").as("hi"),
+        countDistinct($"row_id").as("d"), count(lit(1)).as("n"))
+      .where(when($"n" === 0L || ($"lo" === 0L && $"hi" === $"n" - 1L &&
+          $"d" === $"n"), lit(true))
+        .otherwise(raise_error(concat(lit("q208: ids not dense 0..n-1: min="),
+          $"lo".cast(StringType), lit(" max="), $"hi".cast(StringType),
+          lit(" distinct="), $"d".cast(StringType),
+          lit(" n="), $"n".cast(StringType)))))
+    // row_id order is o_orderkey order, which the range partitioning
+    // already gives: the sort needs no second exchange
+    ids.crossJoin(broadcast(dense.select())).orderBy($"o_orderkey")
   }
 
   val q208Sql: String =

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession,
-  SparkSessionExtensions}
+  SparkSessionExtensions, SparkSessionExtensionsProvider}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Cast, Expression}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.expressions.Window
@@ -12,12 +12,13 @@ import org.apache.spark.sql.types.LongType
 import graft.plans.{AsOfJoinPlan, AsOfJoinStrategy, PrefixScanStrategy,
   PruneAsOfJoinChildren, PushFilterThroughAsOfJoin}
 
-/** The graft planner strategies and optimizer rules, installed once per
-  * application: [[graft.GraftSession]] builds every session with them,
-  * and sessions from `newSession()` inherit them. A cluster deployment
-  * sets `spark.sql.extensions=graft.operators.GraftExtensions`.
+/** The graft planner strategies and optimizer rules. Listed as a
+  * service in `META-INF/services`, so Spark's session builder installs
+  * them in every session it builds with this jar on the classpath
+  * ([[graft.GraftSession]]'s and any other), and sessions from
+  * `newSession()` inherit them.
   */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
+class GraftExtensions extends SparkSessionExtensionsProvider {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
     ext.injectPlannerStrategy(_ => PrefixScanStrategy)
@@ -37,8 +38,9 @@ object GraftExtensions {
     val strategies = Shim.plannerStrategies(spark)
     require(strategies.contains(AsOfJoinStrategy) &&
       strategies.contains(PrefixScanStrategy),
-      s"$op: this session cannot plan the graft operators; build it with " +
-        "GraftSession, which installs GraftExtensions")
+      s"$op: this session cannot plan the graft operators; Spark's " +
+        "session builder installs GraftExtensions from the jar's " +
+        "META-INF/services when the jar is on its class loader's path")
   }
 }
 

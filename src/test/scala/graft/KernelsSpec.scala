@@ -46,6 +46,31 @@ class KernelsSpec extends SparkSpec {
     assert(col0(got).map(_.asInstanceOf[Seq[Int]]) === Seq(Seq(0, 0, 1)))
   }
 
+  test("bucketize reads repeated borders and rejects bad ones in place") {
+    import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+    import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+    def forms(b: Double*): Seq[ArrayData] = Seq(
+      new GenericArrayData(b.toArray), UnsafeArrayData.fromPrimitiveArray(b.toArray))
+    val vals = Seq(0.0, 1.0, 1.5, 2.0, 2.5, 3.0, 4.0)
+    for (b <- forms(1.0, 2.0, 2.0, 3.0)) {
+      assert(vals.map(Kernels.bucketize(_, b)) === Seq(0, 0, 1, 2, 3, 3, 4))
+      assert(Kernels.bucketizeList(new GenericArrayData(vals.toArray), b)
+        .toIntArray.toSeq === Seq(0, 0, 1, 2, 3, 3, 4))
+    }
+    for ((borders, message) <- Seq(
+        Seq.empty[Double] -> "Borders should not be empty.",
+        Seq(2.0, 1.0) -> "Borders should have non-decreasing sequence.",
+        Seq(0.0, 1.0, 1.0, 1.0) ->
+          "Borders should not have more than 2 repeated values, at 3");
+        b <- forms(borders: _*)) {
+      val e = intercept[IllegalArgumentException](Kernels.bucketize(1.0, b))
+      assert(e.getMessage === message)
+      val l = intercept[IllegalArgumentException](
+        Kernels.bucketizeList(new GenericArrayData(Array(1.0)), b))
+      assert(l.getMessage === message)
+    }
+  }
+
   // compute_score fixture (test_compute_score.py:18-45)
   private lazy val scoreDf = Seq(
     (Seq(1L, 2L, 3L), Seq(1.0f, 2.0f, 3.0f), Seq(1L, 2L, 3L),

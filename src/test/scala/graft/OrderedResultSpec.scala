@@ -10,8 +10,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.ScalaUDF
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
-import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning,
-  RoundRobinPartitioning}
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning,
+  RangePartitioning, RoundRobinPartitioning}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
   QueryStageExec}
@@ -25,7 +25,10 @@ import org.scalatest.BeforeAndAfterAll
   * [[PartitionLayout.orderByInOnePartition]]: the rows come out in
   * `orderBy`'s order, no range exchange (and so no sampling job) is
   * planned, and the stages that scan the input still run one task per
-  * file, which `coalesce(1)` in place of the shuffle would not.
+  * file. A grouped aggregate is merged into one partition with no
+  * shuffle above its own exchange; any other frame, whose stage
+  * `coalesce(1)` would shrink to one task, keeps a one-partition
+  * shuffle.
   *
   * [[PartitionLayout.spreadOverCores]]: over the one-file `documents`
   * table, the per-row kernel sits above a round-robin exchange, the
@@ -145,9 +148,21 @@ class OrderedResultSpec extends SparkSpec with BeforeAndAfterAll {
     ("q289", MediaGates.q289ImageDhash, Seq("doc_id")),
     ("q296", MediaGates.q296VideoFrames, Seq("doc_id", "frame_idx")))
 
+  /** The gates whose result is a grouped aggregate of bounded size. */
+  private val aggregates = Set("q01", "q03", "q28", "q60")
+
   for ((name, gate, keys) <- gates)
     test(s"$name is ordered in one partition, with no range exchange") {
       assertOrderedInOnePartition(dir => gate(spark, dir), keys.map(col): _*)
+      val df = gate(spark, sf)
+      df.collect()
+      val parts = shuffles(df.queryExecution.executedPlan)
+        .map(_.outputPartitioning)
+      if (aggregates(name)) // merged in the aggregate's last stage
+        assert(parts.nonEmpty && parts.forall(_.isInstanceOf[HashPartitioning]),
+          s"shuffles: $parts")
+      else // a kernel's stage stays parallel below a one-partition shuffle
+        assert(parts.exists(_.numPartitions == 1), s"shuffles: $parts")
     }
 
   // ---- spreadOverCores --------------------------------------------------

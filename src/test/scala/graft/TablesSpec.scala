@@ -7,12 +7,13 @@ import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.parquet.graftshim.FooterSchema
 import org.apache.spark.sql.types.{LongType, TimestampNTZType}
 
-/** The footer-schema loader: the same schema `spark.read.parquet`
-  * infers, in both events.ts layouts, with no Spark job while a plan
-  * is built. */
+/** The footer-schema loader: the same schema and relation
+  * `spark.read.parquet` gives, in both events.ts layouts, with no Spark
+  * job while a plan is built. */
 class TablesSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
@@ -36,6 +37,30 @@ class TablesSpec extends SparkSpec {
         .write.parquet(d)
       assert(FooterSchema(spark, d) === spark.read.parquet(d).schema)
       assert(Tables.parquet(spark, d).count() === 30L)
+    } finally Fs.rmTree(new java.io.File(d).getParentFile)
+  }
+
+  test("Tables.parquet is spark.read.parquet's relation, for a file and " +
+      "for a directory of part-files") {
+    val d = Files.createTempDirectory("tables-rel").resolve("t.parquet").toString
+    /** The optimized plan with its expression ids blanked. */
+    def plan(df: DataFrame): String =
+      df.queryExecution.optimizedPlan.toString.replaceAll("#\\d+L?", "#")
+    try {
+      spark.range(0, 30, 1, 3).selectExpr("id", "cast(id as string) s")
+        .write.parquet(d)
+      for (p <- Seq(s"$dir/lineitem.parquet", s"$dir/nation.parquet", d)) {
+        val (ours, theirs) = (Tables.parquet(spark, p), spark.read.parquet(p))
+        assert(ours.schema === theirs.schema, p)
+        assert(ours.inputFiles.sorted.toSeq === theirs.inputFiles.sorted.toSeq, p)
+        assert(ours.queryExecution.optimizedPlan.sameResult(
+          theirs.queryExecution.optimizedPlan), p)
+        val first = ours.columns.head
+        def query(df: DataFrame) = df.where(df(first).isNotNull).select(first)
+        assert(plan(query(ours)) === plan(query(theirs)), p)
+        assert(query(ours).collect().toSeq === query(theirs).collect().toSeq, p)
+      }
+      assert(Tables.parquet(spark, d).inputFiles.length === 3)
     } finally Fs.rmTree(new java.io.File(d).getParentFile)
   }
 
