@@ -212,12 +212,11 @@ object Bpe {
     * (2) each distinct word is encoded ONCE through `encoder`,
     * executor-side (the encoder ships with the task closure — one
     * deserialized copy per executor, even for the full 50k-merge
-    * GPT-2 table); (3) the (word, token-count) dictionary joins back
-    * to the exploded corpus by word and re-aggregates per document.
+    * GPT-2 table); (3) the (word, token-count) dictionary
+    * broadcast-joins back to the exploded corpus by word and
+    * re-aggregates per document.
     * BPE cost is |vocab|, not |corpus|, and nothing is collected to
-    * the driver at any corpus size. Set `broadcastDict = false` when
-    * the vocabulary itself is too large to broadcast (a shuffle join
-    * on the word key, both sides word-partitioned).
+    * the driver at any corpus size.
     *
     * Returns (idCol, n_bpe) with exactly one row per input row.
     * Contract: idCol unique non-null; a null/empty text counts the
@@ -228,8 +227,7 @@ object Bpe {
       docs: org.apache.spark.sql.DataFrame,
       idCol: String,
       textCol: String,
-      encoder: => BpeEncoder,
-      broadcastDict: Boolean = true): org.apache.spark.sql.DataFrame = {
+      encoder: => BpeEncoder): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.LongType
     val exploded = docs.select(col(idCol),
@@ -238,8 +236,7 @@ object Bpe {
     val dict = exploded.select(col("__w")).distinct()
       .select(col("__w"),
         size(bpeTokenize(encoder)(col("__w"))).cast(LongType).as("__n"))
-    val d = if (broadcastDict) broadcast(dict) else dict
-    exploded.join(d, Seq("__w"))
+    exploded.join(broadcast(dict), Seq("__w"))
       .groupBy(col(idCol))
       .agg(sum(col("__n")).as("n_bpe"))
   }

@@ -12,8 +12,7 @@ import org.apache.spark.sql.types._
   * [[Multimodal.decodeHeader]]; pinned against javax.imageio-encoded
   * fixture bytes in OperatorsSpec); full pixel decode / feature
   * extraction would plug a codec library into the same mapPartitions
-  * slot. Unknown formats emit NULL metadata fields (a deterministic
-  * fake exists behind a test-only flag).
+  * slot. Unknown formats emit NULL metadata fields.
   * The pipeline shape is the 100 TB design: `mapPartitions` processes
   * whole partitions without per-row UDF overhead and without shuffling,
   * and the metadata struct is a first-class Catalyst column usable in
@@ -35,25 +34,6 @@ object Multimodal {
   def withBlob(df: DataFrame, payloadCol: String, blobCol: String = "blob")
       : DataFrame =
     df.withColumn(blobCol, col(payloadCol).cast(BinaryType))
-
-  /** TEST-ONLY stub for UNKNOWN formats, reachable solely via the
-    * package-private `decodeMetaImpl(_, _, fakeUnknownDims = true)`
-    * (never from the public API): a real deployment routes
-    * unknowns to a codec library, and the production path emits NULL
-    * metadata fields so a downstream filter can never mistake stub
-    * fiction for decoded fact. Deterministic fake derived from the
-    * byte content so tests that need stable fake dimensions have
-    * them. */
-  private def fakeDecode(bytes: Array[Byte]): (String, Int, Int, Int) = {
-    var h = 0xcbf29ce484222325L
-    var i = 0
-    while (i < bytes.length) {
-      h ^= (bytes(i) & 0xffL); h *= 0x100000001b3L; i += 1
-    }
-    val w = 64 + ((h >>> 8) % 1857).toInt  // 64..1920
-    val ht = 64 + ((h >>> 24) % 1017).toInt // 64..1080
-    ("unknown", w, ht, 3)
-  }
 
   private def be32(b: Array[Byte], i: Int): Int =
     ((b(i) & 0xff) << 24) | ((b(i + 1) & 0xff) << 16) |
@@ -230,18 +210,8 @@ object Multimodal {
   /** Batched partition-wise metadata extraction over the blob column:
     * one pass per partition, no shuffle, output schema = input + meta.
     * Unknown formats emit NULL width/height/channels — never fabricated
-    * numbers. The fabricating [[fakeDecode]] path exists only behind
-    * the package-private [[decodeMetaImpl]] so no production caller
-    * can reach it. */
-  def decodeMeta(df: DataFrame, blobCol: String = "blob"): DataFrame =
-    decodeMetaImpl(df, blobCol, fakeUnknownDims = false)
-
-  /** TEST-ONLY entry: `fakeUnknownDims = true` routes unknown formats
-    * through the deterministic [[fakeDecode]] stub instead of NULLs.
-    * Package-private on purpose — see the ADVICE note on keeping the
-    * fabricating path unreachable from the public API. */
-  private[graft] def decodeMetaImpl(df: DataFrame, blobCol: String,
-      fakeUnknownDims: Boolean): DataFrame = {
+    * numbers. */
+  def decodeMeta(df: DataFrame, blobCol: String = "blob"): DataFrame = {
     val outSchema = StructType(df.schema.fields :+
       StructField("media_meta", mediaMetaSchema, nullable = true))
     val blobIdx = df.schema.fieldIndex(blobCol)
@@ -251,12 +221,8 @@ object Multimodal {
         val bytes = r.getAs[Array[Byte]](blobIdx)
         val meta = if (bytes == null) null else {
           val (fmt, w, h, c) = decodeHeader(bytes)
-          if (fmt == "unknown") {
-            if (fakeUnknownDims) {
-              val (ff, fw, fh, fc) = fakeDecode(bytes)
-              Row(ff, fw, fh, fc, bytes.length.toLong)
-            } else Row("unknown", null, null, null, bytes.length.toLong)
-          } else Row(fmt, w, h, c, bytes.length.toLong)
+          if (fmt == "unknown") Row(fmt, null, null, null, bytes.length.toLong)
+          else Row(fmt, w, h, c, bytes.length.toLong)
         }
         Row.fromSeq(r.toSeq :+ meta)
       }

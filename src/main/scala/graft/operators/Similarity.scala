@@ -219,23 +219,20 @@ object Similarity {
     * nCells×dim, tiny). The sample is HASH-ordered (sampleHash — the
     * same discipline as Clustering.fit): a first-N-by-id sample of an
     * id-ordered corpus is one corner of the distribution and trains a
-    * quantizer whose cells are noise for the rest, collapsing recall —
-    * pinned in SimilaritySpec. `hashOrdered=false` exists only to
-    * demonstrate that failure mode. */
+    * quantizer whose cells are noise for the rest, collapsing recall.
+    * SimilaritySpec's clustered corpus is built so that a first-N
+    * sample would see one cluster only. */
   private[graft] def trainCentroids(
       corpus: DataFrame,
       vecCol: String,
       idCol: String,
       nCells: Int,
       sampleSize: Int,
-      iters: Int,
-      hashOrdered: Boolean = true): Array[Array[Double]] = {
-    val ordering =
-      if (hashOrdered) Seq(Functional.sampleHash(col(idCol), 9L), col(idCol))
-      else Seq(col(idCol))
+      iters: Int): Array[Array[Double]] = {
     val sample = corpus.select(col(idCol), col(vecCol))
       .where(col(vecCol).isNotNull) // null vectors never train centroids
-      .orderBy(ordering: _*).limit(sampleSize)
+      .orderBy(Functional.sampleHash(col(idCol), 9L), col(idCol))
+      .limit(sampleSize)
       .collect().map(_.getSeq[Float](1).toArray)
     require(sample.length >= nCells, "sample smaller than nCells")
     val dim = sample.head.length
@@ -285,24 +282,9 @@ object Similarity {
       nCells: Int = 16,
       nProbe: Int = 4,
       sampleSize: Int = 2048,
-      iters: Int = 5): DataFrame =
-    ivfTopKImpl(corpus, probes, vecCol, idCol, probeIdCol, k, nCells,
-      nProbe, sampleSize, iters, hashOrdered = true)
-
-  private[graft] def ivfTopKImpl(
-      corpus: DataFrame,
-      probes: DataFrame,
-      vecCol: String,
-      idCol: String,
-      probeIdCol: String,
-      k: Int,
-      nCells: Int,
-      nProbe: Int,
-      sampleSize: Int,
-      iters: Int,
-      hashOrdered: Boolean): DataFrame = {
+      iters: Int = 5): DataFrame = {
     val centroids = trainCentroids(corpus, vecCol, idCol, nCells,
-      sampleSize, iters, hashOrdered)
+      sampleSize, iters)
     val dim = centroids.head.length
     val centLit = lit(centroids.flatten)
 

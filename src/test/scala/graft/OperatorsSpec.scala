@@ -213,8 +213,7 @@ class OperatorsSpec extends SparkSpec {
     assert(got.forall(s => s >= 0.0 && s <= 1.0))
   }
 
-  test("multimodal decode plumbing: schema, null-for-unknown, " +
-      "test-only fake flag") {
+  test("multimodal decode plumbing: schema and null-for-unknown") {
     val df = Seq((1L, "payload one"), (2L, "payload two")).toDF("id", "text")
     val out = Multimodal.decodeMeta(Multimodal.withBlob(df, "text"))
     assert(out.schema.fieldNames.contains("media_meta"))
@@ -226,16 +225,6 @@ class OperatorsSpec extends SparkSpec {
     assert(meta.isNullAt(meta.fieldIndex("height")))
     assert(meta.isNullAt(meta.fieldIndex("channels")))
     assert(meta.getAs[Long]("n_bytes") === "payload one".length.toLong)
-    // the deterministic fake survives ONLY behind the explicit flag
-    val fake = Multimodal.decodeMetaImpl(Multimodal.withBlob(df, "text"),
-      "blob", fakeUnknownDims = true)
-      .select(col("id"), col("media_meta"))
-    val f1 = fake.orderBy("id").collect()
-    val f2 = fake.orderBy("id").collect()
-    assert(f1.map(_.toString) === f2.map(_.toString)) // deterministic stub
-    val fm = f1.head.getStruct(f1.head.fieldIndex("media_meta"))
-    assert(fm.getAs[String]("format") === "unknown")
-    assert(fm.getAs[Int]("width") >= 64)
   }
 
   test("real PNG IHDR / JPEG SOF header decode") {

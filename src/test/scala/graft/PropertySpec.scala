@@ -78,27 +78,20 @@ class PropertySpec extends SparkSpec {
   }
 
   test("asof join matches a brute-force reference on random tables") {
-    import org.apache.spark.sql.functions.col
     import spark.implicits.{newProductEncoder, localSeqToDatasetHolder}
     // small key/ts domains force heavy key collisions and ts ties
     val row = Gen.zip(Gen.choose(0, 5), Gen.choose(0L, 40L))
-    val leftRows = samples(row, 120).zipWithIndex
-      .map { case ((k, ts), i) => (k, ts, i.toLong) }
+    val l = samples(row, 120).zipWithIndex
+      .map { case ((k, ts), i) => (k, ts, i.toLong) }.toDF("k", "ts", "lid")
     // right side unique per (key, ts): deterministic as-of target
-    val rightRows = samples(row, 80).distinct.zipWithIndex
-      .map { case ((k, ts), i) => (k, ts, 1000L + i) }
-    val l = leftRows.toDF("k", "ts", "lid")
-    val r = rightRows.toDF("k", "ts", "rid")
-    val got = graft.operators.AsOfJoin
-      .asof(l, r, Seq("k"), Seq("k"), "ts", "ts")
-      .select(col("lid"), col("rid")).collect()
-      .map(x => x.getLong(0) -> (if (x.isNullAt(1)) -1L else x.getLong(1)))
-      .toMap
-    // brute force: for each left row, max-ts right row with ts <= lts
-    leftRows.foreach { case (k, lts, lid) =>
-      val expect = rightRows.filter(rr => rr._1 == k && rr._2 <= lts)
-        .sortBy(_._2).lastOption.map(_._3).getOrElse(-1L)
-      assert(got(lid) === expect, s"left ($k, $lts, $lid)")
+    val r = samples(row, 80).distinct.zipWithIndex
+      .map { case ((k, ts), i) => (k, ts, 1000L + i) }.toDF("k", "ts", "rid")
+    for (tol <- Seq(None, Some(0L), Some(6L))) {
+      val got = graft.operators.AsOfJoin
+        .asof(l, r, Seq("k"), Seq("k"), "ts", "ts", tol).collect()
+      val want = AsOfReference(l, r, Seq("k"), Seq("k"), "ts", "ts", tol)
+      assert(got.sortBy(_.getLong(2)).toSeq == want.sortBy(_.getLong(2)),
+        s"tolerance $tol")
     }
   }
 
