@@ -387,12 +387,11 @@ final case class TFrame(df: DataFrame) extends TFrameArith {
     require(!columns.contains(rk) && !columns.contains(cnt),
       s"ntileExact: helper columns $rk/$cnt exist")
     val ranked = rankExact(order, idCol, parts, outCol = rk)
-    // count the RANKED frame: both branches plan the same range
-    // exchange, which the count reads again as a ReusedExchange;
-    // counting the source df would replay its full input lineage a
-    // second time
+    // count the source frame: the ranking keeps its rows, and a count
+    // of the ranked frame would run a second PrefixScan (its pass-1
+    // job, sort and walk) whose output nothing reads
     TFrame(ranked.df
-      .crossJoin(org.apache.spark.sql.functions.broadcast(ranked.df.agg(
+      .crossJoin(org.apache.spark.sql.functions.broadcast(df.agg(
         org.apache.spark.sql.functions.count(
           org.apache.spark.sql.functions.lit(1)).as(cnt))))
       .withColumn(outCol,

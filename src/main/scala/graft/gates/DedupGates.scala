@@ -261,7 +261,8 @@ object DedupGates extends GateFamily("dedup") {
   def q44JaccardExact(s: SparkSession, dir: String): DataFrame =
     DedupGates.jaccardPairFixture(s, dir)
       .select($"id_a", $"id_b", round($"j", 4).as("jaccard"))
-      // (a) doc_id < 200: at most 19 900 pairs
+      // one narrow row per pair from the jaccardSorted kernel; doc_id <
+      // 200 bounds the pairs at 19 900
       .orderByInOnePartition($"id_a", $"id_b")
 
   val q44Sql: String =

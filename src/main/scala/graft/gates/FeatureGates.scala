@@ -87,8 +87,7 @@ object FeatureGates extends GateFamily("features") {
       .select(Functional.bucketize($"l_quantity", Seq(10, 20, 30, 40))
         .as("bucket"))
       .groupBy($"bucket").agg(count(lit(1)).as("n"))
-      // (a) 5 buckets
-      .orderByInOnePartition($"bucket")
+      .orderBy($"bucket")
 
   val q60Sql: String =
     """SELECT CASE WHEN l_quantity <= 10 THEN 0 WHEN l_quantity <= 20 THEN 1

@@ -254,7 +254,7 @@ object MediaGates extends GateFamily("media") {
   def q289ImageDhash(s: SparkSession, dir: String): DataFrame =
     imageCorpus(s, dir)
       .select($"doc_id", Functional.dhash64($"blob").as("dhash"))
-      // (b) one (long, long) row per image from the dhash64 kernel
+      // one (long, long) row per image from the dhash64 kernel
       .orderByInOnePartition($"doc_id")
 
   /** Content-level near-dup pairs via [[Dedup.hammingPairs]] (4×16
@@ -543,7 +543,7 @@ object MediaGates extends GateFamily("media") {
         posexplode(Functional.videoFrameHashes($"blob")))
       .select($"doc_id", $"pos".cast(LongType).as("frame_idx"),
         $"col".as("fhash"))
-      // (b) a few (long, long, long) rows per video from videoFrameHashes
+      // a few (long, long, long) rows per video from videoFrameHashes
       .orderByInOnePartition($"doc_id", $"frame_idx")
 
   /** Video near-dup by shared frame fingerprints

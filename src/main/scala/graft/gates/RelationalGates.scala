@@ -176,8 +176,7 @@ object RelationalGates extends GateFamily("relational") {
           .as("sum_disc_price"),
         round(avg($"l_quantity"), 4).as("avg_qty"),
         count(lit(1)).as("count_order"))
-      // (a) at most 6 (returnflag, linestatus) pairs
-      .orderByInOnePartition($"l_returnflag", $"l_linestatus")
+      .orderBy($"l_returnflag", $"l_linestatus")
 
   val q01Sql: String =
     s"""SELECT l_returnflag, l_linestatus,
@@ -217,8 +216,7 @@ object RelationalGates extends GateFamily("relational") {
       .join(broadcast(region), $"n_regionkey" === $"r_regionkey")
       .groupBy($"r_name", $"n_name")
       .agg(dsum($"o_totalprice").as("revenue"), count(lit(1)).as("n_orders"))
-      // (a) at most 25 nations
-      .orderByInOnePartition($"r_name", $"n_name")
+      .orderBy($"r_name", $"n_name")
   }
 
   val q03Sql: String =
@@ -791,8 +789,7 @@ object RelationalGates extends GateFamily("relational") {
         round($"q".getItem(1), 4).as("p50"),
         round($"q".getItem(2), 4).as("p75"),
         $"qty_p90")
-      // (a) at most 3 return flags
-      .orderByInOnePartition($"l_returnflag")
+      .orderBy($"l_returnflag")
   }
 
   val q28Sql: String =
@@ -4433,9 +4430,11 @@ object RelationalGates extends GateFamily("relational") {
           .otherwise($"l_quantity").cast(LongType).as("q"))
       .groupBy($"lk")
       .agg(sum($"q").as("qty"))
+    // dense rank first: its distinct-key branch then reads `li`, not a
+    // ranked frame whose PrefixScan it would run again without reading
     val ranked = TFrame(li)
-      .rankExact(Seq("qty"), "lk", parts = 32, outCol = "rk")
       .denseRankExact(Seq("qty"), "lk", parts = 32, outCol = "drank")
+      .rankExact(Seq("qty"), "lk", parts = 32, outCol = "rk")
     ranked.df.select($"lk", $"qty", $"rk", $"drank")
   }
 

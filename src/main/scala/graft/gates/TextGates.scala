@@ -275,7 +275,7 @@ object TextGates extends GateFamily("text") {
         round($"r.dup_10gram_char_frac", 4).as("dup_10gram_char_frac"),
         $"gopher_ok")
       .crossJoin(broadcast(ok))
-      // (b) one narrow row per document from repetitionSignals
+      // one narrow row per document from repetitionSignals
       .orderByInOnePartition($"doc_id")
   }
 

@@ -4,15 +4,17 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions,
   SparkSessionExtensionsProvider}
 import org.apache.spark.sql.graftshim.Shim
 
-import graft.plans.{AsOfJoinStrategy, PrefixScanStrategy,
+import graft.plans.{AsOfJoinStrategy, OneTaskSort, PrefixScanStrategy,
   PruneAsOfJoinChildren, PushFilterThroughAsOfJoin}
 
 /** The graft planner strategies and optimizer rules: the as-of join
-  * strategy and its two rules ([[AsOfJoin]]) and the `PrefixScan`
-  * strategy ([[Packing]]). Listed as a service in `META-INF/services`,
-  * so Spark's session builder installs them in every session it builds
-  * with this jar on the classpath ([[graft.GraftSession]]'s and any
-  * other), and sessions from `newSession()` inherit them.
+  * strategy and its two rules ([[AsOfJoin]]), the `PrefixScan` strategy
+  * ([[Packing]]), and the AQE runtime rule [[graft.plans.OneTaskSort]],
+  * which sorts a small grouped aggregate's result in the task that
+  * merges it. Listed as a service in `META-INF/services`, so Spark's
+  * session builder installs them in every session it builds with this
+  * jar on the classpath ([[graft.GraftSession]]'s and any other), and
+  * sessions from `newSession()` inherit them.
   */
 class GraftExtensions extends SparkSessionExtensionsProvider {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -22,6 +24,8 @@ class GraftExtensions extends SparkSessionExtensionsProvider {
     // pushdown/pruning rules to a fixed point
     ext.injectOptimizerRule(_ => PushFilterThroughAsOfJoin)
     ext.injectOptimizerRule(_ => PruneAsOfJoinChildren)
+    // re-optimization after each stage: reads the measured row counts
+    ext.injectRuntimeOptimizerRule(_ => OneTaskSort)
   }
 }
 

@@ -1,7 +1,5 @@
 package object graft {
   import org.apache.spark.sql.{Column, DataFrame}
-  import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter,
-    LogicalPlan, Project}
   import org.apache.spark.sql.execution.SparkPlan
   import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
     QueryStageExec}
@@ -104,45 +102,29 @@ package object graft {
     case _ => p +: p.children.flatMap(planNodes)
   }
 
-  /** Whether `p` is a grouped aggregate under projections and filters. */
-  @scala.annotation.tailrec
-  private def groupedAggregate(p: LogicalPlan): Boolean = p match {
-    case a: Aggregate => a.groupingExpressions.nonEmpty
-    case Project(_, child) => groupedAggregate(child)
-    case Filter(_, child) => groupedAggregate(child)
-    case _ => false
-  }
-
   implicit class PartitionLayout(private val df: DataFrame) extends AnyVal {
 
     /** The rows and row order of `orderBy(keys: _*)`, sorted in one
-      * task instead of range-partitioned. A global sort's range
-      * partitioner first runs a sampling job that recomputes everything
-      * since the last shuffle; this runs none.
+      * task behind a one-partition shuffle instead of range-partitioned.
+      * A global sort's range partitioner first runs a sampling job that
+      * recomputes everything since the last shuffle; this runs none.
       *
-      * Use it only where the result is either
-      *  (a) a grouped aggregate (under any projections and filters) with
-      *      a number of groups bounded by construction, whatever the
-      *      data size; or
-      *  (b) at most a few narrow rows per input row, produced by a
-      *      per-row kernel that costs ≥ 100× a sort comparison (the
-      *      perfbench `kernels.*.ns_per_row`: dhash64 ~18 µs,
-      *      videoFrameHashes ~54 µs, repetitionSignals ~34 µs).
-      * Under (a) the only work since the aggregate's own exchange is its
-      * final merge of a bounded number of rows, so the frame is merged
-      * into one partition with `coalesce(1)` in the same stage: no
-      * further exchange, job or re-plan. Under (b) a one-partition
-      * shuffle (not `coalesce(1)`) keeps the kernel's stage parallel;
-      * the sampler's second pass over the kernel would cost more than
-      * the one-task sort at any scale, and a one-task sort that
-      * outgrows memory spills rather than failing. A cheap aggregate
-      * with one row per key meets neither: keep `orderBy` there. */
-    def orderByInOnePartition(keys: Column*): DataFrame = {
-      val merged =
-        if (groupedAggregate(Shim.analyzed(df))) df.coalesce(1)
-        else df.repartition(1)
-      merged.sortWithinPartitions(keys: _*)
-    }
+      * Use it only where the result is at most a few narrow rows per
+      * input row, produced by a per-row kernel that costs ≥ 100× a sort
+      * comparison (the perfbench `kernels.*.ns_per_row`: dhash64
+      * ~18 µs, videoFrameHashes ~54 µs, repetitionSignals ~34 µs). The
+      * one-partition shuffle keeps the kernel's stage parallel; the
+      * sampler's second pass over the kernel would cost more than the
+      * one-task sort at any scale, and a one-task sort that outgrows
+      * memory spills rather than failing.
+      *
+      * A global `orderBy` over a grouped aggregate needs no helper: the
+      * AQE rule [[graft.plans.OneTaskSort]] merges and sorts it in one
+      * task when the aggregate's measured size is small, and keeps the
+      * range sort when it is not. A cheap frame with one row per input
+      * row meets neither: keep `orderBy` there. */
+    def orderByInOnePartition(keys: Column*): DataFrame =
+      df.repartition(1).sortWithinPartitions(keys: _*)
 
     /** The same rows dealt round-robin over one partition per core of
       * the session (`defaultParallelism`; AQE does not coalesce an

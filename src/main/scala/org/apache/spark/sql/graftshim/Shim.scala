@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.classic.{ClassicConversions, Dataset, ExpressionUtils}
 import org.apache.spark.sql.execution.SparkStrategy
 
@@ -31,6 +32,16 @@ object Shim {
   /** The session's planner strategies, injected ones included. */
   def plannerStrategies(spark: SparkSession): Seq[SparkStrategy] =
     ClassicConversions.castToImpl(spark).sessionState.planner.strategies
+
+  /** The session's AQE runtime optimizer rules, injected ones included. */
+  def runtimeOptimizerRules(spark: SparkSession): Seq[Rule[LogicalPlan]] =
+    ClassicConversions.castToImpl(spark).sessionState.adaptiveRulesHolder
+      .runtimeOptimizerRules
+
+  /** Blocks until every listener has seen every event posted so far:
+    * a count read after this includes the jobs already started. */
+  def awaitListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 
   /** Session function registry, for registering custom expressions under
     * SQL-callable names. */

@@ -8,7 +8,7 @@ import org.apache.spark.sql.SparkSessionExtensionsProvider
 import org.apache.spark.sql.graftshim.Shim
 
 import graft.operators.GraftExtensions
-import graft.plans.{AsOfJoinStrategy, PrefixScanStrategy}
+import graft.plans.{AsOfJoinStrategy, OneTaskSort, PrefixScanStrategy}
 
 /** The graft extensions are a session-extensions service: Spark's
   * builder installs them, once, in every session it builds. */
@@ -28,5 +28,13 @@ class GraftExtensionsSpec extends SparkSpec {
       assert(strategies.count(_ == PrefixScanStrategy) === 1)
       GraftExtensions.requireInstalled(s, "spec")
     }
+  }
+
+  test("a session and its new sessions run OneTaskSort at run time, once") {
+    // GraftSession's builder names no extensions: the rule comes from
+    // the service file, as in any plain builder's session
+    assert(spark.conf.getOption("spark.sql.extensions").isEmpty)
+    for (s <- Seq(spark, spark.newSession()))
+      assert(Shim.runtimeOptimizerRules(s).count(_ == OneTaskSort) === 1)
   }
 }

@@ -20,15 +20,16 @@ import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec,
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 
-/** The two [[PartitionLayout]] helpers and the gates that use them.
+/** The two [[PartitionLayout]] helpers, the gates that use them, and
+  * the gates whose final sort [[graft.plans.OneTaskSort]] places.
   *
-  * [[PartitionLayout.orderByInOnePartition]]: the rows come out in
-  * `orderBy`'s order, no range exchange (and so no sampling job) is
-  * planned, and the stages that scan the input still run one task per
-  * file. A grouped aggregate is merged into one partition with no
-  * shuffle above its own exchange; any other frame, whose stage
-  * `coalesce(1)` would shrink to one task, keeps a one-partition
-  * shuffle.
+  * Each gate's rows come out in `orderBy`'s order, no range exchange
+  * (and so no sampling job) is planned, and the stages that scan the
+  * input still run one task per file. A grouped aggregate's plain
+  * `orderBy` is merged into one partition by the runtime rule, with no
+  * shuffle above the aggregate's own exchange; a kernel's output,
+  * through [[PartitionLayout.orderByInOnePartition]], keeps a
+  * one-partition shuffle, so the kernel's stage stays parallel.
   *
   * [[PartitionLayout.spreadOverCores]]: over the one-file `documents`
   * table, the per-row kernel sits above a round-robin exchange, the
@@ -141,6 +142,7 @@ class OrderedResultSpec extends SparkSpec with BeforeAndAfterAll {
       Seq[String])] = Seq(
     ("q01", RelationalGates.q01GroupbyAgg, Seq("l_returnflag", "l_linestatus")),
     ("q03", RelationalGates.q03JoinAgg, Seq("r_name", "n_name")),
+    ("q16", RelationalGates.q16HighcardAgg, Seq("l_partkey")),
     ("q28", RelationalGates.q28Percentiles, Seq("l_returnflag")),
     ("q44", DedupGates.q44JaccardExact, Seq("id_a", "id_b")),
     ("q60", FeatureGates.q60Bucketize, Seq("bucket")),
@@ -149,7 +151,7 @@ class OrderedResultSpec extends SparkSpec with BeforeAndAfterAll {
     ("q296", MediaGates.q296VideoFrames, Seq("doc_id", "frame_idx")))
 
   /** The gates whose result is a grouped aggregate of bounded size. */
-  private val aggregates = Set("q01", "q03", "q28", "q60")
+  private val aggregates = Set("q01", "q03", "q16", "q28", "q60")
 
   for ((name, gate, keys) <- gates)
     test(s"$name is ordered in one partition, with no range exchange") {

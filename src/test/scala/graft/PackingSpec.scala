@@ -391,6 +391,37 @@ class PackingSpec extends SparkSpec {
     assert(e.getMessage.contains("null"))
   }
 
+  test("prefixSumInOrder fails on a running sum past the long range") {
+    val big = Long.MaxValue / 2 + 1
+    val df = Seq((0L, big), (1L, big), (2L, 1L)).toDF("id", "w")
+    val e = intercept[Exception] {
+      Packing.prefixSumInOrder(df, "id", "w", Seq.empty, 2).collect()
+    }
+    assert(innermostMessage(e).contains("overflow"))
+  }
+
+  test("q272 and q274 run no PrefixScanExec whose output nothing reads") {
+    def scans(df: org.apache.spark.sql.DataFrame) =
+      planNodes(df.queryExecution.executedPlan)
+        .count(_.isInstanceOf[graft.plans.PrefixScanExec])
+    def longs(rows: Seq[org.apache.spark.sql.Row]) =
+      rows.map(_.toSeq.map(_.asInstanceOf[Number].longValue)).sortBy(_.head)
+    // the sf0.01 tables committed with the benchmark
+    val sf = "perfbench/data/sf0.01"
+    // the gates' SQL, run by Spark's own window functions
+    Tables(spark, sf, "lineitem").createOrReplaceTempView("lineitem")
+    try {
+      for ((gate, sql, n) <- Seq(
+          (RelationalGates.q272RankFamily _, RelationalGates.q272Sql, 2),
+          (RelationalGates.q274Ntile _, RelationalGates.q274Sql, 1))) {
+        val df = gate(spark, sf)
+        val rows = longs(df.collect().toSeq)
+        assert(scans(df) === n, df.queryExecution.executedPlan.treeString)
+        assert(rows === longs(spark.sql(sql).collect().toSeq))
+      }
+    } finally spark.catalog.dropTempView("lineitem")
+  }
+
   test("prefixSumInOrder rejects null order values (engine-specific " +
       "null sort position would break the portable total order)") {
     val bad = Seq((0L, 1L, "a"), (1L, 1L, null.asInstanceOf[String]))

@@ -30,6 +30,11 @@ Prints one JSON line:
                         (comments stripped) under src/main: lineage
                         truncations whose blocks are lost with their
                         executor
+  one_partition_sorts   `orderByInOnePartition(` calls on the code lines
+                        (comments stripped) of the gate files under
+                        src/main/scala/graft/gates: final sorts placed in
+                        one task by hand rather than by the OneTaskSort
+                        runtime rule
 
 Usage: python3 tools/design_metrics.py [repo_root]
 """
@@ -123,7 +128,7 @@ def main():
     root = sys.argv[1] if len(sys.argv) > 1 else os.getcwd()
     main_lines = builders = drains = 0
     gate_files = gate_maps = gates = eager_gates = decimal4 = 0
-    spark_percentile = local_checkpoints = 0
+    spark_percentile = local_checkpoints = one_partition_sorts = 0
     gates_dir = os.path.join("src", "main", "scala", "graft", "gates")
     seen = {}
     for rel, lines in sources(root, "src"):
@@ -141,6 +146,9 @@ def main():
         if rel.startswith(gates_dir):
             spark_percentile += sum(
                 len(SPARK_PERCENTILE.findall(code_text(line)))
+                for line in lines)
+            one_partition_sorts += sum(
+                code_text(line).count("orderByInOnePartition(")
                 for line in lines)
         builders += len(re.findall(r"SparkSession\s*\.builder\b", text))
         for i, line in enumerate(lines):
@@ -170,6 +178,7 @@ def main():
         "decimal4_inline": decimal4,
         "spark_percentile": spark_percentile,
         "local_checkpoints": local_checkpoints,
+        "one_partition_sorts": one_partition_sorts,
     }, sort_keys=False))
 
 
